@@ -122,6 +122,30 @@ object Bench {
       s""","remeasured":$vs,"remeasured_load":$ls"""
     }
 
+  /** One query's billed value from its timed reps (None = the rep
+    * failed): the median of the warm reps that SUCCEEDED (a heavyweight
+    * query has one warm rep, a cheap one three), else a successful first
+    * rep. None when every rep failed — a failed query is not a timing, so
+    * it is not billed at all. */
+  private[graft] def billedValue(first: Option[Double],
+      warm: Seq[Option[Double]]): Option[Double] = {
+    val ok = warm.flatten.sorted
+    if (ok.nonEmpty) Some(ok((ok.size - 1) / 2)) else first
+  }
+
+  /** The BENCH_DETAIL `failed` field: one entry per failed rep — query
+    * name, the phase it failed in (`bench` or `remeasure`) and the error
+    * message. Empty when nothing failed. */
+  private[graft] def failedDetailField(failed: Seq[(String, String, String)]): String =
+    if (failed.isEmpty) ""
+    else {
+      val m = new com.fasterxml.jackson.databind.ObjectMapper()
+      failed.map { case (name, phase, msg) =>
+        s"""{"query":${m.writeValueAsString(name)},"phase":"$phase",""" +
+          s""""message":${m.writeValueAsString(msg)}}"""
+      }.mkString(""","failed":[""", ",", "]")
+    }
+
   /** The committed quiet-run baseline (`bench_envelope.json`, flat
     * name→seconds; path overridable via SPARK_GRAFT_ENVELOPE). Empty when
     * absent or unparseable — the envelope trigger simply stands down. */
@@ -260,11 +284,23 @@ object Bench {
     // noise, so a contended run carries its adjudication data with it
     val repHistory = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
     val queryFns = benchQueries
-    val results = benchQueries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def rep(): Double = timed {
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-      }._2
+    // every failed rep, as (query, phase, message): recorded on
+    // BENCH_DETAIL and never billed as a timing
+    val failed = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
+    def attempt(name: String, phase: String)(
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+      val (ok, sec) = timed {
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $phase $name failed: ${e.getMessage}")
+          failed += ((name, phase, String.valueOf(e.getMessage)))
+          false
+        }
+      }
+      if (ok) Some(sec) else None
+    }
+    val results = benchQueries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      def rep(): Option[Double] = attempt(name, "bench")(fn)
       // rep budget adapts to the query's own cost: heavyweight queries
       // (first rep > 2.5s) run twice and report the warm second run —
       // their cost is fixed work (stream lifecycles, clustered rewrites,
@@ -278,13 +314,10 @@ object Bench {
       // reps in one JVM — the OLD median-of-3-including-cold mostly
       // measured JIT/shuffle-service/page-cache warmup, not plan cost.
       val first = rep()
-      val (value, warmReps) =
-        if (first > 2.5) { val w = rep(); (w, Seq(w)) } // the warm second run
-        else {
-          val reps = Seq(rep(), rep(), rep())
-          (reps.sorted.apply(1), reps)
-        }
-      repHistory(name) = warmReps
+      val warmReps =
+        if (first.exists(_ > 2.5)) Seq(rep()) // the warm second run
+        else Seq(rep(), rep(), rep())
+      repHistory(name) = warmReps.flatten
       // queries that persist() intermediates rely on the ContextCleaner to
       // drop the blocks once the frames are GC'd; under a 60-query run the
       // stale blocks outlive their query, fill storage memory, and evict
@@ -292,7 +325,7 @@ object Bench {
       // 11s mid-bench). Clear the cache between queries so each is timed
       // against its own working set, like a fresh session would be.
       spark.catalog.clearCache()
-      name -> value
+      Bench.billedValue(first, warmReps).map(name -> _)
     }
 
     // ---- contention self-healing (r11 verdict task 7) ----
@@ -323,16 +356,13 @@ object Bench {
     val remeasured: Seq[(String, Double, Double)] =
       if (opsChild) Nil
       else suspects.flatMap { name =>
-        queryFns.get(name).map { fn =>
-          def rep(): Double = timed {
-            try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] remeasure $name failed: ${e.getMessage}") }
-          }._2
+        queryFns.get(name).flatMap { fn =>
           val loadNow = hostLoad()._1
-          val v = math.min(rep(), rep()) // best-of-2, warm, isolated
+          // best-of-2, warm, isolated, over the reps that succeeded
+          val reps = Seq(attempt(name, "remeasure")(fn),
+            attempt(name, "remeasure")(fn)).flatten
           spark.catalog.clearCache()
-          (name, v, loadNow)
+          reps.minOption.map(v => (name, v, loadNow))
         }
       }
 
@@ -368,7 +398,7 @@ object Bench {
       }
 
     emitResult(results, ops, sfDir, spark, runTmp, loadStart, hostLoad(),
-      remeasured)
+      remeasured, failed.toSeq)
   }
 
   /** The BASELINE.md ops sections, measured in THIS JVM. Called directly in
@@ -811,7 +841,8 @@ object Bench {
       runTmp: java.nio.file.Path,
       loadStart: (Double, Long),
       loadEnd: (Double, Long),
-      remeasured: Seq[(String, Double, Double)]): Unit = {
+      remeasured: Seq[(String, Double, Double)],
+      failed: Seq[(String, String, String)]): Unit = {
 
     // Locale.ROOT everywhere: a non-English default locale would format
     // decimal commas ("52,19") and break the machine-parsed JSON
@@ -847,7 +878,7 @@ object Bench {
     // loadavg at each entry's own measurement time ([[remeasuredDetailField]])
     val remeasuredField = Bench.remeasuredDetailField(remeasured, jnum)
     // same sf spelling on both lines (full path kept as sf_dir for humans)
-    println(s"""BENCH_DETAIL {"queries":$qs,"ops":$opsJson,"sf":"$sfShort","sf_dir":"$sfDir",$loadJson$remeasuredField}""")
+    println(s"""BENCH_DETAIL {"queries":$qs,"ops":$opsJson,"sf":"$sfShort","sf_dir":"$sfDir",$loadJson$remeasuredField${Bench.failedDetailField(failed)}}""")
     // final line: every query plus the BASELINE.md-comparable ops, sized to
     // fit the tail window with ~200 chars to spare for the sbt epilogue
     val headline = Seq(

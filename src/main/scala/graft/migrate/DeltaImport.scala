@@ -1,7 +1,7 @@
 package graft.migrate
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Path, Paths}
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -10,7 +10,7 @@ import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectM
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
-import graft.log.{AddFile, ColStats, CommitInfo, Stats, TxLog}
+import graft.log.{AddFile, ColStats, Stats, TxLog}
 import graft.table.LakeTable
 
 /** Zero-copy import of a Delta Lake table (the inverse of the reference's
@@ -116,34 +116,15 @@ object DeltaImport {
     * intervening state is genuinely unreconstructable. Returns the new
     * graft version (the current one when there was nothing to sync). */
   def sync(spark: SparkSession, dir: String): Long = {
-    val t = LakeTable.forPath(spark, dir)
+    val (t, from) = Mirror.mirrorAt(spark, dir, Follow)
+    val syncOps = Mirror.syncOps("Delta")
     val root = Paths.get(dir)
     val logDir = root.resolve("_delta_log")
-    // a rewrite destination also carries the consumed-version key but is
-    // NOT an in-place mirror (its source lives elsewhere) — without this
-    // gate the failure would be a confusing missing-_delta_log error
-    require(!t.properties.get(RewriteFollowKey).contains("true"),
-      s"$dir is a followable REWRITE destination — sync it with " +
-        "DeltaImport.syncRewrite(spark, sourceDir, destDir)")
-    val from = t.properties.get(SourceVersionKey).map(_.toLong).getOrElse(
-      throw new IllegalArgumentException(
-        s"$dir was not imported from Delta (no $SourceVersionKey property)"))
-    // divergence guard ([[SyncGuard]]): checked at entry for a fast loud
-    // failure AND re-checked inside the commit closure (TOCTOU)
-    val syncOps = Set("CONVERT", "DELTA SYNC")
-    SyncGuard.requireNotDiverged(t.snapshot().commits, syncOps, "Delta")
-    val entries = store.listFileNames(logDir)
-    val jsonRe = raw"(\d{20})\.json".r
-    val newer = entries.collect { case jsonRe(v) => v.toLong }
-      .filter(_ > from).sorted
+    val newer = commitVersions(store.listFileNames(logDir)).filter(_ > from)
     // "nothing newer" is only "up to date" when the CHECKPOINT agrees: a
     // source that checkpointed past `from` and cleaned the JSON tail has
     // advanced invisibly, and reporting freshness would be silently stale
-    val checkpointVersion: Option[Long] = scala.util.Try {
-      mapper.readTree(new String(store.readBytes(
-        logDir.resolve("_last_checkpoint")), StandardCharsets.UTF_8))
-        .get("version").asLong()
-    }.toOption
+    val checkpointVersion = lastCheckpoint(logDir).map(_._1)
     val chainIntact = newer.nonEmpty && newer.head == from + 1 &&
       newer.zip(newer.tail).forall { case (a, b) => b == a + 1 }
     if (!chainIntact) {
@@ -164,7 +145,8 @@ object DeltaImport {
           "the intervening state is unreconstructable; re-import")
     }
 
-    val schema = t.snapshot().schema
+    val snap0 = t.snapshot()
+    val schema = snap0.schema
     // a column-mapped import keeps resolving by field id; the physical
     // names (kept in the schema metadata by translateMapping) key the
     // incoming commits' stats
@@ -200,77 +182,39 @@ object DeltaImport {
     // the writer serialized the add lines first.
     var era = 0
     newer.foreach { v =>
-      val lines = new String(store.readBytes(
-        logDir.resolve(f"$v%020d.json")), StandardCharsets.UTF_8)
-        .split("\n").filter(_.trim.nonEmpty)
-      val nodes = lines.map(mapper.readTree)
+      val nodes = jsonActions(logDir.resolve(f"$v%020d.json"))
       nodes.filter(_.has("metaData")).foreach { n =>
           val m = n.get("metaData")
-          val incoming0 = DataType.fromJson(
-            m.get("schemaString").asText()).asInstanceOf[StructType]
-          // a mapped source's metaData carries the Delta-form schema:
-          // translate before comparing
-          val sourceMapped = incoming0.fields.nonEmpty &&
-            incoming0.fields.forall(_.metadata.contains(MappingIdKey))
-          val incoming = translateTypeChanges(
-            if (mapped && sourceMapped) translateMapping(incoming0)._1
-            else incoming0)
-          // compare MODULO typeChanges versions: a followed widening
-          // records graft's commit version on the mirror while the
-          // source's delta.typeChanges carries the Delta version, so an
-          // UNCHANGED schema in a later metaData line (even a pure
-          // property change) must not classify as an evolution — that
-          // misclassification skipped the heal tags on every range with
-          // any metaData, and stat/bloom trust healed slower than
-          // documented whenever the source emitted periodic metaData
-          if (graft.log.TypeWidening.ignoringChangeVersions(incoming) !=
-              graft.log.TypeWidening.ignoringChangeVersions(effSchema)) {
-            // a binding-mode flip is never followable: a name-bound mirror
-            // cannot see a mapped source's renames (new files' PHYSICAL
-            // columns would silently read null), and a mapped mirror
-            // cannot follow a source that dropped its ids
-            require(mapped == sourceMapped,
-              s"Delta commit $v changes the schema AND the column-mapping " +
-                "mode differs between source and mirror — re-import")
-            Evolution.requireFollowable(effSchema, incoming, mapped, "Delta")
+          val (incoming, evolved) = incomingSchema(effSchema, mapped,
+            structOf(m.get("schemaString").asText()), s"Delta commit $v")
+          if (evolved) {
             effSchema = incoming
             era += 1
           }
           // a same-schema REPLACE that introduces partitioning would make
           // the new adds' values live only in the log — the import-time
           // refusal, re-checked mid-stream
-          val pcols = Option(m.get("partitionColumns"))
-            .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
+          val pcols = strings(m, "partitionColumns")
           require(pcols.isEmpty,
             s"Delta commit $v repartitions the table " +
               s"(${pcols.mkString(", ")}) — not syncable in place; " +
               "re-import with convertRewrite")
-          syncedConf = Some(Option(m.get("configuration"))
-            .map(c => c.properties().asScala
-              .map(e => e.getKey -> e.getValue.asText()).toMap)
-            .getOrElse(Map.empty))
+          syncedConf = Some(confOf(m))
       }
       nodes.foreach { n =>
         if (n.has("protocol")) {
-          val p = n.get("protocol")
-          val feats = Option(p.get("readerFeatures"))
-            .map(_.elements().asScala.map(_.asText()).toSet).getOrElse(Set.empty)
-          val unknown = feats -- SupportedReaderFeatures
+          val unknown = strings(n.get("protocol"), "readerFeatures").toSet --
+            SupportedReaderFeatures
           require(unknown.isEmpty, s"Delta commit $v enables reader " +
             s"feature(s) ${unknown.toSeq.sorted.mkString(", ")} this " +
             "importer does not honor")
         }
-        if (n.has("add")) {
-          val a = n.get("add")
-          // DV descriptors net like everything else: a mask written at v
-          // and purged at v+k inside the range never decodes — only the
-          // FINAL disposition's masks materialize as graft vectors
-          state.update(decodePath(a.get("path").asText()),
-            Some(AddInfo(a.get("size").asLong(),
-              a.get("modificationTime").asLong(),
-              Option(a.get("stats")).filterNot(_.isNull).map(_.asText()),
-              dvOf(a), Map.empty, era))): Unit
-        }
+        // DV descriptors net like everything else: a mask written at v
+        // and purged at v+k inside the range never decodes — only the
+        // FINAL disposition's masks materialize as graft vectors
+        if (n.has("add"))
+          state.update(decodePath(n.get("add").get("path").asText()),
+            Some(addInfoOf(n.get("add"), era))): Unit
         if (n.has("remove"))
           state.update(decodePath(n.get("remove").get("path").asText()), None): Unit
       }
@@ -289,99 +233,74 @@ object DeltaImport {
     // must refuse HERE, not mis-read silently at query time (ADVICE r12)
     if (mapped && adds.nonEmpty)
       verifyFooterIds(root, adds.map(_._1), effSchema, effPhys)
-    val now = System.currentTimeMillis()
     // stat-era heal tags (r13 verdict task 4 — replacing the conservative
     // whole-range skip): each add resolved its ERA against the in-range
     // schema changes, so files written AT OR AFTER the range's LAST change
     // were written by the source under the FINAL types — they tag and
     // answer exact bounds on arrival, even in a range that carries the
     // widening itself. Pre-change adds stay untagged (conservative: their
-    // stats were collected under the old types). The tag schema is the
-    // MERGED mirror schema (it carries the name-reuse markers and graft's
-    // change history); SyncGuard refuses any concurrent local commit, so
-    // the entry-time merge matches the closure's.
-    val finalEra = era
-    val tagSchema: StructType =
-      if (!evolvedSync) effSchema
-      else Evolution.mergedSchema(schema, effSchema, mapped,
-        t.snapshot().metadata.properties, t.version + 1)._1
-    val syncTags: Map[String, String] = tagSchema.fields
-      .filter(f => graft.log.TypeWidening.hasChanges(f) ||
-        graft.log.TypeWidening.nameReused(f))
-      .map(f => graft.log.TypeWidening.tagKey(f) ->
-        graft.log.TypeWidening.changeCount(f).toString).toMap
-    val (lastEraAdds, priorEraAdds) = adds.partition(_._2.era == finalEra)
-    val graftAdds: Seq[graft.log.Action] =
+    // stats were collected under the old types).
+    val syncTags = Mirror.syncTags(snap0, effSchema, evolvedSync, mapped)
+    val (lastEraAdds, priorEraAdds) = adds.partition(_._2.era == era)
+    val graftAdds: Seq[AddFile] =
       toAddFiles(spark, root, lastEraAdds, effSchema, effPhys, syncTags) ++
         toAddFiles(spark, root, priorEraAdds, effSchema, effPhys)
     // the FINAL disposition's live masks transcode into graft vectors
     // (written before the commit loop, like every dv parquet); a final
     // re-add WITHOUT a descriptor is a Delta-side purge — it must CLEAR
-    // any graft vector the path carried (computed in the closure, where
-    // the current dv state is known)
-    val dvActions = importDvActions(spark, root,
-      adds.collect { case (p, i) if i.dv.isDefined => p -> i.dv.get })
-    try {
-      t.commitWithRetry("DELTA SYNC",
-        Map("fromVersion" -> from.toString, "toVersion" -> newer.max.toString),
-        t.snapshot(),
-        Map("numAddedFiles" -> graftAdds.size.toLong,
-          "numRemovedFiles" -> removes.size.toLong)) { s =>
-        // a racing sync already consumed past `from`: stand down, no-op
-        if (s.metadata.properties.get(SourceVersionKey).exists(_.toLong > from))
-          throw new LakeTable.EpochAlreadyCommitted
-        // TOCTOU closure re-check: a local write that landed after the
-        // entry guard makes this retry refuse instead of duplicating rows
-        SyncGuard.requireNotDiverged(s.commits, syncOps, "Delta")
-        SyncGuard.requireNoConstraintsForAdds(s.metadata.properties,
-          graftAdds.size.toLong, "Delta")
-        val live = s.files.map(_.path).toSet
-        // a followable evolution applies onto the CURRENT schema (by id
-        // when mapped) so local field metadata survives; the id high-water
-        // mark rises with added columns (never reuse a source id)
-        val (mergedJson, retireProp) =
-          if (!evolvedSync) (s.metadata.schemaJson, Map.empty[String, String])
-          else {
-            val (m, rp) = Evolution.mergedSchema(s.schema, effSchema, mapped,
-              s.metadata.properties, s.version + 1)
-            (m.json, rp)
-          }
-        val maxIdProp: Map[String, String] =
-          if (!mapped || !evolvedSync) Map.empty
-          else Map(graft.log.ColumnIds.MaxIdKey -> math.max(
-            s.metadata.properties.get(graft.log.ColumnIds.MaxIdKey)
-              .map(_.toLong).getOrElse(0L),
-            math.max(
-              syncedConf.flatMap(_.get("delta.columnMapping.maxColumnId"))
-                .map(_.toLong).getOrElse(0L),
-              graft.log.ColumnIds.maxId(Map.empty, effSchema))).toString)
-        val meta = s.metadata.copy(schemaJson = mergedJson, properties =
-          s.metadata.properties ++
-            LakeTable.normalizeProps(syncedConf.getOrElse(Map.empty)) ++
-            maxIdProp ++ retireProp +
-            (SourceVersionKey -> newer.max.toString))
-        // property-implies-feature, exactly as setProperties stamps it: a
-        // synced delta.enableChangeDataFeed / enableDeletionVectors / …
-        // lands with its table feature in the same commit — and imported
-        // masks stamp deletionVectors even without the property (a Delta
-        // table can carry vectors after the property was unset)
-        val proto = graft.log.Protocol.merge(
-          graft.log.Protocol.merge(s.protocol,
-            LakeTable.impliedFeatures(meta.properties)),
-          if (dvActions.isEmpty) s.protocol
-          else graft.log.Protocol(1, 1, null, Seq("deletionVectors")))
-        val clears = adds.collect {
-          case (p, i) if i.dv.isEmpty && s.dvs.contains(p) =>
-            graft.log.DeletionVector(p, "", 0L)
-        }
-        (if (proto == s.protocol) Seq(meta) else Seq(proto, meta)) ++
-          graftAdds ++ dvActions ++ clears ++
-          removes.toSeq.filter(live.contains)
-            .map(p => graft.log.RemoveFile(p, now))
-      }
-    } catch { case _: LakeTable.EpochAlreadyCommitted => () }
-    t.version
+    // any graft vector the path carried
+    val dvActions = importDvActions(spark, root, adds)
+    Mirror.NetSync("Delta", syncOps,
+      Map("fromVersion" -> from.toString, "toVersion" -> newer.max.toString),
+      consumed = Map(SourceVersionKey -> newer.max.toString),
+      // a racing sync already consumed past `from`
+      alreadyConsumed = _.get(SourceVersionKey).exists(_.toLong > from),
+      graftAdds, dvActions,
+      clearable = adds.collect { case (p, i) if i.dv.isEmpty => p }.toSet,
+      removes, effSchema, evolvedSync, mapped,
+      maxIdFloor = maxIdFloor(mapped && evolvedSync, syncedConf.getOrElse(Map.empty)),
+      sourceProps = LakeTable.normalizeProps(syncedConf.getOrElse(Map.empty)))
+      .commit(t, snap0)
   }
+
+  /** A metaData schema as the mirror reads it — a mapped source's
+    * Delta-form schema translated by field id when the mirror is mapped
+    * too — and whether it EVOLVES `base`, refusing what [[Evolution]]
+    * cannot follow. Compared MODULO typeChanges versions: a followed
+    * widening records graft's commit version on the mirror while the
+    * source's delta.typeChanges carries the Delta version, so an
+    * UNCHANGED schema in a later metaData line (even a pure property
+    * change) must not classify as an evolution — that misclassification
+    * skipped the heal tags on every range with any metaData, and
+    * stat/bloom trust healed slower than documented whenever the source
+    * emitted periodic metaData. */
+  private def incomingSchema(base: StructType, mapped: Boolean,
+      deltaSchema: StructType, where: String): (StructType, Boolean) = {
+    val sourceMapped = deltaSchema.fields.nonEmpty &&
+      deltaSchema.fields.forall(_.metadata.contains(MappingIdKey))
+    val incoming = translateTypeChanges(
+      if (mapped && sourceMapped) translateMapping(deltaSchema)._1
+      else deltaSchema)
+    val evolved = graft.log.TypeWidening.ignoringChangeVersions(incoming) !=
+      graft.log.TypeWidening.ignoringChangeVersions(base)
+    if (evolved) {
+      // a binding-mode flip is never followable: a name-bound mirror
+      // cannot see a mapped source's renames (new files' PHYSICAL columns
+      // would silently read null), and a mapped mirror cannot follow a
+      // source that dropped its ids
+      require(mapped == sourceMapped,
+        s"$where changes the schema AND the column-mapping mode differs " +
+          "between source and mirror — re-import")
+      Evolution.requireFollowable(base, incoming, mapped, "Delta")
+    }
+    (incoming, evolved)
+  }
+
+  /** The source's column-id high-water mark, when a sync must raise the
+    * mirror's: a mapped mirror whose schema followed an evolution. */
+  private def maxIdFloor(raise: Boolean, conf: Map[String, String]): Option[Long] =
+    if (!raise) None
+    else Some(conf.get("delta.columnMapping.maxColumnId").map(_.toLong).getOrElse(0L))
 
   /** Snapshot-diff fallback for [[sync]] when the source checkpointed and
     * CLEANED the JSON tail past the consumed version: the incremental
@@ -406,107 +325,36 @@ object DeltaImport {
     val snap0 = t.snapshot()
     val schema = snap0.schema
     val mapped = graft.log.ColumnIds.mapped(schema)
-    val deltaSchema = DataType.fromJson(st.schemaString).asInstanceOf[StructType]
-    val sourceMapped = deltaSchema.fields.nonEmpty &&
-      deltaSchema.fields.forall(_.metadata.contains(MappingIdKey))
-    val (incoming, physicalOf) = {
-      val (s0, phys) =
-        if (mapped && sourceMapped) translateMapping(deltaSchema)
-        else (deltaSchema, Map.empty[String, String])
-      (translateTypeChanges(s0), phys)
-    }
     // r13: schema evolution across the cleaned tail follows when
-    // [[Evolution]] allows it, exactly like the incremental path.
-    // Compared MODULO typeChanges versions (see [[sync]]): the mirror's
-    // followed-widening record carries graft's version, the source's the
-    // Delta version — same types, not an evolution.
-    val evolvedSync = graft.log.TypeWidening.ignoringChangeVersions(incoming) !=
-      graft.log.TypeWidening.ignoringChangeVersions(schema)
-    if (evolvedSync) {
-      require(mapped == sourceMapped,
-        "the Delta source's schema changed across the cleaned tail AND " +
-          "the column-mapping mode differs between source and mirror — " +
-          "re-import")
-      Evolution.requireFollowable(schema, incoming, mapped, "Delta")
-    }
-    val graftLive: Set[String] = snap0.files.map(_.path).toSet
+    // [[Evolution]] allows it, exactly like the incremental path
+    val (incoming, evolvedSync) = incomingSchema(schema, mapped,
+      structOf(st.schemaString), "the Delta source's cleaned tail")
+    val physicalOf =
+      if (mapped) physicalNamesOf(incoming) else Map.empty[String, String]
     val currentLive: Set[String] = st.adds.keySet.toSet
-    val newEntries = st.adds.toSeq.filterNot { case (p, _) => graftLive(p) }
-    val removed = (graftLive -- currentLive).toSeq
+    val (newEntries, removed) = Mirror.netDiff(snap0, st.adds.toSeq)
     if (mapped && newEntries.nonEmpty)
       verifyFooterIds(root, newEntries.map(_._1), incoming, physicalOf)
-    val now = System.currentTimeMillis()
     // heal tags across the cleaned tail (r14): an unchanged schema means
     // every new file was written under the CURRENT types (widenings are
     // monotonic, so equal endpoint schemas imply no in-tail type change) —
     // tag for stat/bloom heal like the incremental path; an evolved tail
     // cannot resolve per-file eras from a checkpoint, so it stays
     // conservatively untagged
-    val diffTags: Map[String, String] =
-      if (evolvedSync) Map.empty
-      else schema.fields
-        .filter(f => graft.log.TypeWidening.hasChanges(f) ||
-          graft.log.TypeWidening.nameReused(f))
-        .map(f => graft.log.TypeWidening.tagKey(f) ->
-          graft.log.TypeWidening.changeCount(f).toString).toMap
-    val newAdds: Seq[graft.log.Action] =
-      toAddFiles(spark, root, newEntries, incoming, physicalOf, diffTags)
+    val diffTags = if (evolvedSync) Map.empty[String, String] else Mirror.healTags(schema)
+    val newAdds = toAddFiles(spark, root, newEntries, incoming, physicalOf, diffTags)
     // the FULL current mask state rebuilds (O(current masked positions) —
     // the price of the lost tail, paid once); vanished masks clear
-    val dvActions = importDvActions(spark, root,
-      st.adds.toSeq.collect { case (p, i) if i.dv.isDefined => p -> i.dv.get })
-    try {
-      t.commitWithRetry("DELTA SYNC",
-        Map("fromVersion" -> from.toString,
-          "toVersion" -> st.sourceVersion.toString,
-          "mode" -> "snapshot-diff"),
-        snap0,
-        Map("numAddedFiles" -> newAdds.size.toLong,
-          "numRemovedFiles" -> removed.size.toLong)) { s =>
-        if (s.metadata.properties.get(SourceVersionKey)
-            .exists(_.toLong >= st.sourceVersion))
-          throw new LakeTable.EpochAlreadyCommitted
-        SyncGuard.requireNotDiverged(s.commits, syncOps, "Delta")
-        SyncGuard.requireNoConstraintsForAdds(s.metadata.properties,
-          newAdds.size.toLong, "Delta")
-        val liveNow = s.files.map(_.path).toSet
-        val maskedNow = dvActions.map(_.forFile).toSet
-        val clears = s.dvs.keys
-          .filterNot(maskedNow).filter(currentLive.contains)
-          .map(p => graft.log.DeletionVector(p, "", 0L)).toSeq
-        val (mergedJson, retireProp) =
-          if (!evolvedSync) (s.metadata.schemaJson, Map.empty[String, String])
-          else {
-            val (m, rp) = Evolution.mergedSchema(s.schema, incoming, mapped,
-              s.metadata.properties, s.version + 1)
-            (m.json, rp)
-          }
-        val maxIdProp: Map[String, String] =
-          if (!mapped || !evolvedSync) Map.empty
-          else Map(graft.log.ColumnIds.MaxIdKey -> math.max(
-            s.metadata.properties.get(graft.log.ColumnIds.MaxIdKey)
-              .map(_.toLong).getOrElse(0L),
-            math.max(
-              st.configuration.get("delta.columnMapping.maxColumnId")
-                .map(_.toLong).getOrElse(0L),
-              graft.log.ColumnIds.maxId(Map.empty, incoming))).toString)
-        val meta = s.metadata.copy(schemaJson = mergedJson,
-          properties = s.metadata.properties ++
-          LakeTable.normalizeProps(st.configuration) ++ maxIdProp ++
-          retireProp +
-          (SourceVersionKey -> st.sourceVersion.toString))
-        val proto = graft.log.Protocol.merge(
-          graft.log.Protocol.merge(s.protocol,
-            LakeTable.impliedFeatures(meta.properties)),
-          if (dvActions.isEmpty) s.protocol
-          else graft.log.Protocol(1, 1, null, Seq("deletionVectors")))
-        (if (proto == s.protocol) Seq(meta) else Seq(proto, meta)) ++
-          newAdds ++ dvActions ++ clears ++
-          removed.filter(liveNow.contains)
-            .map(p => graft.log.RemoveFile(p, now))
-      }
-    } catch { case _: LakeTable.EpochAlreadyCommitted => () }
-    t.version
+    val dvActions = importDvActions(spark, root, st.adds.toSeq)
+    Mirror.NetSync("Delta", syncOps,
+      Map("fromVersion" -> from.toString,
+        "toVersion" -> st.sourceVersion.toString,
+        "mode" -> "snapshot-diff"),
+      consumed = Map(SourceVersionKey -> st.sourceVersion.toString),
+      alreadyConsumed = _.get(SourceVersionKey).exists(_.toLong >= st.sourceVersion),
+      newAdds, dvActions, clearable = currentLive, removed, incoming,
+      evolvedSync, mapped, maxIdFloor(mapped && evolvedSync, st.configuration),
+      LakeTable.normalizeProps(st.configuration)).commit(t, snap0)
   }
 
   /** One live add's replayed attributes. `era` counts the REAL in-range
@@ -538,40 +386,22 @@ object DeltaImport {
     gate(dir, st)
 
     val mappingMode = st.configuration.getOrElse("delta.columnMapping.mode", "none")
-    val (schema, physicalOf) = {
-      val (s0, phys) =
-        if (mappingMode == "none")
-          (DataType.fromJson(st.schemaString).asInstanceOf[StructType],
-            Map.empty[String, String])
-        else {
-          // id/name modes both translate to graft's by-field-id resolution
-          // (the files' footers are verified to support it — an id-less file
-          // refuses here, pointing at the rewrite import)
-          val (s, phys0) = translateMapping(
-            DataType.fromJson(st.schemaString).asInstanceOf[StructType])
-          verifyFooterIds(root, st.adds.keys.toSeq, s, phys0)
-          (s, phys0)
-        }
-      (translateTypeChanges(s0), phys)
-    }
-    val now = System.currentTimeMillis()
+    val (mappedSchema, physicalOf) = sourceSchemaOf(st)
+    // id/name modes both translate to graft's by-field-id resolution (the
+    // files' footers are verified to support it — an id-less file refuses
+    // here, pointing at the rewrite import)
+    if (mappingMode != "none")
+      verifyFooterIds(root, st.adds.keys.toSeq, mappedSchema, physicalOf)
+    val schema = translateTypeChanges(mappedSchema)
     val graftAdds: Seq[AddFile] =
       toAddFiles(spark, root, st.adds.toSeq, schema, physicalOf)
     // live Delta deletion vectors transcode into graft masks (one dv
-    // parquet + one DeletionVector action per masked file); written before
-    // the commit — a lost CAS leaves an orphan parquet, never a bad commit
-    val dvActions = importDvActions(spark, root,
-      st.adds.toSeq.collect { case (p, i) if i.dv.isDefined => p -> i.dv.get })
-
-    // ---- one graft commit materializing the live snapshot ----
+    // parquet + one DeletionVector action per masked file)
+    val dvActions = importDvActions(spark, root, st.adds.toSeq)
     // a mapped import records the id high-water mark so graft-side ADD
     // COLUMN never reuses a retired Delta id (same never-reuse rule)
-    val maxIdProp: Map[String, String] =
-      if (mappingMode == "none") Map.empty
-      else Map(graft.log.ColumnIds.MaxIdKey -> math.max(
-        st.configuration.get("delta.columnMapping.maxColumnId")
-          .map(_.toLong).getOrElse(0L),
-        graft.log.ColumnIds.maxId(Map.empty, schema)).toString)
+    val maxIdProp = Mirror.maxIdProp(
+      maxIdFloor(mappingMode != "none", st.configuration), Map.empty, schema)
     // a pre-widened source (translated delta.typeChanges present) keeps
     // the widening enabled so the feature stamps even when the source
     // unset the property after applying changes
@@ -579,33 +409,14 @@ object DeltaImport {
       if (schema.fields.exists(graft.log.TypeWidening.hasChanges))
         Map("graft.enableTypeWidening" -> "true")
       else Map.empty
-    val meta = graft.log.Metadata(st.tableId, root.getFileName.toString,
-      schema.json, Nil,
-      // delta.* table properties carry over under the engine's own
-      // delta-prefix normalization (appendOnly, retention windows, …);
-      // the consumed source version rides as a property so [[sync]] can
-      // pick up exactly where the import stopped
+    // delta.* table properties carry over under the engine's own
+    // delta-prefix normalization (appendOnly, retention windows, …); the
+    // consumed source version rides as a property so [[sync]] can pick up
+    // exactly where the import stopped
+    Mirror.convertCommit(spark, dir, root, st.tableId, schema, Nil,
       LakeTable.normalizeProps(st.configuration) ++ maxIdProp ++ widenProp +
-        (SourceVersionKey -> st.sourceVersion.toString), now)
-    val ci = CommitInfo(0L, now, "CONVERT",
-      Map("numFiles" -> graftAdds.size.toString,
-        "sourceFormat" -> "delta",
-        "numDeletionVectors" -> dvActions.size.toString,
-        "sourceVersion" -> st.sourceVersion.toString), Map.empty, -1L,
-      LakeTable.currentUser, false, java.util.UUID.randomUUID().toString)
-    // property-implies-feature invariant: an imported
-    // delta.enableChangeDataFeed / enableDeletionVectors / … must stamp
-    // its table feature in the same commit, exactly as setProperties does;
-    // imported masks stamp deletionVectors even without the property
-    val proto = graft.log.Protocol.merge(
-      graft.log.Protocol.merge(graft.log.Protocol.Current,
-        LakeTable.impliedFeatures(meta.properties)),
-      if (dvActions.isEmpty) graft.log.Protocol.Current
-      else graft.log.Protocol(1, 1, null, Seq("deletionVectors")))
-    val tlog = new TxLog(root)
-    if (!tlog.tryCommit(0L, ci +: proto +: meta +: (graftAdds ++ dvActions)))
-      return LakeTable.forPath(spark, dir) // lost a concurrent import: theirs won
-    LakeTable.forPath(spark, dir)
+        (SourceVersionKey -> st.sourceVersion.toString),
+      "delta", st.sourceVersion, graftAdds, dvActions)
   }
 
   /** Rewrite-import of a Delta table (partitioned, or any table the
@@ -622,15 +433,10 @@ object DeltaImport {
     *
     * With `follow = true` the destination is built to be SYNCABLE by
     * [[syncRewrite]] — the convert/sync/cut-over story for partitioned
-    * Delta sources: every rewritten row carries its source-file LINEAGE
-    * ([[Rewrite.SrcFileCol]]: the log-relative data file;
-    * [[Rewrite.SrcPosCol]]: the row's PHYSICAL position in it, before any
-    * deletion-vector filtering — DV growth deletes by it later), the
-    * consumed source version records in the table properties, and a
-    * live-set ledger snapshot (path -> DV signature) writes under the
-    * destination. The storage cost (a dictionary-encoded path plus a
-    * delta-encoded long per row) is the price of followability; a
-    * one-shot migration should keep the default `follow = false`. */
+    * Delta sources ([[Mirror.convertRewrite]]): rows carry the log-relative
+    * file and their PHYSICAL position in it, before any deletion-vector
+    * filtering (DV growth deletes by it later); the ledger keys each file
+    * by its DV signature. */
   def convertRewrite(spark: SparkSession, srcDir: String, destDir: String): LakeTable =
     convertRewrite(spark, srcDir, destDir, follow = false)
 
@@ -647,146 +453,57 @@ object DeltaImport {
     // join simply stands down
     gate(srcDir, st)
     val lay = rewriteLayoutOf(st)
-    val lineageFields =
-      if (!follow) Nil
-      else {
-        Seq(Rewrite.SrcFileCol, Rewrite.SrcPosCol).foreach { n =>
-          require(!lay.destSchema.fieldNames.exists(_.equalsIgnoreCase(n)),
-            s"source column '$n' collides with the lineage column a " +
-              "followable rewrite adds — import with follow = false, or " +
-              "rename the source column")
-        }
-        Seq(StructField(Rewrite.SrcFileCol, StringType),
-          StructField(Rewrite.SrcPosCol, LongType))
-      }
-    val followProps: Map[String, String] =
-      if (!follow) Map.empty
-      else Map(RewriteFollowKey -> "true",
-        RewriteSourceKey -> root.toString,
-        SourceVersionKey -> st.sourceVersion.toString)
-    // a fully deleted (or never-written) partitioned source imports as an
-    // empty partitioned graft table — schema and layout are fully known
-    if (st.adds.isEmpty) {
-      if (follow)
-        writeRwLedger(Paths.get(destDir).toAbsolutePath.normalize, st)
-      return LakeTable.create(spark, destDir,
-        StructType(lay.destSchema.fields ++ lineageFields),
-        partitionColumns = lay.pcols, properties = lay.props ++ followProps,
-        ifNotExists = false)
-    }
-    val typed = rewriteRows(spark, root, st, st.adds.toSeq, lay, follow)
-    // createFrom/create use ifNotExists = false: a retried migration fails
-    // LOUDLY on the existing destination instead of silently appending
-    // the whole dataset a second time
-    if (!follow)
-      return LakeTable.createFrom(spark, destDir, typed,
-        partitionColumns = lay.pcols, properties = lay.props)
-    // the ledger snapshot writes BEFORE the data commit: a crash in
-    // between leaves a stray ledger file (harmless — reads key on the
-    // CONSUMED property) but never a synced table without its ledger
-    writeRwLedger(Paths.get(destDir).toAbsolutePath.normalize, st)
-    val dest = LakeTable.create(spark, destDir,
-      StructType(lay.destSchema.fields ++ lineageFields),
-      partitionColumns = lay.pcols, properties = lay.props ++ followProps,
-      ifNotExists = false)
-    dest.appendWithProps(typed, _ => Map.empty,
-      Some(Rewrite.AppendAppId), Some(st.sourceVersion)): Unit
-    dest
+    Mirror.convertRewrite(spark, root, destDir, Follow,
+      if (follow) Some(pointOf(st)) else None, lay.destSchema, lay.pcols,
+      lay.props,
+      if (st.adds.isEmpty) None
+      else Some(rewriteRows(spark, root, st, st.adds.toSeq, lay, follow)))
   }
 
   /** Incremental catch-up for a FOLLOWABLE rewrite destination
     * ([[convertRewrite]] with `follow = true`) — the continuous-migration
     * shape for the partitioned Delta sources the in-place [[sync]]
-    * refuses:
-    *
-    *  1. source files REMOVED since the last sync become a lineage-keyed
-    *     merge-DELETE (file stats on the lineage column prune the touched
-    *     destination files);
-    *  2. files whose DELETION VECTOR changed leave the same way and
-    *     rewrite-append under the CURRENT vector — remove + re-add is the
-    *     universally correct shape: it needs no old bitmap (covers DV
-    *     growth, a RESTORE that shrank one, and a vacuumed-away sidecar)
-    *     at O(changed file) cost instead of O(delta-mask);
-    *  3. NEW files rewrite-append with their log partition tuples
-    *     re-injected, advancing the consumed version in the SAME commit.
+    * refuses, on the shared skeleton ([[Mirror.syncRewrite]]): source
+    * files REMOVED since the last sync leave by a lineage-keyed
+    * merge-DELETE; files whose DELETION VECTOR changed leave the same way
+    * and rewrite-append under the CURRENT vector; NEW files rewrite-append
+    * with their log partition tuples re-injected, advancing the consumed
+    * version in the SAME commit.
     *
     * Schema, partition-layout, and configuration evolutions stay CUT-OVER
     * refusals for a rewrite destination (unlike the in-place sync, which
     * follows some): its layout was derived from the import-time metadata.
-    * Every step is idempotent (transaction-ledger keyed by the target
-    * version; the ledger snapshot is name-keyed by it), so a crash
-    * anywhere replays to the same state and a repeated sync no-ops.
     * Unlike the in-place sync (one net commit), a catch-up is up to two
-    * destination commits; a reader between them can observe the
-    * mid-sync state — time-travel to the pre-sync version if the read
-    * must straddle a sync. Returns the destination's version. */
-  def syncRewrite(spark: SparkSession, srcDir: String, destDir: String): Long = {
-    import org.apache.spark.sql.functions.expr
-    val dest = LakeTable.forPath(spark, destDir)
-    val root = Paths.get(srcDir).toAbsolutePath.normalize
-    val destRoot = Paths.get(destDir).toAbsolutePath.normalize
-    val props0 = dest.properties
-    require(props0.get(RewriteFollowKey).contains("true"),
-      s"$destDir was not rewrite-imported with follow = true — a one-shot " +
-        "rewrite destination carries no source lineage to sync by; " +
-        "re-import with convertRewrite(spark, src, dest, follow = true)")
-    require(props0.get(RewriteSourceKey).contains(root.toString),
-      s"$destDir mirrors ${props0.getOrElse(RewriteSourceKey, "<unset>")}, " +
-        s"not $srcDir")
-    val consumed = props0(SourceVersionKey).toLong
-    Rewrite.requireNotDiverged(dest, destDir)
-    val st = replay(spark, root)
-    if (st.sourceVersion <= consumed) return dest.version
-    gate(srcDir, st)
-    val lay = rewriteLayoutOf(st)
-    require(lay.pcols == dest.snapshot().metadata.partitionColumns,
-      s"the Delta source's partition columns changed " +
-        s"(${lay.pcols.mkString(", ")}) — a rewrite destination cannot " +
-        "follow a re-layout; re-import")
-    val destDataTypes = dest.snapshot().schema.fields
-      .filterNot(f => f.name == Rewrite.SrcFileCol ||
-        f.name == Rewrite.SrcPosCol)
-      .map(f => (f.name, f.dataType)).toSeq
-    require(destDataTypes == lay.destSchema.fields
-        .map(f => (f.name, f.dataType)).toSeq,
-      s"the Delta source's schema changed — this evolution is a " +
-        "cut-over moment for a rewrite destination; re-import")
-    val prev = readRwLedger(destRoot, consumed).getOrElse(
-      throw new IllegalStateException(
-        s"$destDir carries no ledger snapshot for consumed version " +
-          s"$consumed under ${destRoot.resolve(Rewrite.LedgerDir)} — the " +
-          "followable-rewrite state is damaged; re-import"))
-    val curSig: Map[String, String] = st.adds.view
-      .mapValues(i => dvSignature(i.dv)).toMap
-    val removed = prev.keysIterator.filterNot(curSig.contains).toSeq.sorted
-    val dvChanged = curSig.collect {
-      case (p, s) if prev.get(p).exists(_ != s) => p }.toSeq.sorted
-    val newPaths = curSig.keysIterator.filterNot(prev.contains).toSeq.sorted
-    // ledger snapshot for the NEW consumed point, before any mutation
-    writeRwLedger(destRoot, st)
-    // 1. removed files and DV-changed files (re-appended below) leave by
-    // lineage
-    val gone = removed ++ dvChanged
-    if (gone.nonEmpty) {
-      import spark.implicits._
-      dest.merge(gone.toDF("rm_file"),
-        expr(s"target.`${Rewrite.SrcFileCol}` = source.rm_file"))
-        .whenMatchedDelete()
-        .withTxn(Rewrite.RemoveAppId, st.sourceVersion)
-        .execute(): Unit
+    * destination commits. Returns the destination's version. */
+  def syncRewrite(spark: SparkSession, srcDir: String, destDir: String): Long =
+    Mirror.syncRewrite(spark, srcDir, destDir, Follow) { (dest, root, consumed) =>
+      val st = replay(spark, root)
+      if (st.sourceVersion <= consumed) None
+      else {
+        gate(srcDir, st)
+        val lay = rewriteLayoutOf(st)
+        require(lay.pcols == dest.snapshot().metadata.partitionColumns,
+          s"the Delta source's partition columns changed " +
+            s"(${lay.pcols.mkString(", ")}) — a rewrite destination cannot " +
+            "follow a re-layout; re-import")
+        Mirror.requireSameColumns(dest, Follow, lay.destSchema)
+        Some(new Mirror.RewriteSteps {
+          val point = pointOf(st)
+          def rows(d: Mirror.LedgerDiff) = rewriteRows(spark, root, st,
+            d.back.map(p => p -> st.adds(p)), lay, follow = true)
+        })
+      }
     }
-    // 2. new + DV-changed files rewrite-append + consumed state, one commit
-    val back = dvChanged ++ newPaths
-    val advance = Map(SourceVersionKey -> st.sourceVersion.toString)
-    if (back.nonEmpty) {
-      val subset = back.map(p => p -> st.adds(p))
-      val typed = rewriteRows(spark, root, st, subset, lay, follow = true)
-      dest.appendWithProps(typed, _ => advance,
-        Some(Rewrite.AppendAppId), Some(st.sourceVersion)): Unit
-    } else dest.setProperties(advance): Unit
-    pruneRwLedgers(destRoot, consumed)
-    dest.version
-  }
+
+  private val Follow = Mirror.FollowKeys("Delta", RewriteFollowKey,
+    RewriteSourceKey, SourceVersionKey, Seq(Mirror.SrcFileCol, Mirror.SrcPosCol))
+
+  /** The followable state of a replayed source: its live set keyed by
+    * each file's deletion-vector signature, at its version. */
+  private def pointOf(st: ReplayedState): Mirror.SourcePoint =
+    Mirror.SourcePoint(Seq(st.sourceVersion),
+      Mirror.Ledger(st.adds.view.mapValues(i => dvSignature(i.dv)).toMap),
+      Map(SourceVersionKey -> st.sourceVersion.toString))
 
   /** The rewrite destination's layout derived from the source metadata. */
   private case class DeltaRewriteLayout(
@@ -797,18 +514,19 @@ object DeltaImport {
       pcols.exists(_.equalsIgnoreCase(f.name)))
   }
 
+  /** The replayed schema, translated by field id (with its logical ->
+    * physical name map) when the source is column-mapped. */
+  private def sourceSchemaOf(st: ReplayedState): (StructType, Map[String, String]) =
+    if (st.configuration.getOrElse("delta.columnMapping.mode", "none") == "none")
+      (structOf(st.schemaString), Map.empty)
+    else translateMapping(structOf(st.schemaString))
+
   private def rewriteLayoutOf(st: ReplayedState): DeltaRewriteLayout = {
     // column-mapped sources rewrite fine: the scan resolves the files'
     // PHYSICAL column names (no field ids required — this is the remedy
     // for id-less name-mode files) and the projection restores logical
     // names; the destination is a fresh native table with its own ids
-    val mappingMode = st.configuration.getOrElse("delta.columnMapping.mode", "none")
-    val (schema, physicalOf) =
-      if (mappingMode == "none")
-        (DataType.fromJson(st.schemaString).asInstanceOf[StructType],
-          Map.empty[String, String])
-      else translateMapping(
-        DataType.fromJson(st.schemaString).asInstanceOf[StructType])
+    val (schema, physicalOf) = sourceSchemaOf(st)
     // the rewrite destination is NOT mapped to the source: drop the
     // source's mapping config and schema metadata (fresh ids stamp at
     // creation)
@@ -825,20 +543,17 @@ object DeltaImport {
     DeltaRewriteLayout(physicalOf, st.partitionColumns, props, destSchema)
   }
 
-  /** The shared rewrite read over `subset` of the live files: scan by
-    * PHYSICAL names, planned-vs-logged guard on exactly that subset, drop
+  /** The rewrite read over `subset` of the live files: scan by PHYSICAL
+    * names ([[Mirror.scanFiles]] guards exactly that subset), drop
     * DV-masked rows (two-tier), re-inject partition tuples from the log
     * via a broadcast file->tuple join, project to logical names — plus,
     * when `follow`, the lineage columns captured BEFORE the DV filter
-    * (the physical row index is what later DV growth deletes by) and a
-    * repartition by the partition columns with a within-partition sort on
-    * the lineage file, keeping per-destination-file lineage min/max tight
-    * so the sync's removal merges prune to the touched files. */
+    * (the physical row index is what later DV growth deletes by) and the
+    * lineage-clustered shuffle. */
   private def rewriteRows(spark: SparkSession, root: Path, st: ReplayedState,
       subset: Seq[(String, AddInfo)], lay: DeltaRewriteLayout,
       follow: Boolean): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val livePaths = subset.map(p => root.resolve(p._1).toString)
     // file -> partition tuple (log-authoritative, layout-independent)
     val pvSchema = StructType(
       StructField("__file", StringType) +:
@@ -856,22 +571,10 @@ object DeltaImport {
     // metadata (by-name resolution — works on id-less files too)
     val readSchema = StructType(lay.dataFields.map(f =>
       StructField(lay.physName(f.name), f.dataType, f.nullable)))
-    val raw0 = spark.read.schema(readSchema)
-      .parquet(livePaths: _*)
-      .withColumn("__file",
-        graft.log.DvBitmap.stripPathCol(col("_metadata.file_path")))
-    // loud pre-write guard (driver-only, no Spark job): every file the
-    // scan plans must have a log tuple and vice versa — an inner join
-    // silently dropping unmatched rows here would be total data loss,
-    // the exact mis-read this module's gates exist to prevent
-    val planned = raw0.inputFiles.map(Stats.stripScheme).toSet
-    val logged = subset.iterator
-      .map(p => Stats.stripScheme(root.resolve(p._1).toString)).toSet
-    require(planned == logged,
-      s"planned scan files diverge from the Delta log's live set " +
-        s"(only-planned: ${(planned -- logged).take(3)}, " +
-        s"only-logged: ${(logged -- planned).take(3)}) — refusing to " +
-        "write a silently incomplete import")
+    // the guard matters doubly here: an inner join silently dropping
+    // unmatched rows would be total data loss
+    val raw0 = Mirror.scanFiles(spark, readSchema,
+      subset.map(p => root.resolve(p._1).toString), "the Delta log's live set")
     // live deletion vectors: masked positions must NOT materialize in the
     // rewrite — small mask totals broadcast per-file bitmaps probed by the
     // codegen'd filter; large ones explode to rows and anti-join (the same
@@ -884,11 +587,7 @@ object DeltaImport {
     val unmasked =
       if (dvAdds.isEmpty) raw
       else {
-        dvAdds.foreach { case (p, d) =>
-          require(d.storageType == "u" || d.storageType == "i",
-            s"deletion vector for $p has storageType '${d.storageType}' — " +
-              "only file-relative ('u') and inline ('i') vectors can import")
-        }
+        // (descriptor storage types were gated with the replayed state)
         val totalMasked = dvAdds.map(_._2.cardinality).sum
         val dvDf = decodeDvs(spark, root, dvAdds)
         if (totalMasked <= graft.log.DvBitmap.broadcastMaxMasks(spark)) {
@@ -909,31 +608,13 @@ object DeltaImport {
     val joined =
       if (lay.pcols.isEmpty) unmasked
       else unmasked.join(broadcast(pv), "__file")
-    val rootPrefixLen = root.toString.length + 2 // 1-based, past the '/'
-    val lineageCols =
-      if (!follow) Nil
-      else Seq(
-        org.apache.spark.sql.functions
-          .expr(s"substring(__file, $rootPrefixLen)").as(Rewrite.SrcFileCol),
-        col("__idx").as(Rewrite.SrcPosCol))
     val typed = joined
       .select(lay.destSchema.fields.toSeq.map { f =>
         if (lay.pcols.exists(_.equalsIgnoreCase(f.name)))
           col(s"__pv_${f.name}").cast(f.dataType).as(f.name)
         else col(lay.physName(f.name)).as(f.name) // physical -> logical
-      } ++ lineageCols: _*)
-    if (!follow) typed
-    else {
-      // shuffle by (partition columns, SOURCE FILE) so destination files
-      // are lineage-CLUSTERED (whole source files per shuffle task,
-      // modulo hash collisions; the sort keeps each source contiguous) —
-      // the sync's removal merges and DV-changed re-imports rewrite only
-      // the files carrying the touched sources, not the table; file
-      // count is bounded by the source's own file-per-partition overlap
-      // (~1 for partition-aligned sources)
-      val keys = lay.pcols.map(col) :+ col(Rewrite.SrcFileCol)
-      typed.repartition(keys: _*).sortWithinPartitions(keys: _*)
-    }
+      } ++ (if (follow) Mirror.lineageCols(root, Follow) else Nil): _*)
+    if (!follow) typed else Mirror.clusterByLineage(typed, lay.pcols.map(col))
   }
 
   /** A deletion vector's identity for ledger diffing: any change in the
@@ -942,48 +623,6 @@ object DeltaImport {
   private def dvSignature(dv: Option[DvDescriptor]): String =
     dv.map(d => s"${d.storageType}|${d.pathOrInlineDv}|${d.offset}|" +
       s"${d.sizeInBytes}|${d.cardinality}").getOrElse("")
-
-  /** One JSON snapshot of the source's live set (log-relative path -> DV
-    * signature) per consumed version:
-    * `_graft_import/ledger-<version>.json` under the destination.
-    * Name-keyed by the consumed version and derived from one replayed
-    * state, so a crash-replay rewrites identical content. */
-  private def writeRwLedger(destRoot: Path, st: ReplayedState): Unit = {
-    val node = mapper.createObjectNode()
-    val files = node.putObject("dataFiles")
-    st.adds.toSeq.sortBy(_._1).foreach { case (p, i) =>
-      files.put(p, dvSignature(i.dv)): Unit }
-    store.writeAtomic(
-      destRoot.resolve(Rewrite.LedgerDir)
-        .resolve(s"ledger-${st.sourceVersion}.json"),
-      mapper.writeValueAsBytes(node), overwrite = true)
-  }
-
-  private def readRwLedger(destRoot: Path, version: Long)
-      : Option[Map[String, String]] = {
-    val p = destRoot.resolve(Rewrite.LedgerDir).resolve(s"ledger-$version.json")
-    if (!store.listFileNames(p.getParent).contains(p.getFileName.toString))
-      return None
-    val j = mapper.readTree(
-      new String(store.readBytes(p), StandardCharsets.UTF_8))
-    val files = j.get("dataFiles")
-    val out = Map.newBuilder[String, String]
-    files.fieldNames().asScala.foreach(n => out += (n -> files.get(n).asText()))
-    Some(out.result())
-  }
-
-  /** Drop ledger snapshots STRICTLY OLDER than the previous consumed
-    * version (current and previous stay — the previous one covers a sync
-    * that crashed between ledger write and commit). Best-effort. */
-  private def pruneRwLedgers(destRoot: Path, keepFrom: Long): Unit = {
-    val dir = destRoot.resolve(Rewrite.LedgerDir)
-    val re = raw"ledger-(\d+)\.json".r
-    store.listFileNames(dir).foreach {
-      case n @ re(v) if v.toLong < keepFrom =>
-        scala.util.Try(store.delete(dir.resolve(n))): Unit
-      case _ => ()
-    }
-  }
 
   /** Shared honesty gates over a replayed state (everything except the
     * partitioning decision, which differs between the two imports). */
@@ -1179,7 +818,8 @@ object DeltaImport {
     * across the cluster, never a driver bottleneck or a position
     * explosion. */
   private def importDvActions(spark: SparkSession, root: Path,
-      dvAdds: Seq[(String, DvDescriptor)]): Seq[graft.log.DeletionVector] = {
+      adds: Seq[(String, AddInfo)]): Seq[graft.log.DeletionVector] = {
+    val dvAdds = adds.collect { case (p, i) if i.dv.isDefined => p -> i.dv.get }
     if (dvAdds.isEmpty) return Nil
     dvAdds.foreach { case (p, d) =>
       require(d.storageType == "u" || d.storageType == "i",
@@ -1187,7 +827,7 @@ object DeltaImport {
           "only file-relative ('u') and inline ('i') vectors can import")
     }
     val absRoot = root.toAbsolutePath.normalize
-    val rel = s"dv/import-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+    val rel = Mirror.dvImportDir()
     decodeDvs(spark, absRoot, dvAdds)
       .write.mode("errorifexists").parquet(absRoot.resolve(rel).toString)
     dvAdds.map { case (p, d) => graft.log.DeletionVector(p, rel, d.cardinality) }
@@ -1232,17 +872,9 @@ object DeltaImport {
     // ---- log layout: checkpoint base + JSON tail ----
     val entries = store.listFileNames(logDir)
     require(entries.nonEmpty, s"no _delta_log under $root")
-    val jsonRe = raw"(\d{20})\.json".r
-    val jsonVersions = entries.collect { case jsonRe(v) => v.toLong }.sorted
-    val lastCheckpoint: Option[(Long, Int)] =
-      scala.util.Try {
-        val n = mapper.readTree(new String(store.readBytes(
-          logDir.resolve("_last_checkpoint")), StandardCharsets.UTF_8))
-        val v = n.get("version").asLong()
-        val parts = Option(n.get("parts")).map(_.asInt()).getOrElse(1)
-        (v, parts)
-      }.toOption
-    val cpVersion = lastCheckpoint.map(_._1)
+    val jsonVersions = commitVersions(entries)
+    val checkpoint = lastCheckpoint(logDir)
+    val cpVersion = checkpoint.map(_._1)
     val tail = jsonVersions.filter(v => cpVersion.forall(v > _))
     // replay needs an unbroken chain: from v0 without a checkpoint, from
     // checkpoint+1 with one (Delta's own log-retention cleanup deletes
@@ -1267,10 +899,6 @@ object DeltaImport {
     var readerFeatures = Set.empty[String]
     val adds = mutable.LinkedHashMap.empty[String, AddInfo]
 
-    def applyAdd(path: String, size: Long, mtime: Long,
-        stats: Option[String], dv: Option[DvDescriptor],
-        pv: Map[String, String]): Unit =
-      adds.update(decodePath(path), AddInfo(size, mtime, stats, dv, pv)): Unit
     def applyRemove(path: String): Unit = adds.remove(decodePath(path)): Unit
     def applyMeta(id: String, schema: String, pcols: Seq[String],
         conf: Map[String, String]): Unit = {
@@ -1278,29 +906,21 @@ object DeltaImport {
       partitionColumns = pcols; configuration = conf
     }
 
-    // JSON-node appliers, shared by the commit tail and v2 JSON manifests
-    def applyMetaNode(m: JsonNode): Unit =
-      applyMeta(m.get("id").asText(), m.get("schemaString").asText(),
-        Option(m.get("partitionColumns")).map(_.elements().asScala
-          .map(_.asText()).toSeq).getOrElse(Nil),
-        Option(m.get("configuration")).map(c => c.properties().asScala
-          .map(e => e.getKey -> e.getValue.asText()).toMap)
-          .getOrElse(Map.empty))
-    def applyProtoNode(p: JsonNode): Unit = {
-      minReader = p.get("minReaderVersion").asInt()
-      readerFeatures = Option(p.get("readerFeatures"))
-        .map(_.elements().asScala.map(_.asText()).toSet)
-        .getOrElse(Set.empty)
+    // one JSON action, shared by the commit tail and v2 JSON manifests
+    def applyNode(n: JsonNode): Unit = {
+      if (n.has("metaData")) {
+        val m = n.get("metaData")
+        applyMeta(m.get("id").asText(), m.get("schemaString").asText(),
+          strings(m, "partitionColumns"), confOf(m))
+      }
+      if (n.has("protocol")) {
+        minReader = n.get("protocol").get("minReaderVersion").asInt()
+        readerFeatures = strings(n.get("protocol"), "readerFeatures").toSet
+      }
+      if (n.has("add"))
+        adds.update(decodePath(n.get("add").get("path").asText()),
+          addInfoOf(n.get("add"))): Unit
     }
-    def applyAddNode(a: JsonNode): Unit =
-      applyAdd(a.get("path").asText(), a.get("size").asLong(),
-        a.get("modificationTime").asLong(),
-        Option(a.get("stats")).filterNot(_.isNull).map(_.asText()),
-        dvOf(a),
-        Option(a.get("partitionValues")).map(pvn =>
-          pvn.properties().asScala.map(e => e.getKey ->
-            (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
-          .getOrElse(Map.empty))
 
     // One parquet action batch — classic checkpoint part(s), a v2
     // manifest, or v2 sidecar files — applied in ONE pass (per-action
@@ -1351,12 +971,12 @@ object DeltaImport {
                       .map(_.asInstanceOf[Number].intValue()).getOrElse(0),
                     d.getAs[Number]("sizeInBytes").intValue(),
                     d.getAs[Number]("cardinality").longValue()))
-              applyAdd(a.getAs[String]("path"), a.getAs[Long]("size"),
-                a.getAs[Long]("modificationTime"),
-                if (hasStats) Option(a.getAs[String]("stats")) else None,
-                dv,
-                Option(a.getAs[scala.collection.Map[String, String]]("partitionValues"))
-                  .map(_.toMap).getOrElse(Map.empty))
+              adds.update(decodePath(a.getAs[String]("path")),
+                AddInfo(a.getAs[Long]("size"), a.getAs[Long]("modificationTime"),
+                  if (hasStats) Option(a.getAs[String]("stats")) else None,
+                  dv,
+                  Option(a.getAs[scala.collection.Map[String, String]]("partitionValues"))
+                    .map(_.toMap).getOrElse(Map.empty))): Unit
             case "sidecar" =>
               sidecars += r.getStruct(i).getAs[String]("path")
           }
@@ -1371,7 +991,7 @@ object DeltaImport {
     // UUID-named manifest (json or parquet), or a classic-named v2 (the
     // spec's compat shape) — all resolve from the directory listing, so a
     // v2 pointer never hits a misleading missing-classic-file error
-    lastCheckpoint.foreach { case (v, parts) =>
+    checkpoint.foreach { case (v, parts) =>
       val singleName = f"$v%020d.checkpoint.parquet"
       val multiNames =
         (1 to parts).map(i => f"$v%020d.checkpoint.$i%010d.$parts%010d.parquet")
@@ -1391,18 +1011,10 @@ object DeltaImport {
               sidecarsAllowed = true)
           else {
             // v2 JSON manifest: newline-delimited actions
-            val sidecars = mutable.Buffer.empty[String]
-            new String(store.readBytes(logDir.resolve(chosen)),
-              StandardCharsets.UTF_8)
-              .split("\n").filter(_.trim.nonEmpty).foreach { line =>
-                val n = mapper.readTree(line)
-                if (n.has("metaData")) applyMetaNode(n.get("metaData"))
-                if (n.has("protocol")) applyProtoNode(n.get("protocol"))
-                if (n.has("add")) applyAddNode(n.get("add"))
-                if (n.has("sidecar"))
-                  sidecars += n.get("sidecar").get("path").asText()
-              }
-            sidecars.toSeq
+            val nodes = jsonActions(logDir.resolve(chosen))
+            nodes.foreach(applyNode)
+            nodes.filter(_.has("sidecar"))
+              .map(_.get("sidecar").get("path").asText())
           }
         } else {
           throw new IllegalArgumentException(
@@ -1423,14 +1035,8 @@ object DeltaImport {
 
     // JSON tail, in order
     tail.foreach { v =>
-      val lines = new String(store.readBytes(
-        logDir.resolve(f"$v%020d.json")), StandardCharsets.UTF_8)
-        .split("\n").filter(_.trim.nonEmpty)
-      lines.foreach { line =>
-        val n = mapper.readTree(line)
-        if (n.has("metaData")) applyMetaNode(n.get("metaData"))
-        if (n.has("protocol")) applyProtoNode(n.get("protocol"))
-        if (n.has("add")) applyAddNode(n.get("add"))
+      jsonActions(logDir.resolve(f"$v%020d.json")).foreach { n =>
+        applyNode(n)
         if (n.has("remove")) applyRemove(n.get("remove").get("path").asText())
       }
     }
@@ -1438,6 +1044,48 @@ object DeltaImport {
     ReplayedState(tableId, schemaString, configuration, partitionColumns,
       minReader, readerFeatures, sourceVersion, adds)
   }
+
+  /** The commit versions among `_delta_log` entry names, ascending. */
+  private def commitVersions(entries: Seq[String]): Seq[Long] = {
+    val jsonRe = raw"(\d{20})\.json".r
+    entries.collect { case jsonRe(v) => v.toLong }.sorted
+  }
+
+  /** `_last_checkpoint`'s (version, parts), when readable. */
+  private def lastCheckpoint(logDir: Path): Option[(Long, Int)] =
+    scala.util.Try {
+      val n = mapper.readTree(new String(store.readBytes(
+        logDir.resolve("_last_checkpoint")), StandardCharsets.UTF_8))
+      (n.get("version").asLong(),
+        Option(n.get("parts")).map(_.asInt()).getOrElse(1))
+    }.toOption
+
+  /** The actions of one newline-delimited JSON log file. */
+  private def jsonActions(p: Path): Seq[JsonNode] =
+    new String(store.readBytes(p), StandardCharsets.UTF_8)
+      .split("\n").filter(_.trim.nonEmpty).map(mapper.readTree).toSeq
+
+  private def structOf(schemaString: String): StructType =
+    DataType.fromJson(schemaString).asInstanceOf[StructType]
+
+  /** A JSON string array field (absent: empty). */
+  private def strings(n: JsonNode, field: String): Seq[String] =
+    Option(n.get(field)).filterNot(_.isNull)
+      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
+
+  /** A metaData action's configuration map. */
+  private def confOf(m: JsonNode): Map[String, String] =
+    Option(m.get("configuration")).map(c => c.properties().asScala
+      .map(e => e.getKey -> e.getValue.asText()).toMap).getOrElse(Map.empty)
+
+  /** One JSON add action's attributes. */
+  private def addInfoOf(a: JsonNode, era: Int = 0): AddInfo =
+    AddInfo(a.get("size").asLong(), a.get("modificationTime").asLong(),
+      Option(a.get("stats")).filterNot(_.isNull).map(_.asText()), dvOf(a),
+      Option(a.get("partitionValues")).map(pvn =>
+        pvn.properties().asScala.map(e => e.getKey ->
+          (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
+        .getOrElse(Map.empty), era)
 
   /** Parse an add action's `deletionVector` descriptor, if present. */
   private def dvOf(add: JsonNode): Option[DvDescriptor] =

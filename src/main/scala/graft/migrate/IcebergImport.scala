@@ -1,7 +1,7 @@
 package graft.migrate
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -9,7 +9,7 @@ import org.apache.avro.generic.GenericRecord
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
-import graft.log.{AddFile, ColStats, ColumnIds, CommitInfo, Stats, TxLog}
+import graft.log.{AddFile, ColStats, ColumnIds, Stats, TxLog}
 import graft.table.LakeTable
 
 /** Zero-copy import of an Apache Iceberg table (HadoopTables layout —
@@ -110,7 +110,39 @@ object IcebergImport {
       deletePaths: Seq[String], // position-delete parquet (manifest form)
       eqDeletes: Seq[EqDelete]) {
     def pcols: Seq[String] = partFields.map(_.column)
+    lazy val fieldById: Map[Int, StructField] = schemaWithIds.fields
+      .flatMap(f => ColumnIds.idOf(f).map(_.toInt -> f)).toMap
+    lazy val idOfName: Map[String, Long] =
+      fieldById.map { case (id, f) => f.name -> id.toLong }
     def specSize(specId: Long): Int = specFields.get(specId).map(_.size).getOrElse(0)
+  }
+
+  /** Whether `files` bind BY FIELD ID: every footer column carries one.
+    * Otherwise they bind by name, and a footer column that names no schema
+    * column is a name mapping this importer cannot resolve — a by-name
+    * read would misread renamed columns — so it refuses. */
+  private def bindsById(st: IcebergState, root: Path,
+      files: Seq[(String, GenericRecord)],
+      footerIds: Map[String, Seq[(String, Option[Int])]]): Boolean = {
+    val allIds = files.forall { case (p, _) =>
+      footerIds(root.resolve(p).toString).forall(_._2.isDefined) }
+    if (!allIds) files.foreach { case (p, _) =>
+      footerIds(root.resolve(p).toString).foreach { case (name, _) =>
+        require(st.schemaWithIds.fieldNames.contains(name),
+          s"file $p column '$name' is not a schema column and the files " +
+            "carry no usable field ids — name-mapping this importer " +
+            "cannot resolve; rewrite the table on the Iceberg side")
+      }
+    }
+    allIds
+  }
+
+  /** Partition types whose Avro partition encoding has a faithful string
+    * form (the set the exporter writes). */
+  private def stringFaithful(dt: DataType): Boolean = dt match {
+    case StringType | LongType | IntegerType | ShortType | ByteType |
+         DateType => true
+    case _ => false
   }
 
   /** The zero-copy imports' honesty gates over partition transforms,
@@ -132,11 +164,7 @@ object IcebergImport {
     // import (the same set the exporter writes)
     st.pcols.foreach { c =>
       val dt = st.schemaWithIds.fields.find(_.name == c).get.dataType
-      require(dt match {
-        case StringType | LongType | IntegerType | ShortType | ByteType |
-             DateType => true
-        case _ => false
-      }, s"identity partition column '$c' has type $dt — its Avro " +
+      require(stringFaithful(dt), s"identity partition column '$c' has type $dt — its Avro " +
         "partition encoding has no faithful string form in this importer")
     }
   }
@@ -149,87 +177,41 @@ object IcebergImport {
     val root = Paths.get(dir).toAbsolutePath.normalize
     val st = replay(root)
     gateZeroCopy(root, st)
-    val now = System.currentTimeMillis()
 
     // ---- column binding + ONE footer pass (ids + exact stats) ----
-    val icebergIds: Map[String, Long] = st.schemaWithIds.fields.map(f =>
-      f.name -> ColumnIds.idOf(f).get).toMap
-    val footers: Map[String, (Long, Map[String, ColStats], Seq[(String, Option[Int])])] =
-      if (st.live.isEmpty) Map.empty
-      else Stats.fromFootersWithIds(
-        st.live.map(p => root.resolve(p._1)), st.schemaWithIds)
-    val allIdsPresent = st.live.nonEmpty && st.live.forall { case (p, _) =>
-      footers(root.resolve(p).toString)._3.forall(_._2.isDefined)
-    }
+    val footers = footersOf(st, root, st.live)
+    val allIdsPresent = st.live.nonEmpty &&
+      bindsById(st, root, st.live, footers.view.mapValues(_._3).toMap)
     val schema =
-      if (allIdsPresent) st.schemaWithIds
-      else {
-        st.live.foreach { case (p, _) =>
-          footers(root.resolve(p).toString)._3.foreach { case (name, _) =>
-            require(icebergIds.contains(name),
-              s"file $p column '$name' is not a schema column and the " +
-                "files carry no usable field ids — name-mapping this " +
-                "importer cannot resolve; rewrite the table")
-          }
-        }
-        ColumnIds.strip(st.schemaWithIds)
-      }
-    // stats landed by footer-column NAME, but a by-id import READS by field
-    // id — drop any per-file stats entry whose footer column name matches a
-    // schema column carrying a DIFFERENT id (Iceberg never reuses ids but
-    // MAY reuse a renamed-away name: that footer column's bytes are not
-    // what by-id reads return for the same-named schema column, so its
-    // min/max/nullCount would silently poison exact metadata-only answers)
-    val footersAttr =
-      if (!allIdsPresent) footers
-      else footers.view.mapValues(dropMisattributedStats(_, icebergIds)).toMap
-    val graftAdds: Seq[AddFile] = st.live.map { case (p, df) =>
-      toAddFile(st, root, p, df, footersAttr(root.resolve(p).toString), now)
-    }
+      if (allIdsPresent) st.schemaWithIds else ColumnIds.strip(st.schemaWithIds)
+    val graftAdds = toAddFiles(st, root, st.live, footers, byId = allIdsPresent)
 
     // ---- position deletes -> graft deletion-vector masks ----
-    val liveAbs = graftAdds.map(f => root.resolve(f.path).toString).toSet
-    val masks = buildMasks(spark, root, st.deletePaths, liveAbs)
-    val dvActions: Seq[graft.log.Action] = masks.toSeq.flatMap {
-      case (rel, counts) =>
-        graftAdds.flatMap(f => counts.get(root.resolve(f.path).toString)
-          .map(n => graft.log.DeletionVector(f.path, rel, n)))
-    }
+    val dvActions = buildMasks(spark, root, st.deletePaths, st.live.map(_._1))
 
     // ---- one graft commit materializing the snapshot ----
-    val properties = Option(st.meta.get("properties"))
+    val maxIdProp = Mirror.maxIdProp(
+      if (allIdsPresent) Some(lastColumnId(st)) else None, Map.empty, schema)
+    Mirror.convertCommit(spark, dir, root,
+      Option(st.meta.get("table-uuid")).map(_.toString)
+        .getOrElse(java.util.UUID.randomUUID().toString),
+      schema, st.pcols,
+      LakeTable.normalizeProps(sourceProperties(st)) ++
+        sortAndStatsProps(st, root) ++ maxIdProp +
+        (SourceSeqKey -> st.lastSeq.toString) +
+        (SourceMetaVersionKey -> st.metaVersion.toString),
+      "iceberg", st.metaVersion, graftAdds, dvActions)
+  }
+
+  /** The source table's own properties. */
+  private def sourceProperties(st: IcebergState): Map[String, String] =
+    Option(st.meta.get("properties"))
       .map(_.asInstanceOf[java.util.Map[String, Object]].asScala
         .map { case (k, v) => k -> String.valueOf(v) }.toMap)
       .getOrElse(Map.empty[String, String])
-    val maxIdProp: Map[String, String] =
-      if (!allIdsPresent) Map.empty
-      else Map(ColumnIds.MaxIdKey -> math.max(
-        Option(st.meta.get("last-column-id")).map(num).getOrElse(0L),
-        ColumnIds.maxId(Map.empty, schema)).toString)
-    val metaAction = graft.log.Metadata(
-      Option(st.meta.get("table-uuid")).map(_.toString)
-        .getOrElse(java.util.UUID.randomUUID().toString),
-      root.getFileName.toString, schema.json, st.pcols,
-      LakeTable.normalizeProps(properties) ++ sortAndStatsProps(st, root) ++
-        maxIdProp +
-        (SourceSeqKey -> st.lastSeq.toString) +
-        (SourceMetaVersionKey -> st.metaVersion.toString), now)
-    val ci = CommitInfo(0L, now, "CONVERT",
-      Map("numFiles" -> graftAdds.size.toString,
-        "sourceFormat" -> "iceberg",
-        "numDeletionVectors" -> dvActions.size.toString,
-        "sourceVersion" -> st.metaVersion.toString), Map.empty, -1L,
-      LakeTable.currentUser, false, java.util.UUID.randomUUID().toString)
-    val proto = graft.log.Protocol.merge(
-      graft.log.Protocol.merge(graft.log.Protocol.Current,
-        LakeTable.impliedFeatures(metaAction.properties)),
-      if (dvActions.isEmpty) graft.log.Protocol.Current
-      else graft.log.Protocol(1, 1, null, Seq("deletionVectors")))
-    val tlog = new TxLog(root)
-    if (!tlog.tryCommit(0L, ci +: proto +: metaAction +: (graftAdds ++ dvActions)))
-      return LakeTable.forPath(spark, dir) // lost a concurrent import
-    LakeTable.forPath(spark, dir)
-  }
+
+  private def lastColumnId(st: IcebergState): Long =
+    Option(st.meta.get("last-column-id")).map(num).getOrElse(0L)
 
   /** Incremental catch-up after [[convert]]: when the source's
     * last-sequence-number advanced, apply the NET difference between its
@@ -249,31 +231,10 @@ object IcebergImport {
     * NOT propagate (Iceberg properties rarely map onto graft semantics —
     * set them locally if needed). Returns the graft version. */
   def sync(spark: SparkSession, dir: String): Long = {
-    val t = LakeTable.forPath(spark, dir)
+    val (t, consumed) = Mirror.mirrorAt(spark, dir, Follow)
     val root = Paths.get(dir).toAbsolutePath.normalize
-    // a rewrite destination also carries the consumed-state keys but is
-    // NOT an in-place mirror (its source lives elsewhere and its rows are
-    // rewritten) — without this gate the failure would be a confusing
-    // missing-metadata error on the destination directory
-    require(!t.properties.get(RewriteFollowKey).contains("true"),
-      s"$dir is a followable REWRITE destination — sync it with " +
-        "IcebergImport.syncRewrite(spark, sourceDir, destDir)")
-    val consumed = t.properties.get(SourceSeqKey).map(_.toLong).getOrElse(
-      throw new IllegalArgumentException(
-        s"$dir was not imported from Iceberg (no $SourceSeqKey property)"))
-    val syncOps = Set("CONVERT", "ICEBERG SYNC")
-    SyncGuard.requireNotDiverged(t.snapshot().commits, syncOps, "Iceberg")
     val st = replay(root)
-    // staleness is judged on BOTH ordering keys: the sequence number (data
-    // commits) and the metadata version (metadata-only commits — a rename
-    // writes new metadata WITHOUT a new snapshot, so its sequence does not
-    // move; and a v1→v2 format upgrade RESTARTS the sequence axis, which
-    // would otherwise stall the mirror silently until the source
-    // accumulated `consumed` data commits)
-    val consumedMeta = t.properties.get(SourceMetaVersionKey)
-      .map(_.toLong).getOrElse(-1L)
-    if (st.lastSeq <= consumed && st.metaVersion <= consumedMeta)
-      return t.version
+    if (consumedBy(t.properties, st)) return t.version
     // a source that adopted non-identity transforms or equality deletes
     // since the import can no longer mirror in place (cut-over moment)
     gateZeroCopy(root, st)
@@ -304,16 +265,9 @@ object IcebergImport {
           "re-import")
     }
 
-    val graftLive: Set[String] = snap0.files.map(_.path).toSet
-    val currentLive: Set[String] = st.live.map(_._1).toSet
-    val newEntries = st.live.filterNot { case (p, _) => graftLive.contains(p) }
-    val removed = (graftLive -- currentLive).toSeq
+    val (newEntries, removed) = Mirror.netDiff(snap0, st.live)
     // binding gate + exact stats for the NEW files only (O(churn) footers)
-    val footers =
-      if (newEntries.isEmpty)
-        Map.empty[String, (Long, Map[String, ColStats], Seq[(String, Option[Int])])]
-      else Stats.fromFootersWithIds(
-        newEntries.map(p => root.resolve(p._1)), st.schemaWithIds)
+    val footers = footersOf(st, root, newEntries)
     newEntries.foreach { case (p, _) =>
       val cols = footers(root.resolve(p).toString)._3
       if (mapped) cols.foreach { case (name, id) =>
@@ -328,105 +282,37 @@ object IcebergImport {
             "name-mapping this importer cannot resolve")
       }
     }
-    val now = System.currentTimeMillis()
-    // same stat-attribution honesty as convert: by-id tables drop stats
-    // for footer columns whose name matches a different-id schema column
-    val idOfName: Map[String, Long] = st.schemaWithIds.fields.map(f =>
-      f.name -> ColumnIds.idOf(f).get).toMap
-    val footersAttr =
-      if (!mapped) footers
-      else footers.view.mapValues(dropMisattributedStats(_, idOfName)).toMap
     // footer stats are re-derived NOW under the current types, so synced
     // files always tag: stats/bloom trust heals on the mirror after a
     // followed lossy widening or name reuse
-    val tagSchema =
-      if (!evolved) snap0.schema
-      else Evolution.mergedSchema(snap0.schema, incoming, mapped,
-        snap0.metadata.properties, t.version + 1)._1
-    val syncTags: Map[String, String] = tagSchema.fields
-      .filter(f => graft.log.TypeWidening.hasChanges(f) ||
-        graft.log.TypeWidening.nameReused(f))
-      .map(f => graft.log.TypeWidening.tagKey(f) ->
-        graft.log.TypeWidening.changeCount(f).toString).toMap
-    val newAdds: Seq[AddFile] = newEntries.map { case (p, df) =>
-      toAddFile(st, root, p, df, footersAttr(root.resolve(p).toString), now,
-        syncTags)
-    }
-    // rebuild the CURRENT mask state (position deletes are snapshot-global)
-    val liveAbs = st.live.map(p => root.resolve(p._1).toString).toSet
-    val masks = buildMasks(spark, root, st.deletePaths, liveAbs)
-    try {
-      t.commitWithRetry("ICEBERG SYNC",
-        Map("fromSequence" -> consumed.toString,
-          "toSequence" -> st.lastSeq.toString,
-          "sourceVersion" -> st.metaVersion.toString),
-        snap0,
-        Map("numAddedFiles" -> newAdds.size.toLong,
-          "numRemovedFiles" -> removed.size.toLong)) { s =>
-        // a racing sync already consumed this state (BOTH ordering keys
-        // at-or-past — seq alone would false-trigger across a v1→v2
-        // upgrade, whose sequence axis restarts): stand down
-        if (s.metadata.properties.get(SourceSeqKey)
-            .exists(_.toLong >= st.lastSeq) &&
-          s.metadata.properties.get(SourceMetaVersionKey)
-            .exists(_.toLong >= st.metaVersion))
-          throw new LakeTable.EpochAlreadyCommitted
-        // TOCTOU re-check: local writes after the entry guard refuse here
-        SyncGuard.requireNotDiverged(s.commits, syncOps, "Iceberg")
-        SyncGuard.requireNoConstraintsForAdds(s.metadata.properties,
-          newAdds.size.toLong, "Iceberg")
-        val liveNow = s.files.map(_.path).toSet
-        val dvActions: Seq[graft.log.DeletionVector] = masks.toSeq.flatMap {
-          case (rel, counts) => st.live.flatMap { case (p, _) =>
-            counts.get(root.resolve(p).toString)
-              .map(n => graft.log.DeletionVector(p, rel, n))
-          }
-        }
-        val maskedNow = dvActions.map(_.forFile).toSet
-        // previously-masked files whose mask vanished: explicit clears
-        // (REMOVED files drop their vectors automatically)
-        val clears = s.dvs.keys
-          .filterNot(maskedNow).filter(currentLive.contains)
-          .map(p => graft.log.DeletionVector(p, "", 0L)).toSeq
-        // a followable evolution applies onto the CURRENT schema (by field
-        // id when mapped), so LOCAL field metadata a file-set-neutral
-        // commit stamped meanwhile (a column DEFAULT) survives the sync
-        val (mergedJson, retireProp) =
-          if (!evolved) (s.metadata.schemaJson, Map.empty[String, String])
-          else {
-            val (m, rp) = Evolution.mergedSchema(s.schema, incoming, mapped,
-              s.metadata.properties, s.version + 1)
-            (m.json, rp)
-          }
-        // an added column raises the field-id high-water mark so graft-side
-        // ADD COLUMN after cut-over never reuses a source id
-        val maxIdProp: Map[String, String] =
-          if (!mapped) Map.empty
-          else Map(ColumnIds.MaxIdKey -> math.max(
-            Option(st.meta.get("last-column-id")).map(num).getOrElse(0L),
-            math.max(
-              s.metadata.properties.get(ColumnIds.MaxIdKey)
-                .map(_.toLong).getOrElse(0L),
-              ColumnIds.maxId(Map.empty, incoming))).toString)
-        val metaA = s.metadata.copy(schemaJson = mergedJson,
-          properties = s.metadata.properties ++ maxIdProp ++ retireProp +
-          (SourceSeqKey -> st.lastSeq.toString) +
-          (SourceMetaVersionKey -> st.metaVersion.toString))
-        // property-implies-feature, like the Delta sync: a followed
-        // widening lands graft.enableTypeWidening WITH its feature
-        val proto = graft.log.Protocol.merge(
-          graft.log.Protocol.merge(s.protocol,
-            LakeTable.impliedFeatures(metaA.properties)),
-          if (dvActions.isEmpty) s.protocol
-          else graft.log.Protocol(1, 1, null, Seq("deletionVectors")))
-        (if (proto == s.protocol) Seq(metaA) else Seq(proto, metaA)) ++
-          newAdds ++ dvActions ++ clears ++
-          removed.filter(liveNow.contains)
-            .map(p => graft.log.RemoveFile(p, now))
-      }
-    } catch { case _: LakeTable.EpochAlreadyCommitted => () }
-    t.version
+    val newAdds = toAddFiles(st, root, newEntries, footers, byId = mapped,
+      Mirror.syncTags(snap0, incoming, evolved, mapped))
+    // rebuild the CURRENT mask state (position deletes are snapshot-global);
+    // previously-masked files whose mask vanished clear (REMOVED files drop
+    // their vectors automatically)
+    val dvActions = buildMasks(spark, root, st.deletePaths, st.live.map(_._1))
+    Mirror.NetSync("Iceberg", Mirror.syncOps("Iceberg"),
+      Map("fromSequence" -> consumed.toString,
+        "toSequence" -> st.lastSeq.toString,
+        "sourceVersion" -> st.metaVersion.toString),
+      consumed = Map(SourceSeqKey -> st.lastSeq.toString,
+        SourceMetaVersionKey -> st.metaVersion.toString),
+      alreadyConsumed = consumedBy(_, st),
+      newAdds, dvActions, clearable = st.live.map(_._1).toSet, removed, incoming,
+      evolved, mapped,
+      maxIdFloor = if (mapped) Some(lastColumnId(st)) else None)
+      .commit(t, snap0)
   }
+
+  /** Has a mirror with `props` already consumed `st`? Judged on BOTH
+    * ordering keys: the sequence number (data commits) and the metadata
+    * version (metadata-only commits — a rename writes new metadata WITHOUT
+    * a new snapshot, so its sequence does not move; and a v1→v2 format
+    * upgrade RESTARTS the sequence axis, so seq alone would both stall the
+    * mirror silently and false-trigger a racing sync's stand-down). */
+  private def consumedBy(props: Map[String, String], st: IcebergState): Boolean =
+    props.get(SourceSeqKey).exists(_.toLong >= st.lastSeq) &&
+      props.get(SourceMetaVersionKey).exists(_.toLong >= st.metaVersion)
 
   // ------------------------------------------------------ rewrite import
 
@@ -454,13 +340,8 @@ object IcebergImport {
     val c = s"`${src.name}`"
     def gen(dt: DataType, expr: String): Option[(StructField, Option[String])] =
       Some((StructField(pf.specName, dt), Some(expr)))
-    val stringFaithful = src.dataType match {
-      case StringType | LongType | IntegerType | ShortType | ByteType |
-           DateType => true
-      case _ => false
-    }
     parseTransform(pf.transform) match {
-      case ("identity", _) if stringFaithful => Some((src, None))
+      case ("identity", _) if stringFaithful(src.dataType) => Some((src, None))
       case ("identity", _) => None
       case ("void", _) => None
       case ("year" | "years", _) => gen(IntegerType, s"year($c)")
@@ -505,16 +386,8 @@ object IcebergImport {
     *
     * With `follow = true` the destination is built to be SYNCABLE by
     * [[syncRewrite]] (r13 verdict task 1 — the convert/sync/cut-over
-    * story for transform-partitioned layouts): every rewritten row
-    * carries its source-file LINEAGE as two ordinary columns —
-    * [[SrcFileCol]] (the source data file, root-relative) and
-    * [[SrcPosCol]] (the row's position in it) — the consumed source
-    * state records in the table properties, and a full live-set ledger
-    * snapshot writes under the destination. Lineage is what later
-    * source-side removes and row-level deletes key on; the storage cost
-    * (a dictionary-encoded path plus a delta-encoded long per row) is the
-    * price of followability, and a one-shot migration should keep the
-    * default `follow = false`. */
+    * story for transform-partitioned layouts; see [[Mirror.convertRewrite]]):
+    * rows carry [[SrcFileCol]], [[SrcPosCol]] and their data sequence. */
   def convertRewrite(spark: SparkSession, srcDir: String, destDir: String): LakeTable =
     convertRewrite(spark, srcDir, destDir, follow = false)
 
@@ -523,54 +396,15 @@ object IcebergImport {
     val root = Paths.get(srcDir).toAbsolutePath.normalize
     val st = replay(root)
     val lay = layoutOf(st)
-    val lineageFields =
-      if (!follow) Nil
-      else {
-        Seq(SrcFileCol, SrcPosCol, Rewrite.SrcSeqCol).foreach { n =>
-          require(!lay.destSchemaBase.fieldNames.exists(_.equalsIgnoreCase(n)),
-            s"source column '$n' collides with the lineage column a " +
-              "followable rewrite adds — import with follow = false, or " +
-              "rename the source column")
-        }
-        Seq(StructField(SrcFileCol, StringType),
-          StructField(SrcPosCol, LongType),
-          StructField(Rewrite.SrcSeqCol, LongType))
-      }
-    val destSchema = StructType(lay.destSchemaBase.fields ++ lineageFields)
-    val properties = Option(st.meta.get("properties"))
-      .map(_.asInstanceOf[java.util.Map[String, Object]].asScala
-        .map { case (k, v) => k -> String.valueOf(v) }.toMap)
-      .getOrElse(Map.empty[String, String])
-    val followProps: Map[String, String] =
-      if (!follow) Map.empty
-      else Map(RewriteFollowKey -> "true",
-        RewriteSourceKey -> root.toString,
-        RewriteSpecKey -> specSignature(st.partFields),
-        SourceSeqKey -> st.lastSeq.toString,
-        SourceMetaVersionKey -> st.metaVersion.toString)
-    val props = LakeTable.normalizeProps(properties) ++ lay.genProps ++ followProps
-    // a fully deleted (or never-written) source imports as an empty table —
-    // schema and layout are fully known
-    if (st.live.isEmpty) {
-      if (follow) writeLedger(Paths.get(destDir).toAbsolutePath.normalize, st)
-      return LakeTable.create(spark, destDir, destSchema,
-        partitionColumns = lay.destPcols, properties = props, ifNotExists = false)
-    }
-    val typed = rewriteRows(spark, root, st, st.live, lay, follow,
-      st.eqDeletes, st.deletePaths)
-    // the ledger snapshot writes BEFORE the data commit: a crash in
-    // between leaves a stray ledger file (harmless — reads key on the
-    // CONSUMED property) but never a synced table without its ledger
-    if (follow) writeLedger(Paths.get(destDir).toAbsolutePath.normalize, st)
-    // ifNotExists = false: a retried migration fails LOUDLY on the
-    // existing destination instead of silently appending twice
-    val dest = LakeTable.create(spark, destDir, destSchema,
-      partitionColumns = lay.destPcols, properties = props, ifNotExists = false)
-    if (follow)
-      dest.appendWithProps(typed, _ => Map.empty,
-        Some(RwAppendAppId), Some(st.lastSeq)): Unit
-    else dest.append(typed): Unit
-    dest
+    Mirror.convertRewrite(spark, root, destDir, Follow,
+      if (follow) Some(pointOf(st)) else None, lay.destSchemaBase,
+      lay.destPcols,
+      LakeTable.normalizeProps(sourceProperties(st)) ++ lay.genProps ++
+        (if (follow) Map(RewriteSpecKey -> specSignature(st.partFields))
+        else Map.empty),
+      if (st.live.isEmpty) None
+      else Some(rewriteRows(spark, root, st, st.live, lay, follow,
+        st.eqDeletes, st.deletePaths)))
   }
 
   /** Incremental catch-up for a FOLLOWABLE rewrite destination
@@ -579,14 +413,13 @@ object IcebergImport {
     * (days/bucket/truncate layouts, equality-delete streams):
     *
     *  1. source files REMOVED since the last sync (compaction,
-    *     copy-on-write deletes) become a lineage-keyed merge-DELETE on
-    *     the destination (`_src_file` equality — file stats on the
-    *     lineage column prune the touched destination files);
+    *     copy-on-write deletes) become the shared lineage-keyed
+    *     merge-DELETE ([[Mirror.syncRewrite]]);
     *  2. NEW position-delete files targeting already-imported rows apply
     *     as a (`_src_file`, `_src_pos`) merge-DELETE;
     *  3. NEW equality-delete files apply to already-imported rows as
     *     key-equality merge-DELETEs, sequence-gated against each row's
-    *     [[Rewrite.SrcSeqCol]] lineage (a newly-arrived delete file can
+    *     [[Mirror.SrcSeqCol]] lineage (a newly-arrived delete file can
     *     carry an OLD explicit sequence — delete-file compaction — and
     *     must not touch rows whose data postdates it); only table-wide or
     *     implied-by-key scopes apply (a real partition scope against old
@@ -597,157 +430,99 @@ object IcebergImport {
     *     partition keys recomputed), advancing the consumed source state
     *     in the SAME commit.
     *
-    * Every step is idempotent — the merges and the append ride the
-    * transaction ledger keyed by the target sequence, the ledger snapshot
-    * is name-keyed by it — so a crash anywhere replays to the same state
-    * and a repeated sync no-ops. Unlike the in-place [[sync]] (one net
-    * commit), a catch-up is up to four destination commits: each is
-    * individually consistent, but a reader BETWEEN them can observe a
-    * mid-sync state (e.g. a compacted file's rows removed before their
-    * re-append lands); time-travel to the pre-sync version if the read
-    * must straddle a sync. Cost is O(churn) + one merge probe per
-    * step; the destination may be OPTIMIZE/ZORDER-compacted freely
-    * between syncs (lineage rides the rows), while local DML stays the
-    * cut-over moment. Returns the destination's version. */
-  def syncRewrite(spark: SparkSession, srcDir: String, destDir: String): Long = {
-    import org.apache.spark.sql.functions.{col, expr}
-    val dest = LakeTable.forPath(spark, destDir)
-    val root = Paths.get(srcDir).toAbsolutePath.normalize
-    val destRoot = Paths.get(destDir).toAbsolutePath.normalize
-    val props0 = dest.properties
-    require(props0.get(RewriteFollowKey).contains("true"),
-      s"$destDir was not rewrite-imported with follow = true — a one-shot " +
-        "rewrite destination carries no source lineage to sync by; " +
-        "re-import with convertRewrite(spark, src, dest, follow = true)")
-    require(props0.get(RewriteSourceKey).contains(root.toString),
-      s"$destDir mirrors ${props0.getOrElse(RewriteSourceKey, "<unset>")}, " +
-        s"not $srcDir")
-    val consumed = props0(SourceSeqKey).toLong
-    val consumedMeta = props0.get(SourceMetaVersionKey).map(_.toLong).getOrElse(-1L)
-    Rewrite.requireNotDiverged(dest, destDir)
-    val st = replay(root)
-    if (st.lastSeq <= consumed && st.metaVersion <= consumedMeta)
-      return dest.version
-    // schema and partition-spec changes stay cut-over refusals for a
-    // rewrite destination (its generated layout and lineage plumbing were
-    // derived from the import-time spec)
-    val lay = layoutOf(st)
-    require(props0.get(RewriteSpecKey).contains(specSignature(st.partFields)),
-      s"the Iceberg source's partition spec changed — a rewrite " +
-        "destination cannot follow a re-layout; re-import")
-    // every lineage column this sync relies on must actually exist — a
-    // destination built by an OLDER convertRewrite (before the sequence
-    // lineage landed) must refuse loudly up front, not fail mid-sync with
-    // an unresolved-column error after merges already committed
-    Seq(SrcFileCol, SrcPosCol, Rewrite.SrcSeqCol).foreach { c =>
-      require(dest.snapshot().schema.fieldNames.contains(c),
-        s"$destDir carries no '$c' lineage column — it was rewritten by " +
-          "an older engine version; re-import with convertRewrite(spark, " +
-          "src, dest, follow = true) to keep syncing")
+    * Unlike the in-place [[sync]] (one net commit), a catch-up is up to
+    * four destination commits ([[Mirror.syncRewrite]] on idempotency and
+    * mid-sync reads); cost is O(churn) + one merge probe per step.
+    * Returns the destination's version. */
+  def syncRewrite(spark: SparkSession, srcDir: String, destDir: String): Long =
+    Mirror.syncRewrite(spark, srcDir, destDir, Follow) { (dest, root, consumed) =>
+      val st = replay(root)
+      if (consumedBy(dest.properties, st)) None
+      else {
+        // schema and partition-spec changes stay cut-over refusals for a
+        // rewrite destination (its generated layout and lineage plumbing
+        // were derived from the import-time spec)
+        val lay = layoutOf(st)
+        require(dest.properties.get(RewriteSpecKey)
+            .contains(specSignature(st.partFields)),
+          s"the Iceberg source's partition spec changed — a rewrite " +
+            "destination cannot follow a re-layout; re-import")
+        Mirror.requireSameColumns(dest, Follow, lay.dataSchema,
+          lay.genFields.map(_.name))
+        Some(new RewriteSteps(spark, root, st, lay, consumed))
+      }
     }
-    val destDataTypes = dest.snapshot().schema.fields
-      .filterNot(f => lay.genFields.exists(_.name.equalsIgnoreCase(f.name)) ||
-        f.name == SrcFileCol || f.name == SrcPosCol ||
-        f.name == Rewrite.SrcSeqCol)
-      .map(f => (f.name, f.dataType)).toSeq
-    require(destDataTypes == lay.dataSchema.fields
-        .map(f => (f.name, f.dataType)).toSeq,
-      s"the Iceberg source's schema changed — this evolution is a " +
-        "cut-over moment for a rewrite destination; re-import")
 
-    val prev = readLedger(destRoot, consumed).getOrElse(
-      throw new IllegalStateException(
-        s"$destDir carries no ledger snapshot for consumed sequence " +
-          s"$consumed under ${destRoot.resolve(LedgerDir)} — the " +
-          "followable-rewrite state is damaged; re-import"))
-    val currentLive = st.live.map(_._1).toSet
-    // new data is judged by PATH, not sequence number: a source-side
-    // compaction (RewriteDataFiles) writes NEW paths whose entries carry
-    // their OLD data sequence numbers (spec: EXISTING entries keep
-    // explicit seqs) — a seq > consumed filter would classify them as
-    // neither removed-survivors nor new and silently LOSE their rows
-    val prevData = prev.dataFiles.toSet
-    val newData = st.live.filterNot { case (p, _) => prevData(p) }
-    val removed = prev.dataFiles.filterNot(currentLive)
-    val newPosDel = st.deletePaths.map(Stats.stripScheme)
-      .filterNot(prev.posDeleteFiles.toSet)
-    val newEqDel = st.eqDeletes.filterNot(d => prev.eqDeleteFiles.toSet(d.path))
+  /** Iceberg's part of a followable-rewrite sync: the row-level delete
+    * steps and the append window. New data is judged by PATH, not
+    * sequence number: a source-side compaction (RewriteDataFiles) writes
+    * NEW paths whose entries carry their OLD data sequence numbers (spec:
+    * EXISTING entries keep explicit seqs) — a seq > consumed filter would
+    * classify them as neither removed-survivors nor new and silently LOSE
+    * their rows. */
+  private class RewriteSteps(spark: SparkSession, root: Path,
+      st: IcebergState, lay: RewriteLayout, consumed: Long)
+      extends Mirror.RewriteSteps {
+    import org.apache.spark.sql.functions.{col, expr}
+    val point: Mirror.SourcePoint = pointOf(st)
+    private def newEqDel(d: Mirror.LedgerDiff): Seq[EqDelete] =
+      st.eqDeletes.filter(e => d.newEqDeletes(e.path))
+
     // eq deletes against ALREADY-IMPORTED data must be table-wide or
     // implied-by-key ([[eqScopeOf]] None): a real partition scope keys on
     // the SOURCE spec tuple, which does not exist on the rewritten rows
-    newEqDel.foreach { d =>
-      require(eqScopeOf(st, d).isEmpty,
-        s"equality-delete file ${d.path} carries a partition scope that " +
+    override def check(d: Mirror.LedgerDiff): Unit = newEqDel(d).foreach { e =>
+      require(eqScopeOf(st, e).isEmpty,
+        s"equality-delete file ${e.path} carries a partition scope that " +
           "cannot be applied to already-imported rows (the source tuple " +
           "does not exist on the rewritten layout) — rewrite the deletes " +
           "table-wide on the Iceberg side, or re-import")
     }
 
-    // ledger snapshot for the NEW consumed point, before any mutation
-    writeLedger(destRoot, st)
-
-    // 1. removed source files -> lineage-keyed merge-DELETE
-    if (removed.nonEmpty) {
-      import spark.implicits._
-      dest.merge(removed.toDF("rm_file"),
-        expr(s"target.`$SrcFileCol` = source.rm_file"))
-        .whenMatchedDelete()
-        .withTxn(RwRemoveAppId, st.lastSeq)
-        .execute(): Unit
-    }
-    // 2. new position deletes on already-imported rows
-    if (newPosDel.nonEmpty) {
-      val rootPrefixLen = root.toString.length + 2 // 1-based, past the '/'
-      val pd = spark.read.parquet(newPosDel: _*)
-        .select(graft.log.DvBitmap.stripPathCol(
-          col("file_path").cast(StringType)).as("pd_abs"),
-          col("pos").cast(LongType).as("pd_pos"))
-        .withColumn("pd_file", expr(s"substring(pd_abs, $rootPrefixLen)"))
-        .drop("pd_abs").distinct()
-      dest.merge(pd,
-        expr(s"target.`$SrcFileCol` = source.pd_file AND " +
-          s"target.`$SrcPosCol` = source.pd_pos"))
-        .whenMatchedDelete()
-        .withTxn(RwPosDelAppId, st.lastSeq)
-        .execute(): Unit
-    }
-    // 3. new equality deletes on already-imported rows: one merge per
-    // distinct key set (grouped reads, like the batch path), SEQUENCE-
-    // GATED against each destination row's [[Rewrite.SrcSeqCol]] lineage —
-    // a newly-arrived delete file can carry an OLD explicit sequence
-    // (delete-file compaction writes new paths keeping old sequences,
-    // the same EXISTING-entry shape data files have), and an ungated
-    // merge would delete rows whose data POSTDATES the delete
-    resolveEqDeletes(st, newEqDel).zipWithIndex.foreach {
-      case ((srcNames, keyFields, group), i) =>
-        import spark.implicits._
-        val paths = group.map(_.path).distinct.sorted
-        val metaDf = group.map(d => (Paths.get(d.path).toString, d.seq))
-          .toDF("__dpath", "__dseq")
-        val readSchema = StructType(srcNames.zip(keyFields).map {
-          case (n, f) => StructField(n, f.dataType) })
-        val keys = spark.read.schema(readSchema).parquet(paths: _*)
-          .select(srcNames.zip(keyFields).map { case (n, f) =>
-            col(s"`$n`").as(s"eq_${f.name}") } :+
-            graft.log.DvBitmap.stripPathCol(
-              col("_metadata.file_path")).as("__dpath"): _*)
-          .join(org.apache.spark.sql.functions.broadcast(metaDf), "__dpath")
-          .groupBy(keyFields.map(f => col(s"`eq_${f.name}`")): _*)
-          .agg(org.apache.spark.sql.functions.max("__dseq").as("eq_dseq"))
-        dest.merge(keys, (keyFields.map(f =>
-            expr(s"target.`${f.name}` <=> source.`eq_${f.name}`")) :+
-            expr(s"target.`${Rewrite.SrcSeqCol}` < source.eq_dseq"))
-          .reduce(_ && _))
+    override def deleteRows(dest: LakeTable, d: Mirror.LedgerDiff): Unit = {
+      // new position deletes on already-imported rows
+      if (d.newPosDeletes.nonEmpty) {
+        val rootPrefixLen = root.toString.length + 2 // 1-based, past the '/'
+        val pd = spark.read.parquet(d.newPosDeletes: _*)
+          .select(graft.log.DvBitmap.stripPathCol(
+            col("file_path").cast(StringType)).as("pd_abs"),
+            col("pos").cast(LongType).as("pd_pos"))
+          .withColumn("pd_file", expr(s"substring(pd_abs, $rootPrefixLen)"))
+          .drop("pd_abs").distinct()
+        dest.merge(pd,
+          expr(s"target.`$SrcFileCol` = source.pd_file AND " +
+            s"target.`$SrcPosCol` = source.pd_pos"))
           .whenMatchedDelete()
-          // one txn slot per key-set group: group order is deterministic
-          // (sorted), so a replay resumes exactly where it crashed
-          .withTxn(s"$RwEqDelAppId:$i", st.lastSeq)
+          .withTxn(Mirror.PosDelAppId, st.lastSeq)
           .execute(): Unit
+      }
+      // new equality deletes on already-imported rows: one merge per
+      // distinct key set (grouped reads, like the batch path), SEQUENCE-
+      // GATED against each destination row's [[Mirror.SrcSeqCol]] lineage
+      // — a newly-arrived delete file can carry an OLD explicit sequence
+      // (delete-file compaction writes new paths keeping old sequences,
+      // the same EXISTING-entry shape data files have), and an ungated
+      // merge would delete rows whose data POSTDATES the delete
+      resolveEqDeletes(st, newEqDel(d)).zipWithIndex.foreach {
+        case ((srcNames, keyFields, group), i) =>
+          val keys = eqDeleteRows(spark, st, srcNames, keyFields, group)
+            .groupBy(keyFields.map(f => col(s"`__eq_${f.name}`")): _*)
+            .agg(org.apache.spark.sql.functions.max("__dseq").as("eq_dseq"))
+          dest.merge(keys, (keyFields.map(f =>
+              expr(s"target.`${f.name}` <=> source.`__eq_${f.name}`")) :+
+              expr(s"target.`${Mirror.SrcSeqCol}` < source.eq_dseq"))
+            .reduce(_ && _))
+            .whenMatchedDelete()
+            // one txn slot per key-set group: group order is deterministic
+            // (sorted), so a replay resumes exactly where it crashed
+            .withTxn(s"${Mirror.EqDelAppId}:$i", st.lastSeq)
+            .execute(): Unit
+      }
     }
-    // 4. new data files rewrite-append + consumed state, one commit
-    val advance = Map(SourceSeqKey -> st.lastSeq.toString,
-      SourceMetaVersionKey -> st.metaVersion.toString)
-    if (newData.nonEmpty) {
+
+    def rows(d: Mirror.LedgerDiff): org.apache.spark.sql.DataFrame = {
+      val byPath = st.live.toMap
+      val newData = d.back.map(p => p -> byPath(p))
       // ALL live eq-deletes, not just the new ones: a compaction-born file
       // keeps its OLD data sequence, so an old delete with a higher seq
       // still applies to it — the per-file sequence gate inside the
@@ -764,14 +539,10 @@ object IcebergImport {
       val windowPosDel =
         if (newData.exists { case (p, _) => st.liveSeq(p) <= consumed })
           st.deletePaths
-        else newPosDel
-      val typed = rewriteRows(spark, root, st, newData, lay, follow = true,
+        else d.newPosDeletes
+      rewriteRows(spark, root, st, newData, lay, follow = true,
         st.eqDeletes, windowPosDel)
-      dest.appendWithProps(typed, _ => advance,
-        Some(RwAppendAppId), Some(st.lastSeq)): Unit
-    } else dest.setProperties(advance): Unit
-    pruneLedgers(destRoot, consumed)
-    dest.version
+    }
   }
 
   /** The destination layout derived from the source's partition spec. */
@@ -821,18 +592,8 @@ object IcebergImport {
       posDeletes: Seq[String]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
     // ---- binding: by field id when every subset footer carries ids ----
-    val livePaths = subset.map(p => root.resolve(p._1).toString)
-    val footIds = Stats.footerFieldIds(subset.map(p => root.resolve(p._1)))
-    val allIds = subset.forall { case (p, _) =>
-      footIds(root.resolve(p).toString).forall(_._2.isDefined) }
-    if (!allIds) subset.foreach { case (p, _) =>
-      footIds(root.resolve(p).toString).foreach { case (name, _) =>
-        require(st.schemaWithIds.fieldNames.contains(name),
-          s"file $p column '$name' is not a schema column and the files " +
-            "carry no usable field ids — a by-name rewrite would misread " +
-            "renamed columns; rewrite the table on the Iceberg side")
-      }
-    }
+    val allIds = bindsById(st, root, subset,
+      Stats.footerFieldIds(subset.map(p => root.resolve(p._1))))
     val readSchema = if (allIds) st.schemaWithIds else lay.dataSchema
     // by-id resolution must hold on ANY session (the refusal message sends
     // users here directly): without this conf Spark resolves by NAME and a
@@ -840,19 +601,8 @@ object IcebergImport {
     // guard LakeTable.readFiles carries
     if (allIds)
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val raw = spark.read.schema(readSchema).parquet(livePaths: _*)
-      .withColumn("__file",
-        graft.log.DvBitmap.stripPathCol(col("_metadata.file_path")))
-    // loud pre-write guard (driver-only): every file the scan plans must
-    // be a live manifest entry and vice versa — silent divergence here
-    // would be data loss
-    val planned = raw.inputFiles.map(Stats.stripScheme).toSet
-    val logged = livePaths.map(Stats.stripScheme).toSet
-    require(planned == logged,
-      s"planned scan files diverge from the manifests' live set " +
-        s"(only-planned: ${(planned -- logged).take(3)}, " +
-        s"only-logged: ${(logged -- planned).take(3)}) — refusing to " +
-        "write a silently incomplete import")
+    val raw = Mirror.scanFiles(spark, readSchema,
+      subset.map(p => root.resolve(p._1).toString), "the manifests' live set")
 
     // ---- position deletes: (file, position) anti-join ----
     var cur =
@@ -876,37 +626,15 @@ object IcebergImport {
       cur = applyEqualityDeletes(spark, root, st, cur, eqDeletes)
 
     // ---- project + repartition by the destination partition keys ----
-    val rootPrefixLen = root.toString.length + 2 // 1-based, past the '/'
-    val lineageCols =
-      if (!follow) Nil
-      else Seq(
-        org.apache.spark.sql.functions
-          .expr(s"substring(__file, $rootPrefixLen)").as(SrcFileCol),
-        col("__idx").as(SrcPosCol),
-        col("__seq").as(Rewrite.SrcSeqCol))
-    val typed0 = cur.select(
-      lay.dataSchema.fieldNames.toIndexedSeq.map(col) ++ lineageCols: _*)
+    val typed = cur.select(lay.dataSchema.fieldNames.toIndexedSeq.map(col) ++
+      (if (follow) Mirror.lineageCols(root, Follow) else Nil): _*)
     val partExprs = lay.resolvedParts.map {
       case (f, None) => col(f.name)
       case (_, Some(e)) => org.apache.spark.sql.functions.expr(e)
     }
-    // follow mode shuffles by (partition keys, SOURCE FILE) so
-    // destination files are lineage-CLUSTERED: each shuffle task holds
-    // whole source files (hash collisions can co-locate a FEW sources
-    // per task — collisions shrink as files/shuffle-partitions — and the
-    // within-partition sort keeps each source's rows contiguous). A
-    // removal merge therefore rewrites only the tasks' files that carry
-    // the removed source, not the table (a partition-key-only shuffle
-    // mixes EVERY source into every file and rewrites everything); the
-    // file-count cost is bounded by the source's own file-per-partition
-    // overlap, ~1 for partition-aligned real sources
-    val shuffleKeys =
-      if (follow) partExprs :+ col(SrcFileCol) else partExprs
-    val typed =
-      if (shuffleKeys.isEmpty) typed0
-      else typed0.repartition(shuffleKeys: _*)
-    if (follow) typed.sortWithinPartitions(shuffleKeys: _*)
-    else typed
+    if (follow) Mirror.clusterByLineage(typed, partExprs)
+    else if (partExprs.isEmpty) typed
+    else typed.repartition(partExprs: _*)
   }
 
   /** One canonical scope key per (spec id, partition tuple): partition
@@ -925,40 +653,6 @@ object IcebergImport {
     scala.util.Try(spark.conf.get("graft.iceberg.broadcastFileMetaMax").toLong)
       .getOrElse(1000000L)
 
-  /** Apply `st`'s equality deletes to `cur` (a live-file scan carrying
-    * `__file`) under the spec's sequence rule — a delete applies only to
-    * data files with a STRICTLY smaller data sequence number — and
-    * partition scoping. Shaped for real CDC delete-file counts:
-    *
-    *  - ONE parallel footer pass resolves every delete file's key columns
-    *    (by field id — delete files written before a rename keep the old
-    *    name, the id binds them — by name only when id-less);
-    *  - delete files group by (key ids, resolved column names) and each
-    *    group reads in ONE `spark.read.parquet(paths*)` with an explicit
-    *    target-typed schema (no N-leg unions, loud on an incompatible
-    *    physical type — a silent cast-to-null would KEEP rows the delete
-    *    intended to remove);
-    *  - the data sequence number and scope ride the delete ROWS as data
-    *    (a tiny per-file map joins on `_metadata.file_path`), so one
-    *    anti-join per distinct key set applies every sequence and every
-    *    partition at once;
-    *  - the per-live-file (sequence, scope) attach broadcasts only below
-    *    [[broadcastFileMetaMax]].
-    *
-    * Scope resolution per delete file (r13 verdict task 8):
-    *  - unpartitioned delete spec → table-wide;
-    *  - every scoped dimension's SOURCE column is part of the delete's
-    *    equality key → the scope is IMPLIED by key equality (partition
-    *    values are deterministic transforms of key columns, so a row
-    *    matching the key necessarily lives in the delete's partition) —
-    *    safe to apply table-wide; this covers the standard Flink upsert
-    *    shape (table partitioned by a transform of the primary key,
-    *    deletes scoped per partition);
-    *  - otherwise the scope tuple only matches data files of the SAME
-    *    spec: if any live file was written under a DIFFERENT spec id,
-    *    tuples are not comparable across spec generations → REFUSE
-    *    loudly. (Before r14 such a delete silently never matched — a
-    *    silent-KEEP of rows the delete intended to remove.) */
   /** Attach each row's (data sequence number, partition-scope key) from a
     * per-file map joined on the reader path — only the SCANNED subset's
     * files, not the whole live set (an incremental sync's window must pay
@@ -981,29 +675,30 @@ object IcebergImport {
     cur.join(seqSide, cur("__file") === seqDf("__sfile")).drop("__sfile")
   }
 
+  /** Apply `st`'s equality deletes to `cur` (a live-file scan carrying
+    * `__file`) under the spec's sequence rule — a delete applies only to
+    * data files with a STRICTLY smaller data sequence number — and
+    * partition scoping. Shaped for real CDC delete-file counts:
+    *
+    *  - ONE parallel footer pass resolves every delete file's key columns
+    *    (by field id — delete files written before a rename keep the old
+    *    name, the id binds them — by name only when id-less);
+    *  - delete files group by (key ids, resolved column names) and each
+    *    group reads in ONE `spark.read.parquet(paths*)` ([[eqDeleteRows]];
+    *    no N-leg unions);
+    *  - the data sequence number and scope ride the delete ROWS as data
+    *    (a tiny per-file map joins on `_metadata.file_path`), so one
+    *    anti-join per distinct key set applies every sequence and every
+    *    partition at once;
+    *  - the per-live-file (sequence, scope) attach broadcasts only below
+    *    [[broadcastFileMetaMax]];
+    *  - each delete file's partition scope resolves by [[eqScopeOf]]. */
   private def applyEqualityDeletes(spark: SparkSession, root: Path,
       st: IcebergState, cur0: org.apache.spark.sql.DataFrame,
       eqDeletes: Seq[EqDelete]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    import spark.implicits._
     var cur = cur0 // carries __seq and __pscope (attachSeqScope)
     resolveEqDeletes(st, eqDeletes).foreach { case (srcNames, keyFields, group) =>
-      val paths = group.map(_.path).distinct.sorted
-      // (sequence, scope) per delete FILE attach as DATA via a tiny map
-      val metaDf = group.map { d =>
-        (Paths.get(d.path).toString, d.seq, eqScopeOf(st, d).orNull) }
-        .toDF("__dpath", "__dseq", "__dscope")
-      // explicit target-typed read schema: by-name resolution of exactly
-      // the resolved key columns (group membership guarantees presence),
-      // loud on an unconvertible physical type
-      val readSchema = StructType(srcNames.zip(keyFields).map {
-        case (n, f) => StructField(n, f.dataType) })
-      val delRaw = spark.read.schema(readSchema).parquet(paths: _*)
-        .select(srcNames.zip(keyFields).map { case (n, f) =>
-          col(s"`$n`").as(s"__eq_${f.name}") } :+
-          graft.log.DvBitmap.stripPathCol(
-            col("_metadata.file_path")).as("__dpath"): _*)
-      val delDf = delRaw.join(broadcast(metaDf), "__dpath").drop("__dpath")
+      val delDf = eqDeleteRows(spark, st, srcNames, keyFields, group)
       val cond = keyFields.map(f =>
         cur(f.name) <=> delDf(s"__eq_${f.name}")).reduce(_ && _) &&
         cur("__seq") < delDf("__dseq") &&
@@ -1013,21 +708,52 @@ object IcebergImport {
     cur
   }
 
-  /** Scope resolution for one equality-delete file (r13 verdict task 8) —
-    * see [[applyEqualityDeletes]]: None = applies table-wide (the
-    * delete's spec is unpartitioned, or its every scoped dimension's
-    * source column is part of the equality key so the scope is implied);
-    * Some(key) = only data files sharing the partition, legal only while
-    * every live file was written under the SAME spec (a cross-spec scoped
-    * delete REFUSES — before r14 it silently never matched, a silent-KEEP
-    * of rows the delete intended to remove). */
+  /** The rows of one resolved equality-delete group: each key column as
+    * `__eq_<column>`, plus the delete FILE's sequence (`__dseq`) and scope
+    * (`__dscope`, null when table-wide) attached as DATA via a tiny
+    * broadcast map. The read schema is explicit and target-typed: by-name
+    * resolution of exactly the resolved key columns (group membership
+    * guarantees presence), loud on an unconvertible physical type — a
+    * silent cast-to-null would KEEP rows the delete intended to remove. */
+  private def eqDeleteRows(spark: SparkSession, st: IcebergState,
+      srcNames: Seq[String], keyFields: Seq[StructField],
+      group: Seq[EqDelete]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    import spark.implicits._
+    val metaDf = group.map { d =>
+      (Paths.get(d.path).toString, d.seq, eqScopeOf(st, d).orNull) }
+      .toDF("__dpath", "__dseq", "__dscope")
+    val readSchema = StructType(srcNames.zip(keyFields).map {
+      case (n, f) => StructField(n, f.dataType) })
+    spark.read.schema(readSchema).parquet(group.map(_.path).distinct.sorted: _*)
+      .select(srcNames.zip(keyFields).map { case (n, f) =>
+        col(s"`$n`").as(s"__eq_${f.name}") } :+
+        graft.log.DvBitmap.stripPathCol(
+          col("_metadata.file_path")).as("__dpath"): _*)
+      .join(broadcast(metaDf), "__dpath").drop("__dpath")
+  }
+
+  /** Scope resolution for one equality-delete file (r13 verdict task 8):
+    * None = applies table-wide, Some(key) = only data files sharing the
+    * delete's partition.
+    *  - unpartitioned delete spec → table-wide;
+    *  - every scoped dimension's SOURCE column is part of the delete's
+    *    equality key → the scope is IMPLIED by key equality (partition
+    *    values are deterministic transforms of key columns, so a row
+    *    matching the key necessarily lives in the delete's partition) —
+    *    safe to apply table-wide; this covers the standard Flink upsert
+    *    shape (table partitioned by a transform of the primary key,
+    *    deletes scoped per partition);
+    *  - otherwise the scope tuple only matches data files of the SAME
+    *    spec: if any live file was written under a DIFFERENT spec id,
+    *    tuples are not comparable across spec generations → REFUSE
+    *    loudly. (Before r14 such a delete silently never matched — a
+    *    silent-KEEP of rows the delete intended to remove.) */
   private def eqScopeOf(st: IcebergState, d: EqDelete): Option[String] =
     if (st.specSize(d.specId) == 0) None
     else {
-      val idToField: Map[Int, StructField] = st.schemaWithIds.fields
-        .flatMap(f => ColumnIds.idOf(f).map(_.toInt -> f)).toMap
       val dims = st.specFields(d.specId).map(_.column)
-      val keyCols = d.equalityIds.flatMap(i => idToField.get(i)).map(_.name)
+      val keyCols = d.equalityIds.flatMap(i => st.fieldById.get(i)).map(_.name)
       if (dims.forall(keyCols.contains)) None // implied by key equality
       else {
         val alien = st.live.collectFirst {
@@ -1051,8 +777,6 @@ object IcebergImport {
   private[migrate] def resolveEqDeletes(st: IcebergState, eqDeletes: Seq[EqDelete])
       : Seq[(Seq[String], Seq[StructField], Seq[EqDelete])] = {
     if (eqDeletes.isEmpty) return Nil
-    val idToField: Map[Int, StructField] = st.schemaWithIds.fields
-      .flatMap(f => ColumnIds.idOf(f).map(_.toInt -> f)).toMap
     val delFooters = Stats.footerFieldIds(
       eqDeletes.map(d => Paths.get(d.path)).distinct)
     val resolved: Seq[(EqDelete, Seq[String], Seq[StructField])] =
@@ -1060,7 +784,7 @@ object IcebergImport {
         val footer = delFooters(Paths.get(d.path).toString)
         val byId = footer.collect { case (n, Some(i)) => i -> n }.toMap
         val ids = d.equalityIds.sorted
-        val keyFields = ids.map(i => idToField.getOrElse(i,
+        val keyFields = ids.map(i => st.fieldById.getOrElse(i,
           throw new IllegalArgumentException(
             s"equality delete references field id $i, which is not a " +
               "top-level schema column")))
@@ -1086,21 +810,32 @@ object IcebergImport {
   // ---------------------------------------------- followable rewrite state
 
   /** Lineage columns a followable rewrite adds to every row (shared with
-    * the Delta rewrite — see [[Rewrite]]): the source data file
+    * the Delta rewrite — see [[Mirror]]): the source data file
     * (root-relative) and the row's position in it — what [[syncRewrite]]
     * keys source-side removes and row-level deletes on. */
-  val SrcFileCol: String = Rewrite.SrcFileCol
-  val SrcPosCol: String = Rewrite.SrcPosCol
+  val SrcFileCol: String = Mirror.SrcFileCol
+  val SrcPosCol: String = Mirror.SrcPosCol
 
   /** Followable-rewrite destination properties. */
   val RewriteFollowKey = "graft.iceberg.rewriteFollow"
   val RewriteSourceKey = "graft.iceberg.rewriteSource"
   val RewriteSpecKey = "graft.iceberg.rewriteSpec"
 
-  private val RwAppendAppId = Rewrite.AppendAppId
-  private val RwRemoveAppId = Rewrite.RemoveAppId
-  private val RwPosDelAppId = Rewrite.PosDelAppId
-  private val RwEqDelAppId = Rewrite.EqDelAppId
+  private val Follow = Mirror.FollowKeys("Iceberg", RewriteFollowKey,
+    RewriteSourceKey, SourceSeqKey, Seq(SrcFileCol, SrcPosCol, Mirror.SrcSeqCol))
+
+  /** The followable state of a replayed source, keyed by
+    * `<sequence>-<metadata version>`: live data files relative to the
+    * source root, position/equality delete files canonical-absolute. The
+    * next sync diffs against the ledger named by its CONSUMED keys to
+    * enumerate removed data files and newly-arrived delete files in
+    * O(churn). */
+  private def pointOf(st: IcebergState): Mirror.SourcePoint =
+    Mirror.SourcePoint(Seq(st.lastSeq, st.metaVersion),
+      Mirror.Ledger(st.live.map(_._1 -> "").toMap,
+        st.deletePaths.map(Stats.stripScheme), st.eqDeletes.map(_.path)),
+      Map(SourceSeqKey -> st.lastSeq.toString,
+        SourceMetaVersionKey -> st.metaVersion.toString))
 
   /** The canonical signature of a partition spec (field name, source
     * column, transform — order-sensitive): [[syncRewrite]] refuses when
@@ -1109,72 +844,6 @@ object IcebergImport {
   private def specSignature(partFields: Seq[PartField]): String =
     partFields.map(pf => s"${pf.specName}:${pf.column}:${pf.transform}")
       .mkString(";")
-
-
-  // ---- the live-set ledger: one JSON snapshot per consumed sequence ----
-
-  private val LedgerDir = Rewrite.LedgerDir
-
-  private case class Ledger(dataFiles: Seq[String],
-      posDeleteFiles: Seq[String], eqDeleteFiles: Seq[String])
-
-  /** Write the FULL current source state (live data files relative to the
-    * source root; position/equality delete files canonical-absolute) as
-    * `_graft_import/ledger-<lastSeq>-<metaVersion>.json` under the
-    * destination. Name-keyed by the consumed ordering keys and derived
-    * from one replayed snapshot, so a crash-replay rewrites identical
-    * content — idempotent by construction. The next sync diffs against
-    * the snapshot named by its CONSUMED keys to enumerate removed data
-    * files and newly-arrived delete files in O(churn). */
-  private def writeLedger(destRoot: Path, st: IcebergState): Unit = {
-    val node = plain.createObjectNode()
-    def arr(name: String, vs: Seq[String]): Unit = {
-      val a = node.putArray(name)
-      vs.sorted.foreach(a.add(_): Unit)
-    }
-    arr("dataFiles", st.live.map(_._1))
-    arr("posDeleteFiles", st.deletePaths.map(Stats.stripScheme))
-    arr("eqDeleteFiles", st.eqDeletes.map(_.path).distinct)
-    store.writeAtomic(
-      destRoot.resolve(LedgerDir).resolve(ledgerName(st.lastSeq, st.metaVersion)),
-      plain.writeValueAsBytes(node), overwrite = true)
-  }
-
-  private def ledgerName(seq: Long, metaVersion: Long): String =
-    s"ledger-$seq-$metaVersion.json"
-
-  /** The ledger snapshot for the consumed sequence (any metadata version —
-    * metadata-only advances reuse the sequence axis). */
-  private def readLedger(destRoot: Path, seq: Long): Option[Ledger] = {
-    val dir = destRoot.resolve(LedgerDir)
-    val re = raw"ledger-(\d+)-(\d+)\.json".r
-    val name = store.listFileNames(dir).collect {
-      case n @ re(s, m) if s.toLong == seq => (m.toLong, n)
-    }.sorted.lastOption.map(_._2)
-    name.map { n =>
-      val j = plain.readTree(new String(store.readBytes(dir.resolve(n)),
-        StandardCharsets.UTF_8))
-      def seqOf(field: String): Seq[String] = {
-        val a = j.get(field)
-        (0 until a.size()).map(a.get(_).asText())
-      }
-      Ledger(seqOf("dataFiles"), seqOf("posDeleteFiles"), seqOf("eqDeleteFiles"))
-    }
-  }
-
-  /** Drop ledger snapshots STRICTLY OLDER than the previous consumed
-    * sequence (the current and previous snapshots stay — the previous one
-    * covers a sync that crashed between ledger write and commit).
-    * Best-effort: a surviving stale file is dead weight, never wrong. */
-  private def pruneLedgers(destRoot: Path, keepFrom: Long): Unit = {
-    val dir = destRoot.resolve(LedgerDir)
-    val re = raw"ledger-(\d+)-(\d+)\.json".r
-    store.listFileNames(dir).foreach {
-      case n @ re(s, _) if s.toLong < keepFrom =>
-        scala.util.Try(store.delete(dir.resolve(n))): Unit
-      case _ => ()
-    }
-  }
 
   // ------------------------------------------------------------ replay
 
@@ -1346,14 +1015,39 @@ object IcebergImport {
       posDeletes.toList, eqDeletes.toList)
   }
 
-  /** One live entry -> graft AddFile: manifest count cross-checked against
+  private type Footer = (Long, Map[String, ColStats], Seq[(String, Option[Int])])
+
+  /** ONE parallel footer pass over `entries`: (count, name-keyed exact
+    * stats, (name, field id) pairs) per absolute path. */
+  private def footersOf(st: IcebergState, root: Path,
+      entries: Seq[(String, GenericRecord)]): Map[String, Footer] =
+    if (entries.isEmpty) Map.empty
+    else Stats.fromFootersWithIds(entries.map(p => root.resolve(p._1)),
+      st.schemaWithIds)
+
+  /** Live entries -> graft AddFiles: manifest count cross-checked against
     * the footer, footer-exact stats, identity partition tuple decoded by
-    * the SPEC field name into graft's string encoding. */
-  private def toAddFile(st: IcebergState, root: Path, p: String,
-      df: GenericRecord,
-      footer: (Long, Map[String, ColStats], Seq[(String, Option[Int])]),
-      now: Long, tags: Map[String, String] = Map.empty): AddFile = {
-    val (footerCount, colStats, _) = footer
+    * the SPEC field name into graft's string encoding. Stats land by
+    * footer-column NAME, but a `byId` mirror READS by field id — so drop
+    * any stats entry whose footer column name matches a schema column
+    * carrying a DIFFERENT id (Iceberg never reuses ids but MAY reuse a
+    * renamed-away name: that footer column's bytes are not what by-id reads
+    * return for the same-named schema column, so its min/max/nullCount
+    * would silently poison exact metadata-only answers). */
+  private def toAddFiles(st: IcebergState, root: Path,
+      entries: Seq[(String, GenericRecord)], footers: Map[String, Footer],
+      byId: Boolean, tags: Map[String, String] = Map.empty): Seq[AddFile] = {
+    val now = System.currentTimeMillis()
+    entries.map { case (p, df) => toAddFile(st, p, df,
+      footers(root.resolve(p).toString), byId, now, tags) }
+  }
+
+  private def toAddFile(st: IcebergState, p: String, df: GenericRecord,
+      footer: Footer, byId: Boolean, now: Long,
+      tags: Map[String, String]): AddFile = {
+    val (footerCount, stats, ids) = footer
+    val colStats = if (!byId) stats else stats -- ids.collect {
+      case (name, Some(id)) if st.idOfName.get(name).exists(_ != id.toLong) => name }
     val manifestCount = df.get("record_count").asInstanceOf[Long]
     require(manifestCount == footerCount,
       s"manifest says $manifestCount records for $p, the footer says " +
@@ -1380,19 +1074,19 @@ object IcebergImport {
   }
 
   /** Decode the current position deletes into ONE graft dv parquet under
-    * `root`; returns (relative dv path, per-ABS-path mask counts), or None
-    * when there are no delete files. file_path values canonicalize like
-    * data paths (scheme-ful URIs); DANGLING rows drop via a broadcast
-    * semi-join against the live set — never phantom vectors, never fatal. */
+    * `root`; returns one [[graft.log.DeletionVector]] per masked `live`
+    * file (root-relative paths). file_path values canonicalize like data
+    * paths (scheme-ful URIs); DANGLING rows drop via a broadcast semi-join
+    * against the live set — never phantom vectors, never fatal. */
   private def buildMasks(spark: SparkSession, root: Path,
       deletePaths: Seq[String],
-      liveAbs: Set[String]): Option[(String, Map[String, Long])] = {
-    if (deletePaths.isEmpty) return None
-    val rel = s"dv/import-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+      live: Seq[String]): Seq[graft.log.DeletionVector] = {
+    if (deletePaths.isEmpty) return Nil
+    val rel = Mirror.dvImportDir()
     import org.apache.spark.sql.functions.col
     val liveDf = {
       import spark.implicits._
-      liveAbs.toSeq.toDF("__path")
+      live.map(p => root.resolve(p).toString).toDF("__path")
     }
     val masks = spark.read
       .parquet(deletePaths.map(p => Stats.stripScheme(p)): _*)
@@ -1407,24 +1101,11 @@ object IcebergImport {
     val counts = spark.read.parquet(root.resolve(rel).toString)
       .select("__path", "__n").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    Some((rel, counts))
+    live.flatMap(p => counts.get(root.resolve(p).toString)
+      .map(n => graft.log.DeletionVector(p, rel, n)))
   }
 
   // ------------------------------------------------------------ helpers
-
-  /** One footer's (count, name-keyed stats, (name, id) pairs) with the
-    * stats entries whose footer NAME collides with a different-id schema
-    * column removed — by-id reads return a different column's bytes for
-    * that name, so name-attributed stats for it are poison, not data. */
-  private def dropMisattributedStats(
-      footer: (Long, Map[String, ColStats], Seq[(String, Option[Int])]),
-      idOfName: Map[String, Long])
-      : (Long, Map[String, ColStats], Seq[(String, Option[Int])]) = {
-    val (count, stats, ids) = footer
-    val poisoned = ids.collect { case (name, Some(id))
-      if idOfName.get(name).exists(_ != id.toLong) => name }.toSet
-    if (poisoned.isEmpty) footer else (count, stats -- poisoned, ids)
-  }
 
   private def num(o: Object): Long = o.asInstanceOf[java.lang.Number].longValue()
 
@@ -1443,8 +1124,7 @@ object IcebergImport {
     * onward without a fresh [[graft.table.LakeTable.analyzeSketches]]
     * pass — full import → mirror → export symmetry. */
   private def sortAndStatsProps(st: IcebergState, root: Path): Map[String, String] = {
-    val idToName: Map[Int, String] = st.schemaWithIds.fields
-      .flatMap(f => ColumnIds.idOf(f).map(_.toInt -> f.name)).toMap
+    def nameOf(id: Int): Option[String] = st.fieldById.get(id).map(_.name)
     def maps(o: Object): Seq[java.util.Map[String, Object]] =
       Option(o).map(_.asInstanceOf[java.util.List[java.util.Map[String, Object]]]
         .asScala.toSeq).getOrElse(Nil)
@@ -1456,7 +1136,7 @@ object IcebergImport {
         .map(o => maps(o.get("fields"))).getOrElse(Nil)
       val cols = fields.map(f =>
         if (String.valueOf(f.get("transform")) == "identity")
-          idToName.get(num(f.get("source-id")).toInt)
+          nameOf(num(f.get("source-id")).toInt)
         else None)
       if (cols.nonEmpty && cols.forall(_.isDefined))
         Map("graft.clusterBy" -> cols.map(_.get).mkString(","))
@@ -1476,19 +1156,14 @@ object IcebergImport {
                 if (b.blobType != graft.table.Puffin.ThetaBlobType ||
                   b.fields.size != 1) Nil
                 else for {
-                  name <- idToName.get(b.fields.head).toSeq
+                  name <- nameOf(b.fields.head).toSeq
                   est <- graft.table.Puffin.thetaEstimate(b.bytes).toSeq
                 } yield (name, b.bytes, est)
               }
           }
       if (sketches.isEmpty) Map.empty[String, String]
       else {
-        // carry the SKETCHES, not just their estimates: re-writing them
-        // as graft's own sidecar lets a UniForm RE-export of this mirror
-        // publish the statistics onward without a fresh analyzeSketches
-        // pass (full import -> mirror -> export symmetry)
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val node = mapper.createObjectNode()
+        val node = plain.createObjectNode()
         node.put("analyzedAtVersion", -1L)
         val colsNode = node.putObject("columns")
         val b64 = java.util.Base64.getEncoder
@@ -1496,7 +1171,7 @@ object IcebergImport {
           colsNode.put(n, b64.encodeToString(bytes)): Unit }
         val rel = s"_stats/theta-imported-$current.json"
         store.writeAtomic(root.resolve(rel),
-          mapper.writeValueAsBytes(node), overwrite = true)
+          plain.writeValueAsBytes(node), overwrite = true)
         sketches.map { case (n, _, est) =>
           s"stats.$n.distinctCount" -> est.toString }.toMap +
           ("graft.stats.thetaSidecar" -> rel)

@@ -455,7 +455,7 @@ class GraftStreamSource(
       else if (followMirror && MirrorSyncOps(op)) adds // filtered below
       else if (followMirror && ci.exists(_.operationParameters
           .get("txnAppId")
-          .exists(_.startsWith(graft.migrate.Rewrite.AppIdPrefix)))) Nil
+          .exists(_.startsWith(graft.migrate.Mirror.AppIdPrefix)))) Nil
         // a rewrite-sync MERGE only deletes rows (its re-adds are
         // rewritten files whose rows already streamed — emitting them
         // would duplicate); the rewrite-sync APPEND is a pure append

@@ -223,4 +223,109 @@ class DeltaImportFuzzSpec extends SparkSpec {
       check(live.toSet, masked.toMap, "re-sync")
     }
   }
+
+  test("randomized followable-rewrite lifecycles on a partitioned source — " +
+    "adds, removes, DV growth and purge, destination OPTIMIZE, syncs at " +
+    "random points — match the model's surviving rows") {
+    val rnd = new scala.util.Random(20261019L)
+    val pSchema = StructType(Seq(
+      StructField("id", LongType), StructField("p", StringType)))
+    (0 until 3).foreach { trial =>
+      val dir = tmpDir(s"delta-rwfuzz-$trial").resolve("src")
+      // pool file k holds ids [k*10, k*10+10) in partition p = k % 3
+      val pool = (0 until 9).map(k => s"part$k.parquet")
+      def partOf(name: String): String =
+        Seq("a", "b", "c")(name.stripPrefix("part").stripSuffix(".parquet").toInt % 3)
+      def idsOf(name: String): Seq[Long] = {
+        val k = name.stripPrefix("part").stripSuffix(".parquet").toLong
+        (k * 10 until k * 10 + 10)
+      }
+      pool.foreach(n => writeIds(dir, n, idsOf(n)))
+      def add(name: String, masked: Set[Long]): String = {
+        val dv =
+          if (masked.isEmpty) Map.empty[String, Any]
+          else {
+            val data = DeltaDv.serializeArray(masked.toSeq.sorted)
+            Map("deletionVector" -> Map("storageType" -> "i",
+              "pathOrInlineDv" -> DeltaDv.packInline(data),
+              "sizeInBytes" -> data.length, "cardinality" -> masked.size))
+          }
+        j(Map("add" -> (Map("path" -> name,
+          "partitionValues" -> Map("p" -> partOf(name)),
+          "size" -> Files.size(dir.resolve(name)),
+          "modificationTime" -> 1700000000000L, "dataChange" -> true) ++ dv)))
+      }
+      // model: live files and their masked row positions
+      val live = mutable.LinkedHashSet.empty[String]
+      val masked = mutable.Map.empty[String, Set[Long]]
+      def randomCommit(): Seq[String] =
+        (0 until 1 + rnd.nextInt(3)).flatMap { _ =>
+          val roll = rnd.nextInt(10)
+          if (roll < 2 && live.size > 1) { // remove
+            val name = live.toSeq(rnd.nextInt(live.size))
+            live.remove(name); masked.remove(name)
+            Seq(removeLine(name))
+          } else if (roll < 5 && live.nonEmpty) { // DV growth (cumulative)
+            val name = live.toSeq(rnd.nextInt(live.size))
+            val grown = masked.getOrElse(name, Set.empty) ++
+              (0L until 10L).filter(_ => rnd.nextInt(4) == 0)
+            if (grown.size >= 10 || grown == masked.getOrElse(name, Set.empty)) Nil
+            else { masked(name) = grown; Seq(add(name, grown)) }
+          } else if (roll < 6 && masked.keys.exists(live.contains)) { // purge
+            val name = masked.keys.filter(live.contains).toSeq.sorted.head
+            masked.remove(name)
+            Seq(add(name, Set.empty))
+          } else { // add a pool file not yet live
+            pool.filterNot(live.contains) match {
+              case Seq() => Nil
+              case free =>
+                val name = free(rnd.nextInt(free.size))
+                live.add(name)
+                Seq(add(name, Set.empty))
+            }
+          }
+        }
+      val logDir = dir.resolve("_delta_log")
+      Files.createDirectories(logDir)
+      var version = -1L
+      def commit(lines: Seq[String]): Unit = {
+        version += 1
+        Files.write(logDir.resolve(f"$version%020d.json"),
+          lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8)): Unit
+      }
+      commit(Seq(
+        j(Map("protocol" -> Map("minReaderVersion" -> 1, "minWriterVersion" -> 2))),
+        j(Map("metaData" -> Map(
+          "id" -> java.util.UUID.randomUUID().toString,
+          "format" -> Map("provider" -> "parquet", "options" -> Map.empty),
+          "schemaString" -> pSchema.json,
+          "partitionColumns" -> Seq("p"), "configuration" -> Map.empty,
+          "createdTime" -> 1700000000000L)))) ++ randomCommit())
+      (0 until rnd.nextInt(3)).foreach(_ => commit(randomCommit()))
+      def expected(): Seq[(Long, String)] = live.toSeq.flatMap { n =>
+        idsOf(n).zipWithIndex.collect {
+          case (id, pos) if !masked.getOrElse(n, Set.empty).contains(pos.toLong) =>
+            (id, partOf(n))
+        }
+      }.sorted
+      val dest = tmpDir(s"delta-rwfuzz-$trial").resolve("dest").toString
+      def check(stage: String): Unit =
+        withClue(s"trial=$trial stage=$stage live=$live masked=$masked: ") {
+          LakeTable.forPath(spark, dest).read().select("id", "p")
+            .as[(Long, String)].collect().sorted.toSeq shouldBe expected()
+        }
+      DeltaImport.convertRewrite(spark, dir.toString, dest, follow = true)
+      check("import")
+      (0 until 3).foreach { round =>
+        (0 until 1 + rnd.nextInt(2)).foreach(_ => commit(randomCommit()))
+        if (rnd.nextBoolean())
+          LakeTable.forPath(spark, dest).optimizeCompact(): Unit
+        DeltaImport.syncRewrite(spark, dir.toString, dest)
+        check(s"sync-$round")
+      }
+      val v = LakeTable.forPath(spark, dest).version
+      DeltaImport.syncRewrite(spark, dir.toString, dest) shouldBe v
+      check("re-sync")
+    }
+  }
 }

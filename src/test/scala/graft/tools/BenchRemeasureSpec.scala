@@ -123,4 +123,25 @@ class BenchRemeasureSpec extends AnyFunSuite with Matchers {
     // nothing flagged -> no fields at all (the JSON stays minimal)
     graft.Bench.remeasuredDetailField(Nil, jnum) shouldBe ""
   }
+
+  test("failed reps are never billed: the billed value and the remeasure " +
+    "use successful reps only, and BENCH_DETAIL lists each failure") {
+    // a cheap query: median of the warm reps that succeeded
+    graft.Bench.billedValue(Some(0.9), Seq(Some(0.5), Some(0.7), Some(0.6))) shouldBe
+      Some(0.6)
+    graft.Bench.billedValue(Some(0.9), Seq(Some(0.5), None, Some(0.7))) shouldBe
+      Some(0.5)
+    // a heavy query whose warm rep failed bills its successful first rep
+    graft.Bench.billedValue(Some(3.0), Seq(None)) shouldBe Some(3.0)
+    // a query that failed every rep is not billed at all
+    graft.Bench.billedValue(None, Seq(None, None, None)) shouldBe None
+    val field = graft.Bench.failedDetailField(Seq(
+      ("q7_merge", "bench", "boom \"quoted\"\nsecond line"),
+      ("q7_merge", "remeasure", null)))
+    field shouldBe ",\"failed\":[" +
+      "{\"query\":\"q7_merge\",\"phase\":\"bench\"," +
+      "\"message\":\"boom \\\"quoted\\\"\\nsecond line\"}," +
+      "{\"query\":\"q7_merge\",\"phase\":\"remeasure\",\"message\":null}]"
+    graft.Bench.failedDetailField(Nil) shouldBe ""
+  }
 }
