@@ -151,7 +151,8 @@ class DataOpsSpec extends SparkSpec {
     out(4L) shouldBe ((0L, 0L, None)) // single token: no bigrams, null ppl
   }
 
-  test("connected components match a union-find oracle on random graphs") {
+  /** Random graphs against a plain-Scala union-find oracle. */
+  private def ccMatchesUnionFind(): Unit = {
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 5) {
       val nodes = 30 + rnd.nextInt(40)
@@ -181,6 +182,20 @@ class DataOpsSpec extends SparkSpec {
         got shouldBe (want -- selfOnly)
       }
     }
+  }
+
+  test("connected components match a union-find oracle on random graphs") {
+    ccMatchesUnionFind()
+  }
+
+  test("distributed connected components match the union-find oracle (localMaxEdges=0)") {
+    // every test graph is under the driver union-find threshold; 0 forces
+    // the distributed star-contraction loop on the same graphs
+    val key = "spark.graft.cc.localMaxEdges"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "0")
+    try ccMatchesUnionFind()
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("nearDupGroups assigns one canonical doc per cluster, singletons kept") {

@@ -267,6 +267,50 @@ class StreamingSpec extends SparkSpec {
     metrics("DELETE").get("numDeletedRows") shouldBe Some("2")
   }
 
+  test("MERGE and deletion-vector DML metrics inside foreachBatch equal an outside run") {
+    import spark.implicits._
+    val dv = Map("graft.enableDeletionVectors" -> "true")
+    val cdf = Map("graft.enableChangeDataFeed" -> "true")
+    def upsert(t: LakeTable): Unit =
+      t.merge((15L to 24L).map(i => (i, s"m$i")).toDF("id", "v"),
+          col("target.id") === col("source.id"))
+        .whenMatchedUpdateAll().whenNotMatchedInsertAll().execute(): Unit
+    // one statement per execution path that counts its rows
+    val statements: Seq[(String, Map[String, String], LakeTable => Unit)] = Seq(
+      ("low-shuffle merge", Map.empty, upsert),
+      ("general-path merge", cdf, upsert),
+      ("deletion-vector merge", dv, upsert),
+      ("deletion-vector update", dv,
+        t => t.update(col("id") <= 5L, Map("v" -> lit("updated"))): Unit),
+      ("deletion-vector delete", dv, t => t.delete(col("id") > 18L): Unit))
+    def table(name: String, props: Map[String, String]): LakeTable =
+      LakeTable.createFrom(spark, tmpDir(name).resolve("t").toString,
+        (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v"), properties = props)
+    val outside = statements.map { case (_, props, run) =>
+      val t = table("dmlout-tbl", props); run(t); t
+    }
+    val inside = statements.map { case (_, props, _) => table("dmlin-tbl", props) }
+    val src = tmpDir("dmlin-src")
+    writeJson(src, "trigger.json", Seq((100L, "go")))
+    val q = StreamIngest.fileSource(spark, src.toString, schema).writeStream
+      .option("checkpointLocation", tmpDir("dmlin-ck").toString)
+      .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+        statements.zip(inside).foreach { case ((_, _, run), t) => run(t) }
+      }.start()
+    q.processAllAvailable()
+    q.stop()
+    def last(t: LakeTable): (String, Map[String, String]) =
+      t.history(Some(1)).select("operation", "operationMetrics")
+        .as[(String, Map[String, String])].head()
+    statements.indices.foreach { i =>
+      withClue(s"${statements(i)._1}: ") {
+        last(inside(i)) shouldBe last(outside(i))
+        inside(i).read().orderBy("id").as[(Long, String)].collect() shouldBe
+          outside(i).read().orderBy("id").as[(Long, String)].collect()
+      }
+    }
+  }
+
   test("merge withTxn: a replayed (appId, version) epoch is a no-op") {
     import spark.implicits._
     val table = LakeTable.createFrom(spark,

@@ -22,48 +22,109 @@ class MergeFuzzSpec extends SparkSpec {
   import MergeFuzzSpec.R
 
   /** The reference model. Clause conditions are (targetRow, sourceRow) =>
-    * Boolean; update produces the new row. */
+    * Boolean; update produces the new row. `moreInserts` are further insert
+    * clauses tried after the first (each a condition and the row it
+    * writes); `nmbs` are WHEN NOT MATCHED BY SOURCE clauses on the target
+    * row ("update" writes `nmbsUpdateOf`, "delete" drops it). */
   private case class Clauses(
       matched: Seq[(String, (R, R) => Boolean)], // "update" | "delete"
       insertCond: Option[R => Boolean],
-      hasInsert: Boolean)
+      hasInsert: Boolean,
+      moreInserts: Seq[(R => Boolean, R => R)] = Nil,
+      nmbs: Seq[(String, R => Boolean)] = Nil)
 
   private def updateOf(t: R, s: R): R = R(t.k, s.v + 1000, s.s)
+  private def nmbsUpdateOf(t: R): R = R(t.k, t.v + 500, t.s)
 
-  private def model(target: Seq[R], source: Seq[R], c: Clauses): Seq[R] = {
+  /** What one MERGE does under the model: the table's rows afterwards, the
+    * commit's row counts, and the change-feed rows of the merge version. */
+  private case class Outcome(
+      rows: Seq[R], updated: Long, deleted: Long, inserted: Long,
+      changes: Seq[(String, R)])
+
+  private def model(target: Seq[R], source: Seq[R], c: Clauses): Outcome = {
     val byKey = source.groupBy(_.k)
     val out = Seq.newBuilder[R]
+    val changes = Seq.newBuilder[(String, R)]
+    var updated, deleted, inserted = 0L
+    def update(t: R, post: R): Unit = {
+      out += post; updated += 1
+      changes += ("update_preimage" -> t) += ("update_postimage" -> post)
+    }
+    def delete(t: R): Unit = { deleted += 1; changes += ("delete" -> t) }
     target.foreach { t =>
       byKey.get(t.k).map(_.head) match {
         case Some(s) =>
           c.matched.find { case (_, cond) => cond(t, s) } match {
-            case Some(("update", _)) => out += updateOf(t, s)
-            case Some(("delete", _)) => () // dropped
+            case Some(("update", _)) => update(t, updateOf(t, s))
+            case Some(("delete", _)) => delete(t)
             case _ => out += t // matched but no clause fired -> copy
           }
-        case None => out += t
+        case None =>
+          c.nmbs.find { case (_, cond) => cond(t) } match {
+            case Some(("update", _)) => update(t, nmbsUpdateOf(t))
+            case Some(("delete", _)) => delete(t)
+            case _ => out += t
+          }
       }
     }
     if (c.hasInsert) {
       val tks = target.map(_.k).toSet
-      source.filterNot(s => tks.contains(s.k))
-        .filter(s => c.insertCond.forall(_(s)))
-        .foreach(out += _)
+      val clauses = (c.insertCond.getOrElse((_: R) => true), (s: R) => s) +: c.moreInserts
+      source.filterNot(s => tks.contains(s.k)).foreach { s =>
+        clauses.find(_._1(s)).foreach { case (_, row) =>
+          out += row(s); inserted += 1; changes += ("insert" -> row(s))
+        }
+      }
     }
-    out.result()
+    Outcome(out.result(), updated, deleted, inserted, changes.result())
   }
 
+  /** Runs the merge on a fresh table once per storage mode: copy-on-write
+    * and deletion vectors (`dv` first), each with the change feed off and
+    * on — together these reach every MERGE execution path. Checks the
+    * rows, the commit's row counts and, with the change feed on, the merge
+    * version's change rows against the model. */
   private def run(
       target: Seq[R], source: Seq[R], dv: Boolean,
+      build: MergeBuilder => MergeBuilder, c: Clauses): Unit =
+    for (dvOn <- Seq(dv, !dv); cdfOn <- Seq(false, true))
+      withClue(s"dv=$dvOn cdf=$cdfOn: ") {
+        runOnce(target, source, dvOn, cdfOn, build, c)
+      }
+
+  private def runOnce(
+      target: Seq[R], source: Seq[R], dv: Boolean, cdf: Boolean,
       build: MergeBuilder => MergeBuilder, c: Clauses): Unit = {
+    val props =
+      (if (dv) Map("graft.enableDeletionVectors" -> "true") else Map.empty[String, String]) ++
+        (if (cdf) Map("graft.enableChangeDataFeed" -> "true") else Map.empty[String, String])
     val t = LakeTable.createFrom(spark,
-      tmpDir("mfz").resolve("t").toString, target.toDF(),
-      properties = if (dv) Map("graft.enableDeletionVectors" -> "true") else Map.empty)
-    build(t.merge(source.toDF().alias("source"),
+      tmpDir("mfz").resolve("t").toString, target.toDF(), properties = props)
+    val before = t.version
+    val v = build(t.merge(source.toDF().alias("source"),
       col("target.k") === col("source.k"))).execute()
+    val want = model(target, source, c)
     val got = t.read().as[R].collect().sortBy(r => (r.k, r.v, r.s))
-    val want = model(target, source, c).sortBy(r => (r.k, r.v, r.s))
-    got shouldBe want
+    got shouldBe want.rows.sortBy(r => (r.k, r.v, r.s))
+    // a merge that changes nothing may leave the table at its old version
+    val counts =
+      if (v == before) Map.empty[String, String]
+      else t.history(Some(1)).select("operationMetrics")
+        .as[Map[String, String]].head()
+    def count(k: String): Long = counts.get(k).map(_.toLong).getOrElse(0L)
+    (count("numTargetRowsUpdated"), count("numTargetRowsDeleted"),
+      count("numTargetRowsInserted")) shouldBe
+      ((want.updated, want.deleted, want.inserted))
+    if (cdf) {
+      val changes =
+        if (v == before) Seq.empty
+        else t.changes(v, Some(v)).select("_change_type", "k", "v", "s")
+          .as[(String, Long, Long, String)].collect().toSeq
+          .map { case (ct, k, vv, s) => ct -> R(k, vv, s) }
+      def key(ch: (String, R)) = (ch._1, ch._2.k, ch._2.v, ch._2.s)
+      changes.sortBy(key) shouldBe want.changes.sortBy(key)
+    }
   }
 
   private def rows(rnd: scala.util.Random, n: Int, keyRange: Int): Seq[R] =
@@ -153,6 +214,54 @@ class MergeFuzzSpec extends SparkSpec {
           Seq("update" -> ((t: R, _: R) => t.v % 2 == 0),
             "delete" -> ((_: R, s: R) => s.v > 50)),
           None, hasInsert = true))
+    }
+  }
+
+  test("insert-only clause set: the first passing insert clause writes the row") {
+    for (seed <- 18 to 20) {
+      val rnd = new scala.util.Random(seed)
+      val target = distinctKeys(rows(rnd, 40, 60))
+      val source = distinctKeys(rows(rnd, 30, 90))
+      run(target, source, dv = false,
+        b => b
+          .whenNotMatchedInsertAll(condition = Some(col("source.v") < 40))
+          .whenNotMatchedInsert(
+            Map("k" -> col("source.k"), "v" -> (col("source.v") + 2000),
+              "s" -> col("source.s")),
+            condition = Some(col("source.v") >= 60)),
+        Clauses(Nil, Some((s: R) => s.v < 40), hasInsert = true,
+          moreInserts = Seq(((s: R) => s.v >= 60, (s: R) => s.copy(v = s.v + 2000)))))
+    }
+  }
+
+  test("whenNotMatchedBySource clause set: conditional update and delete of unmatched rows") {
+    for (seed <- 21 to 23) {
+      val rnd = new scala.util.Random(seed)
+      val target = distinctKeys(rows(rnd, 40, 60))
+      val source = distinctKeys(rows(rnd, 30, 90))
+      run(target, source, dv = false,
+        b => b
+          .whenMatchedUpdate(Map("v" -> (col("source.v") + 1000),
+            "s" -> col("source.s")))
+          .whenNotMatchedInsertAll()
+          .whenNotMatchedBySourceUpdate(Map("v" -> (col("target.v") + 500)),
+            condition = Some(col("target.v") < 30))
+          .whenNotMatchedBySourceDelete(condition = Some(col("target.v") > 70)),
+        Clauses(Seq("update" -> ((_, _) => true)), None, hasInsert = true,
+          nmbs = Seq("update" -> ((t: R) => t.v < 30), "delete" -> ((t: R) => t.v > 70))))
+    }
+  }
+
+  test("empty target: every source row inserts") {
+    for (seed <- 24 to 25) {
+      val rnd = new scala.util.Random(seed)
+      val source = distinctKeys(rows(rnd, 30, 90))
+      run(Seq.empty, source, dv = false,
+        b => b.whenMatchedUpdate(Map("v" -> (col("source.v") + 1000),
+            "s" -> col("source.s")))
+          .whenMatchedDelete()
+          .whenNotMatchedInsertAll(),
+        Clauses(Seq("update" -> ((_, _) => true)), None, hasInsert = true))
     }
   }
 
