@@ -1,7 +1,8 @@
 package graft.table
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.storage.StorageLevel
 
 import graft.log._
@@ -42,12 +43,6 @@ trait DmlSupport { self: LakeTable =>
     if (touched.isEmpty) return snap.version
     val touchedDf = readFilesMasked(snap, touched, snap.schema)
     val matchPred = coalesce(cond, lit(false))
-    // numUpdatedRows rides the rewrite job itself (CollectMetrics ahead of
-    // the projection) — no dedicated counting pass over the touched files.
-    // On a foreachBatch thread the observation can never complete (see
-    // LakeTable.onStreamExecutionThread); recount narrowly there instead.
-    val observable = !LakeTable.onStreamExecutionThread
-    val obs = org.apache.spark.sql.Observation()
     // row tracking: the rewrite reads resolved ids and writes them back as
     // materialized columns — unmodified rows keep id AND commit version,
     // updated rows keep id with a bumped version (null materialized value
@@ -55,13 +50,16 @@ trait DmlSupport { self: LakeTable =>
     val rt = rowsTracked(snap, touched)
     val rewriteSrc =
       if (rt) posWithRowIds(snap, touched).drop("__file", "__idx") else touchedDf
-    val observed = if (!observable) rewriteSrc else rewriteSrc.observe(obs,
-      sum(when(matchPred, 1L).otherwise(0L)).as("updated"))
+    // numUpdatedRows rides the rewrite job itself — no dedicated counting
+    // pass over the touched files; a foreachBatch thread recounts narrowly
+    val counts = new WriteCounts(rewriteSrc, cache = false,
+      Seq("updated" -> sum(when(matchPred, 1L).otherwise(0L))))(
+      _ => Map("updated" -> touchedDf.filter(matchPred).count()))
     val rtExtra: Seq[Column] = if (!rt) Nil else Seq(
       col(RowTracking.MatRowId),
-      when(matchPred, lit(null).cast(org.apache.spark.sql.types.LongType))
+      when(matchPred, lit(null).cast(LongType))
         .otherwise(col(RowTracking.MatRcv)).as(RowTracking.MatRcv))
-    val rewritten = observed.select(snap.schema.fieldNames.toIndexedSeq.map { c =>
+    val rewritten = counts.rows.select(snap.schema.fieldNames.toIndexedSeq.map { c =>
       val newVal = set.collectFirst { case (k, v) if k.equalsIgnoreCase(c) => v }
       newVal match {
         case Some(v) => when(matchPred, v.cast(snap.schema(c).dataType))
@@ -69,32 +67,10 @@ trait DmlSupport { self: LakeTable =>
         case None => col(c)
       }
     } ++ rtExtra: _*)
-    val setExprs = snap.schema.fieldNames.toIndexedSeq.map { c =>
-      set.collectFirst { case (k, v) if k.equalsIgnoreCase(c) =>
-        v.cast(snap.schema(c).dataType).as(c, snap.schema(c).metadata) }
-        .getOrElse(col(c).as(c, snap.schema(c).metadata))
-    }
-    val sidecars = if (cdfEnabled) {
-      // row tracking: the sidecar records each image's resolved id — the
-      // post image carries the SAME id (an update never moves a row's id)
-      val idCol: Seq[Column] =
-        if (rt) Seq(col(RowTracking.MatRowId).as(Cdf.RowIdCol)) else Nil
-      val hit = rewriteSrc.filter(matchPred)
-      val pre = hit.select(snap.schema.fieldNames.toIndexedSeq.map(col) ++ idCol: _*)
-        .withColumn("_change_type", lit("update_preimage"))
-      val post = hit.select(setExprs ++ idCol: _*)
-        .withColumn("_change_type", lit("update_postimage"))
-      writeCdfSidecar(pre.unionByName(post))
-    } else Nil
+    val sidecars = dmlSidecar(snap, rewriteSrc.filter(matchPred), rt, Some(set))
     val adds = stageWrite(rewritten, snap.metadata.partitionColumns)
-    val numUpdated =
-      if (observable) obs.get.get("updated") match {
-        case Some(l: java.lang.Long) => l.longValue()
-        case _ => 0L
-      }
-      else touchedDf.filter(matchPred).count()
     commitRewrite(snap, "UPDATE", Map("predicate" -> cond.toString), touched, adds,
-      sidecars, Map("numUpdatedRows" -> numUpdated))
+      sidecars, Map("numUpdatedRows" -> counts("updated")))
   }
 
   /** Generated-column recompute shared by UPDATE and MERGE's update/insert
@@ -169,13 +145,7 @@ trait DmlSupport { self: LakeTable =>
       if (rt) posWithRowIds(snap, touched).drop("__file", "__idx")
       else touchedDf
     val rewritten = rewriteSrc.filter(!matchPred)
-    val sidecars = if (cdfEnabled) {
-      val idCol: Seq[Column] =
-        if (rt) Seq(col(RowTracking.MatRowId).as(Cdf.RowIdCol)) else Nil
-      writeCdfSidecar(rewriteSrc.filter(matchPred)
-        .select(snap.schema.fieldNames.toIndexedSeq.map(col) ++ idCol: _*)
-        .withColumn("_change_type", lit("delete")))
-    } else Nil
+    val sidecars = dmlSidecar(snap, rewriteSrc.filter(matchPred), rt, None)
     val adds = stageWrite(rewritten, snap.metadata.partitionColumns)
     // deleted-row count falls out of the file metadata — no extra job
     // (touched files' live counts = base counts minus their DV masks)
@@ -193,19 +163,12 @@ trait DmlSupport { self: LakeTable =>
   private def deleteWithDv(snap: Snapshot, cond: Column): Long = {
     val touched = filesContaining(snap, cond)
     if (touched.isEmpty) return snap.version
-    val matchPred = coalesce(cond, lit(false))
     // row tracking: resolve ids alongside the positions so the CDF
     // sidecar records which rows the mask deleted
     val rt = rowsTracked(snap, touched)
-    val matched = (if (rt) posWithRowIds(snap, touched)
-      else readFilesMaskedPos(snap, touched, snap.schema)).filter(matchPred)
-    val sidecars = if (cdfEnabled) {
-      val idCol: Seq[Column] =
-        if (rt) Seq(col(RowTracking.MatRowId).as(Cdf.RowIdCol)) else Nil
-      writeCdfSidecar(matched
-        .select(snap.schema.fieldNames.toIndexedSeq.map(col) ++ idCol: _*)
-        .withColumn("_change_type", lit("delete")))
-    } else Nil
+    val matched = dmlRows(snap, touched, snap.schema, rt, positions = true)
+      .filter(coalesce(cond, lit(false)))
+    val sidecars = dmlSidecar(snap, matched, rt, None)
     maskAndCommit(snap, "DELETE", Map("predicate" -> cond.toString),
       touched, matched, Nil, sidecars,
       newlyMasked => Map("numDeletedRows" -> newlyMasked))
@@ -216,39 +179,53 @@ trait DmlSupport { self: LakeTable =>
   private def updateWithDv(snap: Snapshot, cond: Column, set: Map[String, Column]): Long = {
     val touched = filesContaining(snap, cond)
     if (touched.isEmpty) return snap.version
-    val matchPred = coalesce(cond, lit(false))
     // row tracking: the masked originals' resolved ids ride into the
     // appended post-image file as a materialized column, so an updated row
     // KEEPS its id across the mask+append; the commit version is left to
     // the new file's default (= this commit), which is the bump Delta makes
     val rt = rowsTracked(snap, touched)
-    val matched =
-      (if (rt) posWithRowIds(snap, touched)
-      else readFilesMaskedPos(snap, touched, snap.schema)).filter(matchPred)
-    val setExprs = snap.schema.fieldNames.toIndexedSeq.map { c =>
-      set.collectFirst { case (k, v) if k.equalsIgnoreCase(c) =>
-        v.cast(snap.schema(c).dataType).as(c, snap.schema(c).metadata) }
-        .getOrElse(col(c).as(c, snap.schema(c).metadata))
-    }
-    val sidecars = if (cdfEnabled) {
-      // both images carry the row's resolved id (updates keep ids)
-      val idCol: Seq[Column] =
-        if (rt) Seq(col(RowTracking.MatRowId).as(Cdf.RowIdCol)) else Nil
-      val base = matched.drop("__file", "__idx")
-      val pre = base.select(snap.schema.fieldNames.toIndexedSeq.map(col) ++ idCol: _*)
-        .withColumn("_change_type", lit("update_preimage"))
-      val post = base.select(setExprs ++ idCol: _*)
-        .withColumn("_change_type", lit("update_postimage"))
-      writeCdfSidecar(pre.unionByName(post))
-    } else Nil
+    val matched = dmlRows(snap, touched, snap.schema, rt, positions = true)
+      .filter(coalesce(cond, lit(false)))
+    val sidecars = dmlSidecar(snap, matched.drop("__file", "__idx"), rt, Some(set))
     val rtExtra: Seq[Column] = if (rt) Seq(col(RowTracking.MatRowId)) else Nil
     val adds = stageWrite(
-      matched.drop("__file", "__idx").select(setExprs ++ rtExtra: _*),
+      matched.drop("__file", "__idx").select(Dml.setExprs(snap.schema, set) ++ rtExtra: _*),
       snap.metadata.partitionColumns)
     maskAndCommit(snap, "UPDATE", Map("predicate" -> cond.toString),
       touched, matched, adds, sidecars,
       newlyMasked => Map("numUpdatedRows" -> adds.map(_.numRecords).sum))
   }
+
+  /** `files` as DML reads them under `schema`: deletion-vector masks
+    * applied, resolved row ids as materialized columns when `rt`, and the
+    * reader positions `__file`/`__idx` kept when `positions` (a
+    * deletion-vector write masks by them). */
+  private[table] def dmlRows(snap: Snapshot, files: Seq[AddFile], schema: StructType,
+      rt: Boolean, positions: Boolean): DataFrame =
+    if (rt) {
+      val p = posWithRowIds(snap, files, schema)
+      if (positions) p else p.drop("__file", "__idx")
+    }
+    else if (positions) readFilesMaskedPos(snap, files, schema)
+    else readFilesMasked(snap, files, schema)
+
+  /** The change-feed sidecar of an UPDATE (`set` given: pre and post images
+    * of the `hit` rows) or a DELETE (their delete images); Nil when the
+    * feed is off. Row tracking: every image carries the row's resolved id —
+    * the post image the SAME id (an update never moves a row's id). */
+  private def dmlSidecar(snap: Snapshot, hit: DataFrame, rt: Boolean,
+      set: Option[Map[String, Column]]): Seq[Action] =
+    if (!cdfEnabled) Nil
+    else {
+      val idCol: Seq[Column] =
+        if (rt) Seq(col(RowTracking.MatRowId).as(Cdf.RowIdCol)) else Nil
+      val before = snap.schema.fieldNames.toIndexedSeq.map(col) ++ idCol
+      writeCdfSidecar(set match {
+        case None => Dml.cdfImage(hit, before, "delete")
+        case Some(s) => Dml.cdfImage(hit, before, "update_preimage").unionByName(
+          Dml.cdfImage(hit, Dml.setExprs(snap.schema, s) ++ idCol, "update_postimage"))
+      })
+    }
 
   /** Shared deletion-vector commit: aggregate this change's masked positions
     * into per-file roaring bitmaps, OR in the touched files' current
@@ -291,26 +268,8 @@ trait DmlSupport { self: LakeTable =>
     val newKeys = newActions.map(_.forFile).toSet
     val committed = commitWithRetry(op, params + ("deletionVectors" -> "true"), snap,
       metrics(newlyMasked)) { s =>
-      // idempotent replay guard, as in commitRewrite
-      params.get("txnAppId").foreach { app =>
-        if (lastTxnVersion(s, app).exists(_ >= params("txnVersion").toLong))
-          throw new LakeTable.EpochAlreadyCommitted
-      }
-      if (s.version != snap.version) {
-        if (s.metadata.schemaJson != snap.metadata.schemaJson)
-          throw new java.util.ConcurrentModificationException(
-            s"$op conflicts with a concurrent metadata change")
-        val live = s.files.map(_.path).toSet
-        if (!newKeys.subsetOf(live))
-          throw new java.util.ConcurrentModificationException(
-            s"$op conflicts with a concurrent commit that rewrote the touched files")
-        // the new vectors were computed on top of snap's vectors
-        newKeys.foreach { p =>
-          if (s.dvs.get(p) != snap.dvs.get(p))
-            throw new java.util.ConcurrentModificationException(
-              s"$op conflicts with a concurrent deletion-vector change")
-        }
-      }
+      // the new vectors were computed on top of snap's vectors
+      checkCommit(op, params, snap, s, newKeys)
       val now = clockMillis()
       val future = ((s.dvs -- newKeys).values.map(_.dvPath) ++ Seq(dvRel)).toSet
       newActions ++ adds ++ sidecars ++ dvTombstones(s, newKeys, future, now)
@@ -358,36 +317,120 @@ trait DmlSupport { self: LakeTable =>
       metrics: Map[String, Long]): Long = {
     val touchedPaths = touched.map(_.path).toSet
     commitWithRetry(op, params, snap, metrics) { s =>
-      // idempotent replay (streaming foreachBatch merge): the same
-      // (txnAppId, txnVersion) already committed -> no-op; checked against
-      // the FRESH snapshot inside the retry loop, like appendStream
-      params.get("txnAppId").foreach { app =>
-        if (lastTxnVersion(s, app).exists(_ >= params("txnVersion").toLong))
-          throw new LakeTable.EpochAlreadyCommitted
-      }
-      if (s.version != snap.version) {
-        // rewritten files were derived under snap's schema/partitioning; a
-        // concurrent metadata change would make them silently inconsistent
-        if (s.metadata.schemaJson != snap.metadata.schemaJson ||
-            s.metadata.partitionColumns != snap.metadata.partitionColumns)
-          throw new java.util.ConcurrentModificationException(
-            s"$op conflicts with a concurrent metadata change")
-        val live = s.files.map(_.path).toSet
-        if (!touchedPaths.subsetOf(live))
-          throw new java.util.ConcurrentModificationException(
-            s"$op conflicts with a concurrent commit that rewrote ${touchedPaths.diff(live).size} file(s)")
-        // the rewrite was computed under snap's deletion-vector masks
-        touchedPaths.foreach { p =>
-          if (s.dvs.get(p) != snap.dvs.get(p))
-            throw new java.util.ConcurrentModificationException(
-              s"$op conflicts with a concurrent deletion-vector change")
-        }
-      }
+      checkCommit(op, params, snap, s, touchedPaths)
       val now = clockMillis()
       touched.map(f => RemoveFile(f.path, now)) ++ adds ++ extra ++
         dvTombstones(s, touchedPaths, (s.dvs -- touchedPaths).values.map(_.dvPath).toSet, now)
     }
   }
+
+  /** The checks a DML commit attempt makes against the fresh snapshot `s`
+    * (inside the retry loop, so a lost race re-checks). Idempotent replay
+    * (streaming foreachBatch merge): the same (txnAppId, txnVersion)
+    * already committed -> no-op, like appendStream. Conflicts: the change
+    * was derived under snap's schema, partitioning and deletion-vector
+    * masks, so a commit since `snap` that changed the metadata, or removed
+    * or re-masked any of `paths`, would make it silently inconsistent. */
+  private def checkCommit(op: String, params: Map[String, String],
+      snap: Snapshot, s: Snapshot, paths: Set[String]): Unit = {
+    params.get("txnAppId").foreach { app =>
+      if (lastTxnVersion(s, app).exists(_ >= params("txnVersion").toLong))
+        throw new LakeTable.EpochAlreadyCommitted
+    }
+    if (s.version != snap.version) {
+      if (s.metadata.schemaJson != snap.metadata.schemaJson ||
+          s.metadata.partitionColumns != snap.metadata.partitionColumns)
+        throw new java.util.ConcurrentModificationException(
+          s"$op conflicts with a concurrent metadata change")
+      val live = s.files.map(_.path).toSet
+      if (!paths.subsetOf(live))
+        throw new java.util.ConcurrentModificationException(
+          s"$op conflicts with a concurrent commit that rewrote ${paths.diff(live).size} file(s)")
+      paths.foreach { p =>
+        if (s.dvs.get(p) != snap.dvs.get(p))
+          throw new java.util.ConcurrentModificationException(
+            s"$op conflicts with a concurrent deletion-vector change")
+      }
+    }
+  }
+}
+
+/** Column builders every DML path shares. */
+private[table] object Dml {
+
+  /** `when(p1, v1).when(p2, v2)...otherwise(otherwise)` over `arms` in
+    * order (first true predicate wins); `otherwise` alone when empty. */
+  def firstOf(arms: Seq[(Column, Column)], otherwise: Column): Column =
+    if (arms.isEmpty) otherwise
+    else arms.tail.foldLeft(when(arms.head._1, arms.head._2)) {
+      case (c, (p, v)) => c.when(p, v)
+    }.otherwise(otherwise)
+
+  /** An UPDATE's post image: every `schema` column, SET ones replaced. */
+  def setExprs(schema: StructType, set: Map[String, Column]): Seq[Column] =
+    schema.fieldNames.toIndexedSeq.map { c =>
+      set.collectFirst { case (k, v) if k.equalsIgnoreCase(c) =>
+        v.cast(schema(c).dataType).as(c, schema(c).metadata) }
+        .getOrElse(col(c).as(c, schema(c).metadata))
+    }
+
+  /** One change-feed image: `rows` projected to `cols`, tagged `changeType`. */
+  def cdfImage(rows: DataFrame, cols: Seq[Column], changeType: String): DataFrame =
+    rows.select(cols: _*).withColumn("_change_type", lit(changeType))
+}
+
+/** Named row counts of a DML write that ride the write job itself: the
+  * `metrics` aggregates are observed on `frame` (a CollectMetrics node), so
+  * the job that consumes [[rows]] also yields them — no counting pass. On a
+  * foreachBatch thread the observation never completes (see
+  * LakeTable.onStreamExecutionThread); there `recount` computes the same
+  * counts with one narrow job after the write, over `frame` persisted once
+  * when `cache` is set, so it reads the cache instead of re-running the
+  * frame's scan and join. [[release]] drops that cache. */
+private[table] final class WriteCounts(
+    frame: DataFrame, cache: Boolean, metrics: Seq[(String, Column)])(
+    recount: DataFrame => Map[String, Long]) {
+  private val observable = !LakeTable.onStreamExecutionThread
+  private val obs = Observation()
+  private val cached =
+    if (observable || !cache) None else Some(frame.persist(StorageLevel.MEMORY_AND_DISK))
+
+  /** The frame to build the write on. */
+  val rows: DataFrame =
+    if (!observable) cached.getOrElse(frame)
+    else frame.observe(obs, metrics.head._2.as(metrics.head._1),
+      metrics.tail.map { case (n, m) => m.as(n) }: _*)
+
+  private lazy val recounted = recount(rows)
+
+  /** A count, once the write has run (sum over an empty plan is null -> 0). */
+  def apply(name: String): Long =
+    if (observable) obs.get.get(name) match {
+      case Some(l: java.lang.Long) => l.longValue()
+      case _ => 0L
+    }
+    else recounted.getOrElse(name, 0L)
+
+  def release(): Unit = cached.foreach(_.unpersist(): Unit)
+}
+
+private[table] object WriteCounts {
+
+  /** Per-name row counts of an `__action`-tagged frame: each name counts
+    * the rows carrying any of its tags (one narrow group-by job). */
+  def countTags(tagged: DataFrame, named: Seq[(String, Seq[String])]): Map[String, Long] = {
+    val byTag = tagged.select(col("__action")).groupBy("__action").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    named.map { case (n, tags) => n -> tags.map(t => byTag.getOrElse(t, 0L)).sum }.toMap
+  }
+
+  /** [[WriteCounts]] of the `__action` tags in `named`, persisted for the
+    * stream-thread recount. */
+  def byTag(tagged: DataFrame, named: (String, Seq[String])*): WriteCounts =
+    new WriteCounts(tagged, cache = true, named.map { case (n, tags) =>
+      n -> (if (tags.isEmpty) sum(lit(0L))
+        else sum(when(col("__action").isin(tags: _*), 1L).otherwise(0L)))
+    })(countTags(_, named))
 }
 
 /** Fluent MERGE spec, mirroring Delta's builder
@@ -503,6 +546,11 @@ class MergeBuilder private[table] (
       conjuncts(Pruner.normalize(Pruner.exprOf(condition))).size == pairs.size
   }
 
+  private def ambiguousMatch(): Nothing =
+    throw new IllegalStateException(
+      "MERGE failed: multiple source rows matched the same target row " +
+        "(same semantics as Delta's DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW_IN_MERGE)")
+
   // opt-in phase timing for local profiling: -Dgraft.merge.timing=1
   private val timingOn = sys.props.get("graft.merge.timing").contains("1")
   private var lastMark = System.nanoTime()
@@ -511,6 +559,10 @@ class MergeBuilder private[table] (
     System.err.println(f"[merge-timing] $label%-28s ${(now - lastMark) / 1e9}%7.2f s")
     lastMark = now
   }
+
+  /** The small-rewrite gate's budget: touched bytes plus the materialized
+    * source's size estimate must fit half a 128 MB target file. */
+  private val SmallRewriteBytes = 64L * 1024 * 1024
 
   /** Run the two-phase merge. Returns the committed version. */
   def execute(): Long =
@@ -536,22 +588,21 @@ class MergeBuilder private[table] (
     // Schema evolution: source-only columns join the target schema
     // (nullable) for this merge's commit; pre-evolution files read them as
     // NULL via the enforced read schema — no rewrite of untouched data.
-    val newCols: Seq[org.apache.spark.sql.types.StructField] = {
+    val newCols: Seq[StructField] = {
       val added =
         if (!schemaEvolution) Seq.empty
         else source.schema.fields.toSeq
           .filter(f => !snap.schema.fieldNames.exists(_.equalsIgnoreCase(f.name)))
           .map(f => f.copy(nullable = true,
-            metadata = graft.log.ColumnIds.strip(
-              org.apache.spark.sql.types.StructType(Seq(f))).fields.head.metadata))
+            metadata = graft.log.ColumnIds.strip(StructType(Seq(f))).fields.head.metadata))
       // on a mapped table the evolved columns get fresh field ids
       graft.log.ColumnIds.stampNew(snap.metadata.properties, snap.schema, added)._1
     }
-    val schema = org.apache.spark.sql.types.StructType(snap.schema.fields ++ newCols)
+    val schema = StructType(snap.schema.fields ++ newCols)
     val evolution: Seq[graft.log.Action] = table.evolveMeta(snap, schema)
     // Delta parity: an insert clause that omits a column falls back to the
     // column's declared DEFAULT (CURRENT_DEFAULT metadata), else NULL
-    def insertMissing(c: String, dt: org.apache.spark.sql.types.DataType): Column = {
+    def insertMissing(c: String, dt: DataType): Column = {
       val md = schema(c).metadata
       if (md.contains("CURRENT_DEFAULT"))
         org.apache.spark.sql.functions.expr(md.getString("CURRENT_DEFAULT")).cast(dt)
@@ -588,12 +639,93 @@ class MergeBuilder private[table] (
           .map(f => org.apache.spark.sql.functions
             .expr(f.metadata.getString("CURRENT_DEFAULT")).cast(f.dataType))))
     }
-    notMatchedBySourceClauses = notMatchedBySourceClauses.map {
+    val nmbsClauses: Vector[Clause] = notMatchedBySourceClauses.map {
       case NotMatchedBySourceUpdate(cond, set) =>
         NotMatchedBySourceUpdate(cond,
           table.recomputeGenerated(set, qualifier = Some("target")))
       case other => other
     }
+    val nmbsOn = nmbsClauses.nonEmpty
+
+    // The clause compiler. Each clause has an `__action` tag — m<i> matched,
+    // i<j> insert, u<k>/x<k> not-matched-by-source update/delete — and every
+    // path tags rows with the first firing clause, then projects each
+    // output column from the tag. NMBS tags fold into the update/delete
+    // vectors so the keep-filter, DV masking, CDF sidecars, and metrics all
+    // compose without special cases (an NMBS update IS an update of an
+    // existing target row).
+    val matchedTagged = matchedClauses.zipWithIndex.map { case (cl, i) => s"m$i" -> cl }
+    val insertTagged = notMatchedClauses.zipWithIndex.map { case (cl, j) => s"i$j" -> cl }
+    val nmbsTagged = nmbsClauses.zipWithIndex.map {
+      case (cl: NotMatchedBySourceUpdate, k) => s"u$k" -> cl
+      case (cl, k) => s"x$k" -> cl
+    }
+    val updateTags = (matchedTagged ++ nmbsTagged).collect {
+      case (t, _: MatchedUpdate | _: NotMatchedBySourceUpdate) => t
+    }
+    val deleteTags = (matchedTagged ++ nmbsTagged).collect {
+      case (t, _: MatchedDelete | _: NotMatchedBySourceDelete) => t
+    }
+    val insertTags = insertTagged.map(_._1)
+    val nmbsUpdateTags = nmbsTagged.collect { case (t, _: NotMatchedBySourceUpdate) => t }
+    val nmbsDeleteTags = nmbsTagged.collect { case (t, _: NotMatchedBySourceDelete) => t }
+
+    /** `__action`: the tag of the first clause (in `arms` order) whose arm
+      * guard and own condition hold, else `tail`. */
+    def actionCol(tail: Column)(arms: (Option[Column], Seq[(String, Clause)])*): Column =
+      Dml.firstOf(for ((guard, tagged) <- arms; (tag, cl) <- tagged) yield {
+        val p = coalesce(cl.cond.getOrElse(lit(true)), lit(false))
+        guard.fold(p)(_ && p) -> lit(tag)
+      }, tail)
+
+    /** Output column `c`: the value the row's firing clause among `tagged`
+      * writes, else `base(c)` (delete clauses write nothing: their rows are
+      * filtered out). */
+    def outCol(tagged: Seq[(String, Clause)], base: String => Column)(c: String): Column = {
+      val dt = schema(c).dataType
+      def assigned(m: Map[String, Column]) =
+        m.collectFirst { case (k, e) if k.equalsIgnoreCase(c) => e }
+      Dml.firstOf(tagged.flatMap {
+        case (t, MatchedUpdate(_, set)) => Some(t -> assigned(set).getOrElse(col(s"target.$c")).cast(dt))
+        case (t, NotMatchedBySourceUpdate(_, set)) =>
+          Some(t -> assigned(set).getOrElse(col(s"target.$c")).cast(dt))
+        case (t, NotMatchedInsert(_, values)) =>
+          Some(t -> assigned(values).map(_.cast(dt)).getOrElse(insertMissing(c, dt)))
+        case _ => None
+      }.map { case (t, v) => (col("__action") === t) -> v }, base(c)).as(c, schema(c).metadata)
+    }
+    val targetOf: String => Column = c => col(s"target.$c")
+    val nullOf: String => Column = c => lit(null).cast(schema(c).dataType)
+    // an insert side's tagged source rows -> table rows
+    def insertRows(tagged: DataFrame): DataFrame =
+      tagged.filter(col("__action") =!= "drop")
+        .select(schema.fieldNames.toIndexedSeq.map(outCol(insertTagged, nullOf)): _*)
+    // materialized-id passthrough (row tracking) of a copy-on-write
+    // rewrite: updates/copies keep their id, copies alone keep the commit
+    // version, inserts stay null
+    def rtCarry(rt: Boolean): Seq[Column] = if (!rt) Nil else Seq(
+      col(s"target.${RowTracking.MatRowId}").as(RowTracking.MatRowId),
+      when(col("__action") === "copy", col(s"target.${RowTracking.MatRcv}"))
+        .otherwise(lit(null).cast(LongType))
+        .as(RowTracking.MatRcv))
+    // a deletion-vector changed set: the output row, its reader position
+    // (for the mask), its tag, and its resolved id under row tracking
+    def changedCols(out: String => Column, rt: Boolean): Seq[Column] =
+      schema.fieldNames.toIndexedSeq.map(out) ++ Seq(
+        col("target.__file").as("__file"), col("target.__idx").as("__idx"),
+        col("__action")) ++
+        (if (rt) Seq(col(s"target.${RowTracking.MatRowId}")
+          .as(RowTracking.MatRowId)) else Nil)
+    def changedRows(changed: DataFrame, rt: Boolean): DataFrame =
+      changed.select(schema.fieldNames.toIndexedSeq.map(c =>
+        col(c).as(c, schema(c).metadata)) ++
+        (if (rt) Seq(col(RowTracking.MatRowId)) else Nil): _*)
+
+    val params = Map("predicate" -> condition.toString,
+      "matchedClauses" -> matchedClauses.size.toString,
+      "notMatchedClauses" -> notMatchedClauses.size.toString) ++
+      (if (nmbsOn) Map("notMatchedBySourceClauses" -> nmbsClauses.size.toString)
+      else Map.empty) ++ txnParams
 
     // Materialize the source once: it is referenced by phase-0 bounds, the
     // phase-1 probe, and the phase-2 join — and must not change between them.
@@ -649,16 +781,24 @@ class MergeBuilder private[table] (
         (cnt, cands, distinct)
       }.getOrElse((src.count(), snap.files, false))
     mark("phase0 source agg")
+    def mergeMetrics(updated: Long, deleted: Long, inserted: Long, copied: Long) =
+      Map("numTargetRowsUpdated" -> updated, "numTargetRowsDeleted" -> deleted,
+        "numTargetRowsInserted" -> inserted, "numTargetRowsCopied" -> copied,
+        "numSourceRows" -> numSourceRows)
+    // the source-side key of the equi pairs, and the target's key columns
+    def srcKey: Column = if (pairs.size == 1) col(s"source.${pairs.head._2}")
+      else struct(pairs.map(p => col(s"source.${p._2}")): _*)
+    def keySchema: StructType = StructType(pairs.map(_._1).distinct.map(c =>
+      schema.fields.find(_.name.equalsIgnoreCase(c)).get))
 
     // WHEN NOT MATCHED BY SOURCE widens the touched set beyond the
     // key-overlap slice: unmatched target rows can live in ANY file, so
     // only the clause conditions themselves can prune (Delta behaves the
     // same — an unconditional NMBS clause scans the whole table).
-    val nmbsOn = notMatchedBySourceClauses.nonEmpty
     val nmbsCandidates: Seq[AddFile] =
       if (!nmbsOn) Nil
       else {
-        val conds = notMatchedBySourceClauses.map(_.cond)
+        val conds = nmbsClauses.map(_.cond)
         if (conds.forall(_.isDefined)) {
           val anyCond = conds.flatten.reduce(_ || _)
           Pruner.prune(table.partitionPrune(snap, snap.files, Seq(anyCond)),
@@ -678,28 +818,8 @@ class MergeBuilder private[table] (
         .hint("shuffle_hash").alias("target")
       val unmatchedSrc = src.alias("source").join(tgt, condition, "left_anti")
         .alias("source")
-      val insertAction = {
-        var c: Column = null
-        notMatchedClauses.zipWithIndex.foreach { case (cl, j) =>
-          val p = coalesce(cl.cond.getOrElse(lit(true)), lit(false))
-          c = if (c == null) when(p, lit(s"i$j")) else c.when(p, lit(s"i$j"))
-        }
-        if (c == null) lit("drop") else c.otherwise(lit("drop"))
-      }
-      val tagged = unmatchedSrc.withColumn("__action", insertAction)
-        .filter(col("__action") =!= "drop")
-      val inserts = tagged.select(schema.fieldNames.toIndexedSeq.map { c =>
-        val dt = schema(c).dataType
-        var expr: Column = null
-        notMatchedClauses.zipWithIndex.foreach { case (NotMatchedInsert(_, values), j) =>
-          val v = values.collectFirst { case (k, e) if k.equalsIgnoreCase(c) => e }
-            .map(_.cast(dt)).getOrElse(insertMissing(c, dt))
-          expr = if (expr == null) when(col("__action") === s"i$j", v)
-            else expr.when(col("__action") === s"i$j", v)
-        }
-        (if (expr == null) lit(null).cast(dt) else expr.otherwise(lit(null).cast(dt)))
-          .as(c, schema(c).metadata)
-      }: _*)
+      val inserts = insertRows(
+        unmatchedSrc.withColumn("__action", actionCol(lit("drop"))(None -> insertTagged)))
       val adds = table.stageWrite(inserts, snap.metadata.partitionColumns)
       val numInserted = adds.map(_.numRecords).sum
       val sidecars = if (cdfOn && adds.nonEmpty)
@@ -707,13 +827,8 @@ class MergeBuilder private[table] (
           f.copy(path = table.absPath(f))), schema)
           .withColumn("_change_type", lit("insert")))
       else Nil
-      return table.commitRewrite(snap, "MERGE",
-        Map("predicate" -> condition.toString, "matchedClauses" -> "0",
-          "notMatchedClauses" -> notMatchedClauses.size.toString) ++ txnParams,
-        Nil, adds, evolution ++ sidecars,
-        Map("numTargetRowsInserted" -> numInserted,
-          "numTargetRowsUpdated" -> 0L, "numTargetRowsDeleted" -> 0L,
-          "numTargetRowsCopied" -> 0L, "numSourceRows" -> numSourceRows))
+      return table.commitRewrite(snap, "MERGE", params, Nil, adds, evolution ++ sidecars,
+        mergeMetrics(0L, 0L, numInserted, 0L))
     }
 
     // Phase 1: which candidate files actually contain matched rows, FUSED
@@ -748,11 +863,6 @@ class MergeBuilder private[table] (
             // a source row can match several duplicate-key target rows): if
             // every source row matched, phase 2 skips its anti-join — a full
             // scan of the touched files' keys — entirely.
-            val srcKey = if (pairs.size == 1) col(s"source.${pairs.head._2}")
-              else struct(pairs.map(p => col(s"source.${p._2}")): _*)
-            val keySchema = org.apache.spark.sql.types.StructType(
-              pairs.map(_._1).distinct.map(c =>
-                schema.fields.find(_.name.equalsIgnoreCase(c)).get))
             val probeT = table.readFilesWithFile(snap, candidates, keySchema)
               .alias("target")
             val joinedProbe = probeT.join(src.alias("source"), condition, "inner")
@@ -781,9 +891,7 @@ class MergeBuilder private[table] (
               .collect().head
             if (matchedClauses.nonEmpty &&
                 probe.getAs[Long]("tocc") > probe.getAs[Long]("trids"))
-              throw new IllegalStateException(
-                "MERGE failed: multiple source rows matched the same target row " +
-                  "(same semantics as Delta's DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW_IN_MERGE)")
+              ambiguousMatch()
             guardChecked = true
             probe.getAs[Seq[String]]("files").map(Stats.stripScheme).toSet
           }
@@ -811,42 +919,11 @@ class MergeBuilder private[table] (
         .toOption.filter(_ >= 0)
         .map(b => if (b > BigInt(Long.MaxValue)) Long.MaxValue else b.toLong)
         .getOrElse(Long.MaxValue)
+      val small = touchedBytes <= SmallRewriteBytes - srcBytes
       if (timingOn) System.err.println(
-        s"[merge-timing] gate touchedBytes=$touchedBytes srcBytes=$srcBytes " +
-          s"small=${touchedBytes <= 64L * 1024 * 1024 - srcBytes}")
-      spark.conf.getOption("spark.graft.dml.smallWritePack")
-        .forall(_.toBoolean) &&
-        touchedBytes <= 64L * 1024 * 1024 - srcBytes
+        s"[merge-timing] gate touchedBytes=$touchedBytes srcBytes=$srcBytes small=$small")
+      small
     }
-
-    // Shared by the two low-shuffle fast paths below: which matched clause
-    // fires ("m<i>" / "copy"), and the rewrite projection for matched rows.
-    def matchedActionCol(matchedP: Column): Column = {
-      var c: Column = null
-      matchedClauses.zipWithIndex.foreach { case (cl, i) =>
-        val p = matchedP && coalesce(cl.cond.getOrElse(lit(true)), lit(false))
-        c = if (c == null) when(p, lit(s"m$i")) else c.when(p, lit(s"m$i"))
-      }
-      c.otherwise(lit("copy"))
-    }
-    def matchedOutCol(c: String): Column = {
-      val dt = schema(c).dataType
-      var expr: Column = null
-      matchedClauses.zipWithIndex.foreach {
-        case (MatchedUpdate(_, set), i) =>
-          val v = set.collectFirst { case (k, e) if k.equalsIgnoreCase(c) => e }
-            .getOrElse(col(s"target.$c")).cast(dt)
-          expr = if (expr == null) when(col("__action") === s"m$i", v)
-            else expr.when(col("__action") === s"m$i", v)
-        case _ =>
-      }
-      val base = col(s"target.$c")
-      (if (expr == null) base else expr.otherwise(base)).as(c, schema(c).metadata)
-    }
-    lazy val fastDeleteTags = matchedClauses.zipWithIndex.collect {
-      case (_: MatchedDelete, i) => s"m$i" }
-    lazy val fastUpdateTags = matchedClauses.zipWithIndex.collect {
-      case (_: MatchedUpdate, i) => s"m$i" }
 
     // Insert side of the decomposed merge: source LEFT ANTI touched-target
     // keys, projected to the table schema, insert count observed on the
@@ -866,66 +943,36 @@ class MergeBuilder private[table] (
           // touched files' keys are never scanned a second time. A null
           // source key compares null and is kept, i.e. inserted — identical
           // to the equi anti-join below.
-          val srcKey = if (pairs.size == 1) col(s"source.${pairs.head._2}")
-            else struct(pairs.map(p => col(s"source.${p._2}")): _*)
           src.alias("source").join(broadcast(mk), srcKey === col("__k"), "left_anti")
             .alias("source")
         case None =>
-          val keyCols = pairs.map(_._1).distinct
-          val tgtKeys = table.readFilesMasked(snap, touched,
-            org.apache.spark.sql.types.StructType(
-              keyCols.map(c => schema.fields.find(_.name.equalsIgnoreCase(c)).get)))
+          val tgtKeys = table.readFilesMasked(snap, touched, keySchema)
             .hint("shuffle_hash")
             .alias("target")
           src.alias("source").join(tgtKeys, condition, "left_anti")
             .alias("source")
       }
-      val insertAction = {
-        var c: Column = null
-        notMatchedClauses.zipWithIndex.foreach { case (cl, j) =>
-          val p = coalesce(cl.cond.getOrElse(lit(true)), lit(false))
-          c = if (c == null) when(p, lit(s"i$j")) else c.when(p, lit(s"i$j"))
-        }
-        c.otherwise(lit("drop"))
-      }
-      val tagged0 = anti.withColumn("__action", insertAction)
-      val obsB = org.apache.spark.sql.Observation()
-      val observable = !LakeTable.onStreamExecutionThread
-      // foreachBatch thread (observation can't complete): persist the tagged
-      // anti-join once — the write materializes it, the recount below reads
-      // the cache instead of re-scanning the touched keys + re-joining
-      val taggedCacheB =
-        if (observable) None
-        else Some(tagged0.persist(StorageLevel.MEMORY_AND_DISK))
-      val tagged = taggedCacheB.getOrElse(tagged0)
-      val keptB = (if (observable)
-          tagged.observe(obsB,
-            sum(when(col("__action") =!= "drop", 1L).otherwise(0L)).as("inserted"))
-        else tagged)
-        .filter(col("__action") =!= "drop")
-        .select(schema.fieldNames.toIndexedSeq.map { c =>
-          val dt = schema(c).dataType
-          var expr: Column = null
-          notMatchedClauses.zipWithIndex.foreach { case (NotMatchedInsert(_, values), j) =>
-            val v = values.collectFirst { case (k, e) if k.equalsIgnoreCase(c) => e }
-              .map(_.cast(dt)).getOrElse(insertMissing(c, dt))
-            expr = if (expr == null) when(col("__action") === s"i$j", v)
-              else expr.when(col("__action") === s"i$j", v)
-          }
-          expr.otherwise(lit(null).cast(dt)).as(c, schema(c).metadata)
-        }: _*)
-      (keptB, () =>
-        if (observable) obsB.get.get("inserted") match {
-          case Some(l: java.lang.Long) => l.longValue(); case _ => 0L
-        }
-        // foreachBatch thread: recount from the persisted tagged anti-join
-        // (the write already materialized it). Invoked exactly once per
-        // merge — both call sites read it into the commit metrics — so the
-        // unpersist here never leaks the cache entry.
-        else
-          try tagged.filter(col("__action") =!= "drop").count()
-          finally taggedCacheB.foreach(_.unpersist(): Unit))
+      // foreachBatch thread: the tagged anti-join is persisted once — the
+      // write materializes it, the recount reads the cache instead of
+      // re-scanning the touched keys + re-joining
+      val counts = new WriteCounts(
+        anti.withColumn("__action", actionCol(lit("drop"))(None -> insertTagged)),
+        cache = true, Seq("inserted" -> sum(when(col("__action") =!= "drop", 1L).otherwise(0L))))(
+        tagged => Map("inserted" -> tagged.filter(col("__action") =!= "drop").count()))
+      // Invoked exactly once per merge — both call sites read it into the
+      // commit metrics — so the release here never leaks the cache entry.
+      (insertRows(counts.rows), () => try counts("inserted") finally counts.release())
     }
+    // `rows` plus the insert side, unless no insert clause exists or the
+    // probe proved every source row matched. Inserts carry no materialized
+    // ids (allowMissingColumns fills null) — they resolve to the staged
+    // file's fresh base range.
+    def withInserts(rows: DataFrame): (DataFrame, () => Long) =
+      if (notMatchedClauses.isEmpty || matchedSourceRows.contains(numSourceRows)) (rows, () => 0L)
+      else {
+        val (inserts, numInserted) = fastInsertSide()
+        (rows.unionByName(inserts, allowMissingColumns = true), numInserted)
+      }
 
     // Phase 2 fast path (low-shuffle merge): when the source keys are
     // provably distinct under a pure equi-condition, the full-outer join
@@ -938,8 +985,7 @@ class MergeBuilder private[table] (
     // width through an exchange, which at the 10M-row strain shape doubled
     // merge wall time and its variance. Delta's photon merge does the same
     // decomposition ("low-shuffle merge").
-    if (srcKeysDistinct && pureEqui && !cdfOn && !dvOn &&
-        notMatchedBySourceClauses.isEmpty && matchedClauses.nonEmpty) {
+    if (srcKeysDistinct && pureEqui && !cdfOn && !dvOn && !nmbsOn && matchedClauses.nonEmpty) {
       if (touched.isEmpty) {
         // Empty key-overlap slice (e.g. first CDC batch into an empty
         // table): no target row can match, the merge is pure insert. Short-
@@ -952,14 +998,8 @@ class MergeBuilder private[table] (
         val adds = inserts.map(r => table.stageWrite(r, snap.metadata.partitionColumns))
           .getOrElse(Nil)
         mark("phase2 insert-only write")
-        val v = table.commitRewrite(snap, "MERGE",
-          Map("predicate" -> condition.toString,
-            "matchedClauses" -> matchedClauses.size.toString,
-            "notMatchedClauses" -> notMatchedClauses.size.toString) ++ txnParams,
-          Nil, adds, evolution,
-          Map("numTargetRowsUpdated" -> 0L, "numTargetRowsDeleted" -> 0L,
-            "numTargetRowsInserted" -> numInserted(),
-            "numTargetRowsCopied" -> 0L, "numSourceRows" -> numSourceRows))
+        val v = table.commitRewrite(snap, "MERGE", params, Nil, adds, evolution,
+          mergeMetrics(0L, 0L, numInserted(), 0L))
         mark("commit")
         return v
       }
@@ -968,55 +1008,24 @@ class MergeBuilder private[table] (
       // (copies keep the commit version too); inserts land with null
       // materialized values and resolve to the new file's fresh range
       val rt = table.rowsTracked(snap, touched)
-      val tgtF = (if (rt) table.posWithRowIds(snap, touched, schema)
-          .drop("__file", "__idx")
-        else table.readFilesMasked(snap, touched, schema)).alias("target")
+      val tgtF = table.dmlRows(snap, touched, schema, rt, positions = false).alias("target")
       val srcF = src.withColumn("__src", lit(true)).alias("source")
       val lo = tgtF.join(srcF, condition, "left_outer")
-      val matchedP = col("source.__src").isNotNull
-      val actionA = matchedActionCol(matchedP)
-      val deleteTagsA = fastDeleteTags
-      val updateTagsA = fastUpdateTags
-      def tagCountA(tags: Seq[String]): Column =
-        if (tags.isEmpty) sum(lit(0L))
-        else sum(when(col("__action").isin(tags: _*), 1L).otherwise(0L))
-      val obsA = org.apache.spark.sql.Observation()
-      val observable = !LakeTable.onStreamExecutionThread
-      val keptA00 = lo.withColumn("__action", actionA)
-      // foreachBatch thread (observations can never complete there): persist
-      // the tagged join ONCE — the write job materializes it and the metrics
-      // recount below becomes a cache-local aggregate instead of re-running
-      // the whole probe scan + join a second time (r15: the second pass cost
-      // ~0.4 s per streaming micro-batch merge at the q60 shape). Bounded by
-      // the touched slice + batch, same class as the DV changed-set persist.
-      val taggedCacheA =
-        if (observable) None
-        else Some(keptA00.persist(StorageLevel.MEMORY_AND_DISK))
-      val keptA0 = taggedCacheA.getOrElse(keptA00)
-      val keptA = (if (observable)
-          keptA0.observe(obsA,
-            tagCountA(updateTagsA).as("updated"),
-            tagCountA(deleteTagsA).as("deleted"),
-            tagCountA(Seq("copy")).as("copied"))
-        else keptA0)
-        .filter(!col("__action").isin(deleteTagsA: _*))
-        .select(schema.fieldNames.toIndexedSeq.map(matchedOutCol) ++
-          (if (!rt) Nil else Seq(
-            col(s"target.${RowTracking.MatRowId}").as(RowTracking.MatRowId),
-            when(col("__action") === "copy", col(s"target.${RowTracking.MatRcv}"))
-              .otherwise(lit(null)
-                .cast(org.apache.spark.sql.types.LongType))
-              .as(RowTracking.MatRcv))): _*)
-
-      val (rewritten, numInserted: (() => Long)) =
-        if (notMatchedClauses.isEmpty ||
-            matchedSourceRows.contains(numSourceRows)) (keptA, () => 0L)
-        else {
-          val (keptB, inserted) = fastInsertSide()
-          // inserts carry no materialized ids (allowMissingColumns fills
-          // null) — they resolve to the staged file's fresh base range
-          (keptA.unionByName(keptB, allowMissingColumns = true), inserted)
-        }
+      // foreachBatch thread: the tagged join is persisted ONCE — the write
+      // job materializes it and the metrics recount becomes a cache-local
+      // aggregate instead of re-running the whole probe scan + join a
+      // second time (r15: the second pass cost ~0.4 s per streaming
+      // micro-batch merge at the q60 shape). Bounded by the touched slice +
+      // batch, same class as the DV changed-set persist.
+      val counts = WriteCounts.byTag(
+        lo.withColumn("__action",
+          actionCol(lit("copy"))(Some(col("source.__src").isNotNull) -> matchedTagged)),
+        "updated" -> updateTags, "deleted" -> deleteTags, "copied" -> Seq("copy"))
+      val keptA = counts.rows
+        .filter(!col("__action").isin(deleteTags: _*))
+        .select(schema.fieldNames.toIndexedSeq.map(outCol(matchedTagged, targetOf)) ++
+          rtCarry(rt): _*)
+      val (rewritten, numInserted) = withInserts(keptA)
       if (timingOn) System.err.println(rewritten.queryExecution.executedPlan.toString
         .linesIterator.filter(l => l.contains("Join") || l.contains("Exchange") ||
           l.contains("Broadcast")).mkString("[merge-plan]\n", "\n", ""))
@@ -1028,35 +1037,12 @@ class MergeBuilder private[table] (
       val adds = table.withSmallWriteSizing(smallRewrite)(
         table.stageWrite(shaped, snap.metadata.partitionColumns))
       mark("phase2 low-shuffle write")
-      // foreachBatch thread: recount per-action from the persisted tagged
-      // join (already materialized by the write job above) — one narrow
-      // cache-local aggregate, no second probe+join pass
-      lazy val recountA: Map[String, Long] =
-        keptA0.select(col("__action")).groupBy("__action").count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      def metricA(k: String): Long =
-        if (observable) obsA.get.get(k) match {
-          case Some(l: java.lang.Long) => l.longValue(); case _ => 0L
-        }
-        else k match {
-          case "updated" => updateTagsA.map(t => recountA.getOrElse(t, 0L)).sum
-          case "deleted" => deleteTagsA.map(t => recountA.getOrElse(t, 0L)).sum
-          case _ => recountA.getOrElse("copy", 0L)
-        }
       try {
-        val v = table.commitRewrite(snap, "MERGE",
-          Map("predicate" -> condition.toString,
-            "matchedClauses" -> matchedClauses.size.toString,
-            "notMatchedClauses" -> notMatchedClauses.size.toString) ++ txnParams,
-          touched, adds, evolution,
-          Map("numTargetRowsUpdated" -> metricA("updated"),
-            "numTargetRowsDeleted" -> metricA("deleted"),
-            "numTargetRowsInserted" -> numInserted(),
-            "numTargetRowsCopied" -> metricA("copied"),
-            "numSourceRows" -> numSourceRows))
+        val v = table.commitRewrite(snap, "MERGE", params, touched, adds, evolution,
+          mergeMetrics(counts("updated"), counts("deleted"), numInserted(), counts("copied")))
         mark("commit")
         return v
-      } finally taggedCacheA.foreach(_.unpersist(): Unit)
+      } finally counts.release()
     }
 
     // Deletion-vector fast path: same preconditions, but matched rows are
@@ -1070,52 +1056,27 @@ class MergeBuilder private[table] (
     // union-vector rewrite, which grows with accumulated masks, not the
     // join. At cluster scale the full-outer's full-width shuffle is the
     // part that would dominate; this path never pays it.
-    if (srcKeysDistinct && pureEqui && !cdfOn && dvOn &&
-        notMatchedBySourceClauses.isEmpty && matchedClauses.nonEmpty) {
+    if (srcKeysDistinct && pureEqui && !cdfOn && dvOn && !nmbsOn && matchedClauses.nonEmpty) {
       // row tracking: an updated row's resolved id rides into the appended
       // post-image file (the mask+append analogue of the DV UPDATE path);
       // the commit version is left to the new file's default (= this commit)
       val rt = table.rowsTracked(snap, touched)
-      val tgtF = (if (rt) table.posWithRowIds(snap, touched, schema)
-        else table.readFilesMaskedPos(snap, touched, schema)).alias("target")
+      val tgtF = table.dmlRows(snap, touched, schema, rt, positions = true).alias("target")
       val changed = tgtF.join(src.alias("source"), condition, "inner")
-        .withColumn("__action", matchedActionCol(lit(true)))
+        .withColumn("__action", actionCol(lit("copy"))(Some(lit(true)) -> matchedTagged))
         .filter(col("__action") =!= "copy")
-        .select(schema.fieldNames.toIndexedSeq.map(matchedOutCol) ++ Seq(
-          col("target.__file").as("__file"), col("target.__idx").as("__idx"),
-          col("__action")) ++
-          (if (rt) Seq(col(s"target.${RowTracking.MatRowId}")
-            .as(RowTracking.MatRowId)) else Nil): _*)
+        .select(changedCols(outCol(matchedTagged, targetOf), rt): _*)
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        val counts = changed.groupBy("__action").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val numUpdated = fastUpdateTags.map(t => counts.getOrElse(t, 0L)).sum
-        val numDeleted = fastDeleteTags.map(t => counts.getOrElse(t, 0L)).sum
-        val updatedRows = changed.filter(col("__action").isin(fastUpdateTags: _*))
-          .select(schema.fieldNames.toIndexedSeq.map(c =>
-            col(c).as(c, schema(c).metadata)) ++
-            (if (rt) Seq(col(RowTracking.MatRowId)) else Nil): _*)
-        val (toWrite, numInserted: (() => Long)) =
-          if (notMatchedClauses.isEmpty ||
-              matchedSourceRows.contains(numSourceRows)) (updatedRows, () => 0L)
-          else {
-            val (keptB, inserted) = fastInsertSide()
-            (updatedRows.unionByName(keptB, allowMissingColumns = true), inserted)
-          }
+        val counts = WriteCounts.countTags(changed,
+          Seq("updated" -> updateTags, "deleted" -> deleteTags))
+        val (toWrite, numInserted) = withInserts(
+          changedRows(changed.filter(col("__action").isin(updateTags: _*)), rt))
         val adds = table.stageWrite(toWrite, snap.metadata.partitionColumns)
         mark("phase2 dv low-shuffle write")
         val maskedRows = changed.select(col("__file"), col("__idx"))
-        val v = table.maskAndCommit(snap, "MERGE",
-          Map("predicate" -> condition.toString,
-            "matchedClauses" -> matchedClauses.size.toString,
-            "notMatchedClauses" -> notMatchedClauses.size.toString) ++ txnParams,
-          touched, maskedRows, adds, evolution,
-          _ => Map("numTargetRowsUpdated" -> numUpdated,
-            "numTargetRowsDeleted" -> numDeleted,
-            "numTargetRowsInserted" -> numInserted(),
-            "numTargetRowsCopied" -> 0L,
-            "numSourceRows" -> numSourceRows))
+        val v = table.maskAndCommit(snap, "MERGE", params, touched, maskedRows, adds, evolution,
+          _ => mergeMetrics(counts("updated"), counts("deleted"), numInserted(), 0L))
         mark("commit")
         return v
       } finally changed.unpersist(): Unit
@@ -1137,12 +1098,7 @@ class MergeBuilder private[table] (
     // columns; they are null on insert (source-only) rows, which is
     // exactly the "resolve to the new file's fresh range" representation
     val rtG = table.rowsTracked(snap, touched)
-    val tgtT = (if (rtG) {
-        val p = table.posWithRowIds(snap, touched, schema)
-        if (dvOn) p else p.drop("__file", "__idx")
-      }
-      else if (dvOn) table.readFilesMaskedPos(snap, touched, schema)
-      else table.readFilesMasked(snap, touched, schema))
+    val tgtT = table.dmlRows(snap, touched, schema, rtG, positions = dvOn)
       .withColumn("__rid", monotonically_increasing_id())
       .withColumn("__tgt", lit(true)).alias("target")
     val srcT = src.withColumn("__src", lit(true)).alias("source")
@@ -1161,76 +1117,13 @@ class MergeBuilder private[table] (
       // (duplicate-source-match guard is fused into the rollup metrics job
       // below — one shuffle instead of two)
 
-      // Which clause fires per row: "m<i>" / "i<j>" / "copy" / "drop".
-      val actionCol = {
-        var c: Column = null
-        matchedClauses.zipWithIndex.foreach { case (cl, i) =>
-          val p = matched && coalesce(cl.cond.getOrElse(lit(true)), lit(false))
-          c = if (c == null) when(p, lit(s"m$i")) else c.when(p, lit(s"m$i"))
-        }
-        notMatchedClauses.zipWithIndex.foreach { case (cl, j) =>
-          val p = srcOnly && coalesce(cl.cond.getOrElse(lit(true)), lit(false))
-          c = if (c == null) when(p, lit(s"i$j")) else c.when(p, lit(s"i$j"))
-        }
-        notMatchedBySourceClauses.zipWithIndex.foreach { case (cl, k) =>
-          val p = tgtOnly && coalesce(cl.cond.getOrElse(lit(true)), lit(false))
-          val tag = cl match {
-            case _: NotMatchedBySourceUpdate => s"u$k"
-            case _ => s"x$k"
-          }
-          c = if (c == null) when(p, lit(tag)) else c.when(p, lit(tag))
-        }
-        val tail = when(srcOnly, lit("drop")).otherwise(lit("copy"))
-        if (c == null) tail else c.otherwise(tail)
-      }
-      val acted = joined.withColumn("__action", actionCol)
-
-      def outCol(c: String): Column = {
-        val dt = schema(c).dataType
-        var expr: Column = null
-        matchedClauses.zipWithIndex.foreach {
-          case (MatchedUpdate(_, set), i) =>
-            val v = set.collectFirst { case (k, e) if k.equalsIgnoreCase(c) => e }
-              .getOrElse(col(s"target.$c")).cast(dt)
-            expr = if (expr == null) when(col("__action") === s"m$i", v)
-              else expr.when(col("__action") === s"m$i", v)
-          case (_: MatchedDelete, _) => // row filtered out below
-          case _ =>
-        }
-        notMatchedClauses.zipWithIndex.foreach { case (NotMatchedInsert(_, values), j) =>
-          val v = values.collectFirst { case (k, e) if k.equalsIgnoreCase(c) => e }
-            .map(_.cast(dt)).getOrElse(insertMissing(c, dt))
-          expr = if (expr == null) when(col("__action") === s"i$j", v)
-            else expr.when(col("__action") === s"i$j", v)
-        }
-        notMatchedBySourceClauses.zipWithIndex.foreach {
-          case (NotMatchedBySourceUpdate(_, set), k) =>
-            val v = set.collectFirst { case (kk, e) if kk.equalsIgnoreCase(c) => e }
-              .getOrElse(col(s"target.$c")).cast(dt)
-            expr = if (expr == null) when(col("__action") === s"u$k", v)
-              else expr.when(col("__action") === s"u$k", v)
-          case _ =>
-        }
-        val base = col(s"target.$c")
-        (if (expr == null) base else expr.otherwise(base)).as(c, schema(c).metadata)
-      }
-
-      val nmbsUpdateTags = notMatchedBySourceClauses.zipWithIndex.collect {
-        case (_: NotMatchedBySourceUpdate, k) => s"u$k"
-      }
-      val nmbsDeleteTags = notMatchedBySourceClauses.zipWithIndex.collect {
-        case (_: NotMatchedBySourceDelete, k) => s"x$k"
-      }
-      // NMBS tags fold into the update/delete vectors so the keep-filter,
-      // DV masking, CDF sidecars, and metrics all compose without special
-      // cases (an NMBS update IS an update of an existing target row)
-      val deleteTags = matchedClauses.zipWithIndex.collect {
-        case (_: MatchedDelete, i) => s"m$i"
-      } ++ nmbsDeleteTags
-      val updateTags = (matchedClauses.zipWithIndex.collect {
-        case (_: MatchedUpdate, i) => s"m$i"
-      }) ++ nmbsUpdateTags
-      val insertTags = notMatchedClauses.indices.map(j => s"i$j")
+      // Which clause fires per row: "m<i>" / "i<j>" / "u<k>" / "x<k>" /
+      // "copy" / "drop".
+      val acted = joined.withColumn("__action",
+        actionCol(when(srcOnly, lit("drop")).otherwise(lit("copy")))(
+          Some(matched) -> matchedTagged, Some(srcOnly) -> insertTagged,
+          Some(tgtOnly) -> nmbsTagged))
+      val out = outCol(matchedTagged ++ insertTagged ++ nmbsTagged, targetOf) _
 
       // Guard fallback for the small-table path where the fused probe was
       // skipped: one narrow aggregation (column-pruned to the join keys).
@@ -1243,32 +1136,19 @@ class MergeBuilder private[table] (
           .filter(col("__m"))
           .agg(count(lit(1)).as("tocc"), count_distinct(col("__trid")).as("trids"))
           .collect().head
-        if (r.getAs[Long]("tocc") > r.getAs[Long]("trids"))
-          throw new IllegalStateException(
-            "MERGE failed: multiple source rows matched the same target row " +
-              "(same semantics as Delta's DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW_IN_MERGE)")
+        if (r.getAs[Long]("tocc") > r.getAs[Long]("trids")) ambiguousMatch()
       }
 
-      // Per-action metrics ride the rewrite job itself via Observation
-      // (a CollectMetrics node ahead of the keep-filter) — no separate
-      // metrics aggregation pass over the join.
-      def tagCount(tags: Seq[String]): Column =
-        if (tags.isEmpty) sum(lit(0L))
-        else sum(when(col("__action").isin(tags: _*), 1L).otherwise(0L))
-      val obs = org.apache.spark.sql.Observation()
-      val observable = !LakeTable.onStreamExecutionThread
-      // foreachBatch thread (observation can't complete): persist the tagged
-      // full-outer join once so the metrics recount below is cache-local
-      // instead of a second join pass; unpersisted right after the metrics
-      // are read (before the commit)
-      if (!observable) acted.persist(StorageLevel.MEMORY_AND_DISK): Unit
-      val actedObs = if (!observable) acted else acted.observe(obs,
-        tagCount(updateTags).as("updated"),
-        tagCount(deleteTags).as("deleted"),
-        tagCount(insertTags).as("inserted"),
-        tagCount(Seq("copy")).as("copied"),
-        tagCount(nmbsUpdateTags).as("nmbsUpdated"),
-        tagCount(nmbsDeleteTags).as("nmbsDeleted"))
+      // Per-action metrics ride the rewrite job itself (a CollectMetrics
+      // node ahead of the keep-filter) — no separate metrics aggregation
+      // pass over the join. On a foreachBatch thread the tagged full-outer
+      // join is persisted once so the recount is cache-local instead of a
+      // second join pass; released right after the metrics are read
+      // (before the commit).
+      val counts = WriteCounts.byTag(acted,
+        "updated" -> updateTags, "deleted" -> deleteTags, "inserted" -> insertTags,
+        "copied" -> Seq("copy"), "nmbsUpdated" -> nmbsUpdateTags,
+        "nmbsDeleted" -> nmbsDeleteTags)
 
       // DV mode keeps only the rows that change (updates + inserts); the
       // rewrite mode keeps everything except dropped/deleted rows (copies
@@ -1281,57 +1161,36 @@ class MergeBuilder private[table] (
       val keepPred =
         if (dvOn) col("__action").isin((updateTags ++ insertTags): _*)
         else !col("__action").isin(("drop" +: deleteTags): _*)
-      // materialized-id passthrough (row tracking): updates/copies keep
-      // their id, copies alone keep the commit version, inserts stay null
-      val rtExtraG: Seq[Column] = if (!rtG) Nil else Seq(
-        col(s"target.${RowTracking.MatRowId}").as(RowTracking.MatRowId),
-        when(col("__action") === "copy", col(s"target.${RowTracking.MatRcv}"))
-          .otherwise(lit(null).cast(org.apache.spark.sql.types.LongType))
-          .as(RowTracking.MatRcv))
       val dvChanged =
         if (!dvOn) None
-        else Some(actedObs
+        else Some(counts.rows
           .filter(col("__action").isin((updateTags ++ deleteTags ++ insertTags): _*))
-          .select(schema.fieldNames.toIndexedSeq.map(outCol) ++ Seq(
-            col("target.__file").as("__file"), col("target.__idx").as("__idx"),
-            col("__action")) ++
-            (if (rtG) Seq(col(s"target.${RowTracking.MatRowId}")
-              .as(RowTracking.MatRowId)) else Nil): _*)
+          .select(changedCols(out, rtG): _*)
           .persist(StorageLevel.MEMORY_AND_DISK))
       dvChangedRef = dvChanged
       val rewritten = dvChanged match {
-        case Some(ch) => ch.filter(keepPred)
-          .select(schema.fieldNames.toIndexedSeq.map(c =>
-            col(c).as(c, schema(c).metadata)) ++
-            (if (rtG) Seq(col(RowTracking.MatRowId)) else Nil): _*)
-        case None => actedObs.filter(keepPred)
-          .select(schema.fieldNames.toIndexedSeq.map(outCol) ++ rtExtraG: _*)
+        case Some(ch) => changedRows(ch.filter(keepPred), rtG)
+        case None => counts.rows.filter(keepPred)
+          .select(schema.fieldNames.toIndexedSeq.map(out) ++ rtCarry(rtG): _*)
       }
 
       val sidecars = if (!cdfOn) Nil else {
-        val metaCols = Seq("__rid", "__tgt", "__src", "__action")
         // row tracking: pre/post/delete images carry the TARGET row's
         // resolved id (updates keep ids); insert images are null — a fresh
         // row's id is assigned at commit, after this sidecar is staged
         val tgtId: Seq[Column] = if (!rtG) Nil else Seq(
           col(s"target.${RowTracking.MatRowId}").as(Cdf.RowIdCol))
         val nullId: Seq[Column] = if (!rtG) Nil else Seq(
-          lit(null).cast(org.apache.spark.sql.types.LongType).as(Cdf.RowIdCol))
-        val pre = acted.filter(col("__action").isin(updateTags: _*))
-          .select(schema.fieldNames.toIndexedSeq.map(c => col(s"target.$c").as(c)) ++
-            tgtId: _*)
-          .withColumn("_change_type", lit("update_preimage"))
-        val post = acted.filter(col("__action").isin(updateTags: _*))
-          .select(schema.fieldNames.toIndexedSeq.map(outCol) ++ tgtId: _*)
-          .withColumn("_change_type", lit("update_postimage"))
-        val del = acted.filter(col("__action").isin(deleteTags: _*))
-          .select(schema.fieldNames.toIndexedSeq.map(c => col(s"target.$c").as(c)) ++
-            tgtId: _*)
-          .withColumn("_change_type", lit("delete"))
-        val ins = acted.filter(col("__action").isin(insertTags: _*))
-          .select(schema.fieldNames.toIndexedSeq.map(outCol) ++ nullId: _*)
-          .withColumn("_change_type", lit("insert"))
-        table.writeCdfSidecar(pre.unionByName(post).unionByName(del).unionByName(ins))
+          lit(null).cast(LongType).as(Cdf.RowIdCol))
+        def image(tags: Seq[String], value: String => Column, id: Seq[Column],
+            changeType: String): DataFrame =
+          Dml.cdfImage(acted.filter(col("__action").isin(tags: _*)),
+            schema.fieldNames.toIndexedSeq.map(value) ++ id, changeType)
+        val before: String => Column = c => col(s"target.$c").as(c)
+        table.writeCdfSidecar(image(updateTags, before, tgtId, "update_preimage")
+          .unionByName(image(updateTags, out, tgtId, "update_postimage"))
+          .unionByName(image(deleteTags, before, tgtId, "delete"))
+          .unionByName(image(insertTags, out, nullId, "insert")))
       }
 
       // same REBALANCE shaping as the low-shuffle path: small rewrites pack
@@ -1339,47 +1198,13 @@ class MergeBuilder private[table] (
       val shapedG = if (smallRewrite) rewritten.hint("rebalance") else rewritten
       val adds = table.withSmallWriteSizing(smallRewrite)(
         table.stageWrite(shapedG, snap.metadata.partitionColumns))
-      // the rewrite job has run; observed metrics are available (sum over an
-      // empty plan is null -> 0). On a foreachBatch thread the observation
-      // can never complete — recount per action with one narrow job instead.
-      lazy val observed = obs.get
-      lazy val recount: Map[String, Long] =
-        acted.select(col("__action")).groupBy("__action").count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      def metric(k: String): Long =
-        if (observable) observed.get(k) match {
-          case Some(l: java.lang.Long) => l.longValue()
-          case _ => 0L
-        }
-        else {
-          val tags = k match {
-            case "updated" => updateTags
-            case "deleted" => deleteTags
-            case "inserted" => insertTags
-            case "nmbsUpdated" => nmbsUpdateTags
-            case "nmbsDeleted" => nmbsDeleteTags
-            case _ => Seq("copy")
-          }
-          tags.map(t => recount.getOrElse(t, 0L)).sum
-        }
-      val metrics = Map(
-        "numTargetRowsUpdated" -> metric("updated"),
-        "numTargetRowsDeleted" -> metric("deleted"),
-        "numTargetRowsInserted" -> metric("inserted"),
-        "numTargetRowsCopied" -> (if (dvOn) 0L else metric("copied")),
-        "numSourceRows" -> numSourceRows) ++
+      val metrics = mergeMetrics(counts("updated"), counts("deleted"), counts("inserted"),
+        if (dvOn) 0L else counts("copied")) ++
         (if (nmbsOn) Map(
-          "numTargetRowsNotMatchedBySourceUpdated" -> metric("nmbsUpdated"),
-          "numTargetRowsNotMatchedBySourceDeleted" -> metric("nmbsDeleted"))
+          "numTargetRowsNotMatchedBySourceUpdated" -> counts("nmbsUpdated"),
+          "numTargetRowsNotMatchedBySourceDeleted" -> counts("nmbsDeleted"))
         else Map.empty)
-      // metrics are read above; the stream-thread recount cache is done
-      if (!observable) acted.unpersist(): Unit
-      val params = Map("predicate" -> condition.toString,
-        "matchedClauses" -> matchedClauses.size.toString,
-        "notMatchedClauses" -> notMatchedClauses.size.toString) ++
-        (if (nmbsOn) Map("notMatchedBySourceClauses" ->
-          notMatchedBySourceClauses.size.toString)
-        else Map.empty) ++ txnParams
+      counts.release()
       if (dvOn) {
         // matched (updated or deleted) target rows join their files' vectors
         // — read from the persisted changed set, not the join
