@@ -186,14 +186,14 @@ trait DmlSupport { self: LakeTable =>
     val rt = rowsTracked(snap, touched)
     val matched = dmlRows(snap, touched, snap.schema, rt, positions = true)
       .filter(coalesce(cond, lit(false)))
-    val sidecars = dmlSidecar(snap, matched.drop("__file", "__idx"), rt, Some(set))
+    val hit = matched.drop("__file", "__idx")
+    val sidecars = dmlSidecar(snap, hit, rt, Some(set))
     val rtExtra: Seq[Column] = if (rt) Seq(col(RowTracking.MatRowId)) else Nil
-    val adds = stageWrite(
-      matched.drop("__file", "__idx").select(Dml.setExprs(snap.schema, set) ++ rtExtra: _*),
+    val adds = stageWrite(hit.select(Dml.setExprs(snap.schema, set) ++ rtExtra: _*),
       snap.metadata.partitionColumns)
     maskAndCommit(snap, "UPDATE", Map("predicate" -> cond.toString),
       touched, matched, adds, sidecars,
-      newlyMasked => Map("numUpdatedRows" -> adds.map(_.numRecords).sum))
+      _ => Map("numUpdatedRows" -> adds.map(_.numRecords).sum))
   }
 
   /** `files` as DML reads them under `schema`: deletion-vector masks
@@ -442,13 +442,17 @@ class MergeBuilder private[table] (
     condition: Column) {
 
   private sealed trait Clause { def cond: Option[Column] }
-  private case class MatchedUpdate(cond: Option[Column], set: Map[String, Column]) extends Clause
+  // an update or delete of an existing target row, matched or not
+  private sealed trait UpdateClause extends Clause { def set: Map[String, Column] }
+  private sealed trait DeleteClause extends Clause
+  private case class MatchedUpdate(cond: Option[Column], set: Map[String, Column]) extends UpdateClause
   private case class MatchedUpdateAll(cond: Option[Column]) extends Clause
-  private case class MatchedDelete(cond: Option[Column]) extends Clause
+  private case class MatchedDelete(cond: Option[Column]) extends DeleteClause
   private case class NotMatchedInsert(cond: Option[Column], values: Map[String, Column]) extends Clause
   private case class NotMatchedInsertAll(cond: Option[Column]) extends Clause
-  private case class NotMatchedBySourceUpdate(cond: Option[Column], set: Map[String, Column]) extends Clause
-  private case class NotMatchedBySourceDelete(cond: Option[Column]) extends Clause
+  private case class NotMatchedBySourceUpdate(cond: Option[Column], set: Map[String, Column])
+    extends UpdateClause
+  private case class NotMatchedBySourceDelete(cond: Option[Column]) extends DeleteClause
 
   private var rawMatchedClauses = Vector.empty[Clause]
   private var rawNotMatchedClauses = Vector.empty[Clause]
@@ -660,12 +664,8 @@ class MergeBuilder private[table] (
       case (cl: NotMatchedBySourceUpdate, k) => s"u$k" -> cl
       case (cl, k) => s"x$k" -> cl
     }
-    val updateTags = (matchedTagged ++ nmbsTagged).collect {
-      case (t, _: MatchedUpdate | _: NotMatchedBySourceUpdate) => t
-    }
-    val deleteTags = (matchedTagged ++ nmbsTagged).collect {
-      case (t, _: MatchedDelete | _: NotMatchedBySourceDelete) => t
-    }
+    val updateTags = (matchedTagged ++ nmbsTagged).collect { case (t, _: UpdateClause) => t }
+    val deleteTags = (matchedTagged ++ nmbsTagged).collect { case (t, _: DeleteClause) => t }
     val insertTags = insertTagged.map(_._1)
     val nmbsUpdateTags = nmbsTagged.collect { case (t, _: NotMatchedBySourceUpdate) => t }
     val nmbsDeleteTags = nmbsTagged.collect { case (t, _: NotMatchedBySourceDelete) => t }
@@ -686,9 +686,8 @@ class MergeBuilder private[table] (
       def assigned(m: Map[String, Column]) =
         m.collectFirst { case (k, e) if k.equalsIgnoreCase(c) => e }
       Dml.firstOf(tagged.flatMap {
-        case (t, MatchedUpdate(_, set)) => Some(t -> assigned(set).getOrElse(col(s"target.$c")).cast(dt))
-        case (t, NotMatchedBySourceUpdate(_, set)) =>
-          Some(t -> assigned(set).getOrElse(col(s"target.$c")).cast(dt))
+        case (t, u: UpdateClause) =>
+          Some(t -> assigned(u.set).getOrElse(col(s"target.$c")).cast(dt))
         case (t, NotMatchedInsert(_, values)) =>
           Some(t -> assigned(values).map(_.cast(dt)).getOrElse(insertMissing(c, dt)))
         case _ => None
@@ -716,6 +715,7 @@ class MergeBuilder private[table] (
         col("__action")) ++
         (if (rt) Seq(col(s"target.${RowTracking.MatRowId}")
           .as(RowTracking.MatRowId)) else Nil)
+    // ... and the table rows it writes
     def changedRows(changed: DataFrame, rt: Boolean): DataFrame =
       changed.select(schema.fieldNames.toIndexedSeq.map(c =>
         col(c).as(c, schema(c).metadata)) ++
@@ -1182,15 +1182,14 @@ class MergeBuilder private[table] (
           col(s"target.${RowTracking.MatRowId}").as(Cdf.RowIdCol))
         val nullId: Seq[Column] = if (!rtG) Nil else Seq(
           lit(null).cast(LongType).as(Cdf.RowIdCol))
-        def image(tags: Seq[String], value: String => Column, id: Seq[Column],
-            changeType: String): DataFrame =
-          Dml.cdfImage(acted.filter(col("__action").isin(tags: _*)),
-            schema.fieldNames.toIndexedSeq.map(value) ++ id, changeType)
-        val before: String => Column = c => col(s"target.$c").as(c)
-        table.writeCdfSidecar(image(updateTags, before, tgtId, "update_preimage")
-          .unionByName(image(updateTags, out, tgtId, "update_postimage"))
-          .unionByName(image(deleteTags, before, tgtId, "delete"))
-          .unionByName(image(insertTags, out, nullId, "insert")))
+        def firing(tags: Seq[String]) = acted.filter(col("__action").isin(tags: _*))
+        val before = schema.fieldNames.toIndexedSeq.map(c => col(s"target.$c").as(c))
+        val after = schema.fieldNames.toIndexedSeq.map(out)
+        table.writeCdfSidecar(
+          Dml.cdfImage(firing(updateTags), before ++ tgtId, "update_preimage")
+            .unionByName(Dml.cdfImage(firing(updateTags), after ++ tgtId, "update_postimage"))
+            .unionByName(Dml.cdfImage(firing(deleteTags), before ++ tgtId, "delete"))
+            .unionByName(Dml.cdfImage(firing(insertTags), after ++ nullId, "insert")))
       }
 
       // same REBALANCE shaping as the low-shuffle path: small rewrites pack

@@ -71,4 +71,24 @@ class DvFuzzSpec extends SparkSpec {
     }
     t.read().count() shouldBe 95
   }
+
+  test("stale DV commit conflicts with a concurrent partition-column change") {
+    val df = (0L until 100L).map(i => (i, i % 4)).toDF("id", "v")
+    val t = LakeTable.create(spark, tmpDir("dv-pcol-race").resolve("t").toString,
+      df.schema, properties = Map("graft.enableDeletionVectors" -> "true"))
+    t.append(df.coalesce(1))
+    val snap = t.snapshot()
+    val matched = t.readFilesMaskedPos(snap, snap.files, snap.schema)
+      .filter(col("id") < 10L)
+    // same schema and live files, new partitioning: the masks were planned
+    // under the old layout, as copy-on-write rewrites are
+    t.commitWithRetry("SET PARTITIONING", Map.empty, t.snapshot()) { s =>
+      Seq(s.metadata.copy(partitionColumns = Seq("v")))
+    }
+    an[java.util.ConcurrentModificationException] should be thrownBy {
+      t.maskAndCommit(snap, "DELETE", Map("predicate" -> "race-test"),
+        snap.files, matched, Nil, Nil, n => Map("numDeletedRows" -> n))
+    }
+    t.snapshot().dvs shouldBe empty
+  }
 }
