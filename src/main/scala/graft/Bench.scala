@@ -648,10 +648,10 @@ object Bench {
     ops += "dv_merge_rows_per_sec" -> (strainN / 10).toDouble / dvMergeSec
     ops += "dv_merge_sec" -> dvMergeSec
     // data bytes only (update+insert rows); the row masks are counted in
-    // delete_dv_mb_written below, which walks every live DV dir
+    // delete_dv_mb_written below, which sizes every live vector file
     ops += "dv_merge_mb_written" -> lastAddedMb
     ops += "delete_dv_mb_written" -> {
-      val dvDirs = st.snapshot().dvs.values.map(_.dvPath).toSet
+      val dvDirs = st.snapshot().dvs.values.flatMap(_.storagePath).toSet
       dvDirs.toSeq.map { rel =>
         val p = java.nio.file.Paths.get(st.dir.toString, rel)
         val s = java.nio.file.Files.walk(p)

@@ -56,8 +56,8 @@ object Strain {
         .whenMatchedUpdateAll().whenNotMatchedInsertAll().execute())
     println(f"[strain] dv_merge_rows_per_sec=${n / 10 / dvSec}%.0f")
     val snapDv = t.snapshot()
-    // vectors from one commit share a dvPath dir — walk each dir once
-    val dvBytes = snapDv.dvs.values.map(_.dvPath).toSet.toSeq.map { rel: String =>
+    // vectors from one commit share a `.bin` — size each file once
+    val dvBytes = snapDv.dvs.values.flatMap(_.storagePath).toSet.toSeq.map { rel: String =>
       val p = java.nio.file.Paths.get(dir, rel)
       val s = java.nio.file.Files.walk(p)
       try {
@@ -128,9 +128,9 @@ object Strain {
         Files.createLink(root.resolve(name), srcFile)
         val dv =
           if (withDvs && i % 2 == 0) {
-            val data = graft.migrate.DeltaDv.serializeArray(Seq(0L))
+            val data = graft.log.DeltaDv.serializeArray(Seq(0L))
             Map("deletionVector" -> Map("storageType" -> "i",
-              "pathOrInlineDv" -> graft.migrate.DeltaDv.packInline(data),
+              "pathOrInlineDv" -> graft.log.DeltaDv.packInline(data),
               "sizeInBytes" -> data.length, "cardinality" -> 1))
           } else Map.empty
         sb.append(j(Map("add" -> (Map(

@@ -194,21 +194,21 @@ object MetaOps {
         .select("__idx").collect().map(_.getLong(0)).toSeq
     val p0 = positions("f0.parquet", 11)
     val p1 = positions("f1.parquet", 13)
-    val d0 = graft.migrate.DeltaDv.serializeArray(p0)
+    val d0 = graft.log.DeltaDv.serializeArray(p0)
     val uuid = java.util.UUID.fromString("9f8e7d6c-5b4a-3920-1807-f6e5d4c3b2a1")
-    val offs = graft.migrate.DeltaDv.writeDvFile(
+    val offs = graft.log.DeltaDv.writeDvFile(
       dir.resolve(s"ab/deletion_vector_$uuid.bin"), Seq(d0))
-    val d1 = graft.migrate.DeltaDv.serializeArray(p1)
+    val d1 = graft.log.DeltaDv.serializeArray(p1)
     commit(dir, 0, Seq(protocolDv,
       metaData("0a1b2c3d-0000-1111-2222-333344448888", orders.schema.json),
       add(dir, "f0.parquet", dv = Map(
         "storageType" -> "u",
-        "pathOrInlineDv" -> graft.migrate.DeltaDv.packUuid(uuid, "ab"),
+        "pathOrInlineDv" -> graft.log.DeltaDv.packUuid(uuid, "ab"),
         "offset" -> offs.head, "sizeInBytes" -> d0.length,
         "cardinality" -> p0.size)),
       add(dir, "f1.parquet", dv = Map(
         "storageType" -> "i",
-        "pathOrInlineDv" -> graft.migrate.DeltaDv.packInline(d1),
+        "pathOrInlineDv" -> graft.log.DeltaDv.packInline(d1),
         "sizeInBytes" -> d1.length, "cardinality" -> p1.size))))
     val t = LakeTable.convert(spark, dir.toString)
     t.delete(col("o_orderkey") % 7 === 0)
@@ -876,13 +876,13 @@ object MetaOps {
       .withColumn("__idx", col("_metadata.row_index"))
       .filter(col("o_orderkey") % 11 === 0)
       .select("__idx").collect().map(_.getLong(0)).toSeq
-    val dvData = graft.migrate.DeltaDv.serializeArray(maskPos)
+    val dvData = graft.log.DeltaDv.serializeArray(maskPos)
     commit(src, 1, Seq(
       add(src, "fP.parquet", Map("o_orderstatus" -> "P")),
       remove("fF.parquet"),
       add(src, "fO.parquet", Map("o_orderstatus" -> "O"), dv = Map(
         "storageType" -> "i",
-        "pathOrInlineDv" -> graft.migrate.DeltaDv.packInline(dvData),
+        "pathOrInlineDv" -> graft.log.DeltaDv.packInline(dvData),
         "sizeInBytes" -> dvData.length, "cardinality" -> maskPos.size))))
     graft.migrate.DeltaImport.syncRewrite(spark, src.toString, dest)
     graft.migrate.DeltaImport.syncRewrite(spark, src.toString, dest) // no-op

@@ -95,15 +95,54 @@ case class CommitInfo(
   * Commits without sidecars synthesize CDF rows from add/remove actions. */
 case class CdfFile(path: String, numRecords: Long) extends Action
 
-/** Deletion vector for one data file: `dvPath` (relative) is a parquet file
-  * of (__file, __idx) pairs — the masked physical row indexes, keyed by the
-  * reader-reported file path. The LAST DeletionVector for a `forFile` wins
-  * (vectors are cumulative — a new one carries all masked indexes); an empty
-  * `dvPath` clears the vector. A RemoveFile for `forFile` also drops it.
-  * This is our take on the Delta deletion-vector idea: DELETE marks rows
-  * instead of rewriting files — at 100 TB the difference between a few KB
-  * of masks and rewriting every touched file. */
-case class DeletionVector(forFile: String, dvPath: String, numDeleted: Long) extends Action
+/** Deletion vector for one data file, in Delta's descriptor form:
+  * `storageType` `u` (the vector sits at `offset` in a `.bin` file whose
+  * root-relative path `pathOrInlineDv` packs, see [[DeltaDv.relativeFile]])
+  * or `i` (`pathOrInlineDv` is the z85-packed vector itself);
+  * `sizeInBytes` is the serialized vector's length and `numDeleted` its
+  * cardinality. A reader fetches the vector per data file — no query, and
+  * no absolute path anywhere, so a moved table keeps its masks.
+  *
+  * `dvPath` is the legacy form (null on descriptor vectors): a parquet
+  * directory of per-file bitmaps keyed by absolute reader path, still read
+  * for logs written before the descriptor form, never written.
+  *
+  * The LAST DeletionVector for a `forFile` wins (vectors are cumulative — a
+  * new one carries all masked positions); one with neither a descriptor
+  * nor a `dvPath` clears the vector. A RemoveFile for `forFile` also drops
+  * it. DELETE marks rows instead of rewriting files — at 100 TB the
+  * difference between a few KB of masks and rewriting every touched file. */
+case class DeletionVector(
+    forFile: String,
+    dvPath: String,
+    numDeleted: Long,
+    storageType: String,
+    pathOrInlineDv: String,
+    offset: Int,
+    sizeInBytes: Int) extends Action {
+
+  def legacy: Boolean = storageType == null && dvPath != null && dvPath.nonEmpty
+  def clears: Boolean = storageType == null && !legacy
+
+  def descriptor: Option[DvDescriptor] = Option(storageType).map(st =>
+    DvDescriptor(st, pathOrInlineDv, offset, sizeInBytes, numDeleted))
+
+  /** Where the vector's bytes live, relative to the table root: the `.bin`
+    * of a `u` descriptor, the legacy parquet directory; None inline. */
+  def storagePath: Option[String] =
+    if (legacy) Some(dvPath)
+    else descriptor.filter(_.storageType == "u").map(DeltaDv.relativeFile)
+}
+
+object DeletionVector {
+  def of(forFile: String, d: DvDescriptor): DeletionVector =
+    DeletionVector(forFile, null, d.cardinality, d.storageType, d.pathOrInlineDv,
+      d.offset, d.sizeInBytes)
+
+  /** The action that drops `forFile`'s vector. */
+  def clear(forFile: String): DeletionVector =
+    DeletionVector(forFile, null, 0L, null, null, 0, 0)
+}
 
 /** Forward-compatibility gate (the Delta protocol action): a reader must
   * support `minReaderVersion` to resolve snapshots, a writer must support

@@ -1,4 +1,4 @@
-package graft.migrate
+package graft.log
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
@@ -21,10 +21,12 @@ case class DvDescriptor(
     storageType: String, pathOrInlineDv: String,
     offset: Int, sizeInBytes: Int, cardinality: Long)
 
-/** Codec for Delta Lake deletion-vector sidecars, written to the PUBLIC
-  * protocol spec (reference behavior: notebooks/04_acid_operations.py
+/** Codec for deletion vectors in Delta Lake's on-disk form, written to the
+  * PUBLIC protocol spec (reference behavior: notebooks/04_acid_operations.py
   * enables DVs via table properties; its DELETEs produce exactly these
-  * sidecars):
+  * sidecars). It is the engine's own vector format too — graft's DML writes
+  * `.bin` files in this layout ([[DvStore]]), and Delta import copies a
+  * Delta table's descriptors as they are:
   *
   *  - z85: ZeroMQ's base-85 (5 ASCII chars per 4 bytes, big-endian group
   *    value, the 85-char alphabet below) — how descriptors pack uuids and
@@ -38,11 +40,9 @@ case class DvDescriptor(
   *    bitmap i holds the low 32 bits of the masked positions whose high 32
   *    bits equal i.
   *
-  * Decoded vectors transcode into the engine's own [[Roaring64Bitmap]]
-  * masks ([[graft.log.DvBitmap]]) — the import is a bitmap-to-bitmap
-  * translation, never a row-position explosion. The encode direction
-  * exists for spec-faithful fixtures and round-trip proofs (no Delta
-  * writer ships in this environment). */
+  * Decoded vectors become the engine's [[Roaring64Bitmap]] masks
+  * ([[DvBitmap]]) — a bitmap-to-bitmap translation, never a row-position
+  * explosion. */
 object DeltaDv {
 
   /** Portable RoaringBitmapArray serialization magic (the only format the
@@ -213,31 +213,42 @@ object DeltaDv {
   }
 
   /** Encode masked positions as a portable RoaringBitmapArray (the inverse
-    * of [[toRoaring64]]) — fixture/round-trip tooling. */
+    * of [[toRoaring64]]). */
   def serializeArray(positions: Iterable[Long]): Array[Byte] = {
-    require(positions.forall(_ >= 0), "positions must be non-negative")
-    val byIdx = positions.groupBy(p => (p >>> 32).toInt)
-    val count = if (byIdx.isEmpty) 0 else byIdx.keys.max + 1
+    val bm = new Roaring64Bitmap()
+    positions.foreach { p =>
+      require(p >= 0, "positions must be non-negative")
+      bm.addLong(p)
+    }
+    fromRoaring64(bm)
+  }
+
+  /** The engine's 64-bit mask as a portable RoaringBitmapArray (positions
+    * are row indexes, so never negative). */
+  def fromRoaring64(bm: Roaring64Bitmap): Array[Byte] = {
+    val subs = scala.collection.mutable.ArrayBuffer.empty[RoaringBitmap]
+    val it = bm.getLongIterator
+    while (it.hasNext) {
+      val p = it.next()
+      val hi = (p >>> 32).toInt
+      while (subs.size <= hi) subs += new RoaringBitmap()
+      subs(hi).add(p.toInt)
+    }
     val header = ByteBuffer.allocate(12).order(ByteOrder.LITTLE_ENDIAN)
     header.putInt(PortableMagic)
-    header.putLong(count.toLong)
+    header.putLong(subs.size.toLong)
     val bos = new ByteArrayOutputStream()
     bos.write(header.array())
     val dos = new DataOutputStream(bos)
-    (0 until count).foreach { i =>
-      val rb = new RoaringBitmap()
-      byIdx.getOrElse(i, Nil).foreach(p => rb.add((p & 0xFFFFFFFFL).toInt))
-      rb.runOptimize()
-      rb.serialize(dos)
-    }
+    subs.foreach { rb => rb.runOptimize(); rb.serialize(dos) }
     dos.flush()
     bos.toByteArray
   }
 
-  /** Write a spec-shaped `.bin` vector file holding `datas` back to back
-    * (version byte, then `<size BE><data><crc BE>` per vector); returns
-    * each vector's descriptor offset. Fixture/round-trip tooling. */
-  def writeDvFile(target: Path, datas: Seq[Array[Byte]]): Seq[Int] = {
+  /** A spec-shaped `.bin` file holding `datas` back to back (version byte,
+    * then `<size BE><data><crc BE>` per vector), and each vector's
+    * descriptor offset. */
+  def encodeDvFile(datas: Seq[Array[Byte]]): (Array[Byte], Seq[Int]) = {
     val bos = new ByteArrayOutputStream()
     val dos = new DataOutputStream(bos)
     dos.writeByte(1)
@@ -251,8 +262,14 @@ object DeltaDv {
       off
     }
     dos.flush()
+    (bos.toByteArray, offsets)
+  }
+
+  /** Write [[encodeDvFile]]'s bytes to `target`; returns the offsets. */
+  def writeDvFile(target: Path, datas: Seq[Array[Byte]]): Seq[Int] = {
+    val (bytes, offsets) = encodeDvFile(datas)
     java.nio.file.Files.createDirectories(target.getParent)
-    java.nio.file.Files.write(target, bos.toByteArray)
+    java.nio.file.Files.write(target, bytes)
     offsets
   }
 }

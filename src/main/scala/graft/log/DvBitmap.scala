@@ -17,10 +17,12 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.roaringbitmap.longlong.Roaring64Bitmap
 
-/** Deletion-vector bitmap kernel: per-file masked row positions stored as
-  * serialized 64-bit roaring bitmaps (the same representation Delta's DV
-  * spec uses, reference notebooks/04_acid_operations.py:70-118 exercises the
-  * behavior), built and merged distributively via typed aggregates.
+/** Deletion-vector bitmap kernel: per-file masked row positions as 64-bit
+  * roaring bitmaps (the representation Delta's DV spec uses, reference
+  * notebooks/04_acid_operations.py:70-118 exercises the behavior), built
+  * distributively by a typed aggregate and probed by the masked-read
+  * filter. On disk they take Delta's portable form ([[DeltaDv]]); in
+  * Spark rows and broadcasts, this object's serialization.
   *
   * Why bitmaps instead of one `(file, idx)` parquet row per masked position:
   * a commit's vector write then costs O(bitmap bytes of the touched files)
@@ -74,13 +76,6 @@ object DvBitmap {
   def aggPositions(idx: Column): Column =
     ColumnExpr.toColumn(RoaringPositionsAgg(ColumnExpr.of(idx)).toAggregateExpression())
 
-  /** Union serialized bitmaps (binary column) into one per group. */
-  def aggOr(bitmap: Column): Column =
-    ColumnExpr.toColumn(RoaringOrAgg(ColumnExpr.of(bitmap)).toAggregateExpression())
-
-  def cardinality(bitmap: Column): Column =
-    ColumnExpr.toColumn(BitmapCardinality(ColumnExpr.of(bitmap)))
-
   def toLongArray(bitmap: Column): Column =
     ColumnExpr.toColumn(BitmapToArray(ColumnExpr.of(bitmap)))
 
@@ -131,54 +126,6 @@ case class RoaringPositionsAgg(
   override protected def withNewChildInternal(c: Expression): RoaringPositionsAgg =
     copy(child = c)
   override def prettyName: String = "dv_bitmap_agg"
-}
-
-/** Union already-serialized bitmaps per group (merging a commit's new masks
-  * with the touched files' prior vectors). */
-case class RoaringOrAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Roaring64Bitmap]
-  with UnaryLike[Expression] {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): Roaring64Bitmap = new Roaring64Bitmap()
-
-  override def update(b: Roaring64Bitmap, row: InternalRow): Roaring64Bitmap = {
-    val v = child.eval(row)
-    if (v != null) b.or(DvBitmap.deserialize(v.asInstanceOf[Array[Byte]]))
-    b
-  }
-
-  override def merge(b: Roaring64Bitmap, o: Roaring64Bitmap): Roaring64Bitmap = {
-    b.or(o); b
-  }
-
-  override def eval(b: Roaring64Bitmap): Any = DvBitmap.serialize(b)
-  override def serialize(b: Roaring64Bitmap): Array[Byte] = DvBitmap.serialize(b)
-  override def deserialize(bytes: Array[Byte]): Roaring64Bitmap = DvBitmap.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): RoaringOrAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): RoaringOrAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): RoaringOrAgg =
-    copy(child = c)
-  override def prettyName: String = "dv_bitmap_or_agg"
-}
-
-/** Cardinality of a serialized bitmap (cold path: one row per file). */
-case class BitmapCardinality(child: Expression) extends UnaryExpression
-  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    DvBitmap.deserialize(v.asInstanceOf[Array[Byte]]).getLongCardinality
-  override protected def withNewChildInternal(c: Expression): BitmapCardinality =
-    copy(child = c)
-  override def prettyName: String = "dv_bitmap_cardinality"
 }
 
 /** Serialized bitmap → sorted `array<long>` of positions (the distributed

@@ -544,7 +544,7 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
     def applyDomain(d: DomainMetadata): Unit =
       if (d.removed) domains.remove(d.domain): Unit else domains(d.domain) = d.config
     def applyDv(d: DeletionVector): Unit =
-      if (d.dvPath == null || d.dvPath.isEmpty) dvs.remove(d.forFile): Unit
+      if (d.clears) dvs.remove(d.forFile): Unit
       else dvs(d.forFile) = d
     // Checkpoints are an optimization, never a correctness dependency: an
     // unreadable or corrupt checkpoint (truncated external copy, bit rot)

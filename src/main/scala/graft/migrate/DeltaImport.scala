@@ -10,7 +10,7 @@ import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectM
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
-import graft.log.{AddFile, ColStats, Stats, TxLog}
+import graft.log.{AddFile, ColStats, DvDescriptor, Stats, TxLog}
 import graft.table.LakeTable
 
 /** Zero-copy import of a Delta Lake table (the inverse of the reference's
@@ -34,9 +34,9 @@ import graft.table.LakeTable
   *    would produce rows with missing columns → refuse, pointing at
   *    [[convertRewrite]] (one scan + broadcast tuple join, O(data) once).
   *  - LIVE deletion vectors IMPORT: descriptors parse per the public spec
-  *    ([[DeltaDv]] — z85 packing, CRC-checked `.bin` ranged reads, the
-  *    portable RoaringBitmapArray container) and transcode bitmap-to-bitmap
-  *    into the engine's own masks, decoded DISTRIBUTED on executors.
+  *    ([[graft.log.DeltaDv]] — z85 packing, CRC-checked `.bin` ranged
+  *    reads, the portable RoaringBitmapArray container), which is the
+  *    engine's own vector form, so they are copied as they are.
   *    Absolute-path (`p`) vectors refuse like absolute add paths.
   *  - Column mapping `id`/`name` modes IMPORT: `delta.columnMapping.id`
   *    translates to the `parquet.field.id` resolution graft's own mapped
@@ -245,11 +245,10 @@ object DeltaImport {
     val graftAdds: Seq[AddFile] =
       toAddFiles(spark, root, lastEraAdds, effSchema, effPhys, syncTags) ++
         toAddFiles(spark, root, priorEraAdds, effSchema, effPhys)
-    // the FINAL disposition's live masks transcode into graft vectors
-    // (written before the commit loop, like every dv parquet); a final
+    // the FINAL disposition's live descriptors become graft vectors; a final
     // re-add WITHOUT a descriptor is a Delta-side purge — it must CLEAR
     // any graft vector the path carried
-    val dvActions = importDvActions(spark, root, adds)
+    val dvActions = importDvActions(adds)
     Mirror.NetSync("Delta", syncOps,
       Map("fromVersion" -> from.toString, "toVersion" -> newer.max.toString),
       consumed = Map(SourceVersionKey -> newer.max.toString),
@@ -345,7 +344,7 @@ object DeltaImport {
     val newAdds = toAddFiles(spark, root, newEntries, incoming, physicalOf, diffTags)
     // the FULL current mask state rebuilds (O(current masked positions) —
     // the price of the lost tail, paid once); vanished masks clear
-    val dvActions = importDvActions(spark, root, st.adds.toSeq)
+    val dvActions = importDvActions(st.adds.toSeq)
     Mirror.NetSync("Delta", syncOps,
       Map("fromVersion" -> from.toString,
         "toVersion" -> st.sourceVersion.toString,
@@ -395,9 +394,9 @@ object DeltaImport {
     val schema = translateTypeChanges(mappedSchema)
     val graftAdds: Seq[AddFile] =
       toAddFiles(spark, root, st.adds.toSeq, schema, physicalOf)
-    // live Delta deletion vectors transcode into graft masks (one dv
-    // parquet + one DeletionVector action per masked file)
-    val dvActions = importDvActions(spark, root, st.adds.toSeq)
+    // live Delta deletion vectors: one DeletionVector action per masked
+    // file, its descriptor copied
+    val dvActions = importDvActions(st.adds.toSeq)
     // a mapped import records the id high-water mark so graft-side ADD
     // COLUMN never reuses a retired Delta id (same never-reuse rule)
     val maxIdProp = Mirror.maxIdProp(
@@ -589,15 +588,18 @@ object DeltaImport {
       else {
         // (descriptor storage types were gated with the replayed state)
         val totalMasked = dvAdds.map(_._2.cardinality).sum
-        val dvDf = decodeDvs(spark, root, dvAdds)
+        val absRoot = root.toAbsolutePath.normalize
+        val vectors = dvAdds.map { case (p, d) => absRoot.resolve(p).toString -> d }
         if (totalMasked <= graft.log.DvBitmap.broadcastMaxMasks(spark)) {
-          val bc = spark.sparkContext.broadcast(
-            dvDf.collect().map(r =>
-              r.getString(0) -> r.getAs[Array[Byte]](1)).toMap)
+          val conf = spark.sparkContext.hadoopConfiguration
+          val bc = spark.sparkContext.broadcast(vectors.map { case (p, d) =>
+            p -> graft.log.DvBitmap.serialize(
+              graft.log.DvStore.read(absRoot.toString, d, conf)) }.toMap)
           raw.filter(graft.log.DvBitmap.notMasked(
             col("__file"), col("__idx"), bc, totalMasked))
         } else {
-          val maskRows = dvDf.select(col("__path"),
+          val maskRows = graft.log.DvStore.decode(spark, absRoot.toString, vectors)
+            .select(col("__path"),
             org.apache.spark.sql.functions.explode(
               graft.log.DvBitmap.toLongArray(col("__bitmap"))).as("__midx"))
           raw.join(maskRows,
@@ -631,7 +633,7 @@ object DeltaImport {
     require(Set("none", "id", "name").contains(mappingMode),
       s"$dir uses unknown column mapping mode '$mappingMode' — only " +
         "none/id/name are specified")
-    // live deletion vectors IMPORT (transcoded to graft masks) — but only
+    // live deletion vectors IMPORT (descriptors copied) — but only
     // spec-shaped ones: an absolute-path ('p') vector does not live under
     // the table root, so it refuses like an absolute add path
     st.adds.valuesIterator.flatMap(_.dv).foreach(d =>
@@ -808,61 +810,20 @@ object DeltaImport {
     }
   }
 
-  /** Decode the given live adds' Delta DV descriptors and persist them as
-    * ONE graft dv parquet under the table root; returns the
-    * [[graft.log.DeletionVector]] actions pointing at it. The decode is
-    * DISTRIBUTED: descriptors (tiny — a path, offsets, a cardinality)
-    * parallelize to executors, each does the ranged sidecar read through
-    * the Hadoop FileSystem API (object-store capable) plus the
-    * bitmap-to-bitmap transcode, so import cost is O(DV bytes) spread
-    * across the cluster, never a driver bottleneck or a position
-    * explosion. */
-  private def importDvActions(spark: SparkSession, root: Path,
-      adds: Seq[(String, AddInfo)]): Seq[graft.log.DeletionVector] = {
-    val dvAdds = adds.collect { case (p, i) if i.dv.isDefined => p -> i.dv.get }
-    if (dvAdds.isEmpty) return Nil
-    dvAdds.foreach { case (p, d) =>
+  /** The given live adds' Delta DV descriptors as graft
+    * [[graft.log.DeletionVector]] actions. The convert is in place, so a
+    * `u` descriptor's `.bin` is under the table root and an `i` one carries
+    * its bytes: each descriptor is copied as it is — no vector is read or
+    * written at import, and a later read fetches it exactly as a Delta
+    * reader would. */
+  private def importDvActions(adds: Seq[(String, AddInfo)]): Seq[graft.log.DeletionVector] =
+    adds.collect { case (p, i) if i.dv.isDefined =>
+      val d = i.dv.get
       require(d.storageType == "u" || d.storageType == "i",
         s"deletion vector for $p has storageType '${d.storageType}' — " +
           "only file-relative ('u') and inline ('i') vectors can import")
+      graft.log.DeletionVector.of(p, d)
     }
-    val absRoot = root.toAbsolutePath.normalize
-    val rel = Mirror.dvImportDir()
-    decodeDvs(spark, absRoot, dvAdds)
-      .write.mode("errorifexists").parquet(absRoot.resolve(rel).toString)
-    dvAdds.map { case (p, d) => graft.log.DeletionVector(p, rel, d.cardinality) }
-  }
-
-  /** Distributed descriptor decode: one row per masked file —
-    * (`__path` canonical absolute data-file path, `__bitmap` the
-    * graft-serialized 64-bit roaring mask, `__n` cardinality) — graft's
-    * own dv parquet shape. Every decoded bitmap's cardinality is verified
-    * against its descriptor (a mismatch is corruption, refused loudly). */
-  private[migrate] def decodeDvs(spark: SparkSession, absRoot: Path,
-      dvAdds: Seq[(String, DvDescriptor)]): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val rootStr = absRoot.toString
-    val rows = dvAdds.map { case (p, d) =>
-      (absRoot.resolve(p).toString, d.storageType, d.pathOrInlineDv,
-        d.offset, d.sizeInBytes, d.cardinality)
-    }
-    val bc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
-    val slices = math.max(1, math.min(rows.size, 32))
-    spark.createDataset(rows).repartition(slices).mapPartitions { it =>
-      val conf = bc.value.value
-      it.map { case (file, st, enc, off, size, card) =>
-        val d = DvDescriptor(st, enc, off, size, card)
-        val bm = DeltaDv.toRoaring64(DeltaDv.readData(rootStr, d, conf))
-        require(bm.getLongCardinality == card,
-          s"deletion vector for $file decodes to ${bm.getLongCardinality} " +
-            s"positions but its descriptor says $card — refusing a " +
-            "corrupt mask")
-        (file, graft.log.DvBitmap.serialize(bm), card)
-      }
-    }.toDF("__path", "__bitmap", "__n")
-  }
 
   /** Replay `<root>`'s Delta log (checkpoint base + JSON tail) into the
     * live table state. */

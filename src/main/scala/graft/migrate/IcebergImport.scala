@@ -1073,16 +1073,17 @@ object IcebergImport {
       tags = if (tags.isEmpty) null else tags)
   }
 
-  /** Decode the current position deletes into ONE graft dv parquet under
-    * `root`; returns one [[graft.log.DeletionVector]] per masked `live`
-    * file (root-relative paths). file_path values canonicalize like data
-    * paths (scheme-ful URIs); DANGLING rows drop via a broadcast semi-join
-    * against the live set — never phantom vectors, never fatal. */
+  /** Decode the current position deletes into per-file masks — one
+    * collected bitmap row per masked file — written as ONE `.bin` under
+    * `root` by the engine's vector writer; returns one
+    * [[graft.log.DeletionVector]] per masked `live` file (root-relative
+    * paths). file_path values canonicalize like data paths (scheme-ful
+    * URIs); DANGLING rows drop via a broadcast semi-join against the live
+    * set — never phantom vectors, never fatal. */
   private def buildMasks(spark: SparkSession, root: Path,
       deletePaths: Seq[String],
       live: Seq[String]): Seq[graft.log.DeletionVector] = {
     if (deletePaths.isEmpty) return Nil
-    val rel = Mirror.dvImportDir()
     import org.apache.spark.sql.functions.col
     val liveDf = {
       import spark.implicits._
@@ -1096,13 +1097,10 @@ object IcebergImport {
         Seq("__path"), "left_semi")
       .groupBy("__path")
       .agg(graft.log.DvBitmap.aggPositions(col("pos")).as("__bitmap"))
-    masks.withColumn("__n", graft.log.DvBitmap.cardinality(col("__bitmap")))
-      .write.mode("errorifexists").parquet(root.resolve(rel).toString)
-    val counts = spark.read.parquet(root.resolve(rel).toString)
-      .select("__path", "__n").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    live.flatMap(p => counts.get(root.resolve(p).toString)
-      .map(n => graft.log.DeletionVector(p, rel, n)))
+      .collect().map(r => r.getString(0) ->
+        graft.log.DvBitmap.deserialize(r.getAs[Array[Byte]](1))).toMap
+    graft.log.DvStore.write(root,
+      live.flatMap(p => masks.get(root.resolve(p).toString).map(p -> _)), Map.empty)
   }
 
   // ------------------------------------------------------------ helpers

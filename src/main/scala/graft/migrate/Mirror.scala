@@ -179,14 +179,10 @@ private[graft] object Mirror {
     Protocol.merge(Protocol.merge(base, LakeTable.impliedFeatures(props)),
       if (!hasDvs) base else Protocol(1, 1, null, Seq("deletionVectors")))
 
-  /** A fresh relative directory for one transcoded mask parquet. */
-  def dvImportDir(): String =
-    s"dv/import-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-
   /** The zero-copy import: ONE graft commit at version 0 materializing the
     * source's live snapshot under `root`, sharing every data file in
     * place. Masks were written before it — a lost CAS leaves an orphan
-    * parquet, never a bad commit — and a lost race with a concurrent
+    * vector file, never a bad commit — and a lost race with a concurrent
     * import returns theirs. */
   def convertCommit(spark: SparkSession, dir: String, root: Path,
       tableId: String, schema: StructType, partitionColumns: Seq[String],
@@ -241,7 +237,7 @@ private[graft] object Mirror {
           requireNoConstraintsForAdds(s.metadata.properties, adds.size.toLong, kind)
           val live = s.files.map(_.path).toSet
           val clears = s.dvs.keys.filterNot(maskedNow).filter(clearable)
-            .map(p => DeletionVector(p, "", 0L)).toSeq
+            .map(DeletionVector.clear).toSeq
           val (mergedJson, retireProp) =
             if (!evolved) (s.metadata.schemaJson, Map.empty[String, String])
             else {

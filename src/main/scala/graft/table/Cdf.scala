@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 import graft.log._
 
@@ -277,44 +278,30 @@ trait CdfSupport { self: LakeTable =>
       if (v == 0) Nil
       else snapAtV.files.filter { f =>
         !addPaths.contains(f.path) &&
-          snapBefore.dvs.get(f.path).map(_.dvPath) !=
-            snapAtV.dvs.get(f.path).map(_.dvPath)
+          snapBefore.dvs.get(f.path) != snapAtV.dvs.get(f.path)
       }
-    // pointer churn is NOT content churn: mirror syncs rewrite the mask
-    // parquet every sync even when membership is unchanged — compare the
-    // bitmap BYTES (two small dv-parquet reads) and only data-scan files
-    // whose mask content actually moved. Unequal bytes for equal content
-    // merely falls through to the (empty) membership diff — still correct.
-    def bitmapBytes(dvs: Seq[DeletionVector]): Map[String, Array[Byte]] =
-      if (dvs.isEmpty) Map.empty
-      else dvBitmapDf(dvs).collect()
-        .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
-    val dvChanged =
-      if (dvPointerChanged.isEmpty) Nil
-      else {
-        val before = bitmapBytes(
-          dvPointerChanged.flatMap(f => snapBefore.dvs.get(f.path)))
-        val after = bitmapBytes(
-          dvPointerChanged.flatMap(f => snapAtV.dvs.get(f.path)))
-        dvPointerChanged.filter { f =>
-          val fp = absPathStr(f.path)
-          !java.util.Arrays.equals(
-            before.getOrElse(fp, Array.empty[Byte]),
-            after.getOrElse(fp, Array.empty[Byte]))
-        }
-      }
+    // pointer churn is NOT content churn: mirror syncs rewrite a file's
+    // vector every sync even when membership is unchanged — compare the
+    // masks (read on the driver, no query) and only data-scan files whose
+    // mask content actually moved (unequal bytes for equal content merely
+    // falls through to the empty membership diff — still correct)
+    val before = dvBitmaps(dvPointerChanged.flatMap(f => snapBefore.dvs.get(f.path)))
+    val after = dvBitmaps(dvPointerChanged.flatMap(f => snapAtV.dvs.get(f.path)))
+    val dvChanged = dvPointerChanged.filter { f =>
+      val fp = absPathStr(f.path)
+      !java.util.Arrays.equals(
+        before.get(fp).map(DvBitmap.serialize).getOrElse(Array.empty[Byte]),
+        after.get(fp).map(DvBitmap.serialize).getOrElse(Array.empty[Byte]))
+    }
     val dvDelta =
       if (dvChanged.isEmpty) None
       else {
-        def maskedBy(dvs: Seq[DeletionVector]): org.apache.spark.sql.Column =
-          if (dvs.isEmpty) lit(false)
-          else {
-            val bc = spark.sparkContext.broadcast(
-              dvBitmapDf(dvs).collect()
-                .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap)
-            !DvBitmap.notMasked(col("__file"), col("__idx"), bc,
-              dvs.map(_.numDeleted).sum)
-          }
+        def maskedBy(masks: Map[String, Roaring64Bitmap]): org.apache.spark.sql.Column =
+          if (masks.isEmpty) lit(false)
+          else !DvBitmap.notMasked(col("__file"), col("__idx"),
+            spark.sparkContext.broadcast(masks.map { case (p, bm) =>
+              p -> DvBitmap.serialize(bm) }),
+            masks.values.map(_.getLongCardinality).sum)
         val resolveIds = cdfRowIds && dvChanged.forall(_.baseRowId != null)
         val readSchema =
           if (resolveIds)
@@ -333,8 +320,9 @@ trait CdfSupport { self: LakeTable =>
             .withColumnRenamed(RowTracking.MatRowId, Cdf.RowIdCol)
           else pos0
         val extra = if (resolveIds) Seq(Cdf.RowIdCol) else Nil
-        val mBefore = maskedBy(dvChanged.flatMap(f => snapBefore.dvs.get(f.path)))
-        val mAfter = maskedBy(dvChanged.flatMap(f => snapAtV.dvs.get(f.path)))
+        val changedPaths = dvChanged.map(f => absPathStr(f.path)).toSet
+        val mBefore = maskedBy(before.filter(e => changedPaths.contains(e._1)))
+        val mAfter = maskedBy(after.filter(e => changedPaths.contains(e._1)))
         val masked = pos.filter(mAfter && !mBefore).drop("__file", "__idx")
         val resurrected = pos.filter(mBefore && !mAfter).drop("__file", "__idx")
         Some(remapToEnd(masked, snapAtV.schema, schema, v, extra = extra)

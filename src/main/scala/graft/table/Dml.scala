@@ -2,8 +2,10 @@ package graft.table
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.graft.ColumnExpr
 import org.apache.spark.storage.StorageLevel
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 import graft.log._
 
@@ -39,7 +41,7 @@ trait DmlSupport { self: LakeTable =>
     // check; explicit SETs stay caller-owned and validated as before).
     val set = recomputeGenerated(rawSet)
     if (dvEnabled) return updateWithDv(snap, cond, set)
-    val touched = filesContaining(snap, cond)
+    val touched = filesContaining(snap, cond, masking = false)
     if (touched.isEmpty) return snap.version
     val touchedDf = readFilesMasked(snap, touched, snap.schema)
     val matchPred = coalesce(cond, lit(false))
@@ -133,7 +135,7 @@ trait DmlSupport { self: LakeTable =>
   def delete(cond: Column): Long = {
     val snap = snapshot()
     if (dvEnabled) return deleteWithDv(snap, cond)
-    val touched = filesContaining(snap, cond)
+    val touched = filesContaining(snap, cond, masking = false)
     if (touched.isEmpty) return snap.version
     val touchedDf = readFilesMasked(snap, touched, snap.schema)
     val matchPred = coalesce(cond, lit(false))
@@ -161,39 +163,49 @@ trait DmlSupport { self: LakeTable =>
     * with the touched files' existing vectors) plus per-file
     * DeletionVector actions. */
   private def deleteWithDv(snap: Snapshot, cond: Column): Long = {
-    val touched = filesContaining(snap, cond)
+    val touched = filesContaining(snap, cond, masking = true)
     if (touched.isEmpty) return snap.version
     // row tracking: resolve ids alongside the positions so the CDF
     // sidecar records which rows the mask deleted
     val rt = rowsTracked(snap, touched)
+    // with the change feed on, the sidecar write materializes the matched
+    // rows once and the mask collect reads them back
     val matched = dmlRows(snap, touched, snap.schema, rt, positions = true)
       .filter(coalesce(cond, lit(false)))
-    val sidecars = dmlSidecar(snap, matched, rt, None)
-    maskAndCommit(snap, "DELETE", Map("predicate" -> cond.toString),
-      touched, matched, Nil, sidecars,
-      newlyMasked => Map("numDeletedRows" -> newlyMasked))
+    val rows = if (cdfEnabled) matched.persist(StorageLevel.MEMORY_AND_DISK) else matched
+    try {
+      val sidecars = dmlSidecar(snap, rows, rt, None)
+      maskAndCommit(snap, "DELETE", Map("predicate" -> cond.toString),
+        touched, rows, Nil, sidecars,
+        newlyMasked => Map("numDeletedRows" -> newlyMasked))
+    } finally if (cdfEnabled) rows.unpersist(): Unit
   }
 
   /** Deletion-vector UPDATE: matched rows are masked and only their updated
     * versions are appended as new files. */
   private def updateWithDv(snap: Snapshot, cond: Column, set: Map[String, Column]): Long = {
-    val touched = filesContaining(snap, cond)
+    val touched = filesContaining(snap, cond, masking = true)
     if (touched.isEmpty) return snap.version
     // row tracking: the masked originals' resolved ids ride into the
     // appended post-image file as a materialized column, so an updated row
     // KEEPS its id across the mask+append; the commit version is left to
     // the new file's default (= this commit), which is the bump Delta makes
     val rt = rowsTracked(snap, touched)
+    // the matched rows are read once: the first write materializes them,
+    // the other write and the mask collect read them back
     val matched = dmlRows(snap, touched, snap.schema, rt, positions = true)
       .filter(coalesce(cond, lit(false)))
-    val hit = matched.drop("__file", "__idx")
-    val sidecars = dmlSidecar(snap, hit, rt, Some(set))
-    val rtExtra: Seq[Column] = if (rt) Seq(col(RowTracking.MatRowId)) else Nil
-    val adds = stageWrite(hit.select(Dml.setExprs(snap.schema, set) ++ rtExtra: _*),
-      snap.metadata.partitionColumns)
-    maskAndCommit(snap, "UPDATE", Map("predicate" -> cond.toString),
-      touched, matched, adds, sidecars,
-      _ => Map("numUpdatedRows" -> adds.map(_.numRecords).sum))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val hit = matched.drop("__file", "__idx")
+      val sidecars = dmlSidecar(snap, hit, rt, Some(set))
+      val rtExtra: Seq[Column] = if (rt) Seq(col(RowTracking.MatRowId)) else Nil
+      val adds = stageWrite(hit.select(Dml.setExprs(snap.schema, set) ++ rtExtra: _*),
+        snap.metadata.partitionColumns)
+      maskAndCommit(snap, "UPDATE", Map("predicate" -> cond.toString),
+        touched, matched, adds, sidecars,
+        _ => Map("numUpdatedRows" -> adds.map(_.numRecords).sum))
+    } finally matched.unpersist(): Unit
   }
 
   /** `files` as DML reads them under `schema`: deletion-vector masks
@@ -228,51 +240,53 @@ trait DmlSupport { self: LakeTable =>
     }
 
   /** Shared deletion-vector commit: aggregate this change's masked positions
-    * into per-file roaring bitmaps, OR in the touched files' current
-    * vectors, write one bitmap row per file, derive per-file actions, and
-    * commit with the DV conflict checks. `matched` must carry __file/__idx.
+    * (`matched` must carry __file/__idx) into per-file roaring bitmaps —
+    * one collected row per file — and commit them through [[commitMasks]].
     *
-    * Cost is O(new masks) + O(touched files' bitmap bytes) — independent of
-    * how many masks have accumulated table-wide, unlike a row-per-position
-    * union rewrite. The groupBy runs under ObjectHashAggregate with partial
-    * aggregation, so only per-(file × map task) partial bitmaps shuffle. */
+    * The groupBy runs under ObjectHashAggregate with partial aggregation,
+    * so only per-(file × map task) partial bitmaps shuffle, and the cost is
+    * O(new masks) + O(touched files' bitmap bytes) — independent of how
+    * many masks have accumulated table-wide. */
   private[table] def maskAndCommit(
       snap: Snapshot, op: String, params: Map[String, String],
       touched: Seq[AddFile], matched: DataFrame, adds: Seq[AddFile],
+      sidecars: Seq[Action], metrics: Long => Map[String, Long]): Long =
+    commitMasks(snap, op, params, touched,
+      maskRows(matched.groupBy("__file")
+        .agg(DvBitmap.aggPositions(col("__idx")).as("__bitmap")).collect()),
+      adds, sidecars, metrics)
+
+  /** Collected (`__file` reader path, `__bitmap`) rows → mask per reader
+    * path, canonical (one strip per file, after the aggregate). */
+  private[table] def maskRows(rows: Array[Row]): Map[String, Roaring64Bitmap] =
+    rows.map(r => Stats.stripScheme(r.getString(0)) ->
+      DvBitmap.deserialize(r.getAs[Array[Byte]](1))).toMap
+
+  /** Commit per-file masks (`masks`: canonical absolute path → positions
+    * this change masks) on `touched`: the masked files' current vectors
+    * are read on the driver and ORed in by [[DvStore.write]], which writes
+    * ONE `.bin` for the commit; the commit runs the DV conflict checks.
+    * `metrics` receives the count of newly masked rows. */
+  private[table] def commitMasks(
+      snap: Snapshot, op: String, params: Map[String, String],
+      touched: Seq[AddFile], masks: Map[String, Roaring64Bitmap], adds: Seq[AddFile],
       sidecars: Seq[Action], metrics: Long => Map[String, Long]): Long = {
-    // group on the raw reader path; strip to the canonical path AFTER the
-    // aggregate (one strip per file, not per row)
-    val newBm = matched.select(col("__file"), col("__idx"))
-      .groupBy("__file").agg(DvBitmap.aggPositions(col("__idx")).as("__bitmap"))
-      .select(DvBitmap.stripPathCol(col("__file")).as("__path"), col("__bitmap"))
-    val oldDvs = touched.flatMap(f => snap.dvs.get(f.path))
-    val merged =
-      if (oldDvs.isEmpty) newBm
-      else newBm.unionByName(dvBitmapDf(oldDvs))
-        .groupBy("__path").agg(DvBitmap.aggOr(col("__bitmap")).as("__bitmap"))
-    val commitId = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val dvRel = s"dv/$commitId"
-    merged.withColumn("__n", DvBitmap.cardinality(col("__bitmap")))
-      .write.mode("errorifexists").parquet(dir.resolve(dvRel).toString)
-    // per-file mask sizes from the written vector (tiny read: 1 row/file)
-    val counts = spark.read.parquet(dir.resolve(dvRel).toString)
-      .select("__path", "__n")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val newActions = touched.flatMap { f =>
-      counts.get(absPath(f)).map(n => DeletionVector(f.path, dvRel, n))
-    }
+    val hit = touched.flatMap(f => masks.get(absPath(f)).map(f.path -> _))
     // nothing masked AND nothing appended -> the table state is unchanged
-    if (newActions.isEmpty && adds.isEmpty) return snap.version
-    val prevMasked = newActions.flatMap(a => snap.dvs.get(a.forFile)).map(_.numDeleted).sum
-    val newlyMasked = newActions.map(_.numDeleted).sum - prevMasked
+    if (hit.isEmpty && adds.isEmpty) return snap.version
+    val oldDvs = hit.flatMap { case (p, _) => snap.dvs.get(p) }
+    val current = dvBitmaps(oldDvs)
+    val newActions = DvStore.write(dir, hit,
+      oldDvs.flatMap(d => current.get(absPathStr(d.forFile)).map(d.forFile -> _)).toMap)
+    val newlyMasked = newActions.map(_.numDeleted).sum - oldDvs.map(_.numDeleted).sum
     val newKeys = newActions.map(_.forFile).toSet
     val committed = commitWithRetry(op, params + ("deletionVectors" -> "true"), snap,
       metrics(newlyMasked)) { s =>
       // the new vectors were computed on top of snap's vectors
       checkCommit(op, params, snap, s, newKeys)
       val now = clockMillis()
-      val future = ((s.dvs -- newKeys).values.map(_.dvPath) ++ Seq(dvRel)).toSet
-      newActions ++ adds ++ sidecars ++ dvTombstones(s, newKeys, future, now)
+      newActions ++ adds ++ sidecars ++
+        dvTombstones(s, newKeys, (s.dvs -- newKeys).values ++ newActions, now)
     }
     maybeAutoPurge()
     committed
@@ -292,13 +306,18 @@ trait DmlSupport { self: LakeTable =>
   def merge(source: DataFrame, condition: Column): MergeBuilder =
     new MergeBuilder(this, source, condition)
 
-  /** Files whose rows might — then verifiably do — match `cond`. At <=2
-    * candidates the verification probe costs more than rewriting a file the
-    * probe might have excluded, so stats-pruned candidates are taken as-is. */
-  private[table] def filesContaining(snap: Snapshot, cond: Column): Seq[AddFile] = {
+  /** Files whose rows might — then verifiably do — match `cond`. The
+    * verification probe is skipped where it costs more than it saves: at
+    * <=2 candidates (rewriting a file the probe might have excluded is
+    * cheaper), and for a `masking` (deletion-vector) write whose candidates
+    * fit [[Dml.SmallRewriteBytes]] — its job reads an unprobed candidate
+    * once and rewrites nothing. */
+  private[table] def filesContaining(snap: Snapshot, cond: Column,
+      masking: Boolean): Seq[AddFile] = {
     val candidates = Pruner.prune(partitionPrune(snap, snap.files, Seq(cond)),
       Seq(cond), snap.schema, bloomIndex)
-    if (candidates.size <= 2) return candidates
+    if (candidates.size <= 2 ||
+        (masking && candidates.map(_.size).sum <= Dml.SmallRewriteBytes)) return candidates
     val withFile = readFilesWithFile(snap, candidates, snap.schema)
     val hit = withFile.filter(coalesce(cond, lit(false)))
       .select("__file").distinct().collect().map(r => Stats.stripScheme(r.getString(0))).toSet
@@ -320,7 +339,7 @@ trait DmlSupport { self: LakeTable =>
       checkCommit(op, params, snap, s, touchedPaths)
       val now = clockMillis()
       touched.map(f => RemoveFile(f.path, now)) ++ adds ++ extra ++
-        dvTombstones(s, touchedPaths, (s.dvs -- touchedPaths).values.map(_.dvPath).toSet, now)
+        dvTombstones(s, touchedPaths, (s.dvs -- touchedPaths).values, now)
     }
   }
 
@@ -357,6 +376,12 @@ trait DmlSupport { self: LakeTable =>
 
 /** Column builders every DML path shares. */
 private[table] object Dml {
+
+  /** The small-rewrite budget: half a 128 MB target file. A MERGE rewrite
+    * that fits it (touched bytes plus the source's size estimate) packs
+    * into ~one file; deletion-vector DML whose candidates fit it skips the
+    * verification probe. */
+  val SmallRewriteBytes: Long = 64L * 1024 * 1024
 
   /** `when(p1, v1).when(p2, v2)...otherwise(otherwise)` over `arms` in
     * order (first true predicate wins); `otherwise` alone when empty. */
@@ -564,9 +589,10 @@ class MergeBuilder private[table] (
     lastMark = now
   }
 
-  /** The small-rewrite gate's budget: touched bytes plus the materialized
-    * source's size estimate must fit half a 128 MB target file. */
-  private val SmallRewriteBytes = 64L * 1024 * 1024
+  /** Sources up to this many rows hand the deletion-vector path's insert
+    * side their matched keys as an IN set, collected by the path's first
+    * action — no distinct, no broadcast job. */
+  private val InlineKeysMax = 10000L
 
   /** Run the two-phase merge. Returns the committed version. */
   def execute(): Long =
@@ -742,6 +768,10 @@ class MergeBuilder private[table] (
     // against its broadcast (one extra narrow scan) instead of shuffling the
     // touched files' keys.
     var matchedKeys: Option[DataFrame] = None
+    // ... or, from the deletion-vector path's first action on a small
+    // source, the matched keys themselves: the insert side is then a plain
+    // NOT IN filter over the source, no join
+    var matchedKeyValues: Option[Seq[Any]] = None
     try {
 
     // Phase 0: ONE fused pass over the (persisted) source computes the row
@@ -847,13 +877,20 @@ class MergeBuilder private[table] (
     // When it equals numSourceRows, NO source row is an insert and the
     // phase-2 anti-join (a full scan of the touched files' keys) is skipped.
     var matchedSourceRows: Option[Long] = None
-    // (The probe always runs past the 2-candidate floor: a "dense merge"
-    // heuristic that skips it was tried and dropped — when a large
-    // distinct-key source mostly MISSES the table (an id-list delete), the
-    // skipped probe turns into a full rewrite of every candidate file as
-    // unchanged copies, an asymmetric loss for a narrow-scan saving.)
+    // (Past the 2-candidate floor a copy-on-write merge always probes: a
+    // "dense merge" heuristic that skips it was tried and dropped — when a
+    // large distinct-key source mostly MISSES the table (an id-list
+    // delete), the skipped probe turns into a full rewrite of every
+    // candidate file as unchanged copies, an asymmetric loss for a
+    // narrow-scan saving.)
+    // the deletion-vector fast path (below): its own first action yields
+    // the matched source keys, so its probe collects only the file set
+    val dvFast = srcKeysDistinct && pureEqui && dvOn && !nmbsOn && matchedClauses.nonEmpty
     val matchTouched: Seq[AddFile] =
-      if (candidates.size <= 2) candidates
+      // like a masking UPDATE/DELETE, the deletion-vector path reads an
+      // unprobed candidate only in its own join and rewrites nothing
+      if (candidates.size <= 2 ||
+          (dvFast && candidates.map(_.size).sum <= Dml.SmallRewriteBytes)) candidates
       else {
         val touchedPaths: Set[String] =
           if (srcKeysDistinct) {
@@ -866,7 +903,7 @@ class MergeBuilder private[table] (
             val probeT = table.readFilesWithFile(snap, candidates, keySchema)
               .alias("target")
             val joinedProbe = probeT.join(src.alias("source"), condition, "inner")
-            if (rawNotMatchedClauses.isEmpty) {
+            if (rawNotMatchedClauses.isEmpty || dvFast) {
               val row = joinedProbe
                 .agg(collect_set(col("__file")).as("files")).collect().head
               row.getAs[Seq[String]]("files").map(Stats.stripScheme).toSet
@@ -919,7 +956,7 @@ class MergeBuilder private[table] (
         .toOption.filter(_ >= 0)
         .map(b => if (b > BigInt(Long.MaxValue)) Long.MaxValue else b.toLong)
         .getOrElse(Long.MaxValue)
-      val small = touchedBytes <= SmallRewriteBytes - srcBytes
+      val small = touchedBytes <= Dml.SmallRewriteBytes - srcBytes
       if (timingOn) System.err.println(
         s"[merge-timing] gate touchedBytes=$touchedBytes srcBytes=$srcBytes small=$small")
       small
@@ -935,14 +972,23 @@ class MergeBuilder private[table] (
     // they must never be driver-broadcast (auto-broadcast picked them
     // whenever the narrow key scan's estimate fell under the threshold — a
     // 10M-key HashedRelation built on the driver per merge).
-    def fastInsertSide(): (DataFrame, () => Long) = {
+    def insertSide(): DataFrame = {
       val anti = matchedKeys match {
+        case _ if matchedKeyValues.isDefined =>
+          // a null source key is in no set and is kept, i.e. inserted —
+          // identical to the anti-joins below
+          val dt = src.alias("source").select(srcKey).schema.head.dataType
+          val in = org.apache.spark.sql.catalyst.expressions.In(ColumnExpr.of(srcKey),
+            matchedKeyValues.get.map(v =>
+              org.apache.spark.sql.catalyst.expressions.Literal.create(v, dt)))
+          src.alias("source").filter(!coalesce(ColumnExpr.toColumn(in), lit(false)))
+            .alias("source")
         case Some(mk) =>
-          // The probe already materialized the distinct matched source keys
-          // (small, known count): anti-join against their broadcast — the
-          // touched files' keys are never scanned a second time. A null
-          // source key compares null and is kept, i.e. inserted — identical
-          // to the equi anti-join below.
+          // The distinct matched source keys are known small (from the
+          // probe, or read from the DV path's persisted join): anti-join
+          // against their broadcast — the touched files' keys are never
+          // scanned a second time. A null source key compares null and is
+          // kept, i.e. inserted — identical to the equi anti-join below.
           src.alias("source").join(broadcast(mk), srcKey === col("__k"), "left_anti")
             .alias("source")
         case None =>
@@ -952,11 +998,13 @@ class MergeBuilder private[table] (
           src.alias("source").join(tgtKeys, condition, "left_anti")
             .alias("source")
       }
+      anti.withColumn("__action", actionCol(lit("drop"))(None -> insertTagged))
+    }
+    def fastInsertSide(): (DataFrame, () => Long) = {
       // foreachBatch thread: the tagged anti-join is persisted once — the
       // write materializes it, the recount reads the cache instead of
       // re-scanning the touched keys + re-joining
-      val counts = new WriteCounts(
-        anti.withColumn("__action", actionCol(lit("drop"))(None -> insertTagged)),
+      val counts = new WriteCounts(insertSide(),
         cache = true, Seq("inserted" -> sum(when(col("__action") =!= "drop", 1L).otherwise(0L))))(
         tagged => Map("inserted" -> tagged.filter(col("__action") =!= "drop").count()))
       // Invoked exactly once per merge — both call sites read it into the
@@ -1047,39 +1095,74 @@ class MergeBuilder private[table] (
 
     // Deletion-vector fast path: same preconditions, but matched rows are
     // MASKED, not rewritten — so the left-outer join above degrades to an
-    // INNER join (copies are simply left alone; only firing rows matter)
-    // and nothing full-width is ever shuffled OR copied. The small changed
-    // set (updates + deletes) is persisted once and feeds the data write,
-    // the mask rows, and the metrics; inserts reuse the key-only anti-join.
-    // vs the general DV path (full-outer + changed-set scan): 9.1s -> 7.9s
-    // at the 10M-row strain shape — the residual cost there is the DV
-    // union-vector rewrite, which grows with accumulated masks, not the
-    // join. At cluster scale the full-outer's full-width shuffle is the
-    // part that would dominate; this path never pays it.
-    if (srcKeysDistinct && pureEqui && !cdfOn && dvOn && !nmbsOn && matchedClauses.nonEmpty) {
+    // INNER join (copies are simply left alone) and nothing full-width is
+    // ever shuffled OR copied. The matched pairs are persisted once, and
+    // the first action over them — one row per touched file — yields the
+    // per-file mask bitmaps and the clause counts together. The data write
+    // (updated rows + inserts) and the change feed then read the cache: the
+    // insert side anti-joins against the broadcast of its matched source
+    // keys (every matched key, also of rows no clause fires on — a matched
+    // row never becomes an insert), and the feed's pre, post and delete
+    // images are the cached rows. The masks commit through
+    // [[DmlSupport.commitMasks]].
+    if (dvFast) {
       // row tracking: an updated row's resolved id rides into the appended
       // post-image file (the mask+append analogue of the DV UPDATE path);
       // the commit version is left to the new file's default (= this commit)
       val rt = table.rowsTracked(snap, touched)
       val tgtF = table.dmlRows(snap, touched, schema, rt, positions = true).alias("target")
-      val changed = tgtF.join(src.alias("source"), condition, "inner")
+      val pairs = tgtF.join(src.alias("source"), condition, "inner")
         .withColumn("__action", actionCol(lit("copy"))(Some(lit(true)) -> matchedTagged))
-        .filter(col("__action") =!= "copy")
-        .select(changedCols(outCol(matchedTagged, targetOf), rt): _*)
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        val counts = WriteCounts.countTags(changed,
-          Seq("updated" -> updateTags, "deleted" -> deleteTags))
+        def tagCount(tags: Seq[String]) =
+          sum(when(col("__action").isin(tags: _*), 1L).otherwise(0L))
+        val inlineKeys = numSourceRows <= InlineKeysMax
+        val perFile = pairs.groupBy(col("target.__file"))
+          .agg(DvBitmap.aggPositions(when(col("__action").isin(updateTags ++ deleteTags: _*),
+            col("target.__idx"))).as("__bitmap"),
+            Seq(tagCount(updateTags).as("__u"), tagCount(deleteTags).as("__d"),
+              count(lit(1)).as("__m")) ++
+              (if (inlineKeys) Seq(collect_set(srcKey).as("__keys")) else Nil): _*)
+          .collect()
+        val masks = table.maskRows(perFile).filter(_._2.getLongCardinality > 0)
+        val updated = perFile.map(_.getLong(2)).sum
+        val deleted = perFile.map(_.getLong(3)).sum
+        if (inlineKeys) {
+          val keys = perFile.flatMap(_.getSeq[Any](5)).distinct.toSeq
+          matchedKeyValues = Some(keys)
+          matchedSourceRows = Some(keys.size.toLong)
+        }
+        // same sizing rule as the DV mask broadcast: a known row count
+        // under 4M builds a safe executor-side map
+        else if (perFile.map(_.getLong(4)).sum <= 4000000L)
+          matchedKeys = Some(pairs.select(srcKey.as("__k")).distinct())
+        val firing = (tags: Seq[String]) => pairs.filter(col("__action").isin(tags: _*))
+        val out = outCol(matchedTagged, targetOf) _
         val (toWrite, numInserted) = withInserts(
-          changedRows(changed.filter(col("__action").isin(updateTags: _*)), rt))
+          changedRows(firing(updateTags).select(changedCols(out, rt): _*), rt))
         val adds = table.stageWrite(toWrite, snap.metadata.partitionColumns)
         mark("phase2 dv low-shuffle write")
-        val maskedRows = changed.select(col("__file"), col("__idx"))
-        val v = table.maskAndCommit(snap, "MERGE", params, touched, maskedRows, adds, evolution,
-          _ => mergeMetrics(counts("updated"), counts("deleted"), numInserted(), 0L))
+        val sidecars = if (!cdfOn) Nil else {
+          val tgtId: Seq[Column] = if (!rt) Nil else Seq(
+            col(s"target.${RowTracking.MatRowId}").as(Cdf.RowIdCol))
+          val before = schema.fieldNames.toIndexedSeq.map(c => col(s"target.$c").as(c))
+          val after = schema.fieldNames.toIndexedSeq.map(out)
+          val images = Dml.cdfImage(firing(updateTags), before ++ tgtId, "update_preimage")
+            .unionByName(Dml.cdfImage(firing(updateTags), after ++ tgtId, "update_postimage"))
+            .unionByName(Dml.cdfImage(firing(deleteTags), before ++ tgtId, "delete"))
+          table.writeCdfSidecar(
+            if (notMatchedClauses.isEmpty || matchedSourceRows.contains(numSourceRows)) images
+            else images.unionByName(Dml.cdfImage(insertRows(insertSide()),
+              schema.fieldNames.toIndexedSeq.map(col) ++
+                (if (rt) Seq(lit(null).cast(LongType).as(Cdf.RowIdCol)) else Nil),
+              "insert")))
+        }
+        val v = table.commitMasks(snap, "MERGE", params, touched, masks, adds,
+          evolution ++ sidecars, _ => mergeMetrics(updated, deleted, numInserted(), 0L))
         mark("commit")
         return v
-      } finally changed.unpersist(): Unit
+      } finally pairs.unpersist(): Unit
     }
 
     // Phase 2: full-outer join of source vs touched rows; untouched files
@@ -1109,6 +1192,7 @@ class MergeBuilder private[table] (
     val joined =
       if (cdfOn) joinedRaw.persist(StorageLevel.MEMORY_AND_DISK) else joinedRaw
     var dvChangedRef: Option[DataFrame] = None
+    var countsRef: Option[WriteCounts] = None
     try {
       val matched = col("target.__tgt").isNotNull && col("source.__src").isNotNull
       val srcOnly = col("target.__tgt").isNull
@@ -1149,6 +1233,7 @@ class MergeBuilder private[table] (
         "updated" -> updateTags, "deleted" -> deleteTags, "inserted" -> insertTags,
         "copied" -> Seq("copy"), "nmbsUpdated" -> nmbsUpdateTags,
         "nmbsDeleted" -> nmbsDeleteTags)
+      countsRef = Some(counts)
 
       // DV mode keeps only the rows that change (updates + inserts); the
       // rewrite mode keeps everything except dropped/deleted rows (copies
@@ -1203,7 +1288,6 @@ class MergeBuilder private[table] (
           "numTargetRowsNotMatchedBySourceUpdated" -> counts("nmbsUpdated"),
           "numTargetRowsNotMatchedBySourceDeleted" -> counts("nmbsDeleted"))
         else Map.empty)
-      counts.release()
       if (dvOn) {
         // matched (updated or deleted) target rows join their files' vectors
         // — read from the persisted changed set, not the join
@@ -1217,6 +1301,7 @@ class MergeBuilder private[table] (
           evolution ++ sidecars, metrics)
       }
     } finally {
+      countsRef.foreach(_.release())
       if (cdfOn) joined.unpersist(): Unit
       dvChangedRef.foreach(_.unpersist(): Unit)
     }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Expr
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 import graft.log._
 
@@ -156,22 +157,54 @@ class LakeTable private[table] (
     if (dvs.isEmpty) withPos else dvMaskJoin(withPos, dvs)
   }
 
-  /** Absolute form of a log-relative path (DV paths may already be absolute
-    * after a shallow clone). */
+  /** Absolute form of a log-relative path (a shallow clone's data paths
+    * are already absolute). */
   private[table] def absPathStr(p: String): String =
     if (p.startsWith("/")) p else dir.resolve(p).toString
 
-  /** One row per file — (`__path` canonical absolute path, `__bitmap`
-    * serialized roaring bitmap) — for the given vectors' CURRENT state. A
-    * dv dir may also hold rows for files whose pointer has since moved to a
-    * newer dir; reading each dir filtered to the files that still reference
-    * it drops those stale rows. */
-  private[table] def dvBitmapDf(dvs: Seq[DeletionVector]): DataFrame =
+  /** Legacy vectors (parquet directories written before the descriptor
+    * form) as rows — (`__path` canonical absolute path, `__bitmap`
+    * serialized roaring bitmap) — for their CURRENT state. Their rows are
+    * keyed by the absolute path the file had when the vector was written:
+    * a row belongs to a vector's file when it names that file's
+    * root-relative path, wherever the table lived then, and is re-keyed to
+    * where it lives now. A dv dir may also hold rows for files whose
+    * pointer has since moved to a newer dir; reading each dir for the
+    * files that still reference it drops those stale rows. */
+  private def legacyBitmapDf(dvs: Seq[DeletionVector]): DataFrame =
     dvs.groupBy(_.dvPath).toSeq.map { case (rel, ds) =>
+      val now = Dml.firstOf(ds.map { d =>
+        val was =
+          if (d.forFile.startsWith("/")) col("__path") === d.forFile
+          else col("__path").endsWith("/" + d.forFile)
+        was -> lit(absPathStr(d.forFile))
+      }, lit(null).cast(StringType))
       spark.read.parquet(absPathStr(rel))
-        .filter(col("__path").isin(ds.map(d => absPathStr(d.forFile)): _*))
-        .select("__path", "__bitmap")
+        .select(now.as("__path"), col("__bitmap"))
+        .filter(col("__path").isNotNull)
     }.reduce(_.unionByName(_))
+
+  /** The masks of `dvs`, keyed by canonical absolute data-file path, read
+    * on the driver: descriptor vectors straight from their inline bytes or
+    * `.bin` range (no Spark job); legacy vectors through one parquet read. */
+  private[table] def dvBitmaps(dvs: Seq[DeletionVector]): Map[String, Roaring64Bitmap] = {
+    val (legacy, described) = dvs.partition(_.legacy)
+    val conf = spark.sparkContext.hadoopConfiguration
+    described.map(d =>
+      absPathStr(d.forFile) -> DvStore.read(dir.toString, d.descriptor.get, conf)).toMap ++
+      (if (legacy.isEmpty) Nil
+      else legacyBitmapDf(legacy).collect().map(r =>
+        r.getString(0) -> DvBitmap.deserialize(r.getAs[Array[Byte]](1))))
+  }
+
+  /** The same masks as rows (`__path`, `__bitmap`), decoded on executors —
+    * for mask sets too large to pass through the driver. */
+  private[table] def dvBitmapDf(dvs: Seq[DeletionVector]): DataFrame = {
+    val (legacy, described) = dvs.partition(_.legacy)
+    val decoded = DvStore.decode(spark, dir.toString,
+      described.map(d => absPathStr(d.forFile) -> d.descriptor.get))
+    if (legacy.isEmpty) decoded else decoded.unionByName(legacyBitmapDf(legacy))
+  }
 
   // per-file bitmaps broadcast for the mask filter, memoized across reads of
   // the same DV state (a commit changes the state → new cache entry); old
@@ -179,26 +212,24 @@ class LakeTable private[table] (
   // the reference and can re-fetch from the driver)
   @transient private lazy val dvBroadcastCache =
     new java.util.concurrent.ConcurrentHashMap[
-      Set[(String, String)], org.apache.spark.broadcast.Broadcast[Map[String, Array[Byte]]]]()
+      Set[DeletionVector], org.apache.spark.broadcast.Broadcast[Map[String, Array[Byte]]]]()
 
   /** Filter a position-carrying frame (`__file`, `__idx`) through the given
-    * deletion vectors. Small total mask counts use a broadcast of per-file
-    * roaring bitmaps probed by a codegen'd expression — O(bitmap bytes)
-    * broadcast, no join. Past [[DvBitmap.BroadcastMaxMasks]] the bitmaps are
-    * exploded back to rows and anti-joined (fully distributed, no driver
-    * memory cliff). */
+    * deletion vectors. Up to `graft.dv.broadcastMaxMasks` masked rows, the
+    * per-file bitmaps are read on the driver and broadcast, probed by a
+    * codegen'd expression — no join and no extra query. Past it, the
+    * vectors are decoded on executors, exploded back to rows and
+    * anti-joined (fully distributed, no driver memory cliff). */
   private def dvMaskJoin(withPos: DataFrame, dvs: Seq[DeletionVector]): DataFrame = {
     val maskedTotal = dvs.map(_.numDeleted).sum
     if (maskedTotal <= DvBitmap.broadcastMaxMasks(spark)) {
-      val key = dvs.map(d => d.forFile -> d.dvPath).toSet
-      val bc = dvBroadcastCache.computeIfAbsent(key, _ => {
+      val bc = dvBroadcastCache.computeIfAbsent(dvs.toSet, _ => {
         if (dvBroadcastCache.size >= 8) {
           val it = dvBroadcastCache.entrySet().iterator()
           while (it.hasNext) { it.next().getValue.unpersist(false); it.remove() }
         }
         spark.sparkContext.broadcast(
-          dvBitmapDf(dvs).collect()
-            .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap)
+          dvBitmaps(dvs).map { case (p, bm) => p -> DvBitmap.serialize(bm) })
       })
       withPos.filter(DvBitmap.notMasked(col("__file"), col("__idx"), bc, maskedTotal))
     } else {
@@ -223,13 +254,17 @@ class LakeTable private[table] (
       readFiles(files, schema).withColumn("__file", input_file_name())
     else readFilesMaskedPos(snap, files, schema).drop("__idx")
 
-  /** Tombstones for DV directories that `removedPaths`' files referenced
-    * and that nothing in the table's future state still references. */
+  /** Tombstones for the vector files (`.bin` files, legacy directories)
+    * under `dv/` that `removedPaths`' vectors lived in and that none of
+    * `future` — the vectors of the table's next state — still points into:
+    * one `.bin` holds a whole commit's vectors, so it lives on while any
+    * of them does. */
   private[table] def dvTombstones(
-      s: Snapshot, removedPaths: Set[String], futureRefs: Set[String],
+      s: Snapshot, removedPaths: Set[String], future: Iterable[DeletionVector],
       now: Long): Seq[RemoveFile] = {
-    val dropped = removedPaths.flatMap(p => s.dvs.get(p)).map(_.dvPath)
-    dropped.diff(futureRefs).toSeq.map(p => RemoveFile(p, now))
+    val dropped = removedPaths.flatMap(p => s.dvs.get(p)).flatMap(_.storagePath)
+      .filter(_.startsWith(DvStore.Dir + "/"))
+    dropped.diff(future.flatMap(_.storagePath).toSet).toSeq.map(p => RemoveFile(p, now))
   }
 
   /** Conservative file-level filtering on partition columns, evaluated
@@ -563,7 +598,7 @@ class LakeTable private[table] (
             s"stream overwrite conflicts with a concurrent schema change on $dir")
         val now = clockMillis()
         s.files.map(f => RemoveFile(f.path, now)) ++ adds ++
-          dvTombstones(s, s.files.map(_.path).toSet, Set.empty, now)
+          dvTombstones(s, s.files.map(_.path).toSet, Nil, now)
       }
     } catch {
       case _: LakeTable.EpochAlreadyCommitted => snapshot().version
@@ -602,7 +637,7 @@ class LakeTable private[table] (
           s"overwrite conflicts with a concurrent schema change on $dir")
       val now = clockMillis()
       evolveMeta(s, target) ++ s.files.map(f => RemoveFile(f.path, now)) ++ adds ++
-        dvTombstones(s, s.files.map(_.path).toSet, Set.empty, now)
+        dvTombstones(s, s.files.map(_.path).toSet, Nil, now)
     }
   }
 
@@ -641,7 +676,7 @@ class LakeTable private[table] (
       Seq(s.metadata.copy(schemaJson = stamped.json,
         partitionColumns = newPartitionColumns, properties = props)) ++
         s.files.map(f => RemoveFile(f.path, now)) ++ adds ++
-        dvTombstones(s, s.files.map(_.path).toSet, Set.empty, now)
+        dvTombstones(s, s.files.map(_.path).toSet, Nil, now)
     }
   }
 
@@ -664,7 +699,7 @@ class LakeTable private[table] (
       val now = clockMillis()
       val doomed = partitionValuesMatching(s.files, Seq(pred), s.schema)
       s.files.filter(f => doomed.contains(f.path)).map(f => RemoveFile(f.path, now)) ++ adds ++
-        dvTombstones(s, doomed, (s.dvs -- doomed).values.map(_.dvPath).toSet, now)
+        dvTombstones(s, doomed, (s.dvs -- doomed).values, now)
     }
   }
 
@@ -691,7 +726,7 @@ class LakeTable private[table] (
         .map(_.path).toSet
       s.files.filter(f => doomed.contains(f.path)).map(f => RemoveFile(f.path, now)) ++
         adds ++
-        dvTombstones(s, doomed, (s.dvs -- doomed).values.map(_.dvPath).toSet, now)
+        dvTombstones(s, doomed, (s.dvs -- doomed).values, now)
     }
   }
 
@@ -982,10 +1017,16 @@ class LakeTable private[table] (
     out.toMap
   }
 
-  private[table] def listParquet(root: Path): Seq[Path] = {
+  private[table] def listParquet(root: Path): Seq[Path] = listEnding(root, ".parquet")
+
+  /** Vector files: `.bin` files and (legacy) parquet parts. */
+  private[table] def listDvFiles(root: Path): Seq[Path] = listEnding(root, ".parquet", ".bin")
+
+  private def listEnding(root: Path, suffixes: String*): Seq[Path] = {
     if (!Files.isDirectory(root)) return Nil
     val s = Files.walk(root)
-    try s.iterator().asScala.filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p)).toSeq
+    try s.iterator().asScala.filter(p =>
+      suffixes.exists(p.toString.endsWith) && Files.isRegularFile(p)).toSeq
     finally s.close()
   }
 
@@ -1963,7 +2004,7 @@ class LakeTable private[table] (
       // old vectors and explicitly clear vectors acquired since on files
       // that survive into the restored state
       val dvClears = s.dvs.keySet.intersect(oldPaths).diff(old.dvs.keySet)
-        .toSeq.map(f => DeletionVector(f, "", 0L))
+        .toSeq.map(DeletionVector.clear)
       // metadata restores WHOLESALE, properties included (Delta re-applies
       // the old Metadata action): after a REPLACE TABLE swapped the
       // properties, keeping the new ones would desync the column-mapping
@@ -1975,8 +2016,7 @@ class LakeTable private[table] (
         removed.toSeq.map(p => RemoveFile(p, now)) ++
         old.files.filterNot(f => curPaths.contains(f.path)) ++
         old.dvs.values ++ dvClears ++
-        dvTombstones(s, removed ++ dvClears.map(_.forFile),
-          old.dvs.values.map(_.dvPath).toSet, now)
+        dvTombstones(s, removed ++ dvClears.map(_.forFile), old.dvs.values, now)
     }
   }
 
@@ -2020,11 +2060,12 @@ class LakeTable private[table] (
         .getOrElse(168.0)
     val horizon = clockMillis() - (effectiveHours * 3600 * 1000).toLong
     val snap = snapshot()
-    // deletion-vector paths are directories — membership is prefix-based
+    // vectors live in `.bin` files or (legacy) directories — membership
+    // is prefix-based
     def underAny(p: String, prefixes: Set[String]): Boolean =
       prefixes.exists(pre => p == pre || p.startsWith(pre + "/"))
     val live = snap.files.map(f => absPath(f)).toSet
-    val liveDv = snap.dvs.values.map(d => dir.resolve(d.dvPath).toString).toSet
+    val liveDv = snap.dvs.values.flatMap(_.storagePath).map(absPathStr).toSet
     // one pass over the log history serves all classifications
     val history = log.listVersions().flatMap(v => log.readVersion(v))
     val referenced = history.collect {
@@ -2032,9 +2073,8 @@ class LakeTable private[table] (
       case c: CdfFile => dir.resolve(c.path).toString
     }.toSet
     val referencedDv = history.collect {
-      case d: DeletionVector if d.dvPath != null && d.dvPath.nonEmpty =>
-        dir.resolve(d.dvPath).toString
-    }.toSet
+      case d: DeletionVector => d.storagePath.map(absPathStr)
+    }.flatten.toSet
     // LATEST tombstone per path decides: an old remove superseded by a
     // re-add + recent re-remove keeps the file inside the window
     val latestRemove = history.collect { case r: RemoveFile =>
@@ -2136,7 +2176,7 @@ class LakeTable private[table] (
         case None =>
           val physical =
             (listParquet(dir.resolve("data")) ++ listParquet(dir.resolve("cdf")) ++
-              listParquet(dir.resolve("dv"))).map(_.toString)
+              listDvFiles(dir.resolve("dv"))).map(_.toString)
           physical.filter { p =>
             !live.contains(p) && !underAny(p, liveDv) && (
               tombstoned.contains(p) || underAny(p, tombstoned) ||
@@ -2217,12 +2257,16 @@ class LakeTable private[table] (
         Files.copy(srcP, dstP)
         f.copy(path = rel, bloom = null)
       }
-    // shallow clone: vectors ride along by absolute path — the clone reads
-    // the same physical files, so the recorded reader paths still match
+    // shallow clone: the masks are read here and written into the clone's
+    // own dv/, keyed by the source files' absolute paths — the clone never
+    // points into the source's vector files, whose VACUUM it cannot see
     val dvActions: Seq[Action] =
-      if (shallow) snap.dvs.values.toSeq.map(d =>
-        DeletionVector(dir.resolve(d.forFile).toString, dir.resolve(d.dvPath).toString, d.numDeleted))
-      else Nil
+      if (!shallow || snap.dvs.isEmpty) Nil
+      else {
+        val masks = dvBitmaps(snap.dvs.values.toSeq)
+        DvStore.write(tgt.toAbsolutePath, snap.dvs.keys.toSeq.map(f =>
+          absPathStr(f) -> masks(absPathStr(f))), Map.empty)
+      }
     val now = System.currentTimeMillis()
     val meta = snap.metadata.copy(id = UUID.randomUUID().toString, createdTime = now)
     val ci = CommitInfo(0L, now, "CLONE",

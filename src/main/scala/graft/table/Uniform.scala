@@ -232,7 +232,7 @@ trait UniformSupport { self: LakeTable =>
       if (snap.dvs.isEmpty) None
       else Some(java.security.MessageDigest.getInstance("MD5")
         .digest(snap.dvs.toSeq.sortBy(_._1)
-          .map { case (_, d) => s"${d.forFile}|${d.dvPath}|${d.numDeleted}" }
+          .map { case (_, d) => s"${d.forFile}|${d.dvPath}|${d.descriptor}|${d.numDeleted}" }
           .mkString("\n").getBytes(StandardCharsets.UTF_8))
         .map("%02x".format(_)).mkString)
     val priorDvFingerprint: Option[String] = priorMeta.flatMap { m =>

@@ -6,7 +6,7 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
 import graft.SparkSpec
 
 /** The deletion-vector bitmap kernel in isolation: serialization
-  * round-trips, the typed aggregates against a plain collect-based model,
+  * round-trips, the typed aggregate against a plain collect-based model,
   * the explode path, and the codegen'd mask filter. */
 class DvBitmapSpec extends SparkSpec {
   import spark.implicits._
@@ -26,34 +26,28 @@ class DvBitmapSpec extends SparkSpec {
     val df = rows.toDF("__file", "__idx").repartition(8)
     val got = df.groupBy("__file")
       .agg(DvBitmap.aggPositions(col("__idx")).as("__bitmap"))
-      .withColumn("__n", DvBitmap.cardinality(col("__bitmap")))
       .collect()
-      .map(r => r.getString(0) -> (r.getAs[Array[Byte]](1), r.getLong(2)))
+      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1))
       .toMap
     val model = rows.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     got.keySet shouldBe model.keySet
     model.foreach { case (f, idxs) =>
-      val (bytes, n) = got(f)
-      n shouldBe idxs.size.toLong
-      val bm = DvBitmap.deserialize(bytes)
+      val bm = DvBitmap.deserialize(got(f))
+      bm.getLongCardinality shouldBe idxs.size.toLong
       idxs.foreach(i => assert(bm.contains(i)))
       assert(!bm.contains(1L)) // idx*3 never equals 1
     }
   }
 
-  test("aggOr unions bitmaps; toLongArray explodes back sorted") {
+  test("toLongArray explodes a bitmap back sorted and deduped") {
     def ser(idxs: Seq[Long]): Array[Byte] = {
       val bm = new Roaring64Bitmap(); idxs.foreach(bm.addLong); DvBitmap.serialize(bm)
     }
-    val df = Seq(
-      ("a", ser(Seq(1L, 5L))), ("a", ser(Seq(5L, 9L))), ("b", ser(Seq(2L))))
+    val arr = Seq(("a", ser(Seq(9L, 1L, 5L, 5L))), ("b", ser(Seq(2L))))
       .toDF("__path", "__bitmap")
-    val merged = df.groupBy("__path")
-      .agg(DvBitmap.aggOr(col("__bitmap")).as("__bitmap"))
-    val arr = merged
       .select(col("__path"), DvBitmap.toLongArray(col("__bitmap")).as("idxs"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-    arr("a") shouldBe Seq(1L, 5L, 9L) // deduped + sorted
+    arr("a") shouldBe Seq(1L, 5L, 9L)
     arr("b") shouldBe Seq(2L)
   }
 

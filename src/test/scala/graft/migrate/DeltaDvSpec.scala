@@ -3,6 +3,7 @@ package graft.migrate
 import java.nio.file.Files
 
 import graft.SparkSpec
+import graft.log.{DeltaDv, DvDescriptor}
 
 /** The Delta deletion-vector codec against the PUBLIC specs it implements:
   * ZeroMQ's z85 (spec test vector included), the portable

@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.log.DeltaDv
 import graft.table.LakeTable
 
 /** Importing a Delta Lake `_delta_log` in place (fixtures are hand-crafted

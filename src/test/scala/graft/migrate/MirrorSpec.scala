@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.log.{LocalLogStore, LogStore}
+import graft.log.{DeltaDv, LocalLogStore, LogStore}
 import graft.table.LakeTable
 
 /** The shared mirror core ([[Mirror]]) seen from both formats: the

@@ -521,10 +521,10 @@ class GraftStreamSourceSpec extends SparkSpec {
       (0L until 25L).toArray
     // a Delta DELETE re-adds f0 with a vector: the sync rebuilds graft
     // masks (a DV-only data change) — followMirror skips it, no retraction
-    val dvData = graft.migrate.DeltaDv.serializeArray(Seq(0L))
+    val dvData = graft.log.DeltaDv.serializeArray(Seq(0L))
     deltaCommit(src, 2, Seq(deltaAdd(src, "f0.parquet", dv = Map(
       "storageType" -> "i",
-      "pathOrInlineDv" -> graft.migrate.DeltaDv.packInline(dvData),
+      "pathOrInlineDv" -> graft.log.DeltaDv.packInline(dvData),
       "sizeInBytes" -> dvData.length, "cardinality" -> 1))))
     graft.migrate.DeltaImport.sync(spark, src.toString)
     q.processAllAvailable()
@@ -534,10 +534,10 @@ class GraftStreamSourceSpec extends SparkSpec {
     // MASKED — a raw read would stream rows never live in the mirror
     deltaDataFile(src, "f3.parquet", df(25 until 30))
     deltaCommit(src, 3, Seq(deltaAdd(src, "f3.parquet")))
-    val dv3 = graft.migrate.DeltaDv.serializeArray(Seq(0L, 1L))
+    val dv3 = graft.log.DeltaDv.serializeArray(Seq(0L, 1L))
     deltaCommit(src, 4, Seq(deltaAdd(src, "f3.parquet", dv = Map(
       "storageType" -> "i",
-      "pathOrInlineDv" -> graft.migrate.DeltaDv.packInline(dv3),
+      "pathOrInlineDv" -> graft.log.DeltaDv.packInline(dv3),
       "sizeInBytes" -> dv3.length, "cardinality" -> 2))))
     graft.migrate.DeltaImport.sync(spark, src.toString)
     q.processAllAvailable()

@@ -311,6 +311,31 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("a general-path MERGE whose write fails inside foreachBatch leaves no cached frame") {
+    import spark.implicits._
+    val table = LakeTable.createFrom(spark,
+      tmpDir("fbfail-tbl").resolve("t").toString,
+      (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v"))
+    // duplicate source keys: the general (full-outer) path, whose tagged
+    // join is persisted for the stream-thread recount; the update of a
+    // matched row raises inside the write job
+    val source = Seq((5L, "a"), (30L, "b"), (30L, "c")).toDF("id", "v")
+    val src = tmpDir("fbfail-src")
+    writeJson(src, "trigger.json", Seq((100L, "go")))
+    spark.catalog.clearCache()
+    val q = StreamIngest.fileSource(spark, src.toString, schema).writeStream
+      .option("checkpointLocation", tmpDir("fbfail-ck").toString)
+      .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+        table.merge(source, col("target.id") === col("source.id"))
+          .whenMatchedUpdate(Map("v" -> raise_error(lit("boom")).cast("string")))
+          .whenNotMatchedInsertAll().execute(): Unit
+      }.start()
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+    q.stop()
+    spark.sharedState.cacheManager.isEmpty shouldBe true
+    table.read().count() shouldBe 20
+  }
+
   test("merge withTxn: a replayed (appId, version) epoch is a no-op") {
     import spark.implicits._
     val table = LakeTable.createFrom(spark,
