@@ -172,16 +172,31 @@ object Protocol {
   val SupportedWriter = 1
   val Current: Protocol = Protocol(SupportedReader, SupportedWriter)
 
+  /** Deletion vectors in Delta's descriptor form ([[DeletionVector]]: a
+    * `.bin` range or inline bytes, no `dvPath`). An engine that knows only
+    * the legacy parquet vectors reads a descriptor vector as a clear and
+    * returns every masked row, so a table's first descriptor vector stamps
+    * this feature and such an engine refuses the table by name. */
+  val DvDescriptors = "deletionVectorDescriptors"
+
   /** Capabilities this engine actually implements, by name (the Delta
     * feature-name vocabulary where one exists). A table may demand any
     * subset; anything outside these sets refuses loudly. */
   val SupportedReaderFeatures: Set[String] =
     Set("deletionVectors", "columnMapping", "changeDataFeed", "timeTravel",
-      "typeWidening")
+      "typeWidening", DvDescriptors)
   val SupportedWriterFeatures: Set[String] =
     SupportedReaderFeatures ++ Set("generatedColumns", "identityColumns",
       "checkConstraints", "defaultColumns", "clustering", "bloomFilters",
       "rowTracking", "domainMetadata", "inCommitTimestamp")
+
+  /** `p`, demanding [[DvDescriptors]] of readers and writers when
+    * `actions` carry a descriptor vector it does not declare yet. */
+  def withDvDescriptors(p: Protocol, actions: Seq[Action]): Protocol =
+    if (p.readerSet(DvDescriptors) ||
+        !actions.exists { case d: DeletionVector => d.descriptor.isDefined; case _ => false }) p
+    else merge(p, Protocol(p.minReaderVersion, p.minWriterVersion,
+      Seq(DvDescriptors), Seq(DvDescriptors)))
 
   /** Merge two protocols: max versions, union of named features (the CLONE
     * / upgrade composition rule — capabilities only ever accumulate). */

@@ -198,7 +198,8 @@ private[graft] object Mirror {
         "numDeletionVectors" -> dvs.size.toString,
         "sourceVersion" -> sourceVersion.toString), Map.empty, -1L,
       LakeTable.currentUser, false, java.util.UUID.randomUUID().toString)
-    val proto = protocolFor(Protocol.Current, meta.properties, dvs.nonEmpty)
+    val proto = Protocol.withDvDescriptors(
+      protocolFor(Protocol.Current, meta.properties, dvs.nonEmpty), dvs)
     new TxLog(root).tryCommit(0L, ci +: proto +: meta +: (adds ++ dvs)): Unit
     LakeTable.forPath(spark, dir)
   }

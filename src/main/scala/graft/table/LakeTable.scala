@@ -1217,9 +1217,17 @@ class LakeTable private[table] (
       // attempt, so a lost race re-assigns against the fresh snapshot.
       val rtProps = built.collectFirst { case m: graft.log.Metadata => m.properties }
         .getOrElse(snap.metadata.properties)
-      val actions =
+      val assigned =
         if (rowTrackingOn(rtProps)) RowTracking.assign(snap, built, snap.version + 1)
         else built
+      // the first descriptor-form vector stamps its reader feature (see
+      // Protocol.DvDescriptors) in the same commit
+      val declared = assigned.collectFirst { case p: graft.log.Protocol => p }
+        .getOrElse(snap.protocol)
+      val proto = graft.log.Protocol.withDvDescriptors(declared, assigned)
+      val actions =
+        if (proto == declared) assigned
+        else proto +: assigned.filterNot(_.isInstanceOf[graft.log.Protocol])
       val adds = actions.collect { case a: AddFile => a }
       val removes = actions.collect { case r: RemoveFile => r }
       val autoMetrics = Map(
@@ -1492,9 +1500,13 @@ class LakeTable private[table] (
             "typeWidening TRUNCATE HISTORY")
       }
       val sp = s.protocol
+      // deletion vectors leave with their descriptor form
+      val gone =
+        if (name == "deletionVectors") Set(name, graft.log.Protocol.DvDescriptors)
+        else Set(name)
       def minus(fs: Seq[String]): Seq[String] = Option(fs) match {
         case Some(xs) =>
-          val left = xs.filterNot(_ == name); if (left.isEmpty) null else left
+          val left = xs.filterNot(gone); if (left.isEmpty) null else left
         case None => null
       }
       val proto = graft.log.Protocol(sp.minReaderVersion, sp.minWriterVersion,
@@ -2277,7 +2289,8 @@ class LakeTable private[table] (
     // Preserve the source snapshot's protocol (merged with this engine's
     // current: max versions, union of named features) — cloning a
     // protocol-upgraded table must not downgrade its gate, same as Delta.
-    val cloneProto = graft.log.Protocol.merge(snap.protocol, graft.log.Protocol.Current)
+    val cloneProto = graft.log.Protocol.withDvDescriptors(
+      graft.log.Protocol.merge(snap.protocol, graft.log.Protocol.Current), dvActions)
     // domain state rides along (the row-id high-water mark in particular:
     // cloned AddFiles keep their baseRowIds, so the clone must inherit the
     // mark that makes future allocations collision-free)

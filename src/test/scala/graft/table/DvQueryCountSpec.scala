@@ -52,13 +52,29 @@ class DvQueryCountSpec extends SparkSpec {
     m1Runs should be <= 4
 
     // a 5-row source spanning every file: the candidates fit the
-    // small-rewrite budget, so the inner join reads them without a probe
+    // deletion-vector probe budget, so the inner join reads them without a probe
     val (m2, m2Runs) = executions(upsert(Seq(100L, 101L, 1500L, 1501L, 3001L)))
     metrics(m2)("numTargetRowsUpdated") shouldBe "2"
     metrics(m2)("numTargetRowsInserted") shouldBe "3"
     changes(m2).count(_._1 == "insert") shouldBe 3
     info(s"MERGE, every file a candidate: $m2Runs root executions")
     m2Runs should be <= 4
+
+    // the same spread past the probe budget (lowered to 0 here, so the
+    // probe runs on this small table): the probe adds one query
+    val (m3, m3Runs) = executions(
+      new MergeBuilder(t, Seq(200L, 201L, 1700L, 3201L, 3400L).map(k => (k, s"m$k", -1.0))
+        .toDF("k", "v", "p"), $"target.k" === $"source.k", dvProbeBytes = 0L)
+        .whenMatchedUpdateAll().whenNotMatchedInsertAll().execute())
+    metrics(m3).filter(_._1.startsWith("numTarget")) shouldBe Map(
+      "numTargetRowsUpdated" -> "3", "numTargetRowsDeleted" -> "0",
+      "numTargetRowsInserted" -> "2", "numTargetRowsCopied" -> "0")
+    changes(m3) shouldBe
+      Seq(200L, 1700L, 3400L).flatMap(k => Seq(("update_preimage", k, s"v${k / 2}"),
+        ("update_postimage", k, s"m$k"))).toSet ++
+        Seq(201L, 3201L).map(k => ("insert", k, s"m$k"))
+    info(s"MERGE, probe runs: $m3Runs root executions")
+    m3Runs should be <= 5
 
     val (u, uRuns) = executions(t.update($"k" === 40L, Map("v" -> lit("u"))))
     metrics(u)("numUpdatedRows") shouldBe "1"
@@ -82,6 +98,6 @@ class DvQueryCountSpec extends SparkSpec {
     hit shouldBe empty
     info(s"masked point read, cache hit: $hitRuns root executions")
     hitRuns shouldBe 1
-    t.read().count() shouldBe 2000L + 2 + 3 - 1
+    t.read().count() shouldBe 2000L + 2 + 3 + 2 - 1
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.log.{Actions, CommitInfo, DvBitmap}
+import graft.log.{Actions, CommitInfo, DvBitmap, Protocol}
 
 /** Where deletion vectors live: descriptor vectors in `.bin` files under
   * `dv/` that carry no absolute path (a moved table keeps its masks, a
@@ -160,5 +160,76 @@ class DvStorageSpec extends SparkSpec {
     m.delete(col("id") === 1L)
     ids(LakeTable.forPath(spark, moved.toString)) shouldBe
       (0L until 100L).filter(i => i % 10 != 0 && i != 1).toSet
+  }
+
+  test("the first descriptor vector demands its reader feature; DROP FEATURE takes it along") {
+    // the reader features of an engine that knows only parquet vectors:
+    // the descriptor feature is the one it lacks, so it refuses the table
+    val legacyEngine = Set("deletionVectors", "columnMapping", "changeDataFeed",
+      "timeTravel", "typeWidening")
+    def refusedByLegacyEngine(t: LakeTable): Boolean =
+      (LakeTable.forPath(spark, t.dir.toString).snapshot().protocol.readerSet --
+        legacyEngine).nonEmpty
+    val t = table("dv-feature", 2)
+    t.snapshot().protocol.readerSet shouldBe Set("deletionVectors")
+    legacyMask(t, col("id") < 5L)
+    refusedByLegacyEngine(t) shouldBe false
+    t.delete(col("id") === 50L)
+    val p = LakeTable.forPath(spark, t.dir.toString).snapshot().protocol
+    p.readerSet shouldBe Set("deletionVectors", Protocol.DvDescriptors)
+    p.writerSet should contain(Protocol.DvDescriptors)
+    refusedByLegacyEngine(t) shouldBe true
+    ids(t) shouldBe (5L until 100L).filter(_ != 50L).toSet
+    // a shallow clone writes its own descriptor vectors: it declares them
+    refusedByLegacyEngine(t.cloneTo(tmpDir("dv-feature-clone").resolve("c").toString)) shouldBe true
+    // a MERGE's vectors stamp the feature too
+    val m = table("dv-feature-merge", 1)
+    m.merge(Seq((7L, "x")).toDF("id", "name"), $"target.id" === $"source.id")
+      .whenMatchedUpdateAll().execute()
+    refusedByLegacyEngine(m) shouldBe true
+    // dropping deletion vectors drops their descriptor form with them
+    t.setProperties(Map("graft.enableDeletionVectors" -> "false"))
+    t.reorgPurge()
+    t.dropFeature("deletionVectors", truncateHistory = true)
+    val dropped = LakeTable.forPath(spark, t.dir.toString).snapshot().protocol
+    (dropped.readerSet ++ dropped.writerSet) should contain noneOf(
+      "deletionVectors", Protocol.DvDescriptors)
+    ids(t) shouldBe (5L until 100L).filter(_ != 50L).toSet
+  }
+
+  test("a DV+CDF MERGE with a 15,000-row composite-key source broadcasts its matched keys") {
+    // 20,000 target rows over (a, b); the source matches 10,000 of them
+    // and brings 5,000 new keys. The update fires only on even `a`, so
+    // 5,000 matched rows fire no clause: they must neither change nor
+    // turn into inserts.
+    val target = (0L until 20000L).map(i => (i / 2, i % 2, s"t$i"))
+    val t = LakeTable.create(spark, tmpDir("dv-wide-src").resolve("t").toString,
+      target.toDF("a", "b", "v").schema,
+      properties = dvProps + ("graft.enableChangeDataFeed" -> "true"))
+    t.append(target.toDF("a", "b", "v").repartition(4))
+    val matched = (0L until 10000L).map(i => (i / 2, i % 2, s"s$i"))
+    val fresh = (20000L until 25000L).map(i => (i / 2, i % 2, s"s$i"))
+    val v = t.merge((matched ++ fresh).toDF("a", "b", "v"),
+      $"target.a" === $"source.a" && $"target.b" === $"source.b")
+      .whenMatchedUpdateAll(Some($"source.a" % 2 === 0))
+      .whenNotMatchedInsertAll()
+      .execute()
+    val updated = matched.filter(_._1 % 2 == 0)
+    val m = t.history().filter($"version" === v).select("operationMetrics")
+      .head().getMap[String, String](0)
+    m("numTargetRowsUpdated") shouldBe updated.size.toString
+    m("numTargetRowsInserted") shouldBe "5000"
+    m("numTargetRowsDeleted") shouldBe "0"
+    val expected = (target.map { case (a, b, x) => (a, b) -> x }.toMap ++
+      (updated ++ fresh).map { case (a, b, x) => (a, b) -> x }).toSet
+    t.read().as[(Long, Long, String)].collect().map { case (a, b, x) => (a, b) -> x }
+      .toSet shouldBe expected
+    val ch = t.changes(v, Some(v)).select("_change_type", "a", "b", "v")
+      .as[(String, Long, Long, String)].collect()
+    ch.filter(_._1 == "insert").map(r => (r._2, r._3, r._4)).toSet shouldBe fresh.toSet
+    ch.filter(_._1 == "update_postimage").map(r => (r._2, r._3, r._4)).toSet shouldBe
+      updated.toSet
+    ch.count(_._1 == "update_preimage") shouldBe updated.size
+    ch.length shouldBe 5000 + 2 * updated.size
   }
 }
