@@ -3,7 +3,7 @@ package graft.log
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -87,6 +87,28 @@ object DvBitmap {
       bitmaps: Broadcast[Map[String, Array[Byte]]], maskedTotal: Long): Column =
     ColumnExpr.toColumn(
       DvNotMasked(ColumnExpr.of(file), ColumnExpr.of(idx), bitmaps, maskedTotal))
+
+  /** Filter a position-carrying frame (`__file` reader path, `__idx` row
+    * index) through deletion vectors masking `maskedTotal` rows. Up to
+    * [[broadcastMaxMasks]], the per-file `bitmaps` (canonical path ->
+    * serialized bitmap) are broadcast and probed by [[notMasked]] — no join
+    * and no extra query. Past it, `bitmapRows` (`__path`, `__bitmap`,
+    * decoded on executors) explode back to positions and anti-join (fully
+    * distributed, no driver memory cliff). */
+  def dropMasked(withPos: DataFrame, maskedTotal: Long,
+      bitmaps: => Broadcast[Map[String, Array[Byte]]],
+      bitmapRows: => DataFrame): DataFrame =
+    if (maskedTotal <= broadcastMaxMasks(withPos.sparkSession))
+      withPos.filter(notMasked(col("__file"), col("__idx"), bitmaps, maskedTotal))
+    else dropPositions(withPos, bitmapRows.select(col("__path"),
+      explode(toLongArray(col("__bitmap"))).as("__idx")))
+
+  /** Drop the rows of a position-carrying frame whose (canonical file
+    * path, row index) `positions` lists as (`__path`, `__idx`). */
+  def dropPositions(withPos: DataFrame, positions: DataFrame): DataFrame =
+    withPos.withColumn("__path", stripPathCol(col("__file")))
+      .join(positions, Seq("__path", "__idx"), "left_anti")
+      .drop("__path")
 }
 
 /** `TypedImperativeAggregate` building a [[Roaring64Bitmap]] from row

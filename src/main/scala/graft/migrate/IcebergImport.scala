@@ -6,10 +6,11 @@ import java.nio.file.{Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.avro.generic.GenericRecord
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types._
 
-import graft.log.{AddFile, ColStats, ColumnIds, Stats, TxLog}
+import graft.log.{AddFile, ColStats, ColumnIds, DeletionVector, DvBitmap, Stats}
 import graft.table.LakeTable
 
 /** Zero-copy import of an Apache Iceberg table (HadoopTables layout —
@@ -95,8 +96,10 @@ object IcebergImport {
       path: String, seq: Long, equalityIds: Seq[Int],
       specId: Long, tuple: Seq[(String, String)])
 
-  /** The replayed current state of an Iceberg table's metadata. */
+  /** The replayed current state of an Iceberg table's metadata under
+    * `root` (see the object doc for its binding and stats). */
   private[migrate] case class IcebergState(
+      root: Path,
       metaVersion: Long,
       meta: java.util.Map[String, Object],
       lastSeq: Long,
@@ -108,33 +111,116 @@ object IcebergImport {
       liveScope: Map[String, (Long, Seq[(String, String)])], // path -> (spec id, tuple)
       specFields: Map[Long, Seq[PartField]], // spec id -> its fields (ALL specs)
       deletePaths: Seq[String], // position-delete parquet (manifest form)
-      eqDeletes: Seq[EqDelete]) {
-    def pcols: Seq[String] = partFields.map(_.column)
+      eqDeletes: Seq[EqDelete]) extends Mirror.ForeignSnapshot {
     lazy val fieldById: Map[Int, StructField] = schemaWithIds.fields
       .flatMap(f => ColumnIds.idOf(f).map(_.toInt -> f)).toMap
-    lazy val idOfName: Map[String, Long] =
-      fieldById.map { case (id, f) => f.name -> id.toLong }
-    def specSize(specId: Long): Int = specFields.get(specId).map(_.size).getOrElse(0)
-  }
 
-  /** Whether `files` bind BY FIELD ID: every footer column carries one.
-    * Otherwise they bind by name, and a footer column that names no schema
-    * column is a name mapping this importer cannot resolve — a by-name
-    * read would misread renamed columns — so it refuses. */
-  private def bindsById(st: IcebergState, root: Path,
-      files: Seq[(String, GenericRecord)],
-      footerIds: Map[String, Seq[(String, Option[Int])]]): Boolean = {
-    val allIds = files.forall { case (p, _) =>
-      footerIds(root.resolve(p).toString).forall(_._2.isDefined) }
-    if (!allIds) files.foreach { case (p, _) =>
-      footerIds(root.resolve(p).toString).foreach { case (name, _) =>
-        require(st.schemaWithIds.fieldNames.contains(name),
-          s"file $p column '$name' is not a schema column and the files " +
-            "carry no usable field ids — name-mapping this importer " +
-            "cannot resolve; rewrite the table on the Iceberg side")
+    def keys: Mirror.FollowKeys = Follow
+    def tableId: String = Option(meta.get("table-uuid")).map(_.toString)
+      .getOrElse(java.util.UUID.randomUUID().toString)
+    def schema: StructType = schemaWithIds
+    lazy val partitionColumns: Seq[String] = partFields.map(_.column)
+    def files: Seq[String] = live.map(_._1)
+    /** The followable state, keyed by `<sequence>-<metadata version>`: live
+      * data files relative to the source root, position/equality delete
+      * files canonical-absolute. The next sync diffs against the ledger
+      * named by its CONSUMED keys to enumerate removed data files and
+      * newly-arrived delete files in O(churn). Consumed is judged on BOTH
+      * keys: the sequence number (data commits) and the metadata version
+      * (metadata-only commits — a rename writes new metadata WITHOUT a new
+      * snapshot, and a v1→v2 upgrade RESTARTS the sequence axis). */
+    lazy val point: Mirror.SourcePoint = Mirror.SourcePoint(Seq(lastSeq, metaVersion),
+      Map(SourceSeqKey -> lastSeq.toString,
+        SourceMetaVersionKey -> metaVersion.toString))(
+      Mirror.Ledger(files.map(_ -> "").toMap,
+        deletePaths.map(Stats.stripScheme), eqDeletes.map(_.path)))
+    def properties: Map[String, String] = LakeTable.normalizeProps(
+      Option(meta.get("properties")).map(_.asInstanceOf[java.util.Map[String, Object]]
+        .asScala.map { case (k, v) => k -> String.valueOf(v) }.toMap).getOrElse(Map.empty))
+    /** Iceberg properties rarely map onto graft semantics: a sync does not
+      * carry them (set them locally if needed). */
+    override def syncProps: Map[String, String] = Map.empty
+    def maxColumnId: Long = Option(meta.get("last-column-id")).map(num).getOrElse(0L)
+
+    /** Partition transforms, equality deletes, and partition-value string
+      * fidelity: everything [[convertRewrite]] CAN handle but an in-place
+      * import cannot. */
+    def gateInPlace(): Unit = {
+      partFields.foreach { pf =>
+        require(pf.transform == "identity",
+          s"partition transform '${pf.transform}' is not identity — derived " +
+            "partition values cannot import as layout columns; import with " +
+            "convertRewrite (one scan, rewritten into graft layout)")
+      }
+      require(eqDeletes.isEmpty,
+        s"$root carries EQUALITY deletes — predicate deletes cannot " +
+          "transcode to position masks; import with convertRewrite (they " +
+          "apply as an anti-join during the rewrite)")
+      // graft's partition values are strings cast back to the column type;
+      // only types with a faithful string round-trip from the Avro encoding
+      // import (the same set the exporter writes)
+      partitionColumns.foreach { c =>
+        val dt = schemaWithIds(c).dataType
+        require(stringFaithful(dt), s"identity partition column '$c' has type $dt — its Avro " +
+          "partition encoding has no faithful string form in this importer")
       }
     }
-    allIds
+    /** SOURCE-side renames (by id) and added nullable columns follow;
+      * drops, type changes, required adds, and renames on a name-bound
+      * import stay cut-over refusals (see [[Evolution]]). */
+    def incoming(base: StructType, mapped: Boolean): (StructType, Boolean) = {
+      val in = if (mapped) schemaWithIds else ColumnIds.strip(schemaWithIds)
+      if (in != base) Evolution.requireFollowable(base, in, mapped, "Iceberg")
+      (in, in != base)
+    }
+    private lazy val byPath = live.toMap
+    /** The manifest count cross-checked against the footer, footer-exact
+      * stats, and the identity partition tuple decoded by the SPEC field
+      * name into graft's string encoding. */
+    def addFiles(spark: SparkSession, paths: Seq[String], schema: StructType,
+        footers: Map[String, (Long, Map[String, ColStats])],
+        tags: Map[String, String]): Seq[AddFile] = {
+      val now = System.currentTimeMillis()
+      paths.map { path =>
+        val df = byPath(path)
+        val (footerCount, colStats) = footers(path)
+        val manifestCount = df.get("record_count").asInstanceOf[Long]
+        require(manifestCount == footerCount,
+          s"manifest says $manifestCount records for $path, the footer says " +
+            s"$footerCount — refusing inconsistent metadata")
+        val part = df.get("partition").asInstanceOf[GenericRecord]
+        val pv = partFields.map { pf =>
+          val v = part.get(pf.specName) // keyed by the SPEC field name
+          pf.column -> (if (v == null) null else schema(pf.column).dataType match {
+            case DateType => java.time.LocalDate
+              .ofEpochDay(v.asInstanceOf[java.lang.Number].longValue()).toString
+            case _ => v.toString
+          })
+        }.toMap
+        AddFile(path = path, partitionValues = pv,
+          size = df.get("file_size_in_bytes").asInstanceOf[Long],
+          numRecords = manifestCount, stats = colStats,
+          modificationTime = now,
+          tags = if (tags.isEmpty) null else tags)
+      }
+    }
+    /** The current position deletes (snapshot-global) decode into per-file
+      * masks — one collected bitmap row per masked file — written as ONE
+      * `.bin` under `root` by the engine's vector writer. DANGLING rows
+      * drop via a broadcast semi-join against the live set — never phantom
+      * vectors, never fatal. */
+    def masks(spark: SparkSession): Seq[DeletionVector] = if (deletePaths.isEmpty) Nil else {
+      import spark.implicits._
+      val masked = posDeleteRows(spark, deletePaths)
+        .join(broadcast(files.map(p => root.resolve(p).toString).toDF("__path")),
+          Seq("__path"), "left_semi")
+        .groupBy("__path").agg(DvBitmap.aggPositions(col("__idx")).as("__bitmap"))
+        .collect().map(r => r.getString(0) -> DvBitmap.deserialize(r.getAs[Array[Byte]](1)))
+        .toMap
+      graft.log.DvStore.write(root,
+        files.flatMap(p => masked.get(root.resolve(p).toString).map(p -> _)), Map.empty)
+    }
+    override def importProps(): Map[String, String] = sortAndStatsProps(this, root)
   }
 
   /** Partition types whose Avro partition encoding has a faithful string
@@ -145,174 +231,35 @@ object IcebergImport {
     case _ => false
   }
 
-  /** The zero-copy imports' honesty gates over partition transforms,
-    * equality deletes, and partition-value string fidelity — everything
-    * [[convertRewrite]] CAN handle but an in-place import cannot. */
-  private def gateZeroCopy(root: Path, st: IcebergState): Unit = {
-    st.partFields.foreach { pf =>
-      require(pf.transform == "identity",
-        s"partition transform '${pf.transform}' is not identity — derived " +
-          "partition values cannot import as layout columns; import with " +
-          "convertRewrite (one scan, rewritten into graft layout)")
-    }
-    require(st.eqDeletes.isEmpty,
-      s"$root carries EQUALITY deletes — predicate deletes cannot " +
-        "transcode to position masks; import with convertRewrite (they " +
-        "apply as an anti-join during the rewrite)")
-    // graft's partition values are strings cast back to the column type;
-    // only types with a faithful string round-trip from the Avro encoding
-    // import (the same set the exporter writes)
-    st.pcols.foreach { c =>
-      val dt = st.schemaWithIds.fields.find(_.name == c).get.dataType
-      require(stringFaithful(dt), s"identity partition column '$c' has type $dt — its Avro " +
-        "partition encoding has no faithful string form in this importer")
-    }
-  }
-
   /** Import `<dir>`'s Iceberg metadata as a graft table IN PLACE
     * (idempotent: an already-imported directory returns the existing graft
-    * table). */
-  def convert(spark: SparkSession, dir: String): LakeTable = {
-    if (TxLog.isTable(dir)) return LakeTable.forPath(spark, dir)
-    val root = Paths.get(dir).toAbsolutePath.normalize
-    val st = replay(root)
-    gateZeroCopy(root, st)
-
-    // ---- column binding + ONE footer pass (ids + exact stats) ----
-    val footers = footersOf(st, root, st.live)
-    val allIdsPresent = st.live.nonEmpty &&
-      bindsById(st, root, st.live, footers.view.mapValues(_._3).toMap)
-    val schema =
-      if (allIdsPresent) st.schemaWithIds else ColumnIds.strip(st.schemaWithIds)
-    val graftAdds = toAddFiles(st, root, st.live, footers, byId = allIdsPresent)
-
-    // ---- position deletes -> graft deletion-vector masks ----
-    val dvActions = buildMasks(spark, root, st.deletePaths, st.live.map(_._1))
-
-    // ---- one graft commit materializing the snapshot ----
-    val maxIdProp = Mirror.maxIdProp(
-      if (allIdsPresent) Some(lastColumnId(st)) else None, Map.empty, schema)
-    Mirror.convertCommit(spark, dir, root,
-      Option(st.meta.get("table-uuid")).map(_.toString)
-        .getOrElse(java.util.UUID.randomUUID().toString),
-      schema, st.pcols,
-      LakeTable.normalizeProps(sourceProperties(st)) ++
-        sortAndStatsProps(st, root) ++ maxIdProp +
-        (SourceSeqKey -> st.lastSeq.toString) +
-        (SourceMetaVersionKey -> st.metaVersion.toString),
-      "iceberg", st.metaVersion, graftAdds, dvActions)
-  }
-
-  /** The source table's own properties. */
-  private def sourceProperties(st: IcebergState): Map[String, String] =
-    Option(st.meta.get("properties"))
-      .map(_.asInstanceOf[java.util.Map[String, Object]].asScala
-        .map { case (k, v) => k -> String.valueOf(v) }.toMap)
-      .getOrElse(Map.empty[String, String])
-
-  private def lastColumnId(st: IcebergState): Long =
-    Option(st.meta.get("last-column-id")).map(num).getOrElse(0L)
+    * table): ONE parallel footer pass binds the columns and derives exact
+    * stats, and the position deletes become graft deletion vectors. */
+  def convert(spark: SparkSession, dir: String): LakeTable =
+    Mirror.convert(spark, dir, replay)(_ => None)
 
   /** Incremental catch-up after [[convert]]: when the source's
     * last-sequence-number advanced, apply the NET difference between its
-    * current snapshot and the graft live set as ONE graft commit — new
-    * files add zero-copy (footer-verified binding + exact stats, O(new
-    * files) only), vanished files remove, and the deletion-vector state
-    * REBUILDS from the current position deletes (masks that appeared
-    * land, masks that vanished clear; cost O(current masked positions)
-    * per sync). The consumed sequence advances in the same commit, so a
-    * replay or racing sync no-ops. The continuous-migration shape:
-    * convert once, sync on a cadence, cut over when ready.
+    * current snapshot and the graft live set as ONE graft commit
+    * ([[Mirror.snapshotSync]]) — new files add zero-copy (footer-verified
+    * binding + exact stats, O(new files) only), vanished files remove, and
+    * the deletion-vector state REBUILDS from the current position deletes
+    * (cost O(current masked positions) per sync). The consumed sequence
+    * advances in the same commit, so a replay or racing sync no-ops. The
+    * continuous-migration shape: convert once, sync on a cadence, cut over
+    * when ready.
     *
     * Refusals mirror the Delta sync: graft-side commits that could have
     * changed the live file set (the cut-over guard, re-checked inside the
-    * commit CAS), a schema or partition-spec change on the source (the
-    * cut-over moment, not a silent sync step). Source table properties do
-    * NOT propagate (Iceberg properties rarely map onto graft semantics —
-    * set them locally if needed). Returns the graft version. */
+    * commit CAS), a non-followable schema change or a partition-spec
+    * change on the source (the cut-over moment, not a silent sync step).
+    * Source table properties do NOT propagate. Returns the graft version. */
   def sync(spark: SparkSession, dir: String): Long = {
     val (t, consumed) = Mirror.mirrorAt(spark, dir, Follow)
-    val root = Paths.get(dir).toAbsolutePath.normalize
-    val st = replay(root)
-    if (consumedBy(t.properties, st)) return t.version
-    // a source that adopted non-identity transforms or equality deletes
-    // since the import can no longer mirror in place (cut-over moment)
-    gateZeroCopy(root, st)
-    val snap0 = t.snapshot()
-    val mapped = ColumnIds.mapped(snap0.schema)
-    val incoming =
-      if (mapped) st.schemaWithIds else ColumnIds.strip(st.schemaWithIds)
-    // r13: SOURCE-side renames (by-id) and added nullable columns are
-    // followable — they translate into this sync commit instead of
-    // refusing. Drops, type changes, required adds, partition-column
-    // renames, and renames on a name-bound import stay cut-over refusals
-    // (see [[Evolution]]).
-    val evolved = incoming != snap0.schema
-    if (evolved)
-      Evolution.requireFollowable(snap0.schema, incoming, mapped, "Iceberg")
-    // partition-column renames land here too: stale partitionValues keys
-    // on existing AddFiles would break exact partition matching
-    // (replaceWhere after cut-over), so the spec's COLUMN NAMES must hold
-    require(st.pcols == snap0.metadata.partitionColumns,
-      s"the Iceberg source's partition spec changed " +
-        s"(${st.pcols.mkString(", ")}) — not syncable in place; re-import")
-    // partition VALUES are stored as strings re-parsed under the current
-    // type: even a widening on a partition column is a cut-over moment
-    if (evolved) snap0.metadata.partitionColumns.foreach { c =>
-      val of = snap0.schema.fields.find(_.name == c).get
-      require(incoming.fields.find(_.name == c).exists(_.dataType == of.dataType),
-        s"partition column '$c' changed type — not syncable in place; " +
-          "re-import")
-    }
-
-    val (newEntries, removed) = Mirror.netDiff(snap0, st.live)
-    // binding gate + exact stats for the NEW files only (O(churn) footers)
-    val footers = footersOf(st, root, newEntries)
-    newEntries.foreach { case (p, _) =>
-      val cols = footers(root.resolve(p).toString)._3
-      if (mapped) cols.foreach { case (name, id) =>
-        require(id.isDefined,
-          s"synced file $p column '$name' carries no field id — this " +
-            "by-id table cannot bind it; re-import")
-      } else cols.foreach { case (name, _) =>
-        // bind against the EVOLVED schema: a name-bound source adding a
-        // nullable column ships files carrying it in the same commit
-        require(incoming.fieldNames.contains(name),
-          s"synced file $p column '$name' is not a schema column — " +
-            "name-mapping this importer cannot resolve")
-      }
-    }
-    // footer stats are re-derived NOW under the current types, so synced
-    // files always tag: stats/bloom trust heals on the mirror after a
-    // followed lossy widening or name reuse
-    val newAdds = toAddFiles(st, root, newEntries, footers, byId = mapped,
-      Mirror.syncTags(snap0, incoming, evolved, mapped))
-    // rebuild the CURRENT mask state (position deletes are snapshot-global);
-    // previously-masked files whose mask vanished clear (REMOVED files drop
-    // their vectors automatically)
-    val dvActions = buildMasks(spark, root, st.deletePaths, st.live.map(_._1))
-    Mirror.NetSync("Iceberg", Mirror.syncOps("Iceberg"),
-      Map("fromSequence" -> consumed.toString,
-        "toSequence" -> st.lastSeq.toString,
-        "sourceVersion" -> st.metaVersion.toString),
-      consumed = Map(SourceSeqKey -> st.lastSeq.toString,
-        SourceMetaVersionKey -> st.metaVersion.toString),
-      alreadyConsumed = consumedBy(_, st),
-      newAdds, dvActions, clearable = st.live.map(_._1).toSet, removed, incoming,
-      evolved, mapped,
-      maxIdFloor = if (mapped) Some(lastColumnId(st)) else None)
-      .commit(t, snap0)
+    val st = replay(Paths.get(dir).toAbsolutePath.normalize)
+    Mirror.snapshotSync(spark, t, st, Map("fromSequence" -> consumed.toString,
+      "toSequence" -> st.lastSeq.toString, "sourceVersion" -> st.metaVersion.toString))
   }
-
-  /** Has a mirror with `props` already consumed `st`? Judged on BOTH
-    * ordering keys: the sequence number (data commits) and the metadata
-    * version (metadata-only commits — a rename writes new metadata WITHOUT
-    * a new snapshot, so its sequence does not move; and a v1→v2 format
-    * upgrade RESTARTS the sequence axis, so seq alone would both stall the
-    * mirror silently and false-trigger a racing sync's stand-down). */
-  private def consumedBy(props: Map[String, String], st: IcebergState): Boolean =
-    props.get(SourceSeqKey).exists(_.toLong >= st.lastSeq) &&
-      props.get(SourceMetaVersionKey).exists(_.toLong >= st.metaVersion)
 
   // ------------------------------------------------------ rewrite import
 
@@ -396,15 +343,11 @@ object IcebergImport {
     val root = Paths.get(srcDir).toAbsolutePath.normalize
     val st = replay(root)
     val lay = layoutOf(st)
-    Mirror.convertRewrite(spark, root, destDir, Follow,
-      if (follow) Some(pointOf(st)) else None, lay.destSchemaBase,
-      lay.destPcols,
-      LakeTable.normalizeProps(sourceProperties(st)) ++ lay.genProps ++
+    Mirror.convertRewrite(spark, st, destDir, follow, lay.destSchemaBase,
+      lay.destPcols, st.properties ++ lay.genProps ++
         (if (follow) Map(RewriteSpecKey -> specSignature(st.partFields))
-        else Map.empty),
-      if (st.live.isEmpty) None
-      else Some(rewriteRows(spark, root, st, st.live, lay, follow,
-        st.eqDeletes, st.deletePaths)))
+        else Map.empty))(
+      rewriteRows(spark, st, _, lay, follow, st.eqDeletes, st.deletePaths))
   }
 
   /** Incremental catch-up for a FOLLOWABLE rewrite destination
@@ -435,22 +378,18 @@ object IcebergImport {
     * mid-sync reads); cost is O(churn) + one merge probe per step.
     * Returns the destination's version. */
   def syncRewrite(spark: SparkSession, srcDir: String, destDir: String): Long =
-    Mirror.syncRewrite(spark, srcDir, destDir, Follow) { (dest, root, consumed) =>
-      val st = replay(root)
-      if (consumedBy(dest.properties, st)) None
-      else {
-        // schema and partition-spec changes stay cut-over refusals for a
-        // rewrite destination (its generated layout and lineage plumbing
-        // were derived from the import-time spec)
-        val lay = layoutOf(st)
-        require(dest.properties.get(RewriteSpecKey)
-            .contains(specSignature(st.partFields)),
-          s"the Iceberg source's partition spec changed — a rewrite " +
-            "destination cannot follow a re-layout; re-import")
-        Mirror.requireSameColumns(dest, Follow, lay.dataSchema,
-          lay.genFields.map(_.name))
-        Some(new RewriteSteps(spark, root, st, lay, consumed))
-      }
+    Mirror.syncRewrite(spark, srcDir, destDir, Follow, replay) { (dest, st, consumed) =>
+      // schema and partition-spec changes stay cut-over refusals for a
+      // rewrite destination (its generated layout and lineage plumbing
+      // were derived from the import-time spec)
+      val lay = layoutOf(st)
+      require(dest.properties.get(RewriteSpecKey)
+          .contains(specSignature(st.partFields)),
+        s"the Iceberg source's partition spec changed — a rewrite " +
+          "destination cannot follow a re-layout; re-import")
+      Mirror.requireSameColumns(dest, Follow, lay.dataSchema,
+        lay.genFields.map(_.name))
+      new RewriteSteps(spark, st, lay, consumed)
     }
 
   /** Iceberg's part of a followable-rewrite sync: the row-level delete
@@ -460,11 +399,9 @@ object IcebergImport {
     * EXISTING entries keep explicit seqs) — a seq > consumed filter would
     * classify them as neither removed-survivors nor new and silently LOSE
     * their rows. */
-  private class RewriteSteps(spark: SparkSession, root: Path,
-      st: IcebergState, lay: RewriteLayout, consumed: Long)
-      extends Mirror.RewriteSteps {
-    import org.apache.spark.sql.functions.{col, expr}
-    val point: Mirror.SourcePoint = pointOf(st)
+  private class RewriteSteps(spark: SparkSession, st: IcebergState,
+      lay: RewriteLayout, consumed: Long) extends Mirror.RewriteSteps {
+    import org.apache.spark.sql.functions.expr
     private def newEqDel(d: Mirror.LedgerDiff): Seq[EqDelete] =
       st.eqDeletes.filter(e => d.newEqDeletes(e.path))
 
@@ -482,19 +419,12 @@ object IcebergImport {
     override def deleteRows(dest: LakeTable, d: Mirror.LedgerDiff): Unit = {
       // new position deletes on already-imported rows
       if (d.newPosDeletes.nonEmpty) {
-        val rootPrefixLen = root.toString.length + 2 // 1-based, past the '/'
-        val pd = spark.read.parquet(d.newPosDeletes: _*)
-          .select(graft.log.DvBitmap.stripPathCol(
-            col("file_path").cast(StringType)).as("pd_abs"),
-            col("pos").cast(LongType).as("pd_pos"))
-          .withColumn("pd_file", expr(s"substring(pd_abs, $rootPrefixLen)"))
-          .drop("pd_abs").distinct()
-        dest.merge(pd,
-          expr(s"target.`$SrcFileCol` = source.pd_file AND " +
-            s"target.`$SrcPosCol` = source.pd_pos"))
-          .whenMatchedDelete()
-          .withTxn(Mirror.PosDelAppId, st.lastSeq)
-          .execute(): Unit
+        val rootPrefixLen = st.root.toString.length + 2 // 1-based, past the '/'
+        val pd = posDeleteRows(spark, d.newPosDeletes).select(
+          expr(s"substring(__path, $rootPrefixLen)").as("pd_file"),
+          col("__idx").as("pd_pos")).distinct()
+        Mirror.deleteMatching(dest, pd, expr(s"target.`$SrcFileCol` = source.pd_file AND " +
+          s"target.`$SrcPosCol` = source.pd_pos"), Mirror.PosDelAppId, st.lastSeq)
       }
       // new equality deletes on already-imported rows: one merge per
       // distinct key set (grouped reads, like the batch path), SEQUENCE-
@@ -508,21 +438,16 @@ object IcebergImport {
           val keys = eqDeleteRows(spark, st, srcNames, keyFields, group)
             .groupBy(keyFields.map(f => col(s"`__eq_${f.name}`")): _*)
             .agg(org.apache.spark.sql.functions.max("__dseq").as("eq_dseq"))
-          dest.merge(keys, (keyFields.map(f =>
+          // one txn slot per key-set group: group order is deterministic
+          // (sorted), so a replay resumes exactly where it crashed
+          Mirror.deleteMatching(dest, keys, (keyFields.map(f =>
               expr(s"target.`${f.name}` <=> source.`__eq_${f.name}`")) :+
-              expr(s"target.`${Mirror.SrcSeqCol}` < source.eq_dseq"))
-            .reduce(_ && _))
-            .whenMatchedDelete()
-            // one txn slot per key-set group: group order is deterministic
-            // (sorted), so a replay resumes exactly where it crashed
-            .withTxn(s"${Mirror.EqDelAppId}:$i", st.lastSeq)
-            .execute(): Unit
+              expr(s"target.`${Mirror.SrcSeqCol}` < source.eq_dseq")).reduce(_ && _),
+            s"${Mirror.EqDelAppId}:$i", st.lastSeq)
       }
     }
 
-    def rows(d: Mirror.LedgerDiff): org.apache.spark.sql.DataFrame = {
-      val byPath = st.live.toMap
-      val newData = d.back.map(p => p -> byPath(p))
+    def rows(d: Mirror.LedgerDiff): DataFrame = {
       // ALL live eq-deletes, not just the new ones: a compaction-born file
       // keeps its OLD data sequence, so an old delete with a higher seq
       // still applies to it — the per-file sequence gate inside the
@@ -537,10 +462,9 @@ object IcebergImport {
       // wasted (anti-join matches nothing) but a restored path's old
       // deletes MUST re-apply — correctness over IO (review r14)
       val windowPosDel =
-        if (newData.exists { case (p, _) => st.liveSeq(p) <= consumed })
-          st.deletePaths
+        if (d.back.exists(st.liveSeq(_) <= consumed)) st.deletePaths
         else d.newPosDeletes
-      rewriteRows(spark, root, st, newData, lay, follow = true,
+      rewriteRows(spark, st, d.back, lay, follow = true,
         st.eqDeletes, windowPosDel)
     }
   }
@@ -586,14 +510,15 @@ object IcebergImport {
     * lineage-CLUSTERED (whole source files per task, modulo hash
     * collisions) — that is what lets the sync's removal merges rewrite
     * only the touched files' descendants instead of the table. */
-  private def rewriteRows(spark: SparkSession, root: Path, st: IcebergState,
-      subset: Seq[(String, GenericRecord)], lay: RewriteLayout,
-      follow: Boolean, eqDeletes: Seq[EqDelete],
-      posDeletes: Seq[String]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
+  private def rewriteRows(spark: SparkSession, st: IcebergState,
+      subset: Seq[String], lay: RewriteLayout,
+      follow: Boolean, eqDeletes: Seq[EqDelete], posDeletes: Seq[String]): DataFrame = {
+    val root = st.root
+    def abs(p: String) = root.resolve(p).toString
     // ---- binding: by field id when every subset footer carries ids ----
-    val allIds = bindsById(st, root, subset,
-      Stats.footerFieldIds(subset.map(p => root.resolve(p._1))))
+    val footerIds = Stats.footerFieldIds(subset.map(root.resolve))
+    val allIds = Mirror.bindFooters(subset.map(p => p -> footerIds(abs(p))),
+      st.schemaWithIds.fieldNames.toSet, Map.empty, None)
     val readSchema = if (allIds) st.schemaWithIds else lay.dataSchema
     // by-id resolution must hold on ANY session (the refusal message sends
     // users here directly): without this conf Spark resolves by NAME and a
@@ -601,29 +526,29 @@ object IcebergImport {
     // guard LakeTable.readFiles carries
     if (allIds)
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val raw = Mirror.scanFiles(spark, readSchema,
-      subset.map(p => root.resolve(p._1).toString), "the manifests' live set")
+    val raw = Mirror.scanFiles(spark, readSchema, subset.map(abs),
+      "the manifests' live set")
 
     // ---- position deletes: (file, position) anti-join ----
     var cur =
       if (posDeletes.isEmpty && eqDeletes.isEmpty && !follow) raw
       else raw.withColumn("__idx", col("_metadata.row_index"))
-    if (posDeletes.nonEmpty) {
-      val del = spark.read.parquet(posDeletes.map(Stats.stripScheme): _*)
-        .select(graft.log.DvBitmap.stripPathCol(
-          col("file_path").cast(StringType)).as("__dfile"),
-          col("pos").cast(LongType).as("__didx"))
-      cur = cur.join(del,
-        cur("__file") === del("__dfile") && cur("__idx") === del("__didx"),
-        "left_anti")
-    }
-    // ---- per-file (sequence, scope) ride the rows: the eq-delete gate
-    // needs them, and follow mode persists the sequence as lineage ----
+    if (posDeletes.nonEmpty)
+      cur = DvBitmap.dropPositions(cur, posDeleteRows(spark, posDeletes))
+    // ---- per-file (data sequence, partition-scope key) ride the rows:
+    // the eq-delete gate needs them, and follow mode persists the sequence
+    // as lineage — only the SCANNED subset's files, so an incremental
+    // sync's window pays O(window) ----
     if (follow || eqDeletes.nonEmpty)
-      cur = attachSeqScope(spark, root, st, subset, cur)
+      cur = Mirror.attachPerFile(spark, cur,
+        Seq(StructField("__seq", LongType), StructField("__pscope", StringType)),
+        subset.map { p =>
+          val (specId, tuple) = st.liveScope(p)
+          abs(p) -> Seq(st.liveSeq(p), scopeKey(specId, tuple))
+        })
     // ---- equality deletes (see [[applyEqualityDeletes]]) ----
     if (eqDeletes.nonEmpty)
-      cur = applyEqualityDeletes(spark, root, st, cur, eqDeletes)
+      cur = applyEqualityDeletes(spark, st, cur, eqDeletes)
 
     // ---- project + repartition by the destination partition keys ----
     val typed = cur.select(lay.dataSchema.fieldNames.toIndexedSeq.map(col) ++
@@ -644,37 +569,6 @@ object IcebergImport {
     specId + "|" + tuple.map { case (k, v) =>
       k + "=" + (if (v == null) "\u0000" else v) }.mkString(",")
 
-  /** Broadcasting one (path, sequence, scope) row per live data file is
-    * the fast path for attaching the sequence gate to the scan; above
-    * this many live files (a multi-GB broadcast at 10M files) the join
-    * degrades to a plain shuffle join instead — the same two-tier
-    * discipline as the DV mask reads. */
-  private def broadcastFileMetaMax(spark: SparkSession): Long =
-    scala.util.Try(spark.conf.get("graft.iceberg.broadcastFileMetaMax").toLong)
-      .getOrElse(1000000L)
-
-  /** Attach each row's (data sequence number, partition-scope key) from a
-    * per-file map joined on the reader path — only the SCANNED subset's
-    * files, not the whole live set (an incremental sync's window must pay
-    * O(window), not O(live files), in driver map-building and broadcast
-    * bytes). Broadcast below [[broadcastFileMetaMax]], plain shuffle join
-    * above (the DV two-tier discipline). */
-  private def attachSeqScope(spark: SparkSession, root: Path,
-      st: IcebergState, subset: Seq[(String, GenericRecord)],
-      cur: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    import spark.implicits._
-    val seqDf = subset.map { case (p, _) =>
-      val (specId, tuple) = st.liveScope(p)
-      (root.resolve(p).toString, st.liveSeq(p), scopeKey(specId, tuple))
-    }.toDF("__sfile", "__seq", "__pscope")
-    val seqSide =
-      if (subset.size <= broadcastFileMetaMax(spark)) broadcast(seqDf)
-      else seqDf
-    cur.join(seqSide, cur("__file") === seqDf("__sfile")).drop("__sfile")
-  }
-
   /** Apply `st`'s equality deletes to `cur` (a live-file scan carrying
     * `__file`) under the spec's sequence rule — a delete applies only to
     * data files with a STRICTLY smaller data sequence number — and
@@ -690,13 +584,12 @@ object IcebergImport {
     *    (a tiny per-file map joins on `_metadata.file_path`), so one
     *    anti-join per distinct key set applies every sequence and every
     *    partition at once;
-    *  - the per-live-file (sequence, scope) attach broadcasts only below
-    *    [[broadcastFileMetaMax]];
+    *  - the per-live-file (sequence, scope) attach is
+    *    [[Mirror.attachPerFile]]'s two-tier join;
     *  - each delete file's partition scope resolves by [[eqScopeOf]]. */
-  private def applyEqualityDeletes(spark: SparkSession, root: Path,
-      st: IcebergState, cur0: org.apache.spark.sql.DataFrame,
-      eqDeletes: Seq[EqDelete]): org.apache.spark.sql.DataFrame = {
-    var cur = cur0 // carries __seq and __pscope (attachSeqScope)
+  private def applyEqualityDeletes(spark: SparkSession, st: IcebergState,
+      cur0: DataFrame, eqDeletes: Seq[EqDelete]): DataFrame = {
+    var cur = cur0 // carries __seq and __pscope (attachPerFile)
     resolveEqDeletes(st, eqDeletes).foreach { case (srcNames, keyFields, group) =>
       val delDf = eqDeleteRows(spark, st, srcNames, keyFields, group)
       val cond = keyFields.map(f =>
@@ -710,27 +603,24 @@ object IcebergImport {
 
   /** The rows of one resolved equality-delete group: each key column as
     * `__eq_<column>`, plus the delete FILE's sequence (`__dseq`) and scope
-    * (`__dscope`, null when table-wide) attached as DATA via a tiny
-    * broadcast map. The read schema is explicit and target-typed: by-name
+    * (`__dscope`, null when table-wide) attached as DATA
+    * ([[Mirror.attachPerFile]]). The read schema is explicit and target-typed: by-name
     * resolution of exactly the resolved key columns (group membership
     * guarantees presence), loud on an unconvertible physical type — a
     * silent cast-to-null would KEEP rows the delete intended to remove. */
   private def eqDeleteRows(spark: SparkSession, st: IcebergState,
       srcNames: Seq[String], keyFields: Seq[StructField],
-      group: Seq[EqDelete]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    import spark.implicits._
-    val metaDf = group.map { d =>
-      (Paths.get(d.path).toString, d.seq, eqScopeOf(st, d).orNull) }
-      .toDF("__dpath", "__dseq", "__dscope")
+      group: Seq[EqDelete]): DataFrame = {
     val readSchema = StructType(srcNames.zip(keyFields).map {
       case (n, f) => StructField(n, f.dataType) })
-    spark.read.schema(readSchema).parquet(group.map(_.path).distinct.sorted: _*)
-      .select(srcNames.zip(keyFields).map { case (n, f) =>
-        col(s"`$n`").as(s"__eq_${f.name}") } :+
-        graft.log.DvBitmap.stripPathCol(
-          col("_metadata.file_path")).as("__dpath"): _*)
-      .join(broadcast(metaDf), "__dpath").drop("__dpath")
+    Mirror.attachPerFile(spark,
+      spark.read.schema(readSchema).parquet(group.map(_.path).distinct.sorted: _*)
+        .select(srcNames.zip(keyFields).map { case (n, f) =>
+          col(s"`$n`").as(s"__eq_${f.name}") } :+
+          DvBitmap.stripPathCol(col("_metadata.file_path")).as("__file"): _*),
+      Seq(StructField("__dseq", LongType), StructField("__dscope", StringType)),
+      group.map(d => Paths.get(d.path).toString -> Seq(d.seq, eqScopeOf(st, d).orNull)))
+      .drop("__file")
   }
 
   /** Scope resolution for one equality-delete file (r13 verdict task 8):
@@ -750,7 +640,7 @@ object IcebergImport {
     *    loudly. (Before r14 such a delete silently never matched — a
     *    silent-KEEP of rows the delete intended to remove.) */
   private def eqScopeOf(st: IcebergState, d: EqDelete): Option[String] =
-    if (st.specSize(d.specId) == 0) None
+    if (st.specFields.get(d.specId).forall(_.isEmpty)) None
     else {
       val dims = st.specFields(d.specId).map(_.column)
       val keyCols = d.equalityIds.flatMap(i => st.fieldById.get(i)).map(_.name)
@@ -824,19 +714,6 @@ object IcebergImport {
   private val Follow = Mirror.FollowKeys("Iceberg", RewriteFollowKey,
     RewriteSourceKey, SourceSeqKey, Seq(SrcFileCol, SrcPosCol, Mirror.SrcSeqCol))
 
-  /** The followable state of a replayed source, keyed by
-    * `<sequence>-<metadata version>`: live data files relative to the
-    * source root, position/equality delete files canonical-absolute. The
-    * next sync diffs against the ledger named by its CONSUMED keys to
-    * enumerate removed data files and newly-arrived delete files in
-    * O(churn). */
-  private def pointOf(st: IcebergState): Mirror.SourcePoint =
-    Mirror.SourcePoint(Seq(st.lastSeq, st.metaVersion),
-      Mirror.Ledger(st.live.map(_._1 -> "").toMap,
-        st.deletePaths.map(Stats.stripScheme), st.eqDeletes.map(_.path)),
-      Map(SourceSeqKey -> st.lastSeq.toString,
-        SourceMetaVersionKey -> st.metaVersion.toString))
-
   /** The canonical signature of a partition spec (field name, source
     * column, transform — order-sensitive): [[syncRewrite]] refuses when
     * the source's spec no longer matches the one the destination layout
@@ -868,8 +745,7 @@ object IcebergImport {
     val schemaNode = Option(meta.get("schemas")) match {
       case Some(schemas) =>
         val schemaId = num(meta.get("current-schema-id"))
-        schemas.asInstanceOf[java.util.List[java.util.Map[String, Object]]]
-          .asScala.find(s => num(s.get("schema-id")) == schemaId)
+        maps(schemas).find(s => num(s.get("schema-id")) == schemaId)
           .getOrElse(throw new IllegalArgumentException(
             s"current-schema-id $schemaId not present in schemas"))
       case None => Option(meta.get("schema"))
@@ -884,14 +760,8 @@ object IcebergImport {
     val allSpecs: Map[Long, Seq[java.util.Map[String, Object]]] =
       Option(meta.get("partition-specs")) match {
         case Some(specs) =>
-          specs.asInstanceOf[java.util.List[java.util.Map[String, Object]]]
-            .asScala.map(s => num(s.get("spec-id")) -> s.get("fields")
-              .asInstanceOf[java.util.List[java.util.Map[String, Object]]]
-              .asScala.toSeq).toMap
-        case None => Map(0L -> Option(meta.get("partition-spec"))
-          .map(_.asInstanceOf[java.util.List[java.util.Map[String, Object]]]
-            .asScala.toSeq)
-          .getOrElse(Nil))
+          maps(specs).map(s => num(s.get("spec-id")) -> maps(s.get("fields"))).toMap
+        case None => Map(0L -> maps(meta.get("partition-spec")))
       }
     val defaultSpecId =
       Option(meta.get("default-spec-id")).map(num).getOrElse(0L)
@@ -940,8 +810,7 @@ object IcebergImport {
     val posDeletes = scala.collection.mutable.ListBuffer.empty[String]
     val eqDeletes = scala.collection.mutable.ListBuffer.empty[EqDelete]
     currentSnap.foreach { snapId =>
-      val snap = meta.get("snapshots")
-        .asInstanceOf[java.util.List[java.util.Map[String, Object]]].asScala
+      val snap = maps(meta.get("snapshots"))
         .find(s => num(s.get("snapshot-id")) == snapId)
         .getOrElse(throw new IllegalArgumentException(
           s"current-snapshot-id $snapId not present in snapshots"))
@@ -1007,7 +876,7 @@ object IcebergImport {
       .zip(data.toList.map(d => (d._3, d._4))).toMap
     require(live.map(_._1).distinct.size == live.size,
       s"duplicate live data-file paths in $root's manifests — malformed")
-    IcebergState(metaVersion, meta,
+    IcebergState(root, metaVersion, meta,
       Option(meta.get("last-sequence-number")).map(num)
         .getOrElse(if (formatVersion == 1) metaVersion else 0L),
       formatVersion, schemaWithIds, partFields, live, liveSeq, liveScope,
@@ -1015,97 +884,22 @@ object IcebergImport {
       posDeletes.toList, eqDeletes.toList)
   }
 
-  private type Footer = (Long, Map[String, ColStats], Seq[(String, Option[Int])])
-
-  /** ONE parallel footer pass over `entries`: (count, name-keyed exact
-    * stats, (name, field id) pairs) per absolute path. */
-  private def footersOf(st: IcebergState, root: Path,
-      entries: Seq[(String, GenericRecord)]): Map[String, Footer] =
-    if (entries.isEmpty) Map.empty
-    else Stats.fromFootersWithIds(entries.map(p => root.resolve(p._1)),
-      st.schemaWithIds)
-
-  /** Live entries -> graft AddFiles: manifest count cross-checked against
-    * the footer, footer-exact stats, identity partition tuple decoded by
-    * the SPEC field name into graft's string encoding. Stats land by
-    * footer-column NAME, but a `byId` mirror READS by field id — so drop
-    * any stats entry whose footer column name matches a schema column
-    * carrying a DIFFERENT id (Iceberg never reuses ids but MAY reuse a
-    * renamed-away name: that footer column's bytes are not what by-id reads
-    * return for the same-named schema column, so its min/max/nullCount
-    * would silently poison exact metadata-only answers). */
-  private def toAddFiles(st: IcebergState, root: Path,
-      entries: Seq[(String, GenericRecord)], footers: Map[String, Footer],
-      byId: Boolean, tags: Map[String, String] = Map.empty): Seq[AddFile] = {
-    val now = System.currentTimeMillis()
-    entries.map { case (p, df) => toAddFile(st, p, df,
-      footers(root.resolve(p).toString), byId, now, tags) }
-  }
-
-  private def toAddFile(st: IcebergState, p: String, df: GenericRecord,
-      footer: Footer, byId: Boolean, now: Long,
-      tags: Map[String, String]): AddFile = {
-    val (footerCount, stats, ids) = footer
-    val colStats = if (!byId) stats else stats -- ids.collect {
-      case (name, Some(id)) if st.idOfName.get(name).exists(_ != id.toLong) => name }
-    val manifestCount = df.get("record_count").asInstanceOf[Long]
-    require(manifestCount == footerCount,
-      s"manifest says $manifestCount records for $p, the footer says " +
-        s"$footerCount — refusing inconsistent metadata")
-    val pv: Map[String, String] =
-      if (st.pcols.isEmpty) Map.empty
-      else {
-        val part = df.get("partition").asInstanceOf[GenericRecord]
-        st.partFields.map { pf =>
-          val v = part.get(pf.specName) // keyed by the SPEC field name
-          val dt = st.schemaWithIds.fields.find(_.name == pf.column).get.dataType
-          pf.column -> (if (v == null) null else dt match {
-            case DateType => java.time.LocalDate
-              .ofEpochDay(v.asInstanceOf[java.lang.Number].longValue()).toString
-            case _ => v.toString
-          })
-        }.toMap
-      }
-    AddFile(path = p, partitionValues = pv,
-      size = df.get("file_size_in_bytes").asInstanceOf[Long],
-      numRecords = manifestCount, stats = colStats,
-      modificationTime = now,
-      tags = if (tags.isEmpty) null else tags)
-  }
-
-  /** Decode the current position deletes into per-file masks — one
-    * collected bitmap row per masked file — written as ONE `.bin` under
-    * `root` by the engine's vector writer; returns one
-    * [[graft.log.DeletionVector]] per masked `live` file (root-relative
-    * paths). file_path values canonicalize like data paths (scheme-ful
-    * URIs); DANGLING rows drop via a broadcast semi-join against the live
-    * set — never phantom vectors, never fatal. */
-  private def buildMasks(spark: SparkSession, root: Path,
-      deletePaths: Seq[String],
-      live: Seq[String]): Seq[graft.log.DeletionVector] = {
-    if (deletePaths.isEmpty) return Nil
-    import org.apache.spark.sql.functions.col
-    val liveDf = {
-      import spark.implicits._
-      live.map(p => root.resolve(p).toString).toDF("__path")
-    }
-    val masks = spark.read
-      .parquet(deletePaths.map(p => Stats.stripScheme(p)): _*)
-      .select(graft.log.DvBitmap.stripPathCol(
-        col("file_path").cast(StringType)).as("__path"), col("pos"))
-      .join(org.apache.spark.sql.functions.broadcast(liveDf),
-        Seq("__path"), "left_semi")
-      .groupBy("__path")
-      .agg(graft.log.DvBitmap.aggPositions(col("pos")).as("__bitmap"))
-      .collect().map(r => r.getString(0) ->
-        graft.log.DvBitmap.deserialize(r.getAs[Array[Byte]](1))).toMap
-    graft.log.DvStore.write(root,
-      live.flatMap(p => masks.get(root.resolve(p).toString).map(p -> _)), Map.empty)
-  }
+  /** Position-delete files as (`__path` canonical data-file path, `__idx`
+    * row position) rows; file_path values canonicalize like data paths
+    * (scheme-ful URIs). */
+  private def posDeleteRows(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.parquet(paths.map(Stats.stripScheme): _*).select(
+      DvBitmap.stripPathCol(col("file_path").cast(StringType)).as("__path"),
+      col("pos").cast(LongType).as("__idx"))
 
   // ------------------------------------------------------------ helpers
 
   private def num(o: Object): Long = o.asInstanceOf[java.lang.Number].longValue()
+
+  /** A metadata JSON array of objects (absent: empty). */
+  private def maps(o: Object): Seq[java.util.Map[String, Object]] =
+    Option(o).map(_.asInstanceOf[java.util.List[java.util.Map[String, Object]]]
+      .asScala.toSeq).getOrElse(Nil)
 
   /** Sort-order + Puffin-statistics translation for the zero-copy import
     * (r14): the source's DEFAULT sort order — when every field is an
@@ -1123,9 +917,6 @@ object IcebergImport {
     * pass — full import → mirror → export symmetry. */
   private def sortAndStatsProps(st: IcebergState, root: Path): Map[String, String] = {
     def nameOf(id: Int): Option[String] = st.fieldById.get(id).map(_.name)
-    def maps(o: Object): Seq[java.util.Map[String, Object]] =
-      Option(o).map(_.asInstanceOf[java.util.List[java.util.Map[String, Object]]]
-        .asScala.toSeq).getOrElse(Nil)
     val cluster: Map[String, String] = scala.util.Try {
       val defId = Option(st.meta.get("default-sort-order-id"))
         .map(num).getOrElse(0L)
@@ -1161,15 +952,9 @@ object IcebergImport {
           }
       if (sketches.isEmpty) Map.empty[String, String]
       else {
-        val node = plain.createObjectNode()
-        node.put("analyzedAtVersion", -1L)
-        val colsNode = node.putObject("columns")
-        val b64 = java.util.Base64.getEncoder
-        sketches.foreach { case (n, bytes, _) =>
-          colsNode.put(n, b64.encodeToString(bytes)): Unit }
         val rel = s"_stats/theta-imported-$current.json"
-        store.writeAtomic(root.resolve(rel),
-          plain.writeValueAsBytes(node), overwrite = true)
+        graft.table.Puffin.writeThetaSidecar(store, root, rel, -1L,
+          sketches.map { case (n, bytes, _) => n -> bytes })
         sketches.map { case (n, _, est) =>
           s"stats.$n.distinctCount" -> est.toString }.toMap +
           ("graft.stats.thetaSidecar" -> rel)
@@ -1245,8 +1030,7 @@ object IcebergImport {
     * later if the files cannot support by-id reads). */
   private def structOf(node: java.util.Map[String, Object],
       topLevelIds: Boolean): StructType =
-    StructType(node.get("fields")
-      .asInstanceOf[java.util.List[java.util.Map[String, Object]]].asScala
+    StructType(maps(node.get("fields"))
       .map { f =>
         val base = StructField(f.get("name").toString,
           sparkType(f.get("type")),

@@ -5,18 +5,25 @@ import java.nio.file.{Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, expr}
 import org.apache.spark.sql.types._
 
-import graft.log.{AddFile, CommitInfo, DeletionVector, Protocol, Snapshot, Stats, TxLog}
+import graft.log.{AddFile, ColStats, ColumnIds, CommitInfo, DeletionVector, Protocol,
+  Snapshot, Stats, TxLog}
 import graft.table.LakeTable
 
-/** The commit protocol every foreign-table mirror shares, Delta and Iceberg
-  * alike: each format replays its own log or metadata into a live set, and
-  * this object turns that into graft commits — the zero-copy CONVERT
-  * ([[convertCommit]]), the in-place net-diff sync ([[NetSync]]), and the
-  * followable rewrite ([[convertRewrite]], [[syncRewrite]]). */
+/** The foreign-snapshot core every mirror shares, Delta and Iceberg alike.
+  * Each format replays its own log or metadata into one [[ForeignSnapshot]]
+  * — live files, masks, schema with field ids, the consumed source point
+  * and the source properties — and keeps only what is its own: log and
+  * metadata parsing, Delta's incremental JSON-tail sync with stat eras,
+  * Iceberg's transforms, sequence/scope attach and equality deletes. This
+  * object does the rest once: the zero-copy CONVERT ([[convert]]), the
+  * snapshot-diff sync ([[snapshotSync]]) and its commit ([[NetSync]]), the
+  * footer field-id binding gate ([[bindFooters]]), the per-file column
+  * attach ([[attachPerFile]]) and the followable rewrite
+  * ([[convertRewrite]], [[syncRewrite]]). */
 private[graft] object Mirror {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -58,15 +65,17 @@ private[graft] object Mirror {
       kind: String): Unit = {
     val syncPoint = commits.filter(c => syncOps.contains(c.operation))
       .map(_.version).maxOption.getOrElse(-1L)
-    val diverging = commits.filter(_.version > syncPoint)
-      .filterNot(c => FileSetNeutralOps(c.operation))
+    refuseDiverged(commits.filter(_.version > syncPoint)
+      .filterNot(c => FileSetNeutralOps(c.operation)),
+      s"the table since the last $kind sync")
+  }
+
+  private def refuseDiverged(diverging: Seq[CommitInfo], what: String): Unit =
     require(diverging.isEmpty,
       s"graft-side commit(s) ${diverging.map(c =>
-        s"v${c.version} ${c.operation}").mkString(", ")} changed the " +
-        s"table since the last $kind sync — local writes are the " +
-        "cut-over moment; this table can no longer mirror the source " +
-        "(re-import into a fresh directory to keep syncing)")
-  }
+        s"v${c.version} ${c.operation}").mkString(", ")} changed $what — " +
+        "local writes are the cut-over moment; the table can no longer " +
+        "mirror its source (re-import into a fresh directory to keep syncing)")
 
   /** The operations that mark a `kind` mirror's sync points. */
   def syncOps(kind: String): Set[String] = Set("CONVERT", s"${kind.toUpperCase} SYNC")
@@ -86,12 +95,6 @@ private[graft] object Mirror {
         s"$dir was not imported from ${keys.kind} (no ${keys.consumed} property)"))
     requireNotDiverged(t.snapshot().commits, syncOps(keys.kind), keys.kind)
     (t, consumed)
-  }
-
-  /** The `live` entries `snap` lacks, and the paths `live` dropped. */
-  def netDiff[A](snap: Snapshot, live: Seq[(String, A)]): (Seq[(String, A)], Seq[String]) = {
-    val mirrored = snap.files.map(_.path).toSet
-    (live.filterNot(e => mirrored(e._1)), (mirrored -- live.map(_._1)).toSeq)
   }
 
   /** CHECK constraints cannot be enforced on FOREIGN files: graft
@@ -122,18 +125,12 @@ private[graft] object Mirror {
     * file-set-neutral housekeeping set, and OPTIMIZE/REORG. */
   def requireRewriteNotDiverged(dest: LakeTable): Unit = {
     val rowPreserving = Set("OPTIMIZE", "REORG")
-    val diverging = dest.snapshot().commits.filterNot { c =>
+    refuseDiverged(dest.snapshot().commits.filterNot { c =>
       c.operation == "CREATE TABLE" ||
         FileSetNeutralOps(c.operation) ||
         rowPreserving(c.operation) ||
         c.operationParameters.get("txnAppId").exists(_.startsWith(AppIdPrefix))
-    }
-    require(diverging.isEmpty,
-      s"graft-side commit(s) ${diverging.map(c =>
-        s"v${c.version} ${c.operation}").mkString(", ")} changed this " +
-        "rewrite destination's rows — local DML is the cut-over moment; " +
-        "the table can no longer mirror its source (re-import into a " +
-        "fresh directory to keep syncing)")
+    }, "this rewrite destination's rows")
   }
 
   // ------------------------------------------------ zero-copy commits
@@ -179,31 +176,6 @@ private[graft] object Mirror {
     Protocol.merge(Protocol.merge(base, LakeTable.impliedFeatures(props)),
       if (!hasDvs) base else Protocol(1, 1, null, Seq("deletionVectors")))
 
-  /** The zero-copy import: ONE graft commit at version 0 materializing the
-    * source's live snapshot under `root`, sharing every data file in
-    * place. Masks were written before it — a lost CAS leaves an orphan
-    * vector file, never a bad commit — and a lost race with a concurrent
-    * import returns theirs. */
-  def convertCommit(spark: SparkSession, dir: String, root: Path,
-      tableId: String, schema: StructType, partitionColumns: Seq[String],
-      properties: Map[String, String], sourceFormat: String,
-      sourceVersion: Long, adds: Seq[AddFile],
-      dvs: Seq[DeletionVector]): LakeTable = {
-    val now = System.currentTimeMillis()
-    val meta = graft.log.Metadata(tableId, root.getFileName.toString,
-      schema.json, partitionColumns, properties, now)
-    val ci = CommitInfo(0L, now, "CONVERT",
-      Map("numFiles" -> adds.size.toString,
-        "sourceFormat" -> sourceFormat,
-        "numDeletionVectors" -> dvs.size.toString,
-        "sourceVersion" -> sourceVersion.toString), Map.empty, -1L,
-      LakeTable.currentUser, false, java.util.UUID.randomUUID().toString)
-    val proto = Protocol.withDvDescriptors(
-      protocolFor(Protocol.Current, meta.properties, dvs.nonEmpty), dvs)
-    new TxLog(root).tryCommit(0L, ci +: proto +: meta +: (adds ++ dvs)): Unit
-    LakeTable.forPath(spark, dir)
-  }
-
   /** One in-place sync as ONE net-diff commit: `adds` land zero-copy,
     * still-live `removes` leave, `dvs` land, and every graft mask on a
     * `clearable` path that `dvs` does not replace clears. The `consumed`
@@ -212,21 +184,18 @@ private[graft] object Mirror {
     * CURRENT schema (by field id when `mapped`), so local field metadata a
     * file-set-neutral commit stamped meanwhile (a column DEFAULT) survives;
     * `maxIdFloor` is the source's id high-water mark ([[maxIdProp]]). */
-  case class NetSync(kind: String, syncOps: Set[String],
-      params: Map[String, String], consumed: Map[String, String],
+  case class NetSync(kind: String, params: Map[String, String], consumed: Map[String, String],
       alreadyConsumed: Map[String, String] => Boolean,
       adds: Seq[AddFile], dvs: Seq[DeletionVector],
       clearable: String => Boolean, removes: Seq[String],
       incoming: StructType, evolved: Boolean, mapped: Boolean,
       maxIdFloor: Option[Long], sourceProps: Map[String, String] = Map.empty) {
 
-    def op: String = s"${kind.toUpperCase} SYNC"
-
     def commit(t: LakeTable, snap0: Snapshot): Long = {
       val now = System.currentTimeMillis()
       val maskedNow = dvs.map(_.forFile).toSet
       try {
-        t.commitWithRetry(op, params, snap0,
+        t.commitWithRetry(s"${kind.toUpperCase} SYNC", params, snap0,
           Map("numAddedFiles" -> adds.size.toLong,
             "numRemovedFiles" -> removes.size.toLong)) { s =>
           // a racing sync already consumed this state: stand down, no-op
@@ -234,7 +203,7 @@ private[graft] object Mirror {
             throw new LakeTable.EpochAlreadyCommitted
           // TOCTOU closure re-check: a local write that landed after the
           // entry guard makes this retry refuse instead of duplicating rows
-          requireNotDiverged(s.commits, syncOps, kind)
+          requireNotDiverged(s.commits, syncOps(kind), kind)
           requireNoConstraintsForAdds(s.metadata.properties, adds.size.toLong, kind)
           val live = s.files.map(_.path).toSet
           val clears = s.dvs.keys.filterNot(maskedNow).filter(clearable)
@@ -258,6 +227,226 @@ private[graft] object Mirror {
       } catch { case _: LakeTable.EpochAlreadyCommitted => () }
       t.version
     }
+  }
+
+  // ------------------------------------------------ foreign snapshot core
+
+  /** The files a binding reads, and how each becomes an AddFile: what
+    * [[liveAdds]] needs of a replayed source. */
+  trait FileSource {
+    /** The source table root, absolute and normalized. */
+    def root: Path
+    /** logical -> physical top-level names, when the source pins physical
+      * names to field ids (empty otherwise). */
+    def physicalOf(schema: StructType): Map[String, String] = Map.empty
+    /** Whether `path`'s stats come from its footer, read under the
+      * binding schema's current types: its footer is read even when the
+      * binding is unchecked. */
+    def needsFooter(path: String): Boolean = true
+    /** `paths` as AddFiles under `schema`, given each read footer's
+      * (record count, exact stats keyed by schema name) by path. */
+    def addFiles(spark: SparkSession, paths: Seq[String], schema: StructType,
+        footers: Map[String, (Long, Map[String, ColStats])],
+        tags: Map[String, String]): Seq[AddFile]
+  }
+
+  /** One format's replayed source state: what the shared import, sync and
+    * rewrite consume. The abstract members past `maxColumnId` are the
+    * per-format hooks. */
+  trait ForeignSnapshot extends FileSource {
+    def keys: FollowKeys
+    def tableId: String
+    /** The source schema, top-level field ids where the source has them. */
+    def schema: StructType
+    def partitionColumns: Seq[String]
+    /** The live data files, root-relative, in log order. */
+    def files: Seq[String]
+    def point: SourcePoint
+    /** The source's properties, graft-normalized. */
+    def properties: Map[String, String]
+    /** The source's column-id high-water mark. */
+    def maxColumnId: Long
+
+    /** Refusals of a zero-copy import or sync: what only a rewrite can
+      * honor. */
+    def gateInPlace(): Unit
+    /** The source schema as a mirror bound by id (`mapped`) or by name
+      * reads it, and whether it evolves `base`; refuses what [[Evolution]]
+      * cannot follow. */
+    def incoming(base: StructType, mapped: Boolean): (StructType, Boolean)
+    /** The live masks as graft vectors (may write them under `root`). */
+    def masks(spark: SparkSession): Seq[DeletionVector]
+    /** Extra properties of the zero-copy import (may write sidecars). */
+    def importProps(): Map[String, String] = Map.empty
+    /** The properties an in-place sync carries onto the mirror. */
+    def syncProps: Map[String, String] = properties
+  }
+
+  /** The footer binding gate. By id, every footer column must carry a
+    * field id; where physical names are `pinned` to ids (Delta's column
+    * mapping), a pinned name must carry its own id and no other column may
+    * reuse a pinned one. By name, every footer column must name a column
+    * in `names`: a by-name read would misread a renamed one. `byId` None:
+    * by id exactly when every column of every file carries an id. Returns
+    * whether the files bind by id. */
+  def bindFooters(footers: Seq[(String, Seq[(String, Option[Int])])],
+      names: Set[String], pinned: Map[String, Long], byId: Option[Boolean]): Boolean = {
+    val ids = byId.getOrElse(
+      footers.nonEmpty && footers.forall(_._2.forall(_._2.isDefined)))
+    footers.foreach { case (p, cols) => cols.foreach { case (name, id) =>
+      if (!ids) require(names(name),
+        s"file $p column '$name' is not a schema column and the files " +
+          "carry no usable field ids — name-mapping this importer cannot " +
+          "resolve; rewrite the table on the source side")
+      else {
+        require(id.isDefined,
+          s"file $p column '$name' carries no parquet field id — by-id " +
+            "resolution would be undefined; rewrite the file (or import " +
+            "with convertRewrite)")
+        pinned.get(name) match {
+          case Some(want) => require(id.get.toLong == want,
+            s"file $p column '$name' has field id ${id.get}, the mapped " +
+              s"schema says $want — refusing a mis-binding read")
+          case None => require(!pinned.values.exists(_ == id.get.toLong),
+            s"file $p column '$name' (not in the live schema) reuses " +
+              s"live field id ${id.get} — by-id reads would bind its bytes")
+        }
+      }
+    } }
+    ids
+  }
+
+  /** `paths` of `src` as AddFiles under `schema`: ONE parallel footer pass,
+    * then [[bindFooters]], then each file's AddFile. The pass reads every
+    * file when the binding is checked, else those
+    * [[FileSource.needsFooter]] names; a by-name binding is checked when
+    * every footer is read anyway. Footer stats key by logical name; under
+    * by-id reads a footer column whose name a schema column with ANOTHER
+    * id now carries (a renamed-away name reused) drops, since by-id reads
+    * do not return its bytes. Returns whether the files bind by id. */
+  def liveAdds(spark: SparkSession, src: FileSource, paths: Seq[String],
+      schema: StructType, byId: Option[Boolean],
+      tags: Map[String, String]): (Boolean, Seq[AddFile]) = {
+    val phys = src.physicalOf(schema)
+    def physName(n: String) = phys.getOrElse(n, n)
+    val checked = !byId.contains(false) || paths.forall(src.needsFooter)
+    val read = paths.filter(p => checked || src.needsFooter(p))
+    val footers = Stats.fromFootersWithIds(read.map(src.root.resolve),
+      StructType(schema.fields.map(f => f.copy(name = physName(f.name)))))
+    def footerOf(p: String) = footers(src.root.resolve(p).toString)
+    val ids = checked && bindFooters(read.map(p => p -> footerOf(p)._3),
+      schema.fieldNames.toSet,
+      schema.fields.flatMap(f => phys.get(f.name).map(_ -> ColumnIds.idOf(f).get)).toMap,
+      byId)
+    val idOf = schema.fields.flatMap(f => ColumnIds.idOf(f).map(f.name -> _)).toMap
+    val logical = schema.fields.map(f => physName(f.name) -> f.name).toMap
+    (ids, src.addFiles(spark, paths, schema, read.map { p =>
+      val (n, stats, fids) = footerOf(p)
+      val stale = fids.collect { case (c, Some(i)) if ids &&
+        idOf.get(logical.getOrElse(c, c)).exists(_ != i.toLong) => c }.toSet
+      p -> (n, stats.collect { case (c, s) if !stale(c) => logical.getOrElse(c, c) -> s })
+    }.toMap, tags))
+  }
+
+  /** The zero-copy import of the foreign table at `dir`, in place and
+    * idempotent (an imported directory returns its graft table): replay,
+    * gate, bind the live files, and commit them with their masks as ONE
+    * graft commit at version 0, sharing every data file in place. Masks
+    * are written before it — a lost CAS leaves an orphan vector file,
+    * never a bad commit — and a lost race with a concurrent import returns
+    * theirs. A mapped import records the source's id high-water mark
+    * so graft-side ADD COLUMN never reuses a source id; a pre-widened
+    * source keeps type widening enabled, so the feature stamps even when
+    * the source unset the property after applying its changes. The
+    * format's `binding` says how the live files bind to the replayed
+    * schema: by id, by name, or (None) as their footers say. */
+  def convert(spark: SparkSession, dir: String, replay: Path => ForeignSnapshot)(
+      binding: ForeignSnapshot => Option[Boolean]): LakeTable = {
+    if (TxLog.isTable(dir)) return LakeTable.forPath(spark, dir)
+    val st = replay(absolute(dir))
+    st.gateInPlace()
+    val (byId, adds) = liveAdds(spark, st, st.files, st.schema, binding(st), Map.empty)
+    val schema = if (byId) st.schema else ColumnIds.strip(st.schema)
+    val widen =
+      if (!schema.fields.exists(graft.log.TypeWidening.hasChanges)) Map.empty
+      else Map("graft.enableTypeWidening" -> "true")
+    val dvs = st.masks(spark)
+    val now = System.currentTimeMillis()
+    val meta = graft.log.Metadata(st.tableId, st.root.getFileName.toString,
+      schema.json, st.partitionColumns, st.properties ++ st.importProps() ++
+        maxIdProp(if (byId) Some(st.maxColumnId) else None, Map.empty, schema) ++
+        widen ++ st.point.advance, now)
+    val ci = CommitInfo(0L, now, "CONVERT",
+      Map("numFiles" -> adds.size.toString,
+        "sourceFormat" -> st.keys.kind.toLowerCase,
+        "numDeletionVectors" -> dvs.size.toString,
+        // the source's version is the point key's last part
+        "sourceVersion" -> st.point.key.last.toString), Map.empty, -1L,
+      LakeTable.currentUser, false, java.util.UUID.randomUUID().toString)
+    val proto = Protocol.withDvDescriptors(
+      protocolFor(Protocol.Current, meta.properties, dvs.nonEmpty), dvs)
+    new TxLog(st.root).tryCommit(0L, ci +: proto +: meta +: (adds ++ dvs)): Unit
+    LakeTable.forPath(spark, dir)
+  }
+
+  /** Sync the in-place mirror `t` to the replayed `st` as ONE [[NetSync]]
+    * commit (a consumed state is a no-op): files the mirror lacks bind
+    * under the mirror's binding and add zero-copy, vanished files leave,
+    * and the full current mask state replaces the mirror's (masks that
+    * vanished clear; removed files drop theirs). A followable schema
+    * change applies; a re-layout, or a type change of a partition column
+    * (its values are strings re-parsed under the current type), is the
+    * cut-over moment. After an evolution, new files tag for stat heal
+    * only when every one takes its stats from its footer: other stats
+    * were collected under types older than the mirror's. */
+  def snapshotSync(spark: SparkSession, t: LakeTable, st: ForeignSnapshot,
+      params: Map[String, String]): Long = {
+    if (st.point.consumedBy(t.properties)) return t.version
+    st.gateInPlace()
+    val snap0 = t.snapshot()
+    val pcols = snap0.metadata.partitionColumns
+    val mapped = ColumnIds.mapped(snap0.schema)
+    val (incoming, evolved) = st.incoming(snap0.schema, mapped)
+    require(st.partitionColumns == pcols,
+      s"the ${st.keys.kind} source's partition spec changed " +
+        s"(${st.partitionColumns.mkString(", ")}) — not syncable in place; re-import")
+    if (evolved) pcols.foreach { c =>
+      require(incoming(c).dataType == snap0.schema(c).dataType,
+        s"partition column '$c' changed type — not syncable in place; re-import")
+    }
+    val mirrored = snap0.files.map(_.path).toSet
+    val fresh = st.files.filterNot(mirrored)
+    val tags =
+      if (evolved && !fresh.forall(st.needsFooter)) Map.empty[String, String]
+      else syncTags(snap0, incoming, evolved, mapped)
+    val (_, adds) = liveAdds(spark, st, fresh, incoming, Some(mapped), tags)
+    NetSync(st.keys.kind, params, st.point.advance,
+      st.point.consumedBy, adds, st.masks(spark), st.files.toSet,
+      (mirrored -- st.files).toSeq, incoming, evolved, mapped,
+      if (mapped) Some(st.maxColumnId) else None, st.syncProps).commit(t, snap0)
+  }
+
+  /** One (path, columns) row per file above this many files shuffle-joins
+    * instead of broadcasting (a multi-GB broadcast at 10M files) — the
+    * same two-tier discipline as the DV mask reads. Despite its name the
+    * option governs every [[attachPerFile]]: Delta's partition tuples as
+    * well as Iceberg's sequence/scope and equality-delete file metadata. */
+  private def broadcastFileMetaMax(spark: SparkSession): Long =
+    scala.util.Try(spark.conf.get("graft.iceberg.broadcastFileMetaMax").toLong)
+      .getOrElse(1000000L)
+
+  /** Attach per-file columns `cols` to a [[scanFiles]] scan, from one row
+    * per scanned file (absolute path, values) joined on `__file` —
+    * broadcast up to `graft.iceberg.broadcastFileMetaMax` files, a plain
+    * shuffle join above. Only the scanned files' rows: an incremental
+    * window pays O(window), not O(live files). */
+  def attachPerFile(spark: SparkSession, scan: DataFrame, cols: Seq[StructField],
+      rows: Seq[(String, Seq[Any])]): DataFrame = {
+    val meta = spark.createDataFrame(
+      rows.map { case (f, vs) => Row.fromSeq(f +: vs) }.asJava,
+      StructType(StructField("__mfile", StringType) +: cols))
+    val side = if (rows.size <= broadcastFileMetaMax(spark)) broadcast(meta) else meta
+    scan.join(side, scan("__file") === meta("__mfile")).drop("__mfile")
   }
 
   // ------------------------------------------------ followable rewrite
@@ -291,10 +480,18 @@ private[graft] object Mirror {
 
   /** One replayed source state: its ledger, the ledger's name key (led by
     * the source ordinal every sync step's transaction marker carries), and
-    * the consumed-state properties that record it. */
-  case class SourcePoint(key: Seq[Long], ledger: Ledger,
-      advance: Map[String, String]) {
+    * the consumed-state properties that record it. The ledger builds on
+    * first use: only a followable rewrite reads it, and an in-place import
+    * or sync of a 10M-file source would otherwise build a 10M-entry map for
+    * nothing. */
+  case class SourcePoint(key: Seq[Long], advance: Map[String, String])(
+      ledgerOf: => Ledger) {
+    lazy val ledger: Ledger = ledgerOf
     def target: Long = key.head
+    /** Whether a table with `props` has consumed this point: every
+      * consumed-state key at or past it. */
+    def consumedBy(props: Map[String, String]): Boolean =
+      advance.forall { case (k, v) => props.get(k).exists(_.toLong >= v.toLong) }
   }
 
   /** A source's live set: data files (root-relative) with a change
@@ -326,7 +523,6 @@ private[graft] object Mirror {
 
   /** The format's part of one followable-rewrite sync. */
   trait RewriteSteps {
-    def point: SourcePoint
     /** Refusals that need the diff; they run before any mutation. */
     def check(d: LedgerDiff): Unit = ()
     /** Row-level deletes beyond whole-file removal, after the lineage
@@ -338,21 +534,8 @@ private[graft] object Mirror {
 
   private def absolute(dir: String): Path = Paths.get(dir).toAbsolutePath.normalize
 
-  /** `base` plus the format's lineage columns, refusing a source column
-    * that collides with one. */
-  def withLineage(base: StructType, keys: FollowKeys): StructType = {
-    keys.lineage.foreach { n =>
-      require(!base.fieldNames.exists(_.equalsIgnoreCase(n)),
-        s"source column '$n' collides with the lineage column a " +
-          "followable rewrite adds — import with follow = false, or " +
-          "rename the source column")
-    }
-    StructType(base.fields ++ keys.lineage.map(n =>
-      StructField(n, if (n == SrcFileCol) StringType else LongType)))
-  }
-
   /** The rewrite-import skeleton: create the destination at `destDir` and
-    * append `rows` (None: the source has no live files — an empty table,
+    * append the `rows` of the source's live files (none: an empty table,
     * its schema and layout fully known). Creation refuses an existing
     * destination, so a retried migration fails LOUDLY instead of
     * appending the whole dataset a second time.
@@ -360,37 +543,43 @@ private[graft] object Mirror {
     * With `follow` the destination is built to be SYNCABLE by
     * [[syncRewrite]]: every row carries its source LINEAGE as ordinary
     * columns ([[SrcFileCol]] and kin — what later source-side removes and
-    * row-level deletes key on), the consumed source state records in the
+    * row-level deletes key on; a source column colliding with one
+    * refuses), the consumed source state records in the
     * table properties, and the ledger of the imported point writes BEFORE
     * the data commit — a crash in between leaves a stray ledger file
     * (harmless: reads key on the CONSUMED property) but never a synced
     * table without its ledger. The storage cost (a dictionary-encoded path
     * plus a delta-encoded long or two per row) is the price of
     * followability; a one-shot migration should keep `follow = false`. */
-  def convertRewrite(spark: SparkSession, srcRoot: Path, destDir: String,
-      keys: FollowKeys, follow: Option[SourcePoint], base: StructType,
-      partitionColumns: Seq[String], properties: Map[String, String],
-      rows: => Option[DataFrame]): LakeTable = {
-    val schema = if (follow.isEmpty) base else withLineage(base, keys)
-    val followProps = follow.map(pt => Map(keys.follow -> "true",
-      keys.source -> srcRoot.toString) ++ pt.advance).getOrElse(Map.empty)
-    val typed = rows
-    follow.foreach(writeLedger(absolute(destDir), _))
+  def convertRewrite(spark: SparkSession, st: ForeignSnapshot, destDir: String,
+      follow: Boolean, base: StructType, partitionColumns: Seq[String],
+      properties: Map[String, String])(rows: Seq[String] => DataFrame): LakeTable = {
+    val keys = st.keys
+    if (follow) keys.lineage.foreach { n =>
+      require(!base.fieldNames.exists(_.equalsIgnoreCase(n)),
+        s"source column '$n' collides with the lineage column a " +
+          "followable rewrite adds — import with follow = false, or " +
+          "rename the source column")
+    }
+    val schema = if (!follow) base else StructType(base.fields ++ keys.lineage.map(n =>
+      StructField(n, if (n == SrcFileCol) StringType else LongType)))
+    val followProps = if (!follow) Map.empty[String, String]
+      else Map(keys.follow -> "true", keys.source -> st.root.toString) ++ st.point.advance
+    val typed = if (st.files.isEmpty) None else Some(rows(st.files))
+    if (follow) writeLedger(absolute(destDir), st.point)
     val dest = LakeTable.create(spark, destDir, schema,
       partitionColumns = partitionColumns,
       properties = properties ++ followProps, ifNotExists = false)
     typed.foreach { df =>
-      follow match {
-        case Some(pt) => dest.appendWithProps(df, _ => Map.empty,
-          Some(AppendAppId), Some(pt.target)): Unit
-        case None => dest.append(df): Unit
-      }
+      if (follow) dest.appendWithProps(df, _ => Map.empty,
+        Some(AppendAppId), Some(st.point.target)): Unit
+      else dest.append(df): Unit
     }
     dest
   }
 
-  /** The followable-rewrite sync skeleton. `plan` replays the source and
-    * runs the format's checks (None: already consumed). The consumed
+  /** The followable-rewrite sync skeleton. `replay` reads the source (a
+    * consumed point is a no-op) and `plan` runs the format's checks. The consumed
     * ledger diffs against the current one, whose ledger writes before any
     * mutation; removed and signature-changed source files leave by a
     * lineage-keyed merge-DELETE (file stats on the lineage column prune
@@ -407,8 +596,9 @@ private[graft] object Mirror {
     * pre-sync version if a read must straddle a sync. The destination may
     * be OPTIMIZE/ZORDER-compacted freely between syncs (lineage rides the
     * rows), while local DML stays the cut-over moment. */
-  def syncRewrite(spark: SparkSession, srcDir: String, destDir: String,
-      keys: FollowKeys)(plan: (LakeTable, Path, Long) => Option[RewriteSteps]): Long = {
+  def syncRewrite[S <: ForeignSnapshot](spark: SparkSession, srcDir: String,
+      destDir: String, keys: FollowKeys, replay: Path => S)(
+      plan: (LakeTable, S, Long) => RewriteSteps): Long = {
     val dest = LakeTable.forPath(spark, destDir)
     val root = absolute(srcDir)
     val destRoot = absolute(destDir)
@@ -422,12 +612,14 @@ private[graft] object Mirror {
         s"not $srcDir")
     val consumed = props0(keys.consumed).toLong
     requireRewriteNotDiverged(dest)
-    val steps = plan(dest, root, consumed).getOrElse {
+    val st = replay(root)
+    if (st.point.consumedBy(props0)) {
       // up to date; a sync that crashed after its last commit finishes
       // its ledger pruning here
       pruneLedgers(destRoot, consumed)
       return dest.version
     }
+    val steps = plan(dest, st, consumed)
     // every lineage column the steps rely on must exist — a destination
     // built by an OLDER convertRewrite (before the sequence lineage
     // landed) refuses up front, not mid-sync after merges committed
@@ -442,17 +634,14 @@ private[graft] object Mirror {
         s"$destDir carries no ledger snapshot for consumed ${keys.kind} " +
           s"point $consumed under ${destRoot.resolve(LedgerDir)} — the " +
           "followable-rewrite state is damaged; re-import"))
-    val pt = steps.point
+    val pt = st.point
     val d = LedgerDiff(prev, pt.ledger)
     steps.check(d)
     writeLedger(destRoot, pt)
     if (d.gone.nonEmpty) {
       import spark.implicits._
-      dest.merge(d.gone.toDF("rm_file"),
-        expr(s"target.`$SrcFileCol` = source.rm_file"))
-        .whenMatchedDelete()
-        .withTxn(RemoveAppId, pt.target)
-        .execute(): Unit
+      deleteMatching(dest, d.gone.toDF("rm_file"),
+        expr(s"target.`$SrcFileCol` = source.rm_file"), RemoveAppId, pt.target)
     }
     steps.deleteRows(dest, d)
     if (d.back.nonEmpty)
@@ -462,6 +651,13 @@ private[graft] object Mirror {
     pruneLedgers(destRoot, consumed)
     dest.version
   }
+
+  /** Merge-DELETE the destination rows `source` matches `on`, as sync step
+    * `appId` of source ordinal `version` on the transaction ledger (a
+    * replay of a committed step no-ops). */
+  def deleteMatching(dest: LakeTable, source: DataFrame, on: Column,
+      appId: String, version: Long): Unit =
+    dest.merge(source, on).whenMatchedDelete().withTxn(appId, version).execute(): Unit
 
   /** A rewrite destination follows no schema change: its columns other
     * than lineage and `derived` (generated layout columns) must still be

@@ -215,31 +215,19 @@ class LakeTable private[table] (
       Set[DeletionVector], org.apache.spark.broadcast.Broadcast[Map[String, Array[Byte]]]]()
 
   /** Filter a position-carrying frame (`__file`, `__idx`) through the given
-    * deletion vectors. Up to `graft.dv.broadcastMaxMasks` masked rows, the
-    * per-file bitmaps are read on the driver and broadcast, probed by a
-    * codegen'd expression — no join and no extra query. Past it, the
-    * vectors are decoded on executors, exploded back to rows and
-    * anti-joined (fully distributed, no driver memory cliff). */
-  private def dvMaskJoin(withPos: DataFrame, dvs: Seq[DeletionVector]): DataFrame = {
-    val maskedTotal = dvs.map(_.numDeleted).sum
-    if (maskedTotal <= DvBitmap.broadcastMaxMasks(spark)) {
-      val bc = dvBroadcastCache.computeIfAbsent(dvs.toSet, _ => {
+    * deletion vectors ([[DvBitmap.dropMasked]]), the broadcast side served
+    * from this table's cache. */
+  private def dvMaskJoin(withPos: DataFrame, dvs: Seq[DeletionVector]): DataFrame =
+    DvBitmap.dropMasked(withPos, dvs.map(_.numDeleted).sum,
+      dvBroadcastCache.computeIfAbsent(dvs.toSet, _ => {
         if (dvBroadcastCache.size >= 8) {
           val it = dvBroadcastCache.entrySet().iterator()
           while (it.hasNext) { it.next().getValue.unpersist(false); it.remove() }
         }
         spark.sparkContext.broadcast(
           dvBitmaps(dvs).map { case (p, bm) => p -> DvBitmap.serialize(bm) })
-      })
-      withPos.filter(DvBitmap.notMasked(col("__file"), col("__idx"), bc, maskedTotal))
-    } else {
-      val dvRows = dvBitmapDf(dvs).select(col("__path"),
-        explode(DvBitmap.toLongArray(col("__bitmap"))).as("__idx"))
-      withPos.withColumn("__path", DvBitmap.stripPathCol(col("__file")))
-        .join(dvRows, Seq("__path", "__idx"), "left_anti")
-        .drop("__path")
-    }
-  }
+      }),
+      dvBitmapDf(dvs))
 
   /** Masked read with the table schema only (the hot read path). */
   private[graft] def readFilesMasked(
@@ -1976,19 +1964,9 @@ class LakeTable private[table] (
       }
     }
     val merged = unions.map(_.getResult)
-    val b64 = java.util.Base64.getEncoder
-    val sidecarJson = {
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      val node = m.createObjectNode()
-      node.put("analyzedAtVersion", snap.version)
-      val colsNode = node.putObject("columns")
-      cols.zipWithIndex.foreach { case (c, i) =>
-        colsNode.put(c, b64.encodeToString(merged(i).toByteArray)): Unit }
-      m.writeValueAsBytes(node)
-    }
     val sidecarRel = s"_stats/theta-${snap.version}.json"
-    log.store.writeAtomic(dir.resolve(sidecarRel),
-      sidecarJson, overwrite = true)
+    Puffin.writeThetaSidecar(log.store, dir, sidecarRel, snap.version,
+      cols.zip(merged.map(_.toByteArray)))
     val props = Map(
       "stats.numRows" -> rows.toString,
       "graft.stats.thetaSidecar" -> sidecarRel) ++

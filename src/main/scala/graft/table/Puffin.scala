@@ -124,4 +124,19 @@ object Puffin {
       Math.round(org.apache.datasketches.theta.CompactSketch.heapify(
         org.apache.datasketches.memory.Memory.wrap(bytes)).getEstimate)
     }.toOption
+
+  /** Write a table's theta sidecar — `{"analyzedAtVersion": v, "columns":
+    * {column: base64 compact sketch}}` — at `root/rel`, the file the
+    * `graft.stats.thetaSidecar` property names and the Uniform export
+    * publishes as Puffin statistics. */
+  def writeThetaSidecar(store: LogStore, root: Path, rel: String,
+      analyzedAt: Long, sketches: Seq[(String, Array[Byte])]): Unit = {
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = m.createObjectNode()
+    node.put("analyzedAtVersion", analyzedAt)
+    val cols = node.putObject("columns")
+    sketches.foreach { case (c, b) =>
+      cols.put(c, java.util.Base64.getEncoder.encodeToString(b)): Unit }
+    store.writeAtomic(root.resolve(rel), m.writeValueAsBytes(node), overwrite = true): Unit
+  }
 }

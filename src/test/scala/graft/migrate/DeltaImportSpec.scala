@@ -627,6 +627,27 @@ class DeltaImportSpec extends SparkSpec {
     t2.snapshot().dvs shouldBe empty
   }
 
+  test("sync refuses a tail commit carrying an absolute-path ('p') " +
+    "deletion vector: the mirror keeps its version and rows") {
+    val dir = tmpDir("delta-dv-sync-p").resolve("t")
+    dataFile(dir, "f0.parquet", rows(0, 4))
+    val log = dir.resolve("_delta_log")
+    writeCommit(log, 0, Seq(protoLine(), metaLine(),
+      addLine(dir, "f0.parquet", 0, 4)))
+    val v0 = LakeTable.convert(spark, dir.toString).version
+    writeCommit(log, 1, Seq(addLine(dir, "f0.parquet", 0, 4, dv = Map(
+      "storageType" -> "p", "pathOrInlineDv" -> "/elsewhere/dv.bin",
+      "offset" -> 1, "sizeInBytes" -> 36, "cardinality" -> 2))))
+    intercept[IllegalArgumentException] {
+      DeltaImport.sync(spark, dir.toString)
+    }.getMessage should include("storageType")
+    val t = LakeTable.forPath(spark, dir.toString)
+    t.version shouldBe v0
+    t.snapshot().dvs shouldBe empty
+    t.read().select("id").collect().map(_.getLong(0)).sorted.toSeq shouldBe
+      (0L to 4L)
+  }
+
   test("partitioned rewrite-import applies live deletion vectors: masked " +
     "rows never materialize in the destination") {
     val src = tmpDir("delta-dv-rewrite").resolve("src")

@@ -20,10 +20,12 @@ import graft.table.LakeTable
 
 /** The shared mirror core ([[Mirror]]) seen from both formats: the
   * followable-rewrite sync survives a crash before ANY of its log writes
-  * or deletes and converges when re-run, old-shape ledgers still sync, and
-  * the Iceberg sequence attach gives the same rows on both sides of its
-  * broadcast threshold. Fixtures are hand-written to the public Delta and
-  * Iceberg specs. */
+  * or deletes and converges when re-run, old-shape ledgers still sync,
+  * the Iceberg sequence attach and a Delta rewrite's masked read and
+  * partition-tuple attach give the same rows on both sides of their
+  * broadcast thresholds, and the
+  * in-place sync's footer binding gate refuses files its mirror cannot
+  * bind. Fixtures are hand-written to the public Delta and Iceberg specs. */
 class MirrorSpec extends SparkSpec {
   import spark.implicits._
 
@@ -428,6 +430,78 @@ class MirrorSpec extends SparkSpec {
     try rewrite("shuffle") shouldBe want
     finally {
       spark.conf.unset(key)
+      autoBefore.fold(spark.conf.unset(auto))(spark.conf.set(auto, _))
+    }
+  }
+
+  // ------------------------------------------- foreign-file binding gate
+
+  test("Iceberg in-place sync refuses a new id-less file into a by-id " +
+    "mirror, and a non-schema footer column into a name-bound mirror") {
+    // by id: the imported files carry field ids, the synced one does not
+    val byId = new IcebergSource(tmpDir("mirror-bind-id").resolve("t"))
+    byId.dataFile("f0.parquet", 0L until 10L)
+    byId.publish(1, Seq(("f0.parquet", 10, 1)))
+    IcebergImport.convert(spark, byId.dir.toString)
+    writeOne(byId.dir.resolve("f1.parquet"), (10L until 20L).toDF("id"))
+    byId.publish(2, Seq(("f0.parquet", 10, 1), ("f1.parquet", 10, 2)))
+    intercept[IllegalArgumentException] {
+      IcebergImport.sync(spark, byId.dir.toString)
+    }.getMessage should include("field id")
+    ids(byId.dir.toString) shouldBe (0L until 10L)
+
+    // by name: no file carries ids, and the synced one adds a column the
+    // schema does not name
+    val byName = new IcebergSource(tmpDir("mirror-bind-name").resolve("t"))
+    writeOne(byName.dir.resolve("f0.parquet"), (0L until 10L).toDF("id"))
+    byName.publish(1, Seq(("f0.parquet", 10, 1)))
+    IcebergImport.convert(spark, byName.dir.toString)
+    writeOne(byName.dir.resolve("f1.parquet"),
+      (10L until 20L).map(i => (i, s"x$i")).toDF("id", "stray"))
+    byName.publish(2, Seq(("f0.parquet", 10, 1), ("f1.parquet", 10, 2)))
+    intercept[IllegalArgumentException] {
+      IcebergImport.sync(spark, byName.dir.toString)
+    }.getMessage should include("not a schema column")
+    ids(byName.dir.toString) shouldBe (0L until 10L)
+  }
+
+  // ------------------------------------------------- rewrite mask tiers
+
+  test("graft.dv.broadcastMaxMasks and graft.iceberg.broadcastFileMetaMax: " +
+    "a partitioned Delta rewrite over live deletion vectors reads the same " +
+    "rows on the executor-decode side (0) of the masks, and on the " +
+    "shuffle-join side (0) of the partition tuples, as under the defaults") {
+    val work = tmpDir("mirror-dvtier")
+    val src = work.resolve("src")
+    (0 until 3).foreach(k => idFile(src.resolve(s"f$k.parquet"), k * 10L, k * 10L + 9))
+    deltaCommit(src.resolve("_delta_log"), 0, Seq(deltaProto, deltaMeta,
+      deltaAdd(src, "f0.parquet", "a", masked = Seq(1L, 4L)),
+      deltaAdd(src, "f1.parquet", "b"),
+      deltaAdd(src, "f2.parquet", "a", masked = Seq(0L, 9L))))
+    val want = (0L to 29L).filterNot(Set(1L, 4L, 20L, 29L))
+    def rewrite(name: String): Seq[(Long, String)] = {
+      val dest = work.resolve(name).toString
+      DeltaImport.convertRewrite(spark, src.toString, dest)
+      LakeTable.forPath(spark, dest).read().select("id", "p").as[(Long, String)]
+        .collect().sorted.toSeq
+    }
+    val broadcast = rewrite("broadcast")
+    broadcast.map(_._1) shouldBe want
+    broadcast.filter(_._2 == "b").map(_._1) shouldBe (10L to 19L)
+    val key = "graft.dv.broadcastMaxMasks"
+    spark.conf.set(key, "0")
+    try rewrite("decoded") shouldBe broadcast
+    finally spark.conf.unset(key)
+    // Spark's own size-based broadcast would otherwise pick the small
+    // tuple side anyway, hiding the shuffle join
+    val metaKey = "graft.iceberg.broadcastFileMetaMax"
+    val auto = "spark.sql.autoBroadcastJoinThreshold"
+    val autoBefore = spark.conf.getOption(auto)
+    spark.conf.set(metaKey, "0")
+    spark.conf.set(auto, "-1")
+    try rewrite("shuffled") shouldBe broadcast
+    finally {
+      spark.conf.unset(metaKey)
       autoBefore.fold(spark.conf.unset(auto))(spark.conf.set(auto, _))
     }
   }
