@@ -248,7 +248,7 @@ object TableOps {
     t.append(orders.filter(col("o_orderkey") % 2 =!= 0))
     val v = t.optimizeZOrder(Seq("o_custkey"), targetFileSize = 2L * 1024 * 1024)
     val snap = t.snapshot()
-    val skipped = snap.commits.find(_.version == v)
+    val skipped = t.log.commitInfo(v)
       .flatMap(_.operationMetrics.get("numFilesSkippedAlreadyClustered")).getOrElse(-1L)
     require(skipped == clustered.size &&
         clustered.subsetOf(snap.files.map(_.path).toSet),
@@ -387,7 +387,7 @@ object TableOps {
     val t = LakeTable.create(spark, scratch("ict"), orders.schema,
       properties = Map("delta.enableInCommitTimestamps" -> "true"),
       ifNotExists = false)
-    val t0 = t.log.snapshot().commits.last.timestamp
+    val t0 = t.log.snapshot().commitTimestamp
     val T1 = t0 + 10000L
     t.clockMillis = () => T1
     t.append(orders.filter(col("o_orderkey") % 2 === 0)) // v1 @ T1

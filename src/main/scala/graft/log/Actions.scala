@@ -231,8 +231,21 @@ case class DomainMetadata(
   * exactly at a line boundary parses line-by-line yet silently misses
   * state; the count makes completeness checkable without a self-describing
   * container format (Delta gets the same property from parquet footers).
-  * Never appears in per-version commit files. */
-case class CheckpointMeta(numActions: Long) extends Action
+  * Never appears in per-version commit files.
+  *
+  * `commitTimestamp` (checkpoint headers only): the in-commit timestamp of
+  * the checkpointed version's commit, so a reader resolving a snapshot
+  * with an empty tail still knows the newest commit's time without
+  * opening the commit history. Null on sidecar and compacted-range
+  * headers and on checkpoints written before history left them. */
+case class CheckpointMeta(numActions: Long, commitTimestamp: java.lang.Long = null)
+  extends Action
+
+/** Idempotent-writer record (Delta's SetTransaction): the highest
+  * `version` a writer `appId` has committed. Checkpoints carry one per
+  * writer, folded from the commits' `txnAppId`/`txnVersion` parameters,
+  * so exactly-once replay checks never need the commit history. */
+case class SetTransaction(appId: String, version: Long) extends Action
 
 /** V2-checkpoint sidecar reference (Delta's v2Checkpoint sidecar idea):
   * the manifest checkpoint carries table-level state plus `sidecar` refs,
@@ -240,7 +253,7 @@ case class CheckpointMeta(numActions: Long) extends Action
   * CONTENT-ADDRESSED files under `_txlog/_sidecars/` — a bucket whose
   * content did not change between checkpoints hashes to the SAME name and
   * is reused via put-if-absent instead of rewritten, so checkpoint write
-  * amplification is O(churned buckets + commits), not O(live files). At
+  * amplification is O(churned buckets), not O(live files). At
   * 100 TB (millions of AddFiles, checkpoint every 10 commits) that is the
   * difference between rewriting ~500 MB of metadata per cadence and a few
   * bucket files. `numActions` double-checks the sidecar's own header.
@@ -258,7 +271,8 @@ private[log] case class ActionEnvelope(
     protocol: Protocol = null,
     checkpointMeta: CheckpointMeta = null,
     domainMetadata: DomainMetadata = null,
-    sidecar: Sidecar = null)
+    sidecar: Sidecar = null,
+    txn: SetTransaction = null)
 
 object Actions {
   private val mapper: ObjectMapper = {
@@ -283,6 +297,7 @@ object Actions {
     case x: CheckpointMeta => mapper.writeValueAsString(ActionEnvelope(checkpointMeta = x))
     case x: DomainMetadata => mapper.writeValueAsString(ActionEnvelope(domainMetadata = x))
     case x: Sidecar        => mapper.writeValueAsString(ActionEnvelope(sidecar = x))
+    case x: SetTransaction => mapper.writeValueAsString(ActionEnvelope(txn = x))
   }
 
   def fromJson(line: String): Action = {
@@ -307,6 +322,7 @@ object Actions {
     else if (e.checkpointMeta != null) e.checkpointMeta
     else if (e.domainMetadata != null) e.domainMetadata
     else if (e.sidecar != null) e.sidecar
+    else if (e.txn != null) e.txn
     else throw new IllegalArgumentException(s"unrecognized action: $line")
   }
 }

@@ -2,23 +2,103 @@ package graft.log
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Snapshot of a table at one version: last metadata + live file set +
-  * live deletion vectors (keyed by the data file's relative path). */
+/** Snapshot of a table at one version: its STATE only — last protocol and
+  * metadata, live files and deletion vectors (keyed by the data file's
+  * relative path), domains, each idempotent writer's last committed
+  * version (`txns`, Delta's SetTransaction) and the newest commit's
+  * in-commit timestamp. Commit history is not state: it stays in the
+  * commit files, and readers open only the range they need through
+  * [[TxLog.history]]. */
 case class Snapshot(
     version: Long,
     metadata: Metadata,
     files: Seq[AddFile],
-    commits: Seq[CommitInfo],
     dvs: Map[String, DeletionVector] = Map.empty,
     protocol: Protocol = Protocol.Current,
-    domains: Map[String, String] = Map.empty) {
+    domains: Map[String, String] = Map.empty,
+    txns: Map[String, Long] = Map.empty,
+    commitTimestamp: Long = 0L)(@transient private val log: TxLog) {
   def schema: StructType = DataType.fromJson(metadata.schemaJson).asInstanceOf[StructType]
   def numFiles: Int = files.size
   def sizeInBytes: Long = files.map(_.size).sum
   def numRecords: Long = files.map(_.numRecords).sum - dvs.values.map(_.numDeleted).sum
+  /** The whole commit history up to this version, read from the commit
+    * files on first use — O(history). For specs and whole-history tools;
+    * engine paths read the range they need through [[TxLog.history]]. */
+  @transient lazy val commits: Seq[CommitInfo] = log.history(0L, version)
+}
+
+/** The one fold from log actions to table state. Checkpoint bases,
+  * commit tails, cache advances and a writer's own post-commit state all
+  * apply their actions through it, so every resolution path yields the
+  * same [[Snapshot]]. A checkpoint written before history left them still
+  * carries `CommitInfo` lines; they fold into `txns` and the commit
+  * timestamp exactly as a commit's own record does. */
+private[log] final class Replay(log: TxLog) {
+  private var meta: Metadata = null
+  // pre-protocol tables (no action anywhere in the log) read as (1, 1)
+  private var proto: Protocol = Protocol(1, 1)
+  private val live = mutable.LinkedHashMap.empty[String, AddFile]
+  private val dvs = mutable.LinkedHashMap.empty[String, DeletionVector]
+  private val domains = mutable.LinkedHashMap.empty[String, String]
+  private val txns = mutable.HashMap.empty[String, Long]
+  private var commitTs = 0L
+
+  def this(log: TxLog, base: Snapshot) = {
+    this(log)
+    meta = base.metadata
+    proto = base.protocol
+    base.files.foreach(f => live(f.path) = f)
+    dvs ++= base.dvs
+    domains ++= base.domains
+    txns ++= base.txns
+    commitTs = base.commitTimestamp
+  }
+
+  private def txn(appId: String, v: Long): Unit =
+    if (txns.get(appId).forall(_ < v)) txns(appId) = v
+
+  def add(a: Action): Unit = a match {
+    case m: Metadata       => meta = m
+    case f: AddFile        => live(f.path) = f
+    case r: RemoveFile     => live.remove(r.path); dvs.remove(r.path): Unit
+    case c: CommitInfo     =>
+      commitTs = c.timestamp
+      for (app <- c.operationParameters.get("txnAppId");
+           v <- c.operationParameters.get("txnVersion")
+             .flatMap(x => scala.util.Try(x.toLong).toOption)) txn(app, v)
+    case t: SetTransaction => txn(t.appId, t.version)
+    case d: DeletionVector =>
+      if (d.clears) dvs.remove(d.forFile): Unit else dvs(d.forFile) = d
+    case p: Protocol       => proto = p
+    case d: DomainMetadata =>
+      if (d.removed) domains.remove(d.domain): Unit else domains(d.domain) = d.config
+    case h: CheckpointMeta => Option(h.commitTimestamp).foreach(t => commitTs = t)
+    case _: CdfFile        => // only consumed by cdf scans
+    case _: Sidecar        => // inlined by readCheckpoint, never applied
+  }
+
+  /** The state at `version`, past the reader's forward-compat gate. */
+  def result(version: Long): Snapshot = {
+    require(meta != null, s"no metadata action found in ${log.tableDir}")
+    // refuse to interpret a table whose log demands reader features this
+    // engine does not implement
+    if (proto.minReaderVersion > Protocol.SupportedReader)
+      throw new IllegalStateException(
+        s"table ${log.tableDir} requires minReaderVersion=${proto.minReaderVersion} " +
+          s"but this engine supports ${Protocol.SupportedReader} — upgrade the library")
+    val unknownReader = proto.readerSet -- Protocol.SupportedReaderFeatures
+    if (unknownReader.nonEmpty)
+      throw new IllegalStateException(
+        s"table ${log.tableDir} requires reader feature(s) ${unknownReader.toSeq.sorted.mkString(", ")} " +
+          "this engine does not implement — upgrade the library")
+    Snapshot(version, meta, live.values.toSeq, dvs.toMap, proto, domains.toMap,
+      txns.toMap, commitTs)(log)
+  }
 }
 
 /** The transaction log: ordered JSON commit files under `<table>/_txlog/`.
@@ -182,12 +262,15 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
 
   // ------------------------------------------------------------ checkpoints
 
-  /** Checkpoint = the full snapshot state (metadata + commit history + live
-    * files) at one version. `snapshot()` replays from the newest eligible
-    * checkpoint plus the log tail instead of from v0 — without this,
-    * planning cost grows linearly with table history (the same reason
-    * Delta checkpoints every 10 commits). Time travel and CDF still read
-    * the per-version files, which are never deleted.
+  /** Checkpoint = the table STATE at one version, as in Delta: protocol,
+    * metadata, domains, one `txn` per idempotent writer, live files and
+    * live vectors — O(live), whatever the commit count. `snapshot()`
+    * replays from the newest eligible checkpoint plus the log tail instead
+    * of from v0 — without this, planning cost grows linearly with table
+    * history (the same reason Delta checkpoints every 10 commits). Commit
+    * history, time travel and CDF read the per-version files, which only
+    * TRUNCATE HISTORY deletes. The count header carries the checkpointed
+    * commit's timestamp.
     *
     * Two layouts, chosen at write time by action count:
     *  - single NDJSON file `<v>.checkpoint.json` (the default);
@@ -246,15 +329,16 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
 
   /** Read + validate checkpoint `cp` (all layouts): every line parses and
     * every count header matches, else throw (callers fall back). The
+    * headers stay in the result — they carry the commit timestamp. The
     * single-file layout is one GET with no listing at all. */
   private[log] def readCheckpoint(cp: Long): Seq[Action] = {
     def readAll(files: Seq[Path]): Seq[Action] = files.flatMap { f =>
       val as = store.read(f).filter(_.nonEmpty).map(Actions.fromJson)
       as.headOption match {
-        case Some(CheckpointMeta(n)) =>
+        case Some(CheckpointMeta(n, _)) =>
           require(as.size - 1 == n,
             s"checkpoint $cp (${f.getFileName}) is incomplete: ${as.size - 1} of $n actions")
-          as.tail
+          as
         case _ if files.size == 1 => as // header-less legacy single-file
         case _ => throw new IllegalStateException(
           s"checkpoint $cp part ${f.getFileName} has no self-validation header")
@@ -276,7 +360,7 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
         val lines = store.read(sidecarDir.resolve(s.path))
           .filter(_.nonEmpty).map(Actions.fromJson)
         lines.headOption match {
-          case Some(CheckpointMeta(n)) =>
+          case Some(CheckpointMeta(n, _)) =>
             require(lines.size - 1 == n && n == s.numActions,
               s"checkpoint $cp sidecar ${s.path} incomplete: " +
                 s"${lines.size - 1} of $n (manifest says ${s.numActions})")
@@ -288,32 +372,41 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
     }
   }
 
-  /** Write the checkpoint for `v` (idempotent — content is deterministic,
-    * so overwrite-mode publish is safe under concurrent checkpointers). */
-  def writeCheckpoint(v: Long): Unit = {
-    val snap = snapshot(Some(v))
-    val actions: Seq[Action] =
+  /** Write the checkpoint for `v` from a full replay of the log. */
+  def writeCheckpoint(v: Long): Unit = writeCheckpoint(snapshot(Some(v)))
+
+  /** Write the checkpoint of `snap`'s state at `snap.version` (idempotent —
+    * content is deterministic, so overwrite-mode publish is safe under
+    * concurrent checkpointers). A writer passes the state it just
+    * committed, so the post-commit checkpoint costs no log replay. */
+  def writeCheckpoint(snap: Snapshot): Unit = {
+    val v = snap.version
+    val tableState: Seq[Action] =
       Seq(snap.protocol, snap.metadata) ++
         snap.domains.toSeq.sortBy(_._1).map { case (d, c) => DomainMetadata(d, c) } ++
-        (snap.commits ++ snap.files ++ snap.dvs.values)
+        snap.txns.toSeq.sortBy(_._1).map { case (a, x) => SetTransaction(a, x) }
+    val actions: Seq[Action] = tableState ++ snap.files ++ snap.dvs.values
     val partSize = Option(snap.metadata.properties)
       .flatMap(_.get("graft.checkpoint.partSize"))
       .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0)
       .getOrElse(Int.MaxValue)
     // self-validation header first: reads reject any checkpoint whose line
     // count disagrees (a prefix cut at a line boundary parses cleanly but
-    // is incomplete — the count is what catches it)
-    def body(as: Seq[Action]): Array[Byte] =
-      (CheckpointMeta(as.size.toLong) +: as)
+    // is incomplete — the count is what catches it). Sidecars omit the
+    // timestamp: their names hash their content, which must not change
+    // with every commit.
+    def body(as: Seq[Action], ts: java.lang.Long): Array[Byte] =
+      (CheckpointMeta(as.size.toLong, ts) +: as)
         .map(Actions.toJson).mkString("", "\n", "\n")
         .getBytes(StandardCharsets.UTF_8)
+    val ts: java.lang.Long = snap.commitTimestamp
     val v2 = Option(snap.metadata.properties)
       .exists(_.get("graft.checkpoint.v2").contains("true"))
     if (v2) {
       // V2 INCREMENTAL layout: per-file actions live in content-addressed
       // sidecar buckets; unchanged buckets hash to the same name and the
       // put-if-absent write no-ops — checkpoint write amplification is
-      // O(churned buckets + commits), not O(live files). Bucket membership
+      // O(churned buckets), not O(live files). Bucket membership
       // is hash(path) % B with a FIXED per-table B (stable buckets are
       // what make reuse possible; size B to the table via the property).
       val buckets = Option(snap.metadata.properties)
@@ -328,23 +421,20 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
           snap.dvs.values.map(d => (bucketOf(d.forFile), d.forFile + "#d", d: Action))
       val refs = fileActs.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, as) =>
         val acts = as.sortBy(_._2).map(_._3)
-        val bytes = body(acts)
+        val bytes = body(acts, null)
         val name = java.security.MessageDigest.getInstance("MD5").digest(bytes)
           .map("%02x".format(_)).mkString + ".json"
         store.writeAtomic(sidecarDir.resolve(name), bytes, overwrite = false): Unit
         Sidecar(name, acts.size.toLong)
       }
-      val manifest: Seq[Action] =
-        Seq(snap.protocol, snap.metadata) ++
-          snap.domains.toSeq.sortBy(_._1).map { case (d, c) => DomainMetadata(d, c) } ++
-          snap.commits ++ refs
-      store.writeAtomic(checkpointFile(v), body(manifest), overwrite = true): Unit
+      store.writeAtomic(checkpointFile(v), body(tableState ++ refs, ts),
+        overwrite = true): Unit
     } else if (actions.size <= partSize)
-      store.writeAtomic(checkpointFile(v), body(actions), overwrite = true): Unit
+      store.writeAtomic(checkpointFile(v), body(actions, ts), overwrite = true): Unit
     else {
       val parts = actions.grouped(partSize).toSeq
       parts.zipWithIndex.foreach { case (p, i) =>
-        store.writeAtomic(checkpointPartFile(v, i, parts.size), body(p),
+        store.writeAtomic(checkpointPartFile(v, i, parts.size), body(p, ts),
           overwrite = true): Unit
       }
     }
@@ -410,11 +500,14 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
     * silently skipping every Nth commit until the window clears the
     * boundary. Degenerate results (≤ 1 surviving commit in range, or no
     * clamp needed — the plain write already failed for another reason)
-    * skip: one range GET replacing one per-commit GET buys nothing. */
-  def writeCompactedClamped(s: Long, e: Long): Unit = {
+    * skip: one range GET replacing one per-commit GET buys nothing. True
+    * iff the clamped range was written. */
+  def writeCompactedClamped(s: Long, e: Long): Boolean = {
     val oldest = listVersions().minOption
     val start = oldest.map(m => math.max(s, m)).getOrElse(s)
-    if (start > s && start < e) writeCompacted(start, e)
+    val clamps = start > s && start < e
+    if (clamps) writeCompacted(start, e)
+    clamps
   }
 
   /** Read + validate the compacted range `[s, e]`: the count header must
@@ -424,7 +517,7 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
     val lines = store.read(compactedFile(s, e)).filter(_.nonEmpty)
       .map(Actions.fromJson)
     lines.headOption match {
-      case Some(CheckpointMeta(n)) =>
+      case Some(CheckpointMeta(n, _)) =>
         require(lines.size - 1 == n,
           s"compacted range [$s, $e] incomplete: ${lines.size - 1} of $n actions")
         lines.tail
@@ -439,19 +532,29 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
       .groupBy(_._1)
       .map { case (s, rs) => s -> rs.map(_._2).distinct.sorted.reverse }
 
-  /** TRUNCATE HISTORY (DROP FEATURE's boundary sweep): checkpoint the
-    * state AT `v`, verify the checkpoint reads back complete, then delete
-    * every per-version and checkpoint file strictly below `v`. The
-    * boundary version's own file stays (the log is never empty); the
-    * checkpoint is self-contained (protocol, metadata, domains, the FULL
-    * commit-info history, files, DVs), so HEAD reads and DESCRIBE HISTORY
-    * are unaffected — what is lost, BY CONTRACT, is time travel and CDF
-    * below the boundary (they refuse with a clean missing-version error).
-    * Deletion happens only AFTER the checkpoint validates, so a crash
-    * mid-sweep leaves a table that still resolves from the checkpoint. */
+  /** TRUNCATE HISTORY (DROP FEATURE's boundary sweep): archive the commit
+    * records below `v` into a history sidecar, checkpoint the state AT
+    * `v`, verify both read back complete, then delete every per-version
+    * and checkpoint file strictly below `v`. The boundary version's own
+    * file stays (the log is never empty). HEAD reads resolve from the
+    * checkpoint, and DESCRIBE HISTORY is unaffected: the history reader
+    * opens the sidecar for the versions whose files are gone. What is
+    * lost, BY CONTRACT, is time travel and CDF below the boundary (they
+    * refuse with a clean missing-version error). Deletion happens only
+    * AFTER the sidecar and the checkpoint validate, so a crash mid-sweep
+    * leaves a table that still resolves and still shows its history. */
   def truncateBefore(v: Long): Unit = {
     val versions = listVersions()
     require(versions.contains(v), s"version $v does not exist in $tableDir")
+    val archived = history(0L, v - 1)
+    if (archived.nonEmpty) {
+      store.writeAtomic(historyFile(v),
+        (CheckpointMeta(archived.size.toLong) +: archived)
+          .map(Actions.toJson).mkString("", "\n", "\n")
+          .getBytes(StandardCharsets.UTF_8), overwrite = true): Unit
+      require(readArchive(v).size == archived.size,
+        s"refusing to truncate: history sidecar $v read back short")
+    }
     writeCheckpoint(v)
     // same validation a reader applies (all layouts: line parse + count
     // headers + part completeness) — never delete on a bad checkpoint
@@ -473,6 +576,11 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
         case _ => false
       }
       if (below) store.delete(logDir.resolve(n)): Unit
+    }
+    // the new history sidecar subsumes every older one
+    store.listFileNames(historyDir).foreach {
+      case n @ HistoryName(b) if b.toLong < v => store.delete(historyDir.resolve(n)): Unit
+      case _ =>
     }
     // v2 sidecar sweep: keep every sidecar some SURVIVING checkpoint
     // manifest still references (content-addressing shares sidecars across
@@ -534,18 +642,6 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
       require(versions.contains(target), s"version $target does not exist in $tableDir (have ${versions.headOption}..${versions.lastOption})")
       (None, versions, target, compactedRangesIn(names))
     }
-    var meta: Metadata = null
-    // pre-protocol tables (no action anywhere in the log) read as (1, 1)
-    var proto: Protocol = Protocol(1, 1)
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
-    val dvs = scala.collection.mutable.LinkedHashMap.empty[String, DeletionVector]
-    val commits = scala.collection.mutable.ArrayBuffer.empty[CommitInfo]
-    val domains = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def applyDomain(d: DomainMetadata): Unit =
-      if (d.removed) domains.remove(d.domain): Unit else domains(d.domain) = d.config
-    def applyDv(d: DeletionVector): Unit =
-      if (d.clears) dvs.remove(d.forFile): Unit
-      else dvs(d.forFile) = d
     // Checkpoints are an optimization, never a correctness dependency: an
     // unreadable or corrupt checkpoint (truncated external copy, bit rot)
     // falls back to the next older one, and finally to full log replay —
@@ -559,28 +655,8 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
         .map(cp => cp -> scala.util.Try(readCheckpoint(cp)))
         .collectFirst { case (cp, scala.util.Success(as)) => (cp, as) }
     }
-    base.foreach { case (_, actions) =>
-      actions.foreach {
-        case m: Metadata        => meta = m
-        case a: AddFile         => live(a.path) = a
-        case c: CommitInfo      => commits += c
-        case d: DeletionVector  => applyDv(d)
-        case p: Protocol        => proto = p
-        case d: DomainMetadata  => applyDomain(d)
-        case _                  =>
-      }
-    }
-    def applyTail(a: Action): Unit = a match {
-      case m: Metadata       => meta = m
-      case a: AddFile        => live(a.path) = a
-      case r: RemoveFile     => live.remove(r.path); dvs.remove(r.path): Unit
-      case c: CommitInfo     => commits += c
-      case d: DeletionVector => applyDv(d)
-      case p: Protocol       => proto = p
-      case d: DomainMetadata => applyDomain(d)
-      case _: CdfFile        => // only consumed by cdf scans
-      case _: CheckpointMeta => // file-level header, never in commits
-    }
+    val state = new Replay(this)
+    base.foreach { case (_, actions) => actions.foreach(state.add) }
     // Tail replay PREFERS a compacted range whose whole span fits inside
     // the pending tail — one GET replaces (end - start + 1) per-commit
     // reads. Any defect (torn file, count mismatch) falls back to the
@@ -598,38 +674,158 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
         }
       viaRange match {
         case Some((e, as)) =>
-          as.foreach(applyTail)
+          as.foreach(state.add)
           while (ti < tailVs.length && tailVs(ti) <= e) ti += 1
         case None =>
-          readVersion(v).foreach(applyTail)
+          readVersion(v).foreach(state.add)
           ti += 1
       }
     }
-    require(meta != null, s"no metadata action found in $tableDir")
-    // the forward-compat gate: refuse to interpret a table whose log
-    // demands reader features this engine does not implement
-    if (proto.minReaderVersion > Protocol.SupportedReader)
-      throw new IllegalStateException(
-        s"table $tableDir requires minReaderVersion=${proto.minReaderVersion} " +
-          s"but this engine supports ${Protocol.SupportedReader} — upgrade the library")
-    val unknownReader = proto.readerSet -- Protocol.SupportedReaderFeatures
-    if (unknownReader.nonEmpty)
-      throw new IllegalStateException(
-        s"table $tableDir requires reader feature(s) ${unknownReader.toSeq.sorted.mkString(", ")} " +
-          "this engine does not implement — upgrade the library")
-    Snapshot(upTo, meta, live.values.toSeq, commits.toSeq, dvs.toMap, proto,
-      domains.toMap)
+    state.result(upTo)
+  }
+
+  /** The snapshot at `target`, advanced from `base` at an older version by
+    * applying only the commits after it — O(new commits) log reads, no
+    * checkpoint. None when that is not the cheaper or not a sound path:
+    * a checkpoint newer than `base` exists (a full replay from it reads
+    * no more), a commit in the range cannot be read, or `base` no longer
+    * matches the log — its own commit must still read back with the
+    * timestamp it recorded, which a table re-created under the same path
+    * fails. Callers fall back to [[snapshot]], the reference path. */
+  def advance(base: Snapshot, target: Long): Option[Snapshot] =
+    if (target <= base.version || lastCheckpoint().exists(_ > base.version)) None
+    else scala.util.Try {
+      val own = readVersion(base.version).collectFirst { case c: CommitInfo => c.timestamp }
+      require(own.contains(base.commitTimestamp), s"log of $tableDir changed under a cached snapshot")
+      val state = new Replay(this, base)
+      (base.version + 1 to target).foreach(v => readVersion(v).foreach(state.add))
+      state.result(target)
+    }.toOption
+
+  /** `base` plus the `actions` a writer just landed as version
+    * `base.version + 1` — the post-commit state, with no log read. The
+    * actions pass through their JSON form first, so the state holds what
+    * any reader of the log parses (absent maps read back empty), not the
+    * writer's in-memory objects. */
+  def applied(base: Snapshot, actions: Seq[Action]): Snapshot = {
+    val state = new Replay(this, base)
+    actions.foreach(a => state.add(Actions.fromJson(Actions.toJson(a))))
+    state.result(base.version + 1)
+  }
+
+  // ------------------------------------------------------ commit history
+
+  /** Commit history is not snapshot state. Each commit's record stays in
+    * its own commit file; TRUNCATE HISTORY first archives the records it
+    * is about to delete into ONE history sidecar,
+    * `_history/<boundary>.history.json` (count header + the `CommitInfo`s
+    * below the boundary), which only this reader opens. Tables whose
+    * history was truncated before the sidecar existed kept it as
+    * `CommitInfo` lines in their checkpoints; the reader falls back to the
+    * oldest such checkpoint. Every read opens only the versions asked for:
+    * the commit file first, the archive only when that file is gone. */
+  private val historyDir: Path = logDir.resolve("_history")
+  private def historyFile(boundary: Long): Path =
+    historyDir.resolve(f"$boundary%020d.history.json")
+  private val HistoryName = raw"(\d{20})\.history\.json".r
+
+  /** The validated records of the history sidecar at `boundary`. */
+  private def readArchive(boundary: Long): Seq[CommitInfo] = {
+    val lines = store.read(historyFile(boundary)).filter(_.nonEmpty).map(Actions.fromJson)
+    lines.headOption match {
+      case Some(CheckpointMeta(n, _)) =>
+        require(lines.size - 1 == n,
+          s"history sidecar $boundary incomplete: ${lines.size - 1} of $n records")
+        lines.tail.collect { case c: CommitInfo => c }
+      case _ => throw new IllegalStateException(
+        s"history sidecar $boundary has no self-validation header")
+    }
+  }
+
+  /** One history read: memoizes the archive and the legacy fallback it
+    * may need, so a range over truncated versions lists and reads them
+    * once. */
+  private final class HistoryReader {
+    private var archived: Option[(Long, Map[Long, CommitInfo])] = None
+    private def archive: (Long, Map[Long, CommitInfo]) = archived.getOrElse {
+      val boundaries = store.listFileNames(historyDir)
+        .collect { case HistoryName(b) => b.toLong }.sorted.reverse
+      val a = boundaries.iterator
+        .map(b => scala.util.Try(b -> readArchive(b).map(c => c.version -> c).toMap))
+        .collectFirst { case scala.util.Success(x) => x }
+        .getOrElse((0L, Map.empty[Long, CommitInfo]))
+      archived = Some(a)
+      a
+    }
+    // the oldest readable checkpoint: an older TRUNCATE HISTORY's boundary
+    private lazy val legacy: Map[Long, CommitInfo] =
+      listCheckpoints().iterator
+        .map(cp => scala.util.Try(readCheckpoint(cp).collect { case c: CommitInfo => c }))
+        .collectFirst { case scala.util.Success(cs) => cs }
+        .getOrElse(Nil).map(c => c.version -> c).toMap
+
+    def at(v: Long): Option[CommitInfo] = archived match {
+      case Some((b, cs)) if v < b => cs.get(v)
+      case _ => scala.util.Try(readVersion(v)) match {
+        case scala.util.Success(as) => as.collectFirst { case c: CommitInfo => c }
+        case scala.util.Failure(_) => archive._2.get(v).orElse(legacy.get(v))
+      }
+    }
+  }
+
+  /** Commit records of versions `from` to `to` (both inclusive), oldest
+    * first — one commit-file read per version in the range. */
+  def history(from: Long, to: Long): Seq[CommitInfo] = {
+    val r = new HistoryReader
+    (math.max(0L, from) to to).flatMap(r.at)
+  }
+
+  /** Commit records from version `to` down to 0, newest first, read one
+    * commit file at a time as the caller consumes them — for guards that
+    * stop at the first record they recognize. */
+  def historyBackFrom(to: Long): Iterator[CommitInfo] = {
+    val r = new HistoryReader
+    Iterator.iterate(to)(_ - 1).takeWhile(_ >= 0).flatMap(r.at)
+  }
+
+  /** The commit record of version `v`, if any. */
+  def commitInfo(v: Long): Option[CommitInfo] = new HistoryReader().at(v)
+
+  /** The last version whose commit satisfies `p`, a predicate that holds
+    * on a prefix of the history. In-commit timestamps are strictly
+    * monotone (made so at commit time), so timestamp predicates qualify
+    * and this is a binary search opening O(log versions) commit files. A
+    * version without a readable record (a hand-written log) falls back to
+    * a scan of the whole history. */
+  private def lastWhere(p: CommitInfo => Boolean): Option[Long] = {
+    val latest = latestVersion().getOrElse(
+      throw new IllegalArgumentException(s"not a graft table (empty log): $tableDir"))
+    val r = new HistoryReader
+    var (lo, hi, found) = (0L, latest, -1L)
+    while (lo <= hi) {
+      val mid = lo + (hi - lo) / 2
+      r.at(mid) match {
+        case Some(c) if p(c) => found = mid; lo = mid + 1
+        case Some(_) => hi = mid - 1
+        case None => return history(0L, latest).filter(p).map(_.version).maxOption
+      }
+    }
+    Option.when(found >= 0)(found)
   }
 
   /** Latest version whose commit timestamp <= ts (time travel by timestamp,
-    * reference: notebooks/04_acid_operations.py:217-219). Commit timestamps
-    * are made monotonic at commit time. */
+    * reference: notebooks/04_acid_operations.py:217-219). */
   def versionAt(tsMillis: Long): Long = {
-    val cs = snapshot(None).commits
-    val eligible = cs.filter(_.timestamp <= tsMillis)
-    require(eligible.nonEmpty, s"no version at or before timestamp $tsMillis")
-    eligible.map(_.version).max
+    val v = lastWhere(_.timestamp <= tsMillis)
+    require(v.nonEmpty, s"no version at or before timestamp $tsMillis")
+    v.get
   }
+
+  /** First version whose commit timestamp >= ts (the CDF and stream
+    * `startingTimestamp` rule); the latest version + 1 when every commit
+    * is older. */
+  def versionAtOrAfter(tsMillis: Long): Long =
+    lastWhere(_.timestamp < tsMillis).map(_ + 1).getOrElse(0L)
 
   /** All CDF sidecar actions for one version. */
   def cdfFiles(v: Long): Seq[CdfFile] =

@@ -75,7 +75,7 @@ object Migrate {
     val batchRows = metrics("batch_rows").asInstanceOf[Long]
     val newWatermark = Option(metrics("max_wm")).map(_.toString).orElse(lastWatermark)
     val snap = table.snapshot()
-    val written = snap.commits.find(_.version == v)
+    val written = table.log.commitInfo(v)
       .flatMap(_.operationMetrics.get("numOutputRows")).getOrElse(-1L)
     val after = before match {
       case Some(_) => table.read().count()

@@ -60,15 +60,14 @@ private[graft] object Mirror {
     * Local DML is the cut-over moment. Called at sync entry for a fast loud
     * failure AND inside the commit CAS closure — the retry loop re-resolves
     * the snapshot, so a local write landing in between refuses instead of
-    * duplicating (TOCTOU). */
-  def requireNotDiverged(commits: Seq[CommitInfo], syncOps: Set[String],
-      kind: String): Unit = {
-    val syncPoint = commits.filter(c => syncOps.contains(c.operation))
-      .map(_.version).maxOption.getOrElse(-1L)
-    refuseDiverged(commits.filter(_.version > syncPoint)
-      .filterNot(c => FileSetNeutralOps(c.operation)),
+    * duplicating (TOCTOU). Reads the history of `s`'s table backwards
+    * from `s.version`, only as far as that last sync point. */
+  def requireNotDiverged(log: TxLog, s: Snapshot, syncOps: Set[String],
+      kind: String): Unit =
+    refuseDiverged(log.historyBackFrom(s.version)
+      .takeWhile(c => !syncOps.contains(c.operation))
+      .filterNot(c => FileSetNeutralOps(c.operation)).toSeq.reverse,
       s"the table since the last $kind sync")
-  }
 
   private def refuseDiverged(diverging: Seq[CommitInfo], what: String): Unit =
     require(diverging.isEmpty,
@@ -93,7 +92,7 @@ private[graft] object Mirror {
     val consumed = t.properties.get(keys.consumed).map(_.toLong).getOrElse(
       throw new IllegalArgumentException(
         s"$dir was not imported from ${keys.kind} (no ${keys.consumed} property)"))
-    requireNotDiverged(t.snapshot().commits, syncOps(keys.kind), keys.kind)
+    requireNotDiverged(t.log, t.snapshot(), syncOps(keys.kind), keys.kind)
     (t, consumed)
   }
 
@@ -122,15 +121,25 @@ private[graft] object Mirror {
     * reorganizations (OPTIMIZE/ZORDER/REORG) are fine: the syncs key on
     * lineage COLUMNS, which compaction carries through. Allowed commits:
     * the import/sync's own (txn app id marker), CREATE TABLE, the
-    * file-set-neutral housekeeping set, and OPTIMIZE/REORG. */
-  def requireRewriteNotDiverged(dest: LakeTable): Unit = {
+    * file-set-neutral housekeeping set, and OPTIMIZE/REORG.
+    *
+    * Every sync ran this guard before its first commit, so the history up
+    * to the syncs before the one that produced `consumed` (the source
+    * ordinal the destination has consumed) is already checked: the read
+    * goes backwards from the head and stops at the newest sync step marked
+    * with an older ordinal. */
+  def requireRewriteNotDiverged(dest: LakeTable, consumed: Long): Unit = {
     val rowPreserving = Set("OPTIMIZE", "REORG")
-    refuseDiverged(dest.snapshot().commits.filterNot { c =>
+    def olderStep(c: CommitInfo): Boolean =
+      c.operationParameters.get("txnAppId").exists(_.startsWith(AppIdPrefix)) &&
+        c.operationParameters.get("txnVersion").exists(_.toLongOption.exists(_ < consumed))
+    refuseDiverged(dest.log.historyBackFrom(dest.snapshot().version)
+      .takeWhile(c => !olderStep(c)).filterNot { c =>
       c.operation == "CREATE TABLE" ||
         FileSetNeutralOps(c.operation) ||
         rowPreserving(c.operation) ||
         c.operationParameters.get("txnAppId").exists(_.startsWith(AppIdPrefix))
-    }, "this rewrite destination's rows")
+    }.toSeq.reverse, "this rewrite destination's rows")
   }
 
   // ------------------------------------------------ zero-copy commits
@@ -203,7 +212,7 @@ private[graft] object Mirror {
             throw new LakeTable.EpochAlreadyCommitted
           // TOCTOU closure re-check: a local write that landed after the
           // entry guard makes this retry refuse instead of duplicating rows
-          requireNotDiverged(s.commits, syncOps(kind), kind)
+          requireNotDiverged(t.log, s, syncOps(kind), kind)
           requireNoConstraintsForAdds(s.metadata.properties, adds.size.toLong, kind)
           val live = s.files.map(_.path).toSet
           val clears = s.dvs.keys.filterNot(maskedNow).filter(clearable)
@@ -611,7 +620,7 @@ private[graft] object Mirror {
       s"$destDir mirrors ${props0.getOrElse(keys.source, "<unset>")}, " +
         s"not $srcDir")
     val consumed = props0(keys.consumed).toLong
-    requireRewriteNotDiverged(dest)
+    requireRewriteNotDiverged(dest, consumed)
     val st = replay(root)
     if (st.point.consumedBy(props0)) {
       // up to date; a sync that crashed after its last commit finishes

@@ -122,7 +122,7 @@ object Quality {
       requiredCols: Seq[String],
       versions: Seq[Long] = Nil): DataFrame = {
     val vs = if (versions.nonEmpty) versions
-      else table.snapshot().commits.map(_.version)
+      else table.log.listVersions()
     val rows = vs.map { v =>
       val df = table.versionAsOf(v)
       val aggs = Seq(

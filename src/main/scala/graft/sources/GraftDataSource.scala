@@ -93,10 +93,7 @@ class DefaultSource extends RelationProvider
         .orElse(atTs("endingTimestamp").map(table.log.versionAt))
       val startV = parameters.get("startingVersion").map(_.toLong).orElse {
         // first commit at-or-after the starting timestamp (Delta semantics)
-        atTs("startingTimestamp").map { ms =>
-          table.snapshot().commits.filter(_.timestamp >= ms).map(_.version)
-            .minOption.getOrElse(table.version + 1)
-        }
+        atTs("startingTimestamp").map(table.log.versionAtOrAfter)
       }.getOrElse(0L)
       return new GraftCdfRelation(sqlContext, table, startV, endV)
     }

@@ -56,8 +56,7 @@ class GraftStreamSource(
         val ms = scala.util.Try(ts.toLong).toOption
           .orElse(scala.util.Try(java.sql.Timestamp.valueOf(ts).getTime).toOption)
           .getOrElse(java.sql.Date.valueOf(ts).getTime)
-        val commits = table.snapshot().commits
-        val latest = commits.map(_.timestamp).maxOption.getOrElse(Long.MinValue)
+        val latest = table.snapshot().commitTimestamp
         // a timestamp beyond the newest commit is almost always a typo —
         // fail loudly (Delta raises here too) instead of silently serving
         // an empty future-appends-only stream
@@ -65,8 +64,7 @@ class GraftStreamSource(
           s"startingTimestamp '$ts' is after the table's latest commit " +
             s"(${new java.sql.Timestamp(latest)}); to stream only future " +
             "changes use startingVersion=<latest version + 1>")
-        commits.filter(_.timestamp >= ms).map(_.version)
-          .minOption.getOrElse(table.version + 1)
+        table.log.versionAtOrAfter(ms)
       })
   private val ignoreChanges = options.get("ignoreChanges").contains("true")
   private val ignoreDeletes = options.get("ignoreDeletes").contains("true")

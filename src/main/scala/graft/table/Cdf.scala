@@ -98,9 +98,7 @@ trait CdfSupport { self: LakeTable =>
   }
 
   def changesBetweenTimestamps(startMillis: Long, endMillis: Option[Long] = None): DataFrame = {
-    val commits = snapshot().commits
-    val start = commits.filter(_.timestamp >= startMillis).map(_.version)
-      .minOption.getOrElse(version + 1)
+    val start = log.versionAtOrAfter(startMillis)
     val end = endMillis.map(m => log.versionAt(m))
     if (start > end.getOrElse(version)) emptyCdf(snapshot().schema)
     else changes(start, end)

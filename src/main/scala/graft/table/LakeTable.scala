@@ -42,24 +42,39 @@ class LakeTable private[table] (
   // metadata-only count(*) over this session's graft scans (idempotent)
   MetadataOnlyCount.register(spark)
 
-  /** Snapshots are immutable per version, so resolution caches on the
-    * version number: repeated planning against an unchanged table costs one
-    * directory listing, not a log replay/parse. Another writer advancing
-    * the table is picked up by the listing on the next call. */
-  @volatile private var snapshotCache: (Long, Snapshot) = (-1L, null)
+  /** Snapshots are immutable per version, so resolution caches them. The
+    * newest snapshot this instance has seen advances by applying only the
+    * commits after it ([[TxLog.advance]], O(new commits)), and a commit
+    * made through this instance installs its own post-commit state with no
+    * log read at all; another writer advancing the table is picked up by
+    * the listing on the next call. A second slot keeps the last older
+    * (time-travel) snapshot. Any gap or defect falls back to
+    * [[TxLog.snapshot]]'s replay from the newest checkpoint. */
+  @volatile private var headSnap: Snapshot = null
+  @volatile private var travelSnap: Snapshot = null
 
   def name: String = snapshot().metadata.name
   def version: Long = log.latestVersion().getOrElse(-1L)
   def snapshot(v: Option[Long] = None): Snapshot = {
     val target = v.getOrElse(log.latestVersion().getOrElse(
       throw new IllegalStateException(s"not a graft table (empty log): $dir")))
-    val cached = snapshotCache
-    if (cached._1 == target) cached._2
-    else {
+    val head = headSnap
+    val travel = travelSnap
+    if (head != null && head.version == target) head
+    else if (travel != null && travel.version == target) travel
+    else if (head == null || head.version < target) {
+      val s = Option(head).flatMap(log.advance(_, target))
+        .getOrElse(log.snapshot(Some(target)))
+      installHead(s)
+      s
+    } else {
       val s = log.snapshot(Some(target))
-      snapshotCache = (target, s)
+      travelSnap = s
       s
     }
+  }
+  private def installHead(s: Snapshot): Unit = synchronized {
+    if (headSnap == null || headSnap.version < s.version) headSnap = s
   }
   def schema: StructType = snapshot().schema
   def partitionColumns: Seq[String] = snapshot().metadata.partitionColumns
@@ -485,11 +500,14 @@ class LakeTable private[table] (
         n.startsWith("_") || n.startsWith(".")
       }
       .sorted
-    def loadedIn(s: Snapshot): Set[String] = s.commits
+    // the ledger is read through the history reader; a CAS retry reads
+    // only the commits that landed since
+    def loadedIn(from: Long, to: Long): Set[String] = log.history(from, to)
       .filter(_.operation == "COPY INTO")
       .flatMap(_.operationParameters.get("copiedFiles"))
       .flatMap(_.split('\n')).filter(_.nonEmpty).toSet
-    val fresh = if (force) listed else listed.filterNot(loadedIn(snap0))
+    val loaded0 = if (force) Set.empty[String] else loadedIn(0L, snap0.version)
+    val fresh = if (force) listed else listed.filterNot(loaded0)
     if (fresh.isEmpty) return snap0.version
     // parquet/orc are self-describing (align casts onto the table schema);
     // csv/json read under the enforced schema
@@ -513,7 +531,7 @@ class LakeTable private[table] (
             "COPY INTO conflicts with a concurrent schema change")
         // the ledger re-check against the FRESH snapshot keeps at-most-once
         // under a lost CAS race with a concurrent COPY INTO of the same files
-        if (!force && fresh.exists(loadedIn(s)))
+        if (!force && fresh.exists(loadedIn(snap0.version + 1, s.version)))
           throw new java.util.ConcurrentModificationException(
             "COPY INTO conflicts with a concurrent load of the same files")
       }
@@ -594,14 +612,8 @@ class LakeTable private[table] (
   }
 
   /** Highest txnVersion committed for `txnAppId` (None if never seen). */
-  def lastTxnVersion(snap: Snapshot, txnAppId: String): Option[Long] = {
-    val vs = snap.commits.flatMap { c =>
-      if (c.operationParameters.get("txnAppId").contains(txnAppId))
-        c.operationParameters.get("txnVersion").flatMap(v => scala.util.Try(v.toLong).toOption)
-      else None
-    }
-    if (vs.isEmpty) None else Some(vs.max)
-  }
+  def lastTxnVersion(snap: Snapshot, txnAppId: String): Option[Long] =
+    snap.txns.get(txnAppId)
 
   /** Full overwrite (W2); `overwriteSchema` replaces the schema wholesale
     * (migration/migrate_from_rdbms.py:104-108). */
@@ -1239,10 +1251,15 @@ class LakeTable private[table] (
       val ci = CommitInfo(v, nextTimestamp(snap), op, params, autoMetrics ++ metrics,
         snap.version, LakeTable.currentUser, blind, commitId)
       if (log.tryCommitRecovering(v, ci +: actions)) {
+        // the state this commit produced: the snapshot it was built on plus
+        // exactly what landed — the next resolution and the checkpoint
+        // below need no replay
+        val landed = scala.util.Try(log.applied(snap, ci +: actions)).toOption
+        landed.foreach(installHead)
         // checkpoint every Nth commit (graft.checkpointInterval, Delta's
         // delta.checkpointInterval; default 10) so snapshot resolution
         // stays O(interval) regardless of table history (best effort —
-        // replay still works)
+        // replay still works; a failure is logged and counted)
         // cadence properties come from rtProps — THIS commit's metadata when
         // it carries one — so SET TBLPROPERTIES of an interval takes effect
         // from its own commit, not the one after
@@ -1252,14 +1269,16 @@ class LakeTable private[table] (
           .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0)
           .getOrElse(10)
         if (v > 0 && v % interval == 0)
-          try log.writeCheckpoint(v)
-          catch { case scala.util.control.NonFatal(_) => }
+          try landed.fold(log.writeCheckpoint(v))(log.writeCheckpoint)
+          catch { case scala.util.control.NonFatal(e) =>
+            LakeTable.bestEffortFailed(dir, v, "checkpoint", e) }
         // minor log compaction (Delta 3.x `<s>.<e>.compacted.json`): at
         // commit rates above the checkpoint cadence the per-commit tail
         // dominates resolution cost; every Nth commit the last N commits
         // compact behind one GET (graft.log.compactionInterval, also
         // delta.logCompaction.interval; 0/absent = off). Best effort —
-        // per-commit files stay the source of truth.
+        // per-commit files stay the source of truth; a failure is logged
+        // and counted.
         val compactEvery = rtProps
           .get("graft.log.compactionInterval")
           .orElse(rtProps.get("delta.logCompaction.interval"))
@@ -1267,13 +1286,16 @@ class LakeTable private[table] (
         if (compactEvery.exists(n => v >= n && v % n == 0)) {
           val s0 = v - compactEvery.get + 1
           try log.writeCompacted(s0, v)
-          catch { case scala.util.control.NonFatal(_) =>
+          catch { case scala.util.control.NonFatal(e) =>
             // after TRUNCATE HISTORY the natural range can start below the
             // boundary (its per-commit files are gone): retry clamped to
             // the oldest surviving version instead of silently skipping
             // every cadence hit until the window clears the boundary
-            try log.writeCompactedClamped(s0, v)
-            catch { case scala.util.control.NonFatal(_) => }
+            try {
+              if (!log.writeCompactedClamped(s0, v))
+                LakeTable.bestEffortFailed(dir, v, "log compaction", e)
+            } catch { case scala.util.control.NonFatal(e2) =>
+              LakeTable.bestEffortFailed(dir, v, "log compaction", e2) }
           }
         }
         // UniForm auto-export: refresh the Iceberg view when the committed
@@ -1292,7 +1314,7 @@ class LakeTable private[table] (
       val capMs = math.min(64L, 1L << math.min(attempts, 6))
       val sleepMs = java.util.concurrent.ThreadLocalRandom.current().nextLong(capMs + 1)
       if (sleepMs > 0) Thread.sleep(sleepMs)
-      snap = log.snapshot()
+      snap = snapshot()
     }
     -1L // unreachable
   }
@@ -1311,8 +1333,7 @@ class LakeTable private[table] (
     * this log never used file mtime, so timestamp time travel, RESTORE
     * TIMESTAMP, and CDF ranges always binary-search a monotone sequence. */
   private[table] def nextTimestamp(snap: Snapshot): Long = {
-    val last = snap.commits.lastOption.map(_.timestamp).getOrElse(0L)
-    math.max(clockMillis(), last + 1)
+    math.max(clockMillis(), snap.commitTimestamp + 1)
   }
 
   // ------------------------------------------------- metadata operations
@@ -1521,9 +1542,17 @@ class LakeTable private[table] (
     * `isBlindAppend` follow Delta's history column names; commits written
     * by older versions of this library surface them as null. */
   def history(limit: Option[Int] = None): DataFrame = {
-    val commits = snapshot().commits.sortBy(-_.version)
-    val take = limit.map(commits.take).getOrElse(commits)
-    val rows = take.map(c => Row(c.version, new java.sql.Timestamp(c.timestamp),
+    // with a limit, open only the newest `limit` commit files (a version
+    // without a record widens the read to the whole history)
+    val latest = snapshot().version
+    val commits = (limit match {
+      case Some(n) =>
+        val recent = log.history(latest - n + 1, latest)
+        if (recent.size >= math.min(n.toLong, latest + 1)) recent
+        else log.history(0L, latest).takeRight(n)
+      case None => log.history(0L, latest)
+    }).reverse
+    val rows = commits.map(c => Row(c.version, new java.sql.Timestamp(c.timestamp),
       c.userName, c.operation,
       c.operationParameters, c.operationMetrics.map { case (k, v) => k -> v.toString },
       c.readVersion, c.isBlindAppend, c.commitId))
@@ -1562,7 +1591,7 @@ class LakeTable private[table] (
       .groupBy(identity).map { case (t, fs) => t -> fs.size.toLong }
     val rows = Seq(Row("graft", snap.metadata.id, snap.metadata.name, dir.toString,
       new java.sql.Timestamp(snap.metadata.createdTime),
-      new java.sql.Timestamp(snap.commits.lastOption.map(_.timestamp).getOrElse(0L)),
+      new java.sql.Timestamp(snap.commitTimestamp),
       snap.metadata.partitionColumns, snap.numFiles.toLong, snap.sizeInBytes,
       snap.metadata.properties,
       snap.dvs.size.toLong, snap.dvs.values.map(_.numDeleted).sum,
@@ -2058,18 +2087,20 @@ class LakeTable private[table] (
     val liveDv = snap.dvs.values.flatMap(_.storagePath).map(absPathStr).toSet
     // one pass over the log history serves all classifications
     val history = log.listVersions().flatMap(v => log.readVersion(v))
-    val referenced = history.collect {
-      case a: AddFile => absPath(a)
-      case c: CdfFile => dir.resolve(c.path).toString
-    }.toSet
-    val referencedDv = history.collect {
-      case d: DeletionVector => d.storagePath.map(absPathStr)
-    }.flatten.toSet
     // LATEST tombstone per path decides: an old remove superseded by a
     // re-add + recent re-remove keeps the file inside the window
     val latestRemove = history.collect { case r: RemoveFile =>
       absPath(AddFile(r.path, Map.empty, 0, 0, Map.empty, 0)) -> r.deletionTimestamp
     }.groupBy(_._1).map { case (p, ts) => p -> ts.map(_._2).max }
+    // a tombstoned file is the table's even when TRUNCATE HISTORY deleted
+    // the commit that added it: its tombstone's age decides, never its mtime
+    val referenced = history.collect {
+      case a: AddFile => absPath(a)
+      case c: CdfFile => dir.resolve(c.path).toString
+    }.toSet ++ latestRemove.keySet
+    val referencedDv = history.collect {
+      case d: DeletionVector => d.storagePath.map(absPathStr)
+    }.flatten.toSet
     val tombstoned = latestRemove.collect {
       // <= so retainHours=0 ("retain nothing") catches a same-millisecond tombstone
       case (p, ts) if ts <= horizon => p
@@ -2309,6 +2340,20 @@ object LakeTable {
     case bytes: Array[Byte] => s.update(bytes)
     case other => s.update(String.valueOf(other))
   }): Unit
+
+  /** Post-commit maintenance (checkpoint, log compaction) that failed after
+    * its commit landed. The commit stands and reads stay correct — the
+    * per-commit files are the source of truth — so the failure is not
+    * raised; it is logged at WARN and counted here. */
+  private[graft] val bestEffortFailures = new java.util.concurrent.atomic.AtomicLong
+
+  private lazy val warnLog = org.slf4j.LoggerFactory.getLogger(classOf[LakeTable])
+
+  private[table] def bestEffortFailed(dir: Path, v: Long, what: String, e: Throwable): Unit = {
+    bestEffortFailures.incrementAndGet(): Unit
+    warnLog.warn(s"post-commit $what of table $dir at version $v failed " +
+      s"(the commit landed; reads fall back to the log): $e")
+  }
 
   /** Committing identity for CommitInfo.userName (no auth layer locally —
     * the JVM user is the honest equivalent of the reference's cluster user). */

@@ -454,4 +454,140 @@ class CheckpointSpec extends SparkSpec {
     snap.version shouldBe 31
     snap.numRecords shouldBe 31
   }
+
+  /** Runs `f` with every table's log in `store` (data files stay on disk). */
+  private def withLogStore[A](store: LogStore)(f: => A): A = {
+    val prev = LogStore.default
+    LogStore.default = store
+    try f finally LogStore.default = prev
+  }
+
+  test("checkpoint size tracks the live state, not the commit count") {
+    val store = new InMemoryLogStore
+    withLogStore(store) {
+      val t = LakeTable.create(spark, tmpDir("ckpt-size").resolve("t").toString,
+        Seq((1L, "x")).toDF("k", "v").schema)
+      t.append(Seq((1L, "a")).toDF("k", "v").coalesce(1))
+      t.append(Seq((2L, "b")).toDF("k", "v").coalesce(1))
+      (3 to 300).foreach(i => t.setProperties(Map("probe.commit" -> i.toString)))
+      def bytesAt(v: Long): Int =
+        store.readBytes(t.log.logDir.resolve(f"$v%020d.checkpoint.json")).length
+      t.snapshot().numFiles shouldBe 2
+      bytesAt(300L).toDouble should be <= 1.2 * bytesAt(20L)
+    }
+  }
+
+  /** Store whose checkpoint and compaction writes throw while `failing`. */
+  private class FailingMaintenance(inner: LogStore) extends LogStore {
+    @volatile var failing = true
+    def listFileNames(dir: java.nio.file.Path): Seq[String] = inner.listFileNames(dir)
+    override def listFileNamesAfter(dir: java.nio.file.Path, startAfter: String): Seq[String] =
+      inner.listFileNamesAfter(dir, startAfter)
+    def read(path: java.nio.file.Path): Seq[String] = inner.read(path)
+    def writeAtomic(path: java.nio.file.Path, body: Array[Byte], overwrite: Boolean): Boolean = {
+      val n = path.getFileName.toString
+      if (failing && (n.contains(".checkpoint.") || n.contains(".compacted.")))
+        throw new java.io.IOException(s"injected write failure: $n")
+      inner.writeAtomic(path, body, overwrite)
+    }
+    def delete(path: java.nio.file.Path): Boolean = inner.delete(path)
+  }
+
+  test("post-commit checkpoint and compaction failures are counted; the commit stands") {
+    val store = new FailingMaintenance(new InMemoryLogStore)
+    withLogStore(store) {
+      val t = LakeTable.create(spark, tmpDir("ckpt-fail").resolve("t").toString,
+        Seq((1L, "x")).toDF("k", "v").schema,
+        properties = Map("graft.checkpointInterval" -> "3",
+          "graft.log.compactionInterval" -> "3"))
+      val before = LakeTable.bestEffortFailures.get()
+      (1 to 3).foreach(i => t.append(Seq((i.toLong, s"v$i")).toDF("k", "v").coalesce(1)))
+      t.version shouldBe 3L
+      // one failed checkpoint and one failed compaction, both at v3
+      LakeTable.bestEffortFailures.get() - before shouldBe 2L
+      t.log.listCheckpoints() shouldBe empty
+      t.read().count() shouldBe 3L
+      LakeTable.forPath(spark, t.dir.toString).read().count() shouldBe 3L
+      // the next cadence point writes normally
+      store.failing = false
+      (4 to 6).foreach(i => t.append(Seq((i.toLong, s"v$i")).toDF("k", "v").coalesce(1)))
+      LakeTable.bestEffortFailures.get() - before shouldBe 2L
+      t.log.listCheckpoints() shouldBe Seq(6L)
+      store.listFileNames(t.log.logDir) should contain(f"${4L}%020d.${6L}%020d.compacted.json")
+      LakeTable.forPath(spark, t.dir.toString).read().count() shouldBe 6L
+    }
+  }
+
+  /** A checkpoint in the layout written before commit history left
+    * checkpoints: the state plus every `CommitInfo` up to `v`, under a
+    * matching count header. */
+  private def writeHistoryCheckpoint(log: TxLog, v: Long, pointer: Boolean): Unit = {
+    val s = log.snapshot(Some(v))
+    val actions: Seq[Action] = Seq(s.protocol, s.metadata) ++
+      s.domains.toSeq.sortBy(_._1).map { case (d, c) => DomainMetadata(d, c) } ++
+      (0L to v).flatMap(x => log.readVersion(x).collect { case c: CommitInfo => c }) ++
+      s.files ++ s.dvs.values
+    Files.write(log.logDir.resolve(f"$v%020d.checkpoint.json"),
+      (CheckpointMeta(actions.size.toLong) +: actions).map(Actions.toJson)
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+    if (pointer)
+      Files.write(log.logDir.resolve("_last_checkpoint"), s"""{"version":$v}""".getBytes)
+  }
+
+  test("checkpoints carrying CommitInfo lines (the older layout) still resolve") {
+    for (pointer <- Seq(true, false)) withClue(s"pointer=$pointer: ") {
+      val t = LakeTable.create(spark, tmpDir("ckpt-legacy").resolve("t").toString,
+        Seq((1L, "x")).toDF("k", "v").schema,
+        properties = Map("graft.checkpointInterval" -> "1000",
+          "graft.enableDeletionVectors" -> "true"))
+      (1 to 3).foreach(i => t.append(Seq((i.toLong, s"v$i")).toDF("k", "v").coalesce(1)))
+      t.appendStream(Seq((10L, "s0")).toDF("k", "v"), "legacy-app", 0L)
+      t.appendStream(Seq((11L, "s1")).toDF("k", "v"), "legacy-app", 1L)
+      t.delete(col("k") === 2L)
+      val cp = t.version
+      t.append(Seq((4L, "v4")).toDF("k", "v").coalesce(1))
+      // the reference: a plain replay of the commit files (no checkpoint yet)
+      val reference = new TxLog(t.dir).snapshot()
+      val historyRows = t.history().collect().toSeq
+      val midTs = t.log.readVersion(cp - 1).collectFirst { case c: CommitInfo => c.timestamp }.get
+      writeHistoryCheckpoint(t.log, cp, pointer)
+      def checkAll(clue: String): Unit = withClue(clue) {
+        val u = LakeTable.forPath(spark, t.dir.toString)
+        val s = u.snapshot()
+        s.files.map(_.path).sorted shouldBe reference.files.map(_.path).sorted
+        s.dvs shouldBe reference.dvs
+        s.txns shouldBe Map("legacy-app" -> 1L)
+        s.commitTimestamp shouldBe reference.commitTimestamp
+        u.history().collect().toSeq shouldBe historyRows
+        u.log.versionAt(midTs) shouldBe cp - 1
+        // a replayed epoch is a no-op
+        val v0 = u.version
+        u.appendStream(Seq((11L, "s1")).toDF("k", "v"), "legacy-app", 1L) shouldBe v0
+        u.version shouldBe v0
+        u.read().count() shouldBe 5L
+      }
+      checkAll("via the checkpoint: ")
+      // the older TRUNCATE HISTORY: commit files below the checkpoint gone,
+      // their records only in the checkpoint's CommitInfo lines
+      (0L until cp).foreach(x => Files.delete(t.log.logDir.resolve(f"$x%020d.json")))
+      checkAll("after the older truncation: ")
+      // a truncation now archives those records into the history sidecar
+      t.log.truncateBefore(cp + 1)
+      LakeTable.forPath(spark, t.dir.toString).history().collect().toSeq shouldBe historyRows
+    }
+  }
+
+  test("VACUUM keeps a file tombstoned inside the window after TRUNCATE HISTORY dropped its add") {
+    val t = LakeTable.create(spark, tmpDir("ckpt-vac").resolve("t").toString,
+      Seq((1L, "x")).toDF("k", "v").schema)
+    t.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1))
+    t.append(Seq((3L, "c")).toDF("k", "v").coalesce(1))
+    t.log.truncateBefore(2L) // the first file's add now lives only in the checkpoint
+    val aged = System.currentTimeMillis() + 10L * 3600 * 1000
+    t.clockMillis = () => aged
+    t.delete(col("k") === 1L) // rewrites the first file: a fresh tombstone
+    t.vacuum(retainHours = 5.0)
+    t.restoreToVersion(2L)
+    t.read().count() shouldBe 3L
+  }
 }
