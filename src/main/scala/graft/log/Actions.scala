@@ -247,6 +247,12 @@ case class CheckpointMeta(numActions: Long, commitTimestamp: java.lang.Long = nu
   * so exactly-once replay checks never need the commit history. */
 case class SetTransaction(appId: String, version: Long) extends Action
 
+/** COPY INTO's loaded-file ledger: every source path a COPY INTO commit
+  * loaded (its `copiedFiles` parameter). Checkpoints carry the whole set
+  * in one such action, so the at-most-once check never needs the commit
+  * history. Only ever appears in checkpoints, never in commits. */
+case class CopiedFiles(paths: Seq[String]) extends Action
+
 /** V2-checkpoint sidecar reference (Delta's v2Checkpoint sidecar idea):
   * the manifest checkpoint carries table-level state plus `sidecar` refs,
   * and the per-file actions (AddFile + DeletionVector) live in
@@ -272,7 +278,8 @@ private[log] case class ActionEnvelope(
     checkpointMeta: CheckpointMeta = null,
     domainMetadata: DomainMetadata = null,
     sidecar: Sidecar = null,
-    txn: SetTransaction = null)
+    txn: SetTransaction = null,
+    copied: CopiedFiles = null)
 
 object Actions {
   private val mapper: ObjectMapper = {
@@ -298,6 +305,7 @@ object Actions {
     case x: DomainMetadata => mapper.writeValueAsString(ActionEnvelope(domainMetadata = x))
     case x: Sidecar        => mapper.writeValueAsString(ActionEnvelope(sidecar = x))
     case x: SetTransaction => mapper.writeValueAsString(ActionEnvelope(txn = x))
+    case x: CopiedFiles    => mapper.writeValueAsString(ActionEnvelope(copied = x))
   }
 
   def fromJson(line: String): Action = {
@@ -323,6 +331,7 @@ object Actions {
     else if (e.domainMetadata != null) e.domainMetadata
     else if (e.sidecar != null) e.sidecar
     else if (e.txn != null) e.txn
+    else if (e.copied != null) e.copied
     else throw new IllegalArgumentException(s"unrecognized action: $line")
   }
 }

@@ -9,10 +9,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
 /** Snapshot of a table at one version: its STATE only — last protocol and
   * metadata, live files and deletion vectors (keyed by the data file's
   * relative path), domains, each idempotent writer's last committed
-  * version (`txns`, Delta's SetTransaction) and the newest commit's
-  * in-commit timestamp. Commit history is not state: it stays in the
-  * commit files, and readers open only the range they need through
-  * [[TxLog.history]]. */
+  * version (`txns`, Delta's SetTransaction), the source paths COPY INTO
+  * has loaded (`copied`) and the newest commit's in-commit timestamp.
+  * Commit history is not state: it stays in the commit files, and
+  * readers open only the range they need through [[TxLog.history]]. */
 case class Snapshot(
     version: Long,
     metadata: Metadata,
@@ -21,6 +21,7 @@ case class Snapshot(
     protocol: Protocol = Protocol.Current,
     domains: Map[String, String] = Map.empty,
     txns: Map[String, Long] = Map.empty,
+    copied: Set[String] = Set.empty,
     commitTimestamp: Long = 0L)(@transient private val log: TxLog) {
   def schema: StructType = DataType.fromJson(metadata.schemaJson).asInstanceOf[StructType]
   def numFiles: Int = files.size
@@ -33,11 +34,11 @@ case class Snapshot(
 }
 
 /** The one fold from log actions to table state. Checkpoint bases,
-  * commit tails, cache advances and a writer's own post-commit state all
-  * apply their actions through it, so every resolution path yields the
-  * same [[Snapshot]]. A checkpoint written before history left them still
-  * carries `CommitInfo` lines; they fold into `txns` and the commit
-  * timestamp exactly as a commit's own record does. */
+  * commit tails and a writer's own post-commit state all apply their
+  * actions through it, so every resolution path yields the same
+  * [[Snapshot]]. A checkpoint written before history left them still
+  * carries `CommitInfo` lines; they fold into `txns`, `copied` and the
+  * commit timestamp exactly as a commit's own record does. */
 private[log] final class Replay(log: TxLog) {
   private var meta: Metadata = null
   // pre-protocol tables (no action anywhere in the log) read as (1, 1)
@@ -46,6 +47,8 @@ private[log] final class Replay(log: TxLog) {
   private val dvs = mutable.LinkedHashMap.empty[String, DeletionVector]
   private val domains = mutable.LinkedHashMap.empty[String, String]
   private val txns = mutable.HashMap.empty[String, Long]
+  // immutable: a fold from a base shares its set instead of copying it
+  private var copied = Set.empty[String]
   private var commitTs = 0L
 
   def this(log: TxLog, base: Snapshot) = {
@@ -56,6 +59,7 @@ private[log] final class Replay(log: TxLog) {
     dvs ++= base.dvs
     domains ++= base.domains
     txns ++= base.txns
+    copied = base.copied
     commitTs = base.commitTimestamp
   }
 
@@ -71,7 +75,11 @@ private[log] final class Replay(log: TxLog) {
       for (app <- c.operationParameters.get("txnAppId");
            v <- c.operationParameters.get("txnVersion")
              .flatMap(x => scala.util.Try(x.toLong).toOption)) txn(app, v)
+      if (c.operation == "COPY INTO")
+        c.operationParameters.get("copiedFiles")
+          .foreach(fs => copied ++= fs.split('\n').iterator.filter(_.nonEmpty))
     case t: SetTransaction => txn(t.appId, t.version)
+    case c: CopiedFiles    => copied ++= c.paths
     case d: DeletionVector =>
       if (d.clears) dvs.remove(d.forFile): Unit else dvs(d.forFile) = d
     case p: Protocol       => proto = p
@@ -97,7 +105,7 @@ private[log] final class Replay(log: TxLog) {
         s"table ${log.tableDir} requires reader feature(s) ${unknownReader.toSeq.sorted.mkString(", ")} " +
           "this engine does not implement — upgrade the library")
     Snapshot(version, meta, live.values.toSeq, dvs.toMap, proto, domains.toMap,
-      txns.toMap, commitTs)(log)
+      txns.toMap, copied, commitTs)(log)
   }
 }
 
@@ -384,7 +392,8 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
     val tableState: Seq[Action] =
       Seq(snap.protocol, snap.metadata) ++
         snap.domains.toSeq.sortBy(_._1).map { case (d, c) => DomainMetadata(d, c) } ++
-        snap.txns.toSeq.sortBy(_._1).map { case (a, x) => SetTransaction(a, x) }
+        snap.txns.toSeq.sortBy(_._1).map { case (a, x) => SetTransaction(a, x) } ++
+        Option.when(snap.copied.nonEmpty)(CopiedFiles(snap.copied.toSeq.sorted))
     val actions: Seq[Action] = tableState ++ snap.files ++ snap.dvs.values
     val partSize = Option(snap.metadata.properties)
       .flatMap(_.get("graft.checkpoint.partSize"))
@@ -684,24 +693,6 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
     state.result(upTo)
   }
 
-  /** The snapshot at `target`, advanced from `base` at an older version by
-    * applying only the commits after it — O(new commits) log reads, no
-    * checkpoint. None when that is not the cheaper or not a sound path:
-    * a checkpoint newer than `base` exists (a full replay from it reads
-    * no more), a commit in the range cannot be read, or `base` no longer
-    * matches the log — its own commit must still read back with the
-    * timestamp it recorded, which a table re-created under the same path
-    * fails. Callers fall back to [[snapshot]], the reference path. */
-  def advance(base: Snapshot, target: Long): Option[Snapshot] =
-    if (target <= base.version || lastCheckpoint().exists(_ > base.version)) None
-    else scala.util.Try {
-      val own = readVersion(base.version).collectFirst { case c: CommitInfo => c.timestamp }
-      require(own.contains(base.commitTimestamp), s"log of $tableDir changed under a cached snapshot")
-      val state = new Replay(this, base)
-      (base.version + 1 to target).foreach(v => readVersion(v).foreach(state.add))
-      state.result(target)
-    }.toOption
-
   /** `base` plus the `actions` a writer just landed as version
     * `base.version + 1` — the post-commit state, with no log read. The
     * actions pass through their JSON form first, so the state holds what
@@ -794,29 +785,38 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
   /** The last version whose commit satisfies `p`, a predicate that holds
     * on a prefix of the history. In-commit timestamps are strictly
     * monotone (made so at commit time), so timestamp predicates qualify
-    * and this is a binary search opening O(log versions) commit files. A
-    * version without a readable record (a hand-written log) falls back to
-    * a scan of the whole history. */
-  private def lastWhere(p: CommitInfo => Boolean): Option[Long] = {
+    * and this is a binary search opening O(log versions) commit files.
+    * The search checks the order of what it reads: each probe's timestamp
+    * must lie strictly between those of the probes next to it below and
+    * above. A probe that breaks the order or has no record (a log written
+    * before timestamps were clamped, or by a writer that ignores the
+    * clamp) ends the search with Left(the whole history), for the caller
+    * to scan as a lookup that assumes no order. Breaks the probes do not
+    * meet go undetected: lookups rely on monotone timestamps. */
+  private def lastWhere(p: CommitInfo => Boolean): Either[Seq[CommitInfo], Option[Long]] = {
     val latest = latestVersion().getOrElse(
       throw new IllegalArgumentException(s"not a graft table (empty log): $tableDir"))
     val r = new HistoryReader
     var (lo, hi, found) = (0L, latest, -1L)
+    // timestamps of the probes at lo - 1 and hi + 1
+    var (loTs, hiTs) = (Long.MinValue, Long.MaxValue)
     while (lo <= hi) {
       val mid = lo + (hi - lo) / 2
       r.at(mid) match {
-        case Some(c) if p(c) => found = mid; lo = mid + 1
-        case Some(_) => hi = mid - 1
-        case None => return history(0L, latest).filter(p).map(_.version).maxOption
+        case Some(c) if c.timestamp > loTs && c.timestamp < hiTs =>
+          if (p(c)) { found = mid; lo = mid + 1; loTs = c.timestamp }
+          else { hi = mid - 1; hiTs = c.timestamp }
+        case _ => return Left(history(0L, latest))
       }
     }
-    Option.when(found >= 0)(found)
+    Right(Option.when(found >= 0)(found))
   }
 
   /** Latest version whose commit timestamp <= ts (time travel by timestamp,
     * reference: notebooks/04_acid_operations.py:217-219). */
   def versionAt(tsMillis: Long): Long = {
-    val v = lastWhere(_.timestamp <= tsMillis)
+    val v = lastWhere(_.timestamp <= tsMillis).left
+      .map(_.filter(_.timestamp <= tsMillis).map(_.version).maxOption).merge
     require(v.nonEmpty, s"no version at or before timestamp $tsMillis")
     v.get
   }
@@ -825,7 +825,11 @@ class TxLog(val tableDir: Path, val store: LogStore = LogStore.default) {
     * `startingTimestamp` rule); the latest version + 1 when every commit
     * is older. */
   def versionAtOrAfter(tsMillis: Long): Long =
-    lastWhere(_.timestamp < tsMillis).map(_ + 1).getOrElse(0L)
+    lastWhere(_.timestamp < tsMillis) match {
+      case Right(v) => v.map(_ + 1).getOrElse(0L)
+      case Left(all) => all.filter(_.timestamp >= tsMillis).map(_.version).minOption
+        .getOrElse(all.lastOption.fold(0L)(_.version + 1))
+    }
 
   /** All CDF sidecar actions for one version. */
   def cdfFiles(v: Long): Seq[CdfFile] =

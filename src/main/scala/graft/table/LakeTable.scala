@@ -42,14 +42,12 @@ class LakeTable private[table] (
   // metadata-only count(*) over this session's graft scans (idempotent)
   MetadataOnlyCount.register(spark)
 
-  /** Snapshots are immutable per version, so resolution caches them. The
-    * newest snapshot this instance has seen advances by applying only the
-    * commits after it ([[TxLog.advance]], O(new commits)), and a commit
-    * made through this instance installs its own post-commit state with no
-    * log read at all; another writer advancing the table is picked up by
-    * the listing on the next call. A second slot keeps the last older
-    * (time-travel) snapshot. Any gap or defect falls back to
-    * [[TxLog.snapshot]]'s replay from the newest checkpoint. */
+  /** Snapshots are immutable per version, so resolution caches them: the
+    * newest snapshot this instance has seen, and in a second slot the last
+    * older (time-travel) one. A commit made through this instance installs
+    * its own post-commit state with no log read at all; another writer
+    * advancing the table is picked up by the listing on the next call and
+    * resolved by [[TxLog.snapshot]] from the newest checkpoint. */
   @volatile private var headSnap: Snapshot = null
   @volatile private var travelSnap: Snapshot = null
 
@@ -63,8 +61,7 @@ class LakeTable private[table] (
     if (head != null && head.version == target) head
     else if (travel != null && travel.version == target) travel
     else if (head == null || head.version < target) {
-      val s = Option(head).flatMap(log.advance(_, target))
-        .getOrElse(log.snapshot(Some(target)))
+      val s = log.snapshot(Some(target))
       installHead(s)
       s
     } else {
@@ -471,10 +468,11 @@ class LakeTable private[table] (
     * land appends only those; a full re-run is a no-op. File identity is
     * the path (a rewritten file under the same name is NOT reloaded,
     * matching Delta's default). The loaded-file ledger rides the COPY INTO
-    * commits' operationParameters and is rebuilt from the log — the table
-    * itself is the only state, and the ledger grows with files LOADED, not
-    * files listed. Directories expand one level; pass a `*` glob under the
-    * root for nested layouts. Listing is a driver metadata op.
+    * commits' operationParameters and folds into the snapshot
+    * (`Snapshot.copied`, carried by checkpoints) — the table itself is the
+    * only state, and the ledger grows with files LOADED, not files listed.
+    * Directories expand one level; pass a `*` glob under the root for
+    * nested layouts. Listing is a driver metadata op.
     *
     * `force` ignores the ledger and reloads everything listed (Delta's
     * COPY_OPTIONS force) — the escape hatch when the ledger outlives the
@@ -500,14 +498,7 @@ class LakeTable private[table] (
         n.startsWith("_") || n.startsWith(".")
       }
       .sorted
-    // the ledger is read through the history reader; a CAS retry reads
-    // only the commits that landed since
-    def loadedIn(from: Long, to: Long): Set[String] = log.history(from, to)
-      .filter(_.operation == "COPY INTO")
-      .flatMap(_.operationParameters.get("copiedFiles"))
-      .flatMap(_.split('\n')).filter(_.nonEmpty).toSet
-    val loaded0 = if (force) Set.empty[String] else loadedIn(0L, snap0.version)
-    val fresh = if (force) listed else listed.filterNot(loaded0)
+    val fresh = if (force) listed else listed.filterNot(snap0.copied)
     if (fresh.isEmpty) return snap0.version
     // parquet/orc are self-describing (align casts onto the table schema);
     // csv/json read under the enforced schema
@@ -531,7 +522,7 @@ class LakeTable private[table] (
             "COPY INTO conflicts with a concurrent schema change")
         // the ledger re-check against the FRESH snapshot keeps at-most-once
         // under a lost CAS race with a concurrent COPY INTO of the same files
-        if (!force && fresh.exists(loadedIn(snap0.version + 1, s.version)))
+        if (!force && fresh.exists(s.copied))
           throw new java.util.ConcurrentModificationException(
             "COPY INTO conflicts with a concurrent load of the same files")
       }
@@ -1542,16 +1533,9 @@ class LakeTable private[table] (
     * `isBlindAppend` follow Delta's history column names; commits written
     * by older versions of this library surface them as null. */
   def history(limit: Option[Int] = None): DataFrame = {
-    // with a limit, open only the newest `limit` commit files (a version
-    // without a record widens the read to the whole history)
+    // with a limit, open only the newest `limit` commit files
     val latest = snapshot().version
-    val commits = (limit match {
-      case Some(n) =>
-        val recent = log.history(latest - n + 1, latest)
-        if (recent.size >= math.min(n.toLong, latest + 1)) recent
-        else log.history(0L, latest).takeRight(n)
-      case None => log.history(0L, latest)
-    }).reverse
+    val commits = log.history(limit.fold(0L)(latest - _ + 1), latest).reverse
     val rows = commits.map(c => Row(c.version, new java.sql.Timestamp(c.timestamp),
       c.userName, c.operation,
       c.operationParameters, c.operationMetrics.map { case (k, v) => k -> v.toString },

@@ -577,6 +577,102 @@ class CheckpointSpec extends SparkSpec {
     }
   }
 
+  /** The state a replay of the commit files alone yields at `v`. */
+  private def replayed(log: TxLog, v: Long): Snapshot = {
+    val r = new Replay(log)
+    (0L to v).foreach(x => log.readVersion(x).foreach(r.add))
+    r.result(v)
+  }
+
+  test("txns, the COPY INTO ledger and the commit timestamp equal a per-commit " +
+    "replay on every resolution path") {
+    import scala.jdk.CollectionConverters._
+    /** 14 commits mixing plain appends, two idempotent writers and COPY INTO. */
+    def build(name: String, props: Map[String, String]): LakeTable = {
+      val root = tmpDir(name)
+      val t = LakeTable.create(spark, root.resolve("t").toString,
+        Seq((1L, "x")).toDF("k", "v").schema, properties = props)
+      val src = root.resolve("src")
+      (1 to 14).foreach { i =>
+        val df = Seq((i.toLong, s"v$i")).toDF("k", "v").coalesce(1)
+        i % 3 match {
+          case 0 => t.appendStream(df, s"app-${i % 2}", i.toLong)
+          case 1 =>
+            df.write.parquet(src.resolve(f"b$i%02d").toString)
+            t.copyInto(src.toString + "/*")
+          case _ => t.append(df)
+        }
+      }
+      t
+    }
+    def logNames(t: LakeTable): List[String] = {
+      val s = Files.list(t.log.logDir)
+      try s.iterator().asScala.map(_.getFileName.toString).toList finally s.close()
+    }
+    def check(t: LakeTable, clue: String, at: Seq[Long] = Seq(14L, 9L)): Unit =
+      at.foreach { v =>
+        withClue(s"$clue v$v: ") {
+          val s = new TxLog(t.dir).snapshot(Some(v))
+          val ref = replayed(t.log, v)
+          ref.txns should not be empty
+          ref.copied should not be empty
+          s.txns shouldBe ref.txns
+          s.copied shouldBe ref.copied
+          s.commitTimestamp shouldBe ref.commitTimestamp
+          s.files.map(_.path).sorted shouldBe ref.files.map(_.path).sorted
+        }
+      }
+    // single checkpoints at 4, 8, 12, through the pointer
+    val t = build("ckpt-state", Map("graft.checkpointInterval" -> "4"))
+    t.log.lastCheckpoint() shouldBe Some(12L)
+    check(t, "pointer")
+    // a stale pointer: the v4 checkpoint plus a longer tail
+    Files.write(t.log.logDir.resolve("_last_checkpoint"), """{"version":4}""".getBytes)
+    check(t, "stale pointer")
+    // a corrupt newest checkpoint: the scan path falls back to v8
+    Files.write(t.log.logDir.resolve("_last_checkpoint"), """{"version":12}""".getBytes)
+    val v12 = t.log.logDir.resolve(f"${12L}%020d.checkpoint.json")
+    Files.write(v12, Files.readAllLines(v12).asScala.take(3).mkString("", "\n", "\n").getBytes)
+    check(t, "corrupt checkpoint")
+    // the older layout: CommitInfo lines in place of txn and copied actions
+    writeHistoryCheckpoint(t.log, 12L, pointer = true)
+    check(t, "older layout")
+    // multi-part
+    val mp = build("ckpt-state-mp", Map("graft.checkpointInterval" -> "4",
+      "graft.checkpoint.partSize" -> "3"))
+    logNames(mp).count(_.startsWith(f"${12L}%020d.checkpoint.")) should be > 1
+    check(mp, "multi-part")
+    // v2 manifest with sidecars
+    val v2 = build("ckpt-state-v2", Map("graft.checkpointInterval" -> "4",
+      "graft.checkpoint.v2" -> "true"))
+    v2.log.listCheckpoints() shouldBe Seq(4L, 8L, 12L)
+    check(v2, "v2")
+    // compacted ranges, no checkpoint
+    val cr = build("ckpt-state-range", Map("graft.checkpointInterval" -> "1000",
+      "graft.log.compactionInterval" -> "4"))
+    cr.log.listCheckpoints() shouldBe empty
+    logNames(cr).count(_.endsWith(".compacted.json")) should be > 1
+    check(cr, "compacted range")
+  }
+
+  test("a timestamp lookup whose probes meet out-of-order timestamps scans the history") {
+    val log = new TxLog(java.nio.file.Paths.get("/ict/out-of-order/t"), new InMemoryLogStore)
+    val meta = Metadata("t", null, org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("a", org.apache.spark.sql.types.LongType))).json,
+      Nil, Map.empty, 0L)
+    // v2 was stamped by a writer whose clock ran far ahead
+    val stamps = Seq(100L, 200L, 1000L, 400L, 500L, 600L, 700L, 800L, 900L)
+    stamps.zipWithIndex.foreach { case (ts, v) =>
+      log.tryCommit(v.toLong, (if (v == 0) Seq(meta) else Nil) :+
+        CommitInfo(v.toLong, ts, "WRITE", Map.empty, Map.empty, v - 1L)) shouldBe true
+    }
+    // the search probes v4, v1, then v2 above v4's timestamp: it scans and
+    // answers as the linear lookups do, the last version at or before and
+    // the first version at or after (the search alone would answer v1)
+    log.versionAt(450L) shouldBe 3L
+    log.versionAtOrAfter(450L) shouldBe 2L
+  }
+
   test("VACUUM keeps a file tombstoned inside the window after TRUNCATE HISTORY dropped its add") {
     val t = LakeTable.create(spark, tmpDir("ckpt-vac").resolve("t").toString,
       Seq((1L, "x")).toDF("k", "v").schema)

@@ -8,9 +8,9 @@ import graft.log.{LogStore, Snapshot, TxLog}
 
 /** Differential spec for the incremental snapshot cache: over the seeded
   * lifecycle histories of [[LifecycleFuzz]], after every step the
-  * snapshot a `LakeTable` holds (its own post-commit state, or its cache
-  * advanced by the commits after it) and the checkpoint-based resolution
-  * must both equal a replay of the commit files alone. DESCRIBE HISTORY
+  * snapshot a `LakeTable` holds (its own post-commit state), that of a
+  * second instance that only reads, and the checkpoint-based resolution
+  * must all equal a replay of the commit files alone. DESCRIBE HISTORY
   * must list every version exactly once and never change what it showed
   * before — TRUNCATE HISTORY included — and a replayed idempotent epoch
   * must stay a no-op across checkpoints and truncations. */
@@ -52,6 +52,7 @@ class IncrementalSnapshotSpec extends LifecycleFuzz {
     a.protocol shouldBe b.protocol
     a.domains shouldBe b.domains
     a.txns shouldBe b.txns
+    a.copied shouldBe b.copied
     a.commitTimestamp shouldBe b.commitTimestamp
   }
 
@@ -65,8 +66,7 @@ class IncrementalSnapshotSpec extends LifecycleFuzz {
       val reference = new TxLog(table.dir, new CommitsOnly(LogStore.default)).snapshot()
       sameState(table.snapshot(), reference, s"$clue own cache: ")
       sameState(table.log.snapshot(), reference, s"$clue checkpoint replay: ")
-      // a second instance that only reads: its cache advances over the
-      // commits the first one made
+      // a second instance that only reads, behind the first one's commits
       if (follower == null) follower = LakeTable.forPath(spark, table.dir.toString)
       sameState(follower.snapshot(), reference, s"$clue follower: ")
       def history(): Seq[Row] = table.history().collect().toSeq
