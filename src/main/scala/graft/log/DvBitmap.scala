@@ -2,17 +2,16 @@ package graft.log
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
+import scala.collection.mutable
+
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnExpr
+import org.apache.spark.sql.graft.{ColumnExpr, Local}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.roaringbitmap.longlong.Roaring64Bitmap
@@ -20,8 +19,8 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
 /** Deletion-vector bitmap kernel: per-file masked row positions as 64-bit
   * roaring bitmaps (the representation Delta's DV spec uses, reference
   * notebooks/04_acid_operations.py:70-118 exercises the behavior), built
-  * distributively by a typed aggregate and probed by the masked-read
-  * filter. On disk they take Delta's portable form ([[DeltaDv]]); in
+  * map-side (one bitmap per file and task, ORed on the driver) and probed
+  * by the masked-read filter. On disk they take Delta's portable form ([[DeltaDv]]); in
   * Spark rows and broadcasts, this object's serialization.
   *
   * Why bitmaps instead of one `(file, idx)` parquet row per masked position:
@@ -72,9 +71,100 @@ object DvBitmap {
       .otherwise(c)
   }
 
-  /** Aggregate long row positions into one serialized bitmap per group. */
-  def aggPositions(idx: Column): Column =
-    ColumnExpr.toColumn(RoaringPositionsAgg(ColumnExpr.of(idx)).toAggregateExpression())
+  /** What a map-side mask pass returns: per-file masks keyed by canonical
+    * path ([[Stats.stripScheme]] of the reader path), and how many rows the
+    * pass read and their in-memory bytes, so a write of those rows is
+    * sized before it runs. */
+  final case class MaskPass(masks: Map[String, Roaring64Bitmap], rows: Long, bytes: Long,
+      kept: Option[Seq[InternalRow]] = None)
+
+  /** One task's copies of the rows it read, while they total at most
+    * `cap` bytes; past it, none. */
+  final class TaskRows(cap: Long) {
+    private val rows = mutable.ArrayBuffer.empty[InternalRow]
+    private var bytes = 0L
+    def add(r: InternalRow, size: Long): Unit = if (bytes <= cap) {
+      bytes += size
+      if (bytes <= cap) rows += r.copy() else rows.clear()
+    }
+    def result: Option[Seq[InternalRow]] = if (bytes <= cap) Some(rows.toSeq) else None
+  }
+
+  /** Every task's kept rows, when each kept them all and together they
+    * fit `cap`. */
+  def keptRows(parts: Seq[Option[Seq[InternalRow]]], bytes: Long,
+      cap: Long): Option[Seq[InternalRow]] =
+    if (cap <= 0 || bytes > cap || parts.exists(_.isEmpty)) None
+    else Some(parts.flatMap(_.get))
+
+  /** One task's share of a map-side mask build: each position ORed into
+    * its file's bitmap. Input arrives clustered by file, so the last
+    * file's bitmap is memoized. */
+  final class TaskMasks {
+    private val byFile = mutable.HashMap.empty[String, Roaring64Bitmap]
+    private var lastFile: UTF8String = _
+    private var lastBitmap: Roaring64Bitmap = _
+
+    def add(file: UTF8String, idx: Long): Unit = {
+      if (lastFile == null || !lastFile.equals(file)) {
+        lastFile = file.clone()
+        lastBitmap = byFile.getOrElseUpdate(lastFile.toString, new Roaring64Bitmap())
+      }
+      lastBitmap.addLong(idx)
+    }
+
+    def result: Map[String, Array[Byte]] =
+      byFile.iterator.map { case (f, bm) => f -> serialize(bm) }.toMap
+  }
+
+  /** The tasks' masks ORed per file on the driver, keyed by canonical path. */
+  def orMasks(parts: Iterable[Map[String, Array[Byte]]]): Map[String, Roaring64Bitmap] = {
+    val out = mutable.HashMap.empty[String, Roaring64Bitmap]
+    for (part <- parts; (f, bytes) <- part) {
+      val bm = deserialize(bytes)
+      val key = Stats.stripScheme(f)
+      out.get(key) match {
+        case Some(acc) => acc.or(bm)
+        case None => out(key) = bm
+      }
+    }
+    out.toMap
+  }
+
+  /** A row's in-memory size (its unsafe form). */
+  def rowBytes(r: InternalRow, toUnsafe: => UnsafeProjection): Long = r match {
+    case u: UnsafeRow => u.getSizeInBytes.toLong
+    case other => toUnsafe(other).getSizeInBytes.toLong
+  }
+
+  /** Per-file masks of a position-carrying frame (`__file` reader path,
+    * `__idx` row position; a null position masks nothing), built
+    * map-side: each task builds one bitmap per file it reads and the
+    * driver ORs them. One job, no shuffle. Counts every row and its
+    * bytes, and brings the rows themselves back when they total at most
+    * `keepBytes`. */
+  def collectMasks(rows: DataFrame, keepBytes: Long = 0L): MaskPass = {
+    val schema = rows.schema
+    val fi = schema.fieldIndex("__file")
+    val ii = schema.fieldIndex("__idx")
+    val parts = Local.mapPartitions(rows) { it =>
+      val masks = new TaskMasks
+      val kept = new TaskRows(keepBytes)
+      lazy val toUnsafe = UnsafeProjection.create(schema)
+      var n, bytes = 0L
+      it.foreach { r =>
+        val size = rowBytes(r, toUnsafe)
+        n += 1
+        bytes += size
+        if (!r.isNullAt(fi) && !r.isNullAt(ii)) masks.add(r.getUTF8String(fi), r.getLong(ii))
+        if (keepBytes > 0) kept.add(r, size)
+      }
+      (masks.result, n, bytes, kept.result)
+    }
+    val bytes = parts.map(_._3).sum
+    MaskPass(orMasks(parts.map(_._1)), parts.map(_._2).sum, bytes,
+      keptRows(parts.map(_._4), bytes, keepBytes))
+  }
 
   def toLongArray(bitmap: Column): Column =
     ColumnExpr.toColumn(BitmapToArray(ColumnExpr.of(bitmap)))
@@ -109,45 +199,6 @@ object DvBitmap {
     withPos.withColumn("__path", stripPathCol(col("__file")))
       .join(positions, Seq("__path", "__idx"), "left_anti")
       .drop("__path")
-}
-
-/** `TypedImperativeAggregate` building a [[Roaring64Bitmap]] from row
-  * positions. Runs under ObjectHashAggregate with partial (map-side)
-  * aggregation: what shuffles is one partial bitmap per (file × map task),
-  * not the position rows themselves. */
-case class RoaringPositionsAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Roaring64Bitmap]
-  with UnaryLike[Expression] {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): Roaring64Bitmap = new Roaring64Bitmap()
-
-  override def update(b: Roaring64Bitmap, row: InternalRow): Roaring64Bitmap = {
-    val v = child.eval(row)
-    if (v != null) b.addLong(v.asInstanceOf[Long])
-    b
-  }
-
-  override def merge(b: Roaring64Bitmap, o: Roaring64Bitmap): Roaring64Bitmap = {
-    b.or(o); b
-  }
-
-  override def eval(b: Roaring64Bitmap): Any = DvBitmap.serialize(b)
-  override def serialize(b: Roaring64Bitmap): Array[Byte] = DvBitmap.serialize(b)
-  override def deserialize(bytes: Array[Byte]): Roaring64Bitmap = DvBitmap.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): RoaringPositionsAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): RoaringPositionsAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): RoaringPositionsAgg =
-    copy(child = c)
-  override def prettyName: String = "dv_bitmap_agg"
 }
 
 /** Serialized bitmap → sorted `array<long>` of positions (the distributed

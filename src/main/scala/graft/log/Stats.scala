@@ -248,6 +248,15 @@ object Stats {
     fromFootersWithIds(files, schema)
       .map { case (p, (n, st, _)) => p -> (n, st) }
 
+  /** The Hadoop configuration footer reads open files with, loaded once:
+    * a fresh `Configuration` re-parses Hadoop's XML defaults on first use,
+    * a cost every write would pay again. Only read after loading. */
+  private lazy val footerConf: org.apache.hadoop.conf.Configuration = {
+    val c = new org.apache.hadoop.conf.Configuration()
+    c.size() // forces the default resources to load now, on one thread
+    c
+  }
+
   /** One footer pass returning BOTH the exact stats and the top-level
     * (column name, field id) pairs — import paths that need field-id
     * verification AND stats must not pay two opens per file. */
@@ -258,7 +267,7 @@ object Stats {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = footerConf
     val out = new java.util.concurrent.ConcurrentHashMap[
       String, (Long, Map[String, ColStats], Seq[(String, Option[Int])])]()
     files.asJava.parallelStream().forEach { p =>

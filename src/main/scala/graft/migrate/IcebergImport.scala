@@ -205,18 +205,16 @@ object IcebergImport {
       }
     }
     /** The current position deletes (snapshot-global) decode into per-file
-      * masks — one collected bitmap row per masked file — written as ONE
+      * masks — built map-side, one bitmap per file and task — written as ONE
       * `.bin` under `root` by the engine's vector writer. DANGLING rows
       * drop via a broadcast semi-join against the live set — never phantom
       * vectors, never fatal. */
     def masks(spark: SparkSession): Seq[DeletionVector] = if (deletePaths.isEmpty) Nil else {
       import spark.implicits._
-      val masked = posDeleteRows(spark, deletePaths)
+      val masked = DvBitmap.collectMasks(posDeleteRows(spark, deletePaths)
         .join(broadcast(files.map(p => root.resolve(p).toString).toDF("__path")),
           Seq("__path"), "left_semi")
-        .groupBy("__path").agg(DvBitmap.aggPositions(col("__idx")).as("__bitmap"))
-        .collect().map(r => r.getString(0) -> DvBitmap.deserialize(r.getAs[Array[Byte]](1)))
-        .toMap
+        .select(col("__path").as("__file"), col("__idx"))).masks
       graft.log.DvStore.write(root,
         files.flatMap(p => masked.get(root.resolve(p).toString).map(p -> _)), Map.empty)
     }

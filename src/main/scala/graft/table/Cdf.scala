@@ -230,8 +230,9 @@ trait CdfSupport { self: LakeTable =>
     // under a new same-id column (type changes refuse loudly instead)
     val adds = actions.collect { case a: AddFile => a }
     val removes = actions.collect { case r: RemoveFile => r }
-    val snapAtV = log.snapshot(Some(v))
-    lazy val snapBefore = log.snapshot(Some(v - 1)) // only touched when v >= 1
+    // through the table's cache: the head version resolves with no replay
+    val snapAtV = snapshot(Some(v))
+    lazy val snapBefore = snapshot(Some(v - 1)) // only touched when v >= 1
     // resolvable-id read for a synthesized leg: masked rows of `files`
     // under `snap`, with `_row_id` resolved via the broadcast base map
     // when the table tracks rows and every file has a base (else the
@@ -271,11 +272,13 @@ trait CdfSupport { self: LakeTable =>
     // resurrected (mask reverted) or re-masked. Diff the mask membership
     // across the commit: newly-masked rows are deletes, unmasked rows are
     // inserts. (DML mask changes never reach here — they carry sidecars.)
+    // A pointer changes only through the commit's own vector actions.
     val addPaths = adds.map(_.path).toSet
+    val vectorFiles = actions.collect { case d: DeletionVector => d.forFile }.toSet
     val dvPointerChanged =
-      if (v == 0) Nil
+      if (v == 0 || vectorFiles.isEmpty) Nil
       else snapAtV.files.filter { f =>
-        !addPaths.contains(f.path) &&
+        !addPaths.contains(f.path) && vectorFiles.contains(f.path) &&
           snapBefore.dvs.get(f.path) != snapAtV.dvs.get(f.path)
       }
     // pointer churn is NOT content churn: mirror syncs rewrite a file's

@@ -2,9 +2,14 @@ package graft.table
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Literal, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.storage.StorageLevel
 import org.roaringbitmap.longlong.Roaring64Bitmap
+
+import org.apache.spark.sql.graft.Local
 
 import graft.log._
 
@@ -167,17 +172,17 @@ trait DmlSupport { self: LakeTable =>
     // row tracking: resolve ids alongside the positions so the CDF
     // sidecar records which rows the mask deleted
     val rt = rowsTracked(snap, touched)
-    // with the change feed on, the sidecar write materializes the matched
-    // rows once and the mask collect reads them back
+    // with the change feed on, the matched rows are read once: the mask
+    // pass brings them to the driver or materializes them, and the
+    // sidecar write reads them back
     val matched = dmlRows(snap, touched, snap.schema, rt, positions = true)
       .filter(coalesce(cond, lit(false)))
-    val rows = if (cdfEnabled) matched.persist(StorageLevel.MEMORY_AND_DISK) else matched
-    try {
-      val sidecars = dmlSidecar(snap, rows, rt, None)
-      maskAndCommit(snap, "DELETE", Map("predicate" -> cond.toString),
-        touched, rows, Nil, sidecars,
+    Dml.withMatched(matched, touched, cdfEnabled) { (pass, rows) =>
+      val sidecars = if (pass.rows == 0) Nil else dmlSidecar(snap, rows(), rt, None, Some(pass.bytes))
+      commitMasks(snap, "DELETE", Map("predicate" -> cond.toString),
+        touched, pass.masks, Nil, sidecars,
         newlyMasked => Map("numDeletedRows" -> newlyMasked))
-    } finally if (cdfEnabled) rows.unpersist(): Unit
+    }
   }
 
   /** Deletion-vector UPDATE: matched rows are masked and only their updated
@@ -190,21 +195,24 @@ trait DmlSupport { self: LakeTable =>
     // KEEPS its id across the mask+append; the commit version is left to
     // the new file's default (= this commit), which is the bump Delta makes
     val rt = rowsTracked(snap, touched)
-    // the matched rows are read once: the first write materializes them,
-    // the other write and the mask collect read them back
+    // the matched rows are read once: the mask pass brings them to the
+    // driver or materializes them, and both writes read them back, each
+    // packed into one file when the pass measured them small
     val matched = dmlRows(snap, touched, snap.schema, rt, positions = true)
       .filter(coalesce(cond, lit(false)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val hit = matched.drop("__file", "__idx")
-      val sidecars = dmlSidecar(snap, hit, rt, Some(set))
-      val rtExtra: Seq[Column] = if (rt) Seq(col(RowTracking.MatRowId)) else Nil
-      val adds = stageWrite(hit.select(Dml.setExprs(snap.schema, set) ++ rtExtra: _*),
-        snap.metadata.partitionColumns)
-      maskAndCommit(snap, "UPDATE", Map("predicate" -> cond.toString),
-        touched, matched, adds, sidecars,
-        _ => Map("numUpdatedRows" -> adds.map(_.numRecords).sum))
-    } finally matched.unpersist(): Unit
+    Dml.withMatched(matched, touched, reuse = true) { (pass, rows) =>
+      if (pass.rows == 0) snap.version
+      else {
+        val hit = rows().drop("__file", "__idx")
+        val sidecars = dmlSidecar(snap, hit, rt, Some(set), Some(pass.bytes))
+        val rtExtra: Seq[Column] = if (rt) Seq(col(RowTracking.MatRowId)) else Nil
+        val adds = stageWrite(packSmall(hit.select(Dml.setExprs(snap.schema, set) ++ rtExtra: _*),
+          pass.bytes), snap.metadata.partitionColumns)
+        commitMasks(snap, "UPDATE", Map("predicate" -> cond.toString),
+          touched, pass.masks, adds, sidecars,
+          _ => Map("numUpdatedRows" -> adds.map(_.numRecords).sum))
+      }
+    }
   }
 
   /** `files` as DML reads them under `schema`: deletion-vector masks
@@ -222,44 +230,35 @@ trait DmlSupport { self: LakeTable =>
 
   /** The change-feed sidecar of an UPDATE (`set` given: pre and post images
     * of the `hit` rows) or a DELETE (their delete images); Nil when the
-    * feed is off. Row tracking: every image carries the row's resolved id —
-    * the post image the SAME id (an update never moves a row's id). */
+    * feed is off. With `hitBytes`, the `hit` rows' in-memory size, images
+    * that fit one file land as one. Row tracking: every image carries the
+    * row's resolved id — the post image the SAME id (an update never moves
+    * a row's id). */
   private def dmlSidecar(snap: Snapshot, hit: DataFrame, rt: Boolean,
-      set: Option[Map[String, Column]]): Seq[Action] =
+      set: Option[Map[String, Column]], hitBytes: Option[Long] = None): Seq[Action] =
     if (!cdfEnabled) Nil
     else {
       val idCol: Seq[Column] =
         if (rt) Seq(col(RowTracking.MatRowId).as(Cdf.RowIdCol)) else Nil
       val before = snap.schema.fieldNames.toIndexedSeq.map(col) ++ idCol
-      writeCdfSidecar(set match {
+      val images = set match {
         case None => Dml.cdfImage(hit, before, "delete")
         case Some(s) => Dml.cdfImage(hit, before, "update_preimage").unionByName(
           Dml.cdfImage(hit, Dml.setExprs(snap.schema, s) ++ idCol, "update_postimage"))
-      })
+      }
+      writeCdfSidecar(hitBytes.fold(images)(b => packSmall(images, b * (if (set.isEmpty) 1 else 2))))
     }
 
-  /** Shared deletion-vector commit: aggregate this change's masked positions
-    * (`matched` must carry __file/__idx) into per-file roaring bitmaps —
-    * one collected row per file — and commit them through [[commitMasks]].
-    *
-    * The groupBy runs under ObjectHashAggregate with partial aggregation,
-    * so only per-(file × map task) partial bitmaps shuffle, and the cost is
-    * O(new masks) + O(touched files' bitmap bytes) — independent of how
-    * many masks have accumulated table-wide. */
+  /** Shared deletion-vector commit: this change's masked positions
+    * (`matched` must carry __file/__idx) built map-side into per-file
+    * bitmaps ([[DvBitmap.collectMasks]]) and committed through
+    * [[commitMasks]]. */
   private[table] def maskAndCommit(
       snap: Snapshot, op: String, params: Map[String, String],
       touched: Seq[AddFile], matched: DataFrame, adds: Seq[AddFile],
       sidecars: Seq[Action], metrics: Long => Map[String, Long]): Long =
-    commitMasks(snap, op, params, touched,
-      maskRows(matched.groupBy("__file")
-        .agg(DvBitmap.aggPositions(col("__idx")).as("__bitmap")).collect()),
+    commitMasks(snap, op, params, touched, DvBitmap.collectMasks(matched).masks,
       adds, sidecars, metrics)
-
-  /** Collected (`__file` reader path, `__bitmap`) rows → mask per reader
-    * path, canonical (one strip per file, after the aggregate). */
-  private[table] def maskRows(rows: Array[Row]): Map[String, Roaring64Bitmap] =
-    rows.map(r => Stats.stripScheme(r.getString(0)) ->
-      DvBitmap.deserialize(r.getAs[Array[Byte]](1))).toMap
 
   /** Commit per-file masks (`masks`: canonical absolute path → positions
     * this change masks) on `touched`: the masked files' current vectors
@@ -386,6 +385,36 @@ private[table] object Dml {
     * More cores shift the crossover up. */
   val DvProbeBytes: Long = 256L * 1024 * 1024
 
+  /** Matched rows a deletion-vector DML brings to the driver at most, in
+    * in-memory bytes: its writes then read a local relation, with no
+    * cache to build and no second scan. */
+  val DriverRowsBytes: Long = 32L * 1024 * 1024
+
+  /** Whether the rows of `touched` may fit [[DriverRowsBytes]]: their
+    * parquet bytes, at up to 8× that in memory, do. */
+  def fitsDriver(touched: Seq[AddFile]): Boolean =
+    touched.map(_.size).sum * 8 <= DriverRowsBytes
+
+  /** Run the map-side mask pass over `matched` (`__file`, `__idx` and the
+    * rows a DML writes), then `body` with its result and, when `reuse`,
+    * the matched rows to read again: the rows the pass brought back to the
+    * driver when the touched files look small and they fit
+    * [[DriverRowsBytes]], else `matched` persisted (materialized by the
+    * pass, or on first read past a driver overflow). */
+  def withMatched[A](matched: DataFrame, touched: Seq[AddFile], reuse: Boolean)(
+      body: (DvBitmap.MaskPass, () => DataFrame) => A): A = {
+    val viaDriver = reuse && fitsDriver(touched)
+    if (reuse && !viaDriver) matched.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val pass = DvBitmap.collectMasks(matched, if (viaDriver) DriverRowsBytes else 0L)
+      lazy val again = pass.kept match {
+        case Some(rows) => Local.frame(matched.sparkSession, Local.output(matched), rows)
+        case None => matched.persist(StorageLevel.MEMORY_AND_DISK)
+      }
+      body(pass, () => again)
+    } finally if (reuse) matched.unpersist(): Unit
+  }
+
   /** `when(p1, v1).when(p2, v2)...otherwise(otherwise)` over `arms` in
     * order (first true predicate wins); `otherwise` alone when empty. */
   def firstOf(arms: Seq[(Column, Column)], otherwise: Column): Column =
@@ -405,6 +434,127 @@ private[table] object Dml {
   /** One change-feed image: `rows` projected to `cols`, tagged `changeType`. */
   def cdfImage(rows: DataFrame, cols: Seq[Column], changeType: String): DataFrame =
     rows.select(cols: _*).withColumn("_change_type", lit(changeType))
+
+  /** The Catalyst ordering of `dt`: Spark's own comparison, so NaN equals
+    * NaN, -0.0 equals 0.0 and struct fields compare null-equal, as in
+    * grouping, `min` and `max`. */
+  private def ordering(dt: DataType): Ordering[Any] =
+    org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
+
+  /** The key columns `keys` (source column names, case-insensitive) as
+    * (position, type) in the local relation `l`. */
+  private def keyFields(l: LocalRelation, keys: Seq[String]): Seq[(Int, DataType)] =
+    keys.map { k =>
+      val hits = l.output.zipWithIndex.filter(_._1.name.equalsIgnoreCase(k))
+      require(hits.size == 1, s"source key column $k resolves to ${hits.size} columns")
+      (hits.head._2, hits.head._1.dataType)
+    }
+
+  /** MERGE phase 0 over a local source, on the driver: the row count, per
+    * key column the (min, max) literals over its non-null values (absent
+    * when it has none), and — when `checkDistinct` — whether the key tuples
+    * are distinct with `count(DISTINCT …)` semantics: one key column counts
+    * no nulls (so a null key is a duplicate), several count their struct,
+    * whose null fields compare equal. */
+  def localPhase0(l: LocalRelation, keys: Seq[String], checkDistinct: Boolean)
+      : (Long, Map[String, (Column, Column)], Boolean) = {
+    val fields = keyFields(l, keys)
+    val bounds = keys.zip(fields).flatMap { case (k, (i, dt)) =>
+      val vals = l.data.iterator.map(_.get(i, dt)).filter(_ != null).toSeq
+      if (vals.isEmpty) None
+      else {
+        def literal(v: Any) = org.apache.spark.sql.graft.ColumnExpr.toColumn(
+          Literal(InternalRow.copyValue(v), dt))
+        Some(k -> (literal(vals.min(ordering(dt))), literal(vals.max(ordering(dt)))))
+      }
+    }.toMap
+    def noDupes(vs: Seq[Any], ord: Ordering[Any]): Boolean = {
+      val sorted = vs.sorted(ord)
+      sorted.iterator.zip(sorted.iterator.drop(1)).forall { case (a, b) => ord.compare(a, b) != 0 }
+    }
+    val distinct = checkDistinct && (fields match {
+      case Seq((i, dt)) =>
+        val vs = l.data.map(_.get(i, dt))
+        !vs.contains(null) && noDupes(vs, ordering(dt))
+      case _ => noDupes(l.data.map(keyOf(fields)), ordering(keyType(fields)))
+    })
+    (l.data.size.toLong, bounds, distinct)
+  }
+
+  private def keyType(fields: Seq[(Int, DataType)]): StructType =
+    StructType(fields.zipWithIndex.map { case ((_, dt), j) => StructField(s"_$j", dt) })
+
+  private def keyOf(fields: Seq[(Int, DataType)])(r: InternalRow): InternalRow =
+    InternalRow.fromSeq(fields.map { case (i, dt) => r.get(i, dt) })
+
+  /** What the deletion-vector MERGE's first action returns: the per-file
+    * masks of the rows an update or delete clause fires on, the two counts,
+    * those rows' in-memory bytes, the distinct matched source keys (struct
+    * rows) when asked for, and the changed rows themselves as a local frame
+    * when they were brought back. */
+  final case class MatchedPass(masks: Map[String, Roaring64Bitmap], updated: Long,
+      deleted: Long, changedBytes: Long, keys: Seq[InternalRow], changed: Option[DataFrame])
+
+  /** The first action over the matched pairs (`target.__file`,
+    * `target.__idx`, `__action`; `key` appended as `__k` when given),
+    * built map-side: each task returns one bitmap per file, its clause
+    * counts and bytes, its matched keys, and its changed rows while they
+    * total at most `keepBytes`. One job, no shuffle. */
+  def matchedPass(pairs: DataFrame, updateTags: Seq[String], deleteTags: Seq[String],
+      key: Option[Column], keepBytes: Long): MatchedPass = {
+    val frame = pairs.select(col("*") +: key.map(_.as("__k")).toSeq: _*)
+    val output = Local.output(frame)
+    def at(name: String, qualifier: Option[String]): Int = output.indexWhere(a =>
+      a.name == name && qualifier.forall(q => a.qualifier.lastOption.contains(q)))
+    val (fi, ii, ai, ki) =
+      (at("__file", Some("target")), at("__idx", Some("target")), at("__action", None),
+        output.size - 1)
+    val schema = frame.schema
+    val keyWidth = key.map(_ => schema(ki).dataType.asInstanceOf[StructType].size)
+    val (upd, del) = (updateTags.toSet, deleteTags.toSet)
+    val parts = Local.mapPartitions(frame) { it =>
+      val masks = new DvBitmap.TaskMasks
+      val kept = new DvBitmap.TaskRows(keepBytes)
+      lazy val toUnsafe = UnsafeProjection.create(schema)
+      val keys = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+      var u, d, bytes = 0L
+      it.foreach { r =>
+        val tag = r.getUTF8String(ai).toString
+        if (upd(tag) || del(tag)) {
+          val size = DvBitmap.rowBytes(r, toUnsafe)
+          masks.add(r.getUTF8String(fi), r.getLong(ii))
+          bytes += size
+          if (keepBytes > 0) kept.add(r, size)
+          if (upd(tag)) u += 1 else d += 1
+        }
+        keyWidth.foreach(w => keys += r.getStruct(ki, w).copy())
+      }
+      (masks.result, u, d, bytes, keys.toSeq, kept.result)
+    }
+    val keys = key.toSeq.flatMap { _ =>
+      val ord = ordering(schema(ki).dataType)
+      parts.flatMap(_._5).sorted(ord).foldLeft(List.empty[InternalRow]) {
+        case (h :: t, k) if ord.compare(h, k) == 0 => h :: t
+        case (acc, k) => k :: acc
+      }
+    }
+    val changedBytes = parts.map(_._4).sum
+    MatchedPass(DvBitmap.orMasks(parts.map(_._1)), parts.map(_._2).sum, parts.map(_._3).sum,
+      changedBytes, keys,
+      DvBitmap.keptRows(parts.map(_._6), changedBytes, keepBytes)
+        .map(Local.frame(pairs.sparkSession, output, _)))
+  }
+
+  /** The rows of the local source `l` whose key tuple (`keys`, as in
+    * [[localPhase0]]) is not among `matched` (struct rows of the same
+    * fields). A key with a null field matches nothing, as in the join. */
+  def unmatchedRows(l: LocalRelation, keys: Seq[String],
+      matched: Seq[InternalRow]): Seq[InternalRow] = {
+    val fields = keyFields(l, keys)
+    val set = scala.collection.immutable.TreeSet.from(matched)(
+      ordering(keyType(fields)).asInstanceOf[Ordering[InternalRow]])
+    l.data.filterNot(r => set.contains(keyOf(fields)(r)))
+  }
 }
 
 /** Named row counts of a DML write that ride the write job itself: the
@@ -766,7 +916,11 @@ class MergeBuilder private[table] (
 
     // Materialize the source once: it is referenced by phase-0 bounds, the
     // phase-1 probe, and the phase-2 join — and must not change between them.
-    val src = source.persist(StorageLevel.MEMORY_AND_DISK)
+    // A source whose optimized plan is a local relation already is: its
+    // rows sit on the driver, phase 0 reads them there, and nothing is
+    // persisted.
+    val local = Local.relation(source)
+    val src = local.fold(source.persist(StorageLevel.MEMORY_AND_DISK))(Local.frame(spark, _))
     // The phase-2 full-outer join cannot use a broadcast hash join, and a
     // sort-merge join pays a full sort of the (large) target side that a
     // shuffled hash join skips — the source side always fits a build map
@@ -781,42 +935,45 @@ class MergeBuilder private[table] (
     var matchedKeys: Option[DataFrame] = None
     try {
 
-    // Phase 0: ONE fused pass over the (persisted) source computes the row
-    // count (numSourceRows metric), the equi-key min/max bounds for file
-    // pruning (the Delta "merge touches only the key-overlapping slice"
-    // behavior — at scale this is what keeps a 1%-overlap merge from
-    // scanning the table), and the distinct-key count for the ambiguity
-    // guard. One small job instead of three.
+    // Phase 0: the source's row count (numSourceRows metric), the equi-key
+    // min/max bounds for file pruning (the Delta "merge touches only the
+    // key-overlapping slice" behavior — at scale this is what keeps a
+    // 1%-overlap merge from scanning the table), and whether its key tuples
+    // are distinct (the ambiguity guard). A local source is read on the
+    // driver ([[Dml.localPhase0]]); any other in ONE fused pass over the
+    // persisted source — one small job instead of three.
     val pairs = equiKeyPairs
     val pureEqui = pureEquiCondition(pairs)
-    val (numSourceRows, candidates, srcKeysDistinct): (Long, Seq[AddFile], Boolean) =
-      scala.util.Try {
-        val aggs = Seq(count(lit(1)).as("__cnt")) ++
-          pairs.flatMap { case (_, s) =>
-            Seq(min(col(s)).as(s"__lo_$s"), max(col(s)).as(s"__hi_$s")) } ++
-          (if (pureEqui)
-            // bare column beats a 1-field struct in the distinct agg's Expand
-            Seq(count_distinct(
-              if (pairs.size == 1) col(pairs.head._2)
-              else struct(pairs.map(p => col(p._2)): _*)).as("__dk"))
-          else Nil)
-        val row = src.agg(aggs.head, aggs.tail: _*).collect().head
-        val cnt = row.getAs[Long]("__cnt")
-        val distinct = pureEqui && row.getAs[Long]("__dk") == cnt
-        val cands =
-          if (pairs.isEmpty || snap.files.size < 8) snap.files
-          else {
-            val preds = pairs.flatMap { case (t, s) =>
-              val lo = row.getAs[Any](s"__lo_$s"); val hi = row.getAs[Any](s"__hi_$s")
-              if (lo == null || hi == null) None
-              else Some(col(t) >= lit(lo) && col(t) <= lit(hi))
-            }
-            if (preds.isEmpty) snap.files
-            else Pruner.prune(table.partitionPrune(snap, snap.files, preds), preds,
-              schema, table.bloomIndex)
-          }
-        (cnt, cands, distinct)
-      }.getOrElse((src.count(), snap.files, false))
+    val (numSourceRows, bounds, srcKeysDistinct): (Long, Map[String, (Column, Column)], Boolean) =
+      local.flatMap(l => scala.util.Try(Dml.localPhase0(l, pairs.map(_._2), pureEqui)).toOption)
+        .getOrElse(scala.util.Try {
+          val aggs = Seq(count(lit(1)).as("__cnt")) ++
+            pairs.flatMap { case (_, s) =>
+              Seq(min(col(s)).as(s"__lo_$s"), max(col(s)).as(s"__hi_$s")) } ++
+            (if (pureEqui)
+              // bare column beats a 1-field struct in the distinct agg's Expand
+              Seq(count_distinct(
+                if (pairs.size == 1) col(pairs.head._2)
+                else struct(pairs.map(p => col(p._2)): _*)).as("__dk"))
+            else Nil)
+          val row = src.agg(aggs.head, aggs.tail: _*).collect().head
+          val cnt = row.getAs[Long]("__cnt")
+          val lohi = pairs.flatMap { case (_, s) =>
+            val lo = row.getAs[Any](s"__lo_$s"); val hi = row.getAs[Any](s"__hi_$s")
+            if (lo == null || hi == null) None else Some(s -> (lit(lo), lit(hi)))
+          }.toMap
+          (cnt, lohi, pureEqui && row.getAs[Long]("__dk") == cnt)
+        }.getOrElse((src.count(), Map.empty[String, (Column, Column)], false)))
+    val candidates: Seq[AddFile] =
+      if (pairs.isEmpty || snap.files.size < 8) snap.files
+      else {
+        val preds = pairs.flatMap { case (t, s) =>
+          bounds.get(s).map { case (lo, hi) => col(t) >= lo && col(t) <= hi }
+        }
+        if (preds.isEmpty) snap.files
+        else scala.util.Try(Pruner.prune(table.partitionPrune(snap, snap.files, preds), preds,
+          schema, table.bloomIndex)).getOrElse(snap.files)
+      }
     mark("phase0 source agg")
     def mergeMetrics(updated: Long, deleted: Long, inserted: Long, copied: Long) =
       Map("numTargetRowsUpdated" -> updated, "numTargetRowsDeleted" -> deleted,
@@ -1092,52 +1249,75 @@ class MergeBuilder private[table] (
     // Deletion-vector fast path: same preconditions, but matched rows are
     // MASKED, not rewritten — so the left-outer join above degrades to an
     // INNER join (copies are simply left alone) and nothing full-width is
-    // ever shuffled OR copied. The matched pairs are persisted once, and
-    // the first action over them — one row per touched file — yields the
-    // per-file mask bitmaps and the clause counts together. The data write
-    // (updated rows + inserts) and the change feed then read the cache: the
-    // insert side anti-joins against the broadcast of its matched source
-    // keys (every matched key, also of rows no clause fires on — a matched
-    // row never becomes an insert), and the feed's pre, post and delete
-    // images are the cached rows. The matched keys come from the first
-    // action too whenever the source's row count bounds them under
-    // BroadcastKeysMax (a matched key is a distinct source key), and are
-    // broadcast from the driver. The masks commit through
-    // [[DmlSupport.commitMasks]].
+    // ever shuffled OR copied. The matched pairs are read once: the first
+    // action over them ([[Dml.matchedPass]], map-side) brings the changed
+    // rows to the driver for a local source over small touched files, and
+    // materializes the persisted pairs otherwise. It also yields the
+    // per-file mask bitmaps, the clause counts, the changed rows' bytes and
+    // the matched source keys together (every matched key, also of rows no
+    // clause fires on — a matched row never becomes an insert) whenever
+    // the source's row count bounds them under BroadcastKeysMax. The
+    // inserts are the source rows whose keys it did not return: for a
+    // local source they are built once on the driver and shared by the
+    // data write and the change feed; otherwise both anti-join the source
+    // against the broadcast keys. The data write (updated rows + inserts)
+    // and the change feed's pre, post and delete images read the changed
+    // rows back, each as one file when the measured bytes fit one. The masks commit
+    // through [[DmlSupport.commitMasks]].
     if (dvFast) {
       // row tracking: an updated row's resolved id rides into the appended
       // post-image file (the mask+append analogue of the DV UPDATE path);
       // the commit version is left to the new file's default (= this commit)
       val rt = table.rowsTracked(snap, touched)
       val tgtF = table.dmlRows(snap, touched, schema, rt, positions = true).alias("target")
-      val pairs = tgtF.join(src.alias("source"), condition, "inner")
+      val matches = tgtF.join(src.alias("source"), condition, "inner")
         .withColumn("__action", actionCol(lit("copy"))(Some(lit(true)) -> matchedTagged))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      // a local source over small touched files brings the changed rows to
+      // the driver; otherwise the pairs are persisted for the writes
+      val viaDriver = local.isDefined && Dml.fitsDriver(touched)
+      if (!viaDriver) matches.persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        def tagCount(tags: Seq[String]) =
-          sum(when(col("__action").isin(tags: _*), 1L).otherwise(0L))
         val withKeys = notMatchedClauses.nonEmpty && numSourceRows <= BroadcastKeysMax
-        val perFile = pairs.groupBy(col("target.__file"))
-          .agg(DvBitmap.aggPositions(when(col("__action").isin(updateTags ++ deleteTags: _*),
-            col("target.__idx"))).as("__bitmap"),
-            Seq(tagCount(updateTags).as("__u"), tagCount(deleteTags).as("__d")) ++
-              (if (withKeys) Seq(collect_set(srcKey).as("__keys")) else Nil): _*)
-          .collect()
-        val masks = table.maskRows(perFile).filter(_._2.getLongCardinality > 0)
-        val updated = perFile.map(_.getAs[Long]("__u")).sum
-        val deleted = perFile.map(_.getAs[Long]("__d")).sum
-        if (withKeys) {
-          val keys = perFile.flatMap(_.getAs[scala.collection.Seq[Any]]("__keys")).distinct
-          matchedSourceRows = Some(keys.size.toLong)
-          matchedKeys = Some(spark.createDataFrame(
-            java.util.Arrays.asList(keys.map(Row(_)): _*),
-            src.alias("source").select(srcKey.as("__k")).schema))
+        val first = Dml.matchedPass(matches, updateTags, deleteTags,
+          if (withKeys) Some(struct(pairs.map(p => col(s"source.${p._2}")): _*)) else None,
+          if (viaDriver) Dml.DriverRowsBytes else 0L)
+        val changed = first.changed.getOrElse(
+          if (viaDriver) matches.persist(StorageLevel.MEMORY_AND_DISK) else matches)
+        val noInserts = notMatchedClauses.isEmpty ||
+          (withKeys && first.keys.size.toLong == numSourceRows)
+        // the local insert side: tagged and projected over the unmatched
+        // rows, folded to a local relation by the optimizer
+        val localInserts: Option[(DataFrame, LocalRelation)] =
+          if (noInserts || !withKeys) None
+          else local.flatMap { l =>
+            val ins = insertRows(Local.frame(spark, l.output,
+              Dml.unmatchedRows(l, pairs.map(_._2), first.keys)).alias("source")
+              .withColumn("__action", actionCol(lit("drop"))(None -> insertTagged)))
+            Local.relation(ins).map(r => Local.frame(spark, r) -> r)
+          }
+        if (withKeys && !noInserts && localInserts.isEmpty) {
+          // the keys as `srcKey` compares them: a bare value for one pair
+          val dt = src.alias("source").select(srcKey.as("__k")).schema.head.dataType
+          matchedKeys = Some(Local.frame(spark, Seq(AttributeReference("__k", dt)()),
+            first.keys.map(k => if (pairs.size == 1) InternalRow(k.get(0, dt)) else InternalRow(k))))
         }
-        val firing = (tags: Seq[String]) => pairs.filter(col("__action").isin(tags: _*))
+        val firing = (tags: Seq[String]) => changed.filter(col("__action").isin(tags: _*))
         val out = outCol(matchedTagged, targetOf) _
-        val (toWrite, numInserted) = withInserts(
-          changedRows(firing(updateTags).select(changedCols(out, rt): _*), rt))
-        val adds = table.stageWrite(toWrite, snap.metadata.partitionColumns)
+        val updatedRows = changedRows(firing(updateTags).select(changedCols(out, rt): _*), rt)
+        // the inserts' write, their count, and their bytes (None: unknown)
+        val (inserts, numInserted, insertBytes): (Option[DataFrame], () => Long, Option[Long]) =
+          if (noInserts) (None, () => 0L, Some(0L))
+          else localInserts match {
+            case Some((ins, l)) => (Some(ins), () => l.data.size.toLong, Some(Local.bytes(l)))
+            case None =>
+              val (ins, n) = fastInsertSide()
+              (Some(ins), n, None)
+          }
+        def packed(df: DataFrame, pairBytes: Long): DataFrame =
+          insertBytes.fold(df)(b => table.packSmall(df, pairBytes + b))
+        val adds = table.stageWrite(packed(inserts.fold(updatedRows)(i =>
+          updatedRows.unionByName(i, allowMissingColumns = true)), first.changedBytes),
+          snap.metadata.partitionColumns)
         mark("phase2 dv low-shuffle write")
         val sidecars = if (!cdfOn) Nil else {
           val tgtId: Seq[Column] = if (!rt) Nil else Seq(
@@ -1147,18 +1327,20 @@ class MergeBuilder private[table] (
           val images = Dml.cdfImage(firing(updateTags), before ++ tgtId, "update_preimage")
             .unionByName(Dml.cdfImage(firing(updateTags), after ++ tgtId, "update_postimage"))
             .unionByName(Dml.cdfImage(firing(deleteTags), before ++ tgtId, "delete"))
-          table.writeCdfSidecar(
-            if (notMatchedClauses.isEmpty || matchedSourceRows.contains(numSourceRows)) images
-            else images.unionByName(Dml.cdfImage(insertRows(insertSide()),
-              schema.fieldNames.toIndexedSeq.map(col) ++
-                (if (rt) Seq(lit(null).cast(LongType).as(Cdf.RowIdCol)) else Nil),
-              "insert")))
+          val insertImage = if (noInserts) None else Some(Dml.cdfImage(
+            localInserts.map(_._1).getOrElse(insertRows(insertSide())),
+            schema.fieldNames.toIndexedSeq.map(col) ++
+              (if (rt) Seq(lit(null).cast(LongType).as(Cdf.RowIdCol)) else Nil),
+            "insert"))
+          table.writeCdfSidecar(packed(insertImage.fold(images)(images.unionByName(_)),
+            2 * first.changedBytes))
         }
-        val v = table.commitMasks(snap, "MERGE", params, touched, masks, adds,
-          evolution ++ sidecars, _ => mergeMetrics(updated, deleted, numInserted(), 0L))
+        val v = table.commitMasks(snap, "MERGE", params, touched, first.masks, adds,
+          evolution ++ sidecars,
+          _ => mergeMetrics(first.updated, first.deleted, numInserted(), 0L))
         mark("commit")
         return v
-      } finally pairs.unpersist(): Unit
+      } finally matches.unpersist(): Unit
     }
 
     // Phase 2: full-outer join of source vs touched rows; untouched files
@@ -1302,7 +1484,7 @@ class MergeBuilder private[table] (
       dvChangedRef.foreach(_.unpersist(): Unit)
     }
     } finally {
-      src.unpersist()
+      if (local.isEmpty) src.unpersist()
       prevPreferSmj match {
         case Some(v) => spark.conf.set("spark.sql.join.preferSortMergeJoin", v)
         case None => spark.conf.unset("spark.sql.join.preferSortMergeJoin")

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Expr
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.Local
 import org.roaringbitmap.longlong.Roaring64Bitmap
 
 import graft.log._
@@ -751,8 +752,20 @@ class LakeTable private[table] (
       .flatMap(s => scala.util.Try(s.toLong).toOption).filter(_ > 0)
       .getOrElse(128L * 1024 * 1024)
 
+  /** `df` written by one task through `coalesce(1)` — no shuffle — when
+    * `bytes`, a bound on its input's size, fits the target file size: a
+    * small write lands as one file (one per partition directory). */
+  private[table] def packSmall(df: DataFrame, bytes: Long): DataFrame =
+    if (bytes <= targetFileSize) df.coalesce(1) else df
+
   private[table] def stageIngestWrite(df: DataFrame, pcols: Seq[String]): Seq[AddFile] = {
     val ccols = clusterColumns(df)
+    // a local input (its rows on the driver, their exact size known) that
+    // fits one file is written as one, by one task
+    if (ccols.isEmpty) Local.relation(df).filter(Local.bytes(_) <= targetFileSize) match {
+      case Some(l) => return stageWrite(Local.frame(spark, l).coalesce(1), pcols)
+      case None =>
+    }
     if (ccols.isEmpty && !propTrue("autoOptimize.optimizeWrite"))
       return stageWrite(df, pcols)
     val shaped =

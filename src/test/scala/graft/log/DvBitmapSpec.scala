@@ -6,7 +6,7 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
 import graft.SparkSpec
 
 /** The deletion-vector bitmap kernel in isolation: serialization
-  * round-trips, the typed aggregate against a plain collect-based model,
+  * round-trips, the map-side mask build against a plain collect-based model,
   * the explode path, and the codegen'd mask filter. */
 class DvBitmapSpec extends SparkSpec {
   import spark.implicits._
@@ -21,22 +21,29 @@ class DvBitmapSpec extends SparkSpec {
     assert(!back.contains(2L))
   }
 
-  test("aggPositions builds per-group bitmaps matching a collect-based model") {
-    val rows = (0 until 10000).map(i => (s"f${i % 7}", i.toLong * 3))
+  test("collectMasks builds per-file bitmaps map-side matching a collect-based model") {
+    // every file spread over every task: each task builds its own bitmap
+    // per file and the driver ORs them
+    val rows = (0 until 10000).map(i => (s"/data/f${i % 7}", i.toLong * 3))
     val df = rows.toDF("__file", "__idx").repartition(8)
-    val got = df.groupBy("__file")
-      .agg(DvBitmap.aggPositions(col("__idx")).as("__bitmap"))
-      .collect()
-      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1))
-      .toMap
+    val pass = DvBitmap.collectMasks(df)
     val model = rows.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    got.keySet shouldBe model.keySet
+    pass.rows shouldBe rows.size.toLong
+    pass.bytes should be > 0L
+    pass.masks.keySet shouldBe model.keySet
     model.foreach { case (f, idxs) =>
-      val bm = DvBitmap.deserialize(got(f))
+      val bm = pass.masks(f)
       bm.getLongCardinality shouldBe idxs.size.toLong
       idxs.foreach(i => assert(bm.contains(i)))
       assert(!bm.contains(1L)) // idx*3 never equals 1
     }
+    // reader paths key by their canonical form; a null position masks nothing
+    val uri = Seq(("file:///data/f%201", Some(2L)), ("file:/data/f%201", Some(5L)),
+      ("/data/g", None)).toDF("__file", "__idx")
+    val byUri = DvBitmap.collectMasks(uri)
+    byUri.rows shouldBe 3L
+    byUri.masks.keySet shouldBe Set("/data/f 1")
+    byUri.masks("/data/f 1").toArray.toSeq shouldBe Seq(2L, 5L)
   }
 
   test("toLongArray explodes a bitmap back sorted and deduped") {

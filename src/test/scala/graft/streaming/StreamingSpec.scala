@@ -283,9 +283,11 @@ class StreamingSpec extends SparkSpec {
       ("deletion-vector update", dv,
         t => t.update(col("id") <= 5L, Map("v" -> lit("updated"))): Unit),
       ("deletion-vector delete", dv, t => t.delete(col("id") > 18L): Unit))
+    // several files, as a parallel write lays them out (a local 20-row
+    // write would land as one)
     def table(name: String, props: Map[String, String]): LakeTable =
       LakeTable.createFrom(spark, tmpDir(name).resolve("t").toString,
-        (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v"), properties = props)
+        (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v").repartition(4), properties = props)
     val outside = statements.map { case (_, props, run) =>
       val t = table("dmlout-tbl", props); run(t); t
     }

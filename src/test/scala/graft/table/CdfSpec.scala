@@ -16,6 +16,51 @@ class CdfSpec extends SparkSpec {
     t
   }
 
+  test("reading the head commit's change feed replays no log") {
+    // records every log object read: the head's own commit file is the
+    // only one a head read needs, the snapshots coming from the cache
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val store = new graft.log.LogStore {
+      import graft.log.LocalLogStore
+      def listFileNames(dir: java.nio.file.Path): Seq[String] = LocalLogStore.listFileNames(dir)
+      def read(path: java.nio.file.Path): Seq[String] = {
+        reads.add(path.getFileName.toString)
+        LocalLogStore.read(path)
+      }
+      def writeAtomic(path: java.nio.file.Path, body: Array[Byte], overwrite: Boolean): Boolean =
+        LocalLogStore.writeAtomic(path, body, overwrite)
+      def delete(path: java.nio.file.Path): Boolean = LocalLogStore.delete(path)
+      override def modifiedMillis(path: java.nio.file.Path): Option[Long] =
+        LocalLogStore.modifiedMillis(path)
+    }
+    val prev = graft.log.LogStore.default
+    graft.log.LogStore.default = store
+    try {
+      val t = LakeTable.create(spark, tmpDir("cdf-head").resolve("t").toString,
+        StructType(Seq(StructField("k", LongType), StructField("v", StringType))),
+        properties = Map("graft.enableChangeDataFeed" -> "true",
+          "graft.enableDeletionVectors" -> "true"))
+      // past a checkpoint, so a replay would read it
+      (0L until 12L).foreach(i => t.append(Seq((i, s"v$i")).toDF("k", "v")))
+      def headRead(): (Set[(String, Long)], Seq[String]) = {
+        val v = t.version
+        reads.clear()
+        val rows = t.changes(v, Some(v)).select("_change_type", "k").as[(String, Long)]
+          .collect().toSet
+        // the latest-version pointer is read, never a checkpoint or another commit
+        (rows, reads.toArray.toSeq.map(_.toString).filterNot(_ == "_last_checkpoint"))
+      }
+      def commitFile(v: Long) = f"$v%020d.json"
+      t.append(Seq((100L, "x")).toDF("k", "v"))
+      headRead() shouldBe ((Set(("insert", 100L)), Seq(commitFile(t.version))))
+      t.delete(col("k") === 3L)
+      headRead() shouldBe ((Set(("delete", 3L)), Seq(commitFile(t.version))))
+      t.update(col("k") === 4L, Map("v" -> lit("u")))
+      headRead() shouldBe ((Set(("update_preimage", 4L), ("update_postimage", 4L)),
+        Seq(commitFile(t.version))))
+    } finally graft.log.LogStore.default = prev
+  }
+
   test("appends synthesize inserts; update/delete emit pre/post images (S10)") {
     val t = cdfTable("cdf-basic")
     t.update(col("k") === 2, Map("v" -> lit("B")))
@@ -203,7 +248,9 @@ class CdfSpec extends SparkSpec {
       properties = Map(
         "graft.enableChangeDataFeed" -> "true",
         "graft.enableDeletionVectors" -> "true"))
-    t.append(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")) // v1
+    // v1: several files (a local three-row append would land as one), so
+    // the OPTIMIZE below has files to compact
+    t.append(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").repartition(3))
     t.delete(col("k") === 2) // v2: DV mask, sidecar delete
     // v3: RESTORE to v1 — the file survives, only its mask reverts; row 2
     // is resurrected and MUST synthesize as an insert

@@ -6,12 +6,14 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** How many queries each deletion-vector call sends to Spark, on a table
-  * with deletion vectors AND the change feed on: a vector is written from
-  * the bitmaps the DML's own job collects, and read straight from its
-  * `.bin` on the driver, so neither costs a query of its own. The bounds
-  * pin those counts; each call's rows, metrics and change rows are checked
-  * alongside, so a count cannot be bought with a wrong answer. */
+/** How many queries, jobs and tasks each deletion-vector call sends to
+  * Spark, on a table with deletion vectors AND the change feed on: a vector
+  * is written from the bitmaps the DML's own job builds map-side, and read
+  * straight from its `.bin` on the driver, so neither costs a query of its
+  * own; a local MERGE source is read on the driver; small writes land as
+  * one file. The bounds pin those counts; each call's rows, metrics and
+  * change rows are checked alongside, so a count cannot be bought with a
+  * wrong answer. */
 class DvQueryCountSpec extends SparkSpec {
   import spark.implicits._
 
@@ -24,9 +26,16 @@ class DvQueryCountSpec extends SparkSpec {
     t.append(df.repartitionByRange(8, $"k"))
     t.snapshot().files.size shouldBe 8
     val counter = new SqlExecutions(spark)
+    // a call's result with its root executions; its jobs and tasks go to `last`
+    var last = SqlExecutions.Counts(Nil, Nil, 0)
     def executions[T](body: => T): (T, Int) = {
-      val (r, started) = counter.during(body)
-      (r, started.size)
+      val (r, c) = counter.measure(body)
+      last = c
+      (r, c.executions.size)
+    }
+    def added(v: Long): (Int, Int) = {
+      val as = t.log.readVersion(v)
+      (as.count(_.isInstanceOf[graft.log.AddFile]), as.count(_.isInstanceOf[graft.log.CdfFile]))
     }
     def upsert(keys: Seq[Long]): Long =
       t.merge(keys.map(k => (k, s"m$k", -1.0)).toDF("k", "v", "p"),
@@ -48,8 +57,11 @@ class DvQueryCountSpec extends SparkSpec {
       Seq(20L, 22L, 24L).flatMap(k => Seq(("update_preimage", k, s"v${k / 2}"),
         ("update_postimage", k, s"m$k"))).toSet ++
         Seq(21L, 23L).map(k => ("insert", k, s"m$k"))
-    info(s"MERGE, <= 2 candidate files: $m1Runs root executions")
-    m1Runs should be <= 4
+    info(s"MERGE, <= 2 candidate files: $m1Runs root executions, $last")
+    m1Runs should be <= 3
+    last.jobs should be <= 4
+    // one data file (3 updated rows + 2 inserts) and one change-feed file
+    added(m1) shouldBe ((1, 1))
 
     // a 5-row source spanning every file: the candidates fit the
     // deletion-vector probe budget, so the inner join reads them without a probe
@@ -57,8 +69,10 @@ class DvQueryCountSpec extends SparkSpec {
     metrics(m2)("numTargetRowsUpdated") shouldBe "2"
     metrics(m2)("numTargetRowsInserted") shouldBe "3"
     changes(m2).count(_._1 == "insert") shouldBe 3
-    info(s"MERGE, every file a candidate: $m2Runs root executions")
-    m2Runs should be <= 4
+    info(s"MERGE, every file a candidate: $m2Runs root executions, $last")
+    m2Runs should be <= 3
+    last.jobs should be <= 4
+    added(m2) shouldBe ((1, 1))
 
     // the same spread past the probe budget (lowered to 0 here, so the
     // probe runs on this small table): the probe adds one query
@@ -73,20 +87,22 @@ class DvQueryCountSpec extends SparkSpec {
       Seq(200L, 1700L, 3400L).flatMap(k => Seq(("update_preimage", k, s"v${k / 2}"),
         ("update_postimage", k, s"m$k"))).toSet ++
         Seq(201L, 3201L).map(k => ("insert", k, s"m$k"))
-    info(s"MERGE, probe runs: $m3Runs root executions")
-    m3Runs should be <= 5
+    info(s"MERGE, probe runs: $m3Runs root executions, $last")
+    m3Runs should be <= 4
 
     val (u, uRuns) = executions(t.update($"k" === 40L, Map("v" -> lit("u"))))
     metrics(u)("numUpdatedRows") shouldBe "1"
     changes(u) shouldBe Set(("update_preimage", 40L, "v20"), ("update_postimage", 40L, "u"))
-    info(s"UPDATE: $uRuns root executions")
+    info(s"UPDATE: $uRuns root executions, $last")
     uRuns should be <= 3
+    last.jobs should be <= 3
 
     val (d, dRuns) = executions(t.delete($"k" === 42L))
     metrics(d)("numDeletedRows") shouldBe "1"
     changes(d) shouldBe Set(("delete", 42L, "v21"))
-    info(s"DELETE: $dRuns root executions")
+    info(s"DELETE: $dRuns root executions, $last")
     dRuns should be <= 2
+    last.jobs should be <= 2
 
     // masked point reads: the first after a DML misses the mask cache
     def pointRead(k: Long): Array[Row] = t.read(Seq($"k" === k)).collect()
@@ -99,5 +115,13 @@ class DvQueryCountSpec extends SparkSpec {
     info(s"masked point read, cache hit: $hitRuns root executions")
     hitRuns shouldBe 1
     t.read().count() shouldBe 2000L + 2 + 3 + 2 - 1
+
+    // a 20-row local append: one job, one task, one file
+    val (a, aRuns) = executions(t.append(
+      (0L until 20L).map(i => (10001L + 2 * i, s"a$i", 0.5)).toDF("k", "v", "p")))
+    info(s"append, 20 local rows: $aRuns root executions, $last")
+    (last.jobs, last.tasks) shouldBe ((1, 1))
+    added(a) shouldBe ((1, 0))
+    t.read().count() shouldBe 2000L + 2 + 3 + 2 - 1 + 20
   }
 }

@@ -97,11 +97,9 @@ class DvStorageSpec extends SparkSpec {
   private def legacyMask(t: LakeTable, pred: Column): Path = {
     val snap = t.snapshot()
     val rel = s"dv/${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-    t.readFilesMaskedPos(snap, snap.files, snap.schema).filter(pred)
-      .groupBy("__file").agg(DvBitmap.aggPositions(col("__idx")).as("__bitmap"))
-      .select(DvBitmap.stripPathCol(col("__file")).as("__path"), col("__bitmap"))
-      .withColumn("__n",
-        org.apache.spark.sql.functions.size(DvBitmap.toLongArray(col("__bitmap"))).cast("long"))
+    DvBitmap.collectMasks(t.readFilesMaskedPos(snap, snap.files, snap.schema).filter(pred))
+      .masks.toSeq.map { case (p, bm) => (p, DvBitmap.serialize(bm), bm.getLongCardinality) }
+      .toDF("__path", "__bitmap", "__n")
       .write.parquet(t.dir.resolve(rel).toString)
     val counts = spark.read.parquet(t.dir.resolve(rel).toString).select("__path", "__n")
       .as[(String, Long)].collect().toMap

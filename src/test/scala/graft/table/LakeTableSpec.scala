@@ -71,8 +71,10 @@ class LakeTableSpec extends SparkSpec {
 
   test("stats-based file pruning skips files by min/max") {
     val t = freshTable("lt-prune")
-    t.append(rows(0 until 100))   // file(s) with id 0..99
-    t.append(rows(1000 until 1100)) // id 1000..1099
+    // one file per small local append: ids 0..49, 50..99, 1000..1099
+    t.append(rows(0 until 50))
+    t.append(rows(50 until 100))
+    t.append(rows(1000 until 1100))
     val snap = t.snapshot()
     val pruned = graft.log.Pruner.prune(snap.files, Seq(col("id") >= 1000), snap.schema)
     pruned.map(_.numRecords).sum shouldBe 100

@@ -1,5 +1,6 @@
 package graft.table
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -15,11 +16,13 @@ import graft.SparkSpec
   * the deletion-vector path (same semantics, masked writes). */
 object MergeFuzzSpec {
   case class R(k: Long, v: Long, s: String)
+  /** A row keyed by (`k`, `k2`), where `k` may be null. */
+  case class N(k: Option[Long], k2: Long, v: Long)
 }
 
 class MergeFuzzSpec extends SparkSpec {
   import spark.implicits._
-  import MergeFuzzSpec.R
+  import MergeFuzzSpec.{N, R}
 
   /** The reference model. Clause conditions are (targetRow, sourceRow) =>
     * Boolean; update produces the new row. `moreInserts` are further insert
@@ -82,19 +85,33 @@ class MergeFuzzSpec extends SparkSpec {
 
   /** Runs the merge on a fresh table once per storage mode: copy-on-write
     * and deletion vectors (`dv` first), each with the change feed off and
-    * on — together these reach every MERGE execution path. Checks the
-    * rows, the commit's row counts and, with the change feed on, the merge
-    * version's change rows against the model. */
+    * on — together these reach every MERGE execution path — and each with
+    * the source as a local relation (read on the driver) and as a parquet
+    * round-trip (a non-local plan). Checks the rows, the commit's row
+    * counts and, with the change feed on, the merge version's change rows
+    * against the model, so both source forms give the same answer. */
   private def run(
       target: Seq[R], source: Seq[R], dv: Boolean,
       build: MergeBuilder => MergeBuilder, c: Clauses): Unit =
-    for (dvOn <- Seq(dv, !dv); cdfOn <- Seq(false, true))
-      withClue(s"dv=$dvOn cdf=$cdfOn: ") {
-        runOnce(target, source, dvOn, cdfOn, build, c)
+    for (dvOn <- Seq(dv, !dv); cdfOn <- Seq(false, true); local <- Seq(true, false))
+      withClue(s"dv=$dvOn cdf=$cdfOn local=$local: ") {
+        runOnce(target, source, dvOn, cdfOn, local, build, c)
       }
 
+  /** `df` as the MERGE sees it: the local relation itself, or the same
+    * rows read back from parquet (a plan the driver cannot read). */
+  private def sourceOf(df: DataFrame, local: Boolean): DataFrame = {
+    val out = if (local) df else {
+      val p = tmpDir("mfz-src").resolve("s").toString
+      df.write.parquet(p)
+      spark.read.parquet(p)
+    }
+    org.apache.spark.sql.graft.Local.relation(out).isDefined shouldBe local
+    out
+  }
+
   private def runOnce(
-      target: Seq[R], source: Seq[R], dv: Boolean, cdf: Boolean,
+      target: Seq[R], source: Seq[R], dv: Boolean, cdf: Boolean, local: Boolean,
       build: MergeBuilder => MergeBuilder, c: Clauses): Unit = {
     val props =
       (if (dv) Map("graft.enableDeletionVectors" -> "true") else Map.empty[String, String]) ++
@@ -102,7 +119,7 @@ class MergeFuzzSpec extends SparkSpec {
     val t = LakeTable.createFrom(spark,
       tmpDir("mfz").resolve("t").toString, target.toDF(), properties = props)
     val before = t.version
-    val v = build(t.merge(source.toDF().alias("source"),
+    val v = build(t.merge(sourceOf(source.toDF(), local).alias("source"),
       col("target.k") === col("source.k"))).execute()
     val want = model(target, source, c)
     val got = t.read().as[R].collect().sortBy(r => (r.k, r.v, r.s))
@@ -263,6 +280,96 @@ class MergeFuzzSpec extends SparkSpec {
           .whenNotMatchedInsertAll(),
         Clauses(Seq("update" -> ((_, _) => true)), None, hasInsert = true))
     }
+  }
+
+  /** updateAll + insertAll over `N` rows keyed by `k` alone or by
+    * (`k`, `k2`), against the model (a key with a null field matches
+    * nothing, so its source row inserts), in every storage mode and both
+    * source forms. */
+  private def runNullable(target: Seq[N], source: Seq[N], twoKeys: Boolean): Unit = {
+    def key(r: N) = if (twoKeys) (r.k, r.k2) else (r.k, 0L)
+    def matches(t: N, s: N) = t.k.isDefined && s.k.isDefined && key(t) == key(s)
+    val updated = target.map(t => source.find(matches(t, _)).fold(t)(s => s.copy(v = s.v + 1000)))
+    val inserts = source.filterNot(s => target.exists(matches(_, s)))
+    val want = updated ++ inserts
+    val nUpdated = target.count(t => source.exists(matches(t, _)))
+    val cond = col("target.k") === col("source.k") &&
+      (if (twoKeys) col("target.k2") === col("source.k2") else lit(true))
+    for (dv <- Seq(false, true); cdf <- Seq(false, true); local <- Seq(true, false))
+      withClue(s"twoKeys=$twoKeys dv=$dv cdf=$cdf local=$local: ") {
+        val props = Map("graft.enableDeletionVectors" -> dv.toString,
+          "graft.enableChangeDataFeed" -> cdf.toString)
+        val t = LakeTable.createFrom(spark, tmpDir("mfz-null").resolve("t").toString,
+          target.toDF(), properties = props)
+        val v = t.merge(sourceOf(source.toDF(), local).alias("source"),
+          if (twoKeys) cond else col("target.k") === col("source.k"))
+          .whenMatchedUpdate(Map("v" -> (col("source.v") + 1000)))
+          .whenNotMatchedInsertAll().execute()
+        def sorted(rs: Seq[N]) = rs.sortBy(r => (r.k.getOrElse(-1L), r.k2, r.v))
+        sorted(t.read().as[N].collect().toSeq) shouldBe sorted(want)
+        val m = t.history(Some(1)).select("operationMetrics").as[Map[String, String]].head()
+        (m("numTargetRowsUpdated").toLong, m("numTargetRowsInserted").toLong) shouldBe
+          ((nUpdated.toLong, inserts.size.toLong))
+        if (cdf) {
+          val got = t.changes(v, Some(v)).select("_change_type", "k", "k2", "v")
+            .as[(String, Option[Long], Long, Long)].collect().toSeq
+          val wantCh = target.flatMap(tr => source.find(matches(tr, _)).toSeq.flatMap(s =>
+            Seq(("update_preimage", tr.k, tr.k2, tr.v),
+              ("update_postimage", tr.k, tr.k2, s.v + 1000)))) ++
+            inserts.map(s => ("insert", s.k, s.k2, s.v))
+          def ord(x: (String, Option[Long], Long, Long)) = (x._1, x._2.getOrElse(-1L), x._3, x._4)
+          got.sortBy(ord) shouldBe wantCh.sortBy(ord)
+        }
+      }
+  }
+
+  test("null source keys and a two-column key: local and non-local sources agree") {
+    val target = (0L until 12L).map(i => N(Some(i), i % 3, i)) :+ N(None, 1L, 99L)
+    // one key column, one null source key: count(DISTINCT k) counts no
+    // null, so the keys are not distinct (general path); the null row inserts
+    runNullable(target, Seq(N(Some(2L), 2L, 1L), N(Some(20L), 0L, 2L), N(None, 1L, 3L)),
+      twoKeys = false)
+    // two null source keys: both insert
+    runNullable(target, Seq(N(Some(4L), 1L, 1L), N(None, 1L, 2L), N(None, 2L, 3L)),
+      twoKeys = false)
+    // two columns with null fields: (null, 1) twice is one distinct struct
+    // (general path), (null, 1) and (null, 2) are two (fast path); either
+    // way a null field matches nothing and its row inserts
+    runNullable(target, Seq(N(Some(5L), 2L, 1L), N(None, 1L, 2L), N(None, 1L, 3L),
+      N(Some(6L), 1L, 4L)), twoKeys = true)
+    runNullable(target, Seq(N(Some(5L), 2L, 1L), N(None, 1L, 2L), N(None, 2L, 3L),
+      N(Some(6L), 0L, 4L), N(Some(7L), 0L, 5L)), twoKeys = true)
+  }
+
+  test("driver-side phase 0 matches the count(DISTINCT ...) aggregate") {
+    import org.apache.spark.sql.graft.Local
+    def check(df: DataFrame, keys: Seq[String]): Unit = withClue(s"$keys ${df.collect().toSeq}: ") {
+      val l = Local.relation(df).get
+      val (n, bounds, distinct) = Dml.localPhase0(l, keys, checkDistinct = true)
+      val dk = count_distinct(if (keys.size == 1) col(keys.head) else struct(keys.map(col): _*))
+      val aggs = Seq(count(lit(1)), dk) ++ keys.flatMap(k => Seq(min(col(k)), max(col(k))))
+      val row = df.agg(aggs.head, aggs.tail: _*).head()
+      n shouldBe row.getLong(0)
+      distinct shouldBe (row.getLong(1) == row.getLong(0))
+      keys.zipWithIndex.foreach { case (k, j) =>
+        val (lo, hi) = (row.get(2 + 2 * j), row.get(3 + 2 * j))
+        bounds.get(k).map { case (a, b) =>
+          df.select(a, b).head().toSeq.map(String.valueOf) } shouldBe
+          (if (lo == null) None else Some(Seq(lo, hi).map(String.valueOf)))
+      }
+    }
+    val nk = Seq(N(Some(1L), 1L, 0L), N(None, 1L, 0L), N(Some(3L), 2L, 0L)).toDF()
+    check(nk, Seq("k"))
+    check(nk, Seq("k", "k2"))
+    check(Seq(N(None, 1L, 0L), N(None, 1L, 1L)).toDF(), Seq("k", "k2"))
+    check(Seq(N(None, 1L, 0L), N(None, 2L, 1L)).toDF(), Seq("k", "k2"))
+    check(Seq(N(Some(1L), 1L, 0L), N(Some(1L), 2L, 1L)).toDF(), Seq("K"))
+    check(Seq(N(None, 1L, 0L)).toDF(), Seq("k"))
+    // doubles: -0.0 and 0.0 group together, as do NaNs
+    check(Seq(0.0, -0.0, 1.5).toDF("d"), Seq("d"))
+    check(Seq(Double.NaN, Double.NaN, 2.0).toDF("d"), Seq("d"))
+    check(Seq(Double.NaN, -1.0).toDF("d"), Seq("d"))
+    check(Seq("b", "a", "c").toDF("s"), Seq("s"))
   }
 
   test("duplicate source keys matching one target row throw (ambiguity guard)") {

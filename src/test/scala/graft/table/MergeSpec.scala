@@ -132,14 +132,17 @@ class MergeSpec extends SparkSpec {
 
   test("merge touches only files containing matches") {
     val t = target("mg-touch")
-    // second file with far-away keys
+    // two more files with far-away keys: past the two-candidate floor
+    // (below it, rewriting every candidate is cheaper than probing), so
+    // the probe runs (a small local append lands as one file)
     t.append(Seq((1000L, "far", 1L)).toDF("k", "v", "n"))
+    t.append(Seq((2000L, "far2", 2L)).toDF("k", "v", "n"))
     val before = t.snapshot().files.map(_.path).toSet
     val src = Seq((1L, "A", 1L)).toDF("k", "v", "n")
     t.merge(src, col("target.k") === col("source.k")).whenMatchedUpdateAll().execute()
     val after = t.snapshot().files.map(_.path).toSet
-    after.intersect(before).nonEmpty shouldBe true // far file untouched
-    t.read().count() shouldBe 4
+    after.intersect(before).nonEmpty shouldBe true // far files untouched
+    t.read().count() shouldBe 5
   }
 
   test("whenNotMatchedBySourceDelete: full-sync removes target rows absent from source") {
