@@ -268,12 +268,14 @@ object Stats {
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
     val conf = footerConf
+    // explicit options: `open(file)` alone builds its own fresh Configuration
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
     val out = new java.util.concurrent.ConcurrentHashMap[
       String, (Long, Map[String, ColStats], Seq[(String, Option[Int])])]()
     files.asJava.parallelStream().forEach { p =>
       val in = HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(p.toUri), conf)
-      val reader = ParquetFileReader.open(in)
+      val reader = ParquetFileReader.open(in, options)
       try {
         val fieldIds = reader.getFooter.getFileMetaData.getSchema.getFields
           .asScala.map(t => t.getName -> Option(t.getId).map(_.intValue())).toSeq
