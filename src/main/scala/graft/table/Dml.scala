@@ -387,32 +387,34 @@ private[table] object Dml {
 
   /** Matched rows a deletion-vector DML brings to the driver at most, in
     * in-memory bytes: its writes then read a local relation, with no
-    * cache to build and no second scan. */
+    * cache to build and no second scan. A bound on driver memory, not a
+    * measured crossover: no benchmark workload reaches the persisted side. */
   val DriverRowsBytes: Long = 32L * 1024 * 1024
 
   /** Whether the rows of `touched` may fit [[DriverRowsBytes]]: their
-    * parquet bytes, at up to 8× that in memory, do. */
+    * parquet bytes, at up to 8× that in memory (an assumed ratio, not a
+    * measured one), do. Such files are at most 4 MB of parquet, so past a
+    * driver overflow they are cheap to read again. */
   def fitsDriver(touched: Seq[AddFile]): Boolean =
     touched.map(_.size).sum * 8 <= DriverRowsBytes
 
   /** Run the map-side mask pass over `matched` (`__file`, `__idx` and the
     * rows a DML writes), then `body` with its result and, when `reuse`,
-    * the matched rows to read again: the rows the pass brought back to the
-    * driver when the touched files look small and they fit
-    * [[DriverRowsBytes]], else `matched` persisted (materialized by the
-    * pass, or on first read past a driver overflow). */
+    * the matched rows to read again. When the touched files look small
+    * ([[fitsDriver]]) that is the rows the pass brought back to the
+    * driver, or `matched` itself, read again, when they overflowed
+    * [[DriverRowsBytes]]; otherwise `matched` is persisted and
+    * materialized by the pass. */
   def withMatched[A](matched: DataFrame, touched: Seq[AddFile], reuse: Boolean)(
       body: (DvBitmap.MaskPass, () => DataFrame) => A): A = {
     val viaDriver = reuse && fitsDriver(touched)
     if (reuse && !viaDriver) matched.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val pass = DvBitmap.collectMasks(matched, if (viaDriver) DriverRowsBytes else 0L)
-      lazy val again = pass.kept match {
-        case Some(rows) => Local.frame(matched.sparkSession, Local.output(matched), rows)
-        case None => matched.persist(StorageLevel.MEMORY_AND_DISK)
-      }
+      lazy val again = pass.kept.fold(matched)(rows =>
+        Local.frame(matched.sparkSession, Local.output(matched), rows))
       body(pass, () => again)
-    } finally if (reuse) matched.unpersist(): Unit
+    } finally if (reuse && !viaDriver) matched.unpersist(): Unit
   }
 
   /** `when(p1, v1).when(p2, v2)...otherwise(otherwise)` over `arms` in
@@ -1281,8 +1283,8 @@ class MergeBuilder private[table] (
         val first = Dml.matchedPass(matches, updateTags, deleteTags,
           if (withKeys) Some(struct(pairs.map(p => col(s"source.${p._2}")): _*)) else None,
           if (viaDriver) Dml.DriverRowsBytes else 0L)
-        val changed = first.changed.getOrElse(
-          if (viaDriver) matches.persist(StorageLevel.MEMORY_AND_DISK) else matches)
+        // past a driver overflow, the small touched files are read again
+        val changed = first.changed.getOrElse(matches)
         val noInserts = notMatchedClauses.isEmpty ||
           (withKeys && first.keys.size.toLong == numSourceRows)
         // the local insert side: tagged and projected over the unmatched
@@ -1340,7 +1342,7 @@ class MergeBuilder private[table] (
           _ => mergeMetrics(first.updated, first.deleted, numInserted(), 0L))
         mark("commit")
         return v
-      } finally matches.unpersist(): Unit
+      } finally if (!viaDriver) matches.unpersist(): Unit
     }
 
     // Phase 2: full-outer join of source vs touched rows; untouched files

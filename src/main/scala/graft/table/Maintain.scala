@@ -29,10 +29,7 @@ trait MaintenanceSupport { self: LakeTable =>
 
   /** Bin-pack files smaller than `targetFileSize` into ~target-sized files.
     * One distributed job: small files are read together and repartitioned on
-    * the partition columns so each output task writes into few hive dirs.
-    * Per partition, the files rewritten are [[Compaction.tiered]]'s: a
-    * repeated compaction rewrites the files written since the last one, not
-    * the earlier output they would be packed into. */
+    * the partition columns so each output task writes into few hive dirs. */
   def optimizeCompact(
       targetFileSize: Long = 128L * 1024 * 1024,
       where: Option[Column] = None): Long = {
@@ -45,9 +42,7 @@ trait MaintenanceSupport { self: LakeTable =>
       .getOrElse(snap.files)
     val small = scoped.filter(_.size < targetFileSize)
     // group by partition dir: compaction only helps where >1 small file coexists
-    val byPart = small.groupBy(_.partitionValues)
-      .map { case (p, fs) => p -> Compaction.tiered(fs, targetFileSize) }
-      .filter(_._2.size > 1)
+    val byPart = small.groupBy(_.partitionValues).filter(_._2.size > 1)
     val doomed = byPart.values.flatten.toSeq
     if (doomed.isEmpty) return snap.version
     val totalBytes = doomed.map(_.size).sum
@@ -299,28 +294,6 @@ trait MaintenanceSupport { self: LakeTable =>
   * strings via a hash bucket (no range locality, but equal values cluster) —
   * then the bucket bits of the k columns are interleaved into one long.
   */
-/** Which of a partition's small files a compaction rewrites. */
-private[table] object Compaction {
-
-  /** `files` less, from the largest down, each file that is at least an
-    * eighth of `target` and larger than all the files left below it
-    * together. Rewriting such a file to absorb fewer bytes than its own
-    * more than doubles what the compaction writes, to save one file; left
-    * alone, it is merged once the smaller files add up to its size. So a
-    * byte is rewritten O(log(table / new data)) times across repeated
-    * compactions instead of once per compaction, and files under an eighth
-    * of the target (every small file at the default target) always pack. */
-  def tiered(files: Seq[AddFile], target: Long): Seq[AddFile] = {
-    @annotation.tailrec
-    def drop(sorted: Seq[AddFile], bytes: Long): Seq[AddFile] = sorted.lastOption match {
-      case Some(top) if top.size >= target / 8 && top.size > bytes - top.size =>
-        drop(sorted.init, bytes - top.size)
-      case _ => sorted
-    }
-    drop(files.sortBy(_.size), files.map(_.size).sum)
-  }
-}
-
 object ZOrder {
 
   private[table] val Bits = 8 // 256 buckets per dimension

@@ -267,7 +267,9 @@ class StreamingSpec extends SparkSpec {
     metrics("DELETE").get("numDeletedRows") shouldBe Some("2")
   }
 
-  test("MERGE and deletion-vector DML metrics inside foreachBatch equal an outside run") {
+  /** One statement per execution path that counts its rows: its name,
+    * table properties and the statement itself. */
+  private def dmlStatements: Seq[(String, Map[String, String], LakeTable => Unit)] = {
     import spark.implicits._
     val dv = Map("graft.enableDeletionVectors" -> "true")
     val cdf = Map("graft.enableChangeDataFeed" -> "true")
@@ -275,32 +277,36 @@ class StreamingSpec extends SparkSpec {
       t.merge((15L to 24L).map(i => (i, s"m$i")).toDF("id", "v"),
           col("target.id") === col("source.id"))
         .whenMatchedUpdateAll().whenNotMatchedInsertAll().execute(): Unit
-    // one statement per execution path that counts its rows
-    val statements: Seq[(String, Map[String, String], LakeTable => Unit)] = Seq(
+    Seq(
       ("low-shuffle merge", Map.empty, upsert),
       ("general-path merge", cdf, upsert),
       ("deletion-vector merge", dv, upsert),
       ("deletion-vector update", dv,
         t => t.update(col("id") <= 5L, Map("v" -> lit("updated"))): Unit),
       ("deletion-vector delete", dv, t => t.delete(col("id") > 18L): Unit))
-    // several files, as a parallel write lays them out (a local 20-row
-    // write would land as one)
-    def table(name: String, props: Map[String, String]): LakeTable =
-      LakeTable.createFrom(spark, tmpDir(name).resolve("t").toString,
-        (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v").repartition(4), properties = props)
+  }
+
+  /** Each of `statements` run inside a foreachBatch and outside it, on a
+    * 20-row table laid out by `layout`: the same commit metrics and rows. */
+  private def dmlInsideEqualsOutside(name: String,
+      statements: Seq[(String, Map[String, String], LakeTable => Unit)],
+      layout: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+    import spark.implicits._
+    def table(tag: String, props: Map[String, String]): LakeTable =
+      LakeTable.createFrom(spark, tmpDir(s"$name-$tag").resolve("t").toString,
+        layout((1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")), properties = props)
     val outside = statements.map { case (_, props, run) =>
-      val t = table("dmlout-tbl", props); run(t); t
+      val t = table("out", props); run(t); t
     }
-    val inside = statements.map { case (_, props, _) => table("dmlin-tbl", props) }
-    val src = tmpDir("dmlin-src")
+    val inside = statements.map { case (_, props, _) => table("in", props) }
+    val src = tmpDir(s"$name-src")
     writeJson(src, "trigger.json", Seq((100L, "go")))
     val q = StreamIngest.fileSource(spark, src.toString, schema).writeStream
-      .option("checkpointLocation", tmpDir("dmlin-ck").toString)
+      .option("checkpointLocation", tmpDir(s"$name-ck").toString)
       .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
         statements.zip(inside).foreach { case ((_, _, run), t) => run(t) }
       }.start()
-    q.processAllAvailable()
-    q.stop()
+    try q.processAllAvailable() finally q.stop()
     def last(t: LakeTable): (String, Map[String, String]) =
       t.history(Some(1)).select("operation", "operationMetrics")
         .as[(String, Map[String, String])].head()
@@ -310,6 +316,26 @@ class StreamingSpec extends SparkSpec {
         inside(i).read().orderBy("id").as[(Long, String)].collect() shouldBe
           outside(i).read().orderBy("id").as[(Long, String)].collect()
       }
+    }
+  }
+
+  test("MERGE and deletion-vector DML metrics inside foreachBatch equal an outside run") {
+    // several files, as a parallel write lays them out
+    dmlInsideEqualsOutside("dml4", dmlStatements, _.repartition(4))
+  }
+
+  test("DML metrics inside foreachBatch equal an outside run on a one-file table") {
+    // a local 20-row write lands as one file
+    dmlInsideEqualsOutside("dml1", dmlStatements.filter(_._1 != "low-shuffle merge"), identity)
+  }
+
+  test("a low-shuffle MERGE inside foreachBatch on a one-file table writes the outside run's bytes") {
+    // Pending: on the stream thread the MERGE's write counts persist the
+    // tagged join and the insert side, and the written file's row order,
+    // hence numAddedBytes, follows that partitioning (CHANGES.md FOUND,
+    // "a small copy-on-write MERGE run inside foreachBatch")
+    pendingUntilFixed {
+      dmlInsideEqualsOutside("lsm1", dmlStatements.filter(_._1 == "low-shuffle merge"), identity)
     }
   }
 

@@ -124,4 +124,46 @@ class DvQueryCountSpec extends SparkSpec {
     added(a) shouldBe ((1, 0))
     t.read().count() shouldBe 2000L + 2 + 3 + 2 - 1 + 20
   }
+
+  test("DV+CDF UPDATE and MERGE past the driver row cap read the small touched files again") {
+    // 40 rows of 1 MB strings that compress well: the file is small enough
+    // for the driver path (fitsDriver), but its matched rows overflow
+    // Dml.DriverRowsBytes, so the writes read the touched file again
+    val mb = 1 << 20
+    val df = spark.range(40).select($"id".as("k"),
+      concat($"id".cast("string"), repeat(lit("a"), mb)).as("s"), lit(0.0).as("p"))
+    val t = LakeTable.create(spark, tmpDir("dv-overflow").resolve("t").toString, df.schema,
+      properties = Map("graft.enableDeletionVectors" -> "true",
+        "graft.enableChangeDataFeed" -> "true"))
+    t.append(df.coalesce(1))
+    Dml.fitsDriver(t.snapshot().files) shouldBe true
+    40L * mb should be > Dml.DriverRowsBytes
+    def metrics(v: Long): Map[String, String] =
+      t.history().filter($"version" === v).select("operationMetrics")
+        .head().getMap[String, String](0).toMap
+    def changes(v: Long): Map[String, (Long, Double)] =
+      t.changes(v, Some(v)).groupBy("_change_type").agg(count(lit(1)), sum("p"))
+        .as[(String, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    def table(): (Long, Long, Double, Long) =
+      t.read().agg(count(lit(1)), sum("k"), sum("p"), sum(org.apache.spark.sql.functions.length($"s")))
+        .as[(Long, Long, Double, Long)].head()
+    val width = (0 until 40).map(k => k.toString.length + mb).sum.toLong
+
+    val u = t.update($"k" < 40L, Map("p" -> lit(1.0)))
+    metrics(u)("numUpdatedRows") shouldBe "40"
+    changes(u) shouldBe Map("update_preimage" -> ((40L, 0.0)), "update_postimage" -> ((40L, 40.0)))
+    table() shouldBe ((40L, 780L, 40.0, width))
+    spark.sharedState.cacheManager.isEmpty shouldBe true
+
+    val m = t.merge(((0L until 40L) ++ Seq(100L, 101L)).map(k => (k, "new", 2.0))
+        .toDF("k", "s", "p"), $"target.k" === $"source.k")
+      .whenMatchedUpdate(Map("p" -> $"source.p")).whenNotMatchedInsertAll().execute()
+    metrics(m).filter(_._1.startsWith("numTarget")) shouldBe Map(
+      "numTargetRowsUpdated" -> "40", "numTargetRowsDeleted" -> "0",
+      "numTargetRowsInserted" -> "2", "numTargetRowsCopied" -> "0")
+    changes(m) shouldBe Map("update_preimage" -> ((40L, 40.0)),
+      "update_postimage" -> ((40L, 80.0)), "insert" -> ((2L, 4.0)))
+    table() shouldBe ((42L, 981L, 84.0, width + 6))
+    spark.sharedState.cacheManager.isEmpty shouldBe true
+  }
 }

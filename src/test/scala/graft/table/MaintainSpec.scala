@@ -27,37 +27,6 @@ class MaintainSpec extends SparkSpec {
     t.versionAsOf(before.version).count() shouldBe 800
   }
 
-  test("a repeated compaction rewrites the new small files, not the earlier output") {
-    def f(name: String, size: Long) = graft.log.AddFile(name, Map.empty, size, 1L, Map.empty, 0L)
-    def kept(sizes: Long*) = Compaction.tiered(sizes.zipWithIndex.map { case (z, i) =>
-      f(s"f$i", z) }, target = 800).map(_.size)
-    // at least an eighth of the target (100) and larger than the rest together: left
-    kept(400, 30, 20, 10) shouldBe Seq(10, 20, 30)
-    kept(400, 150, 30, 20) shouldBe Seq(20, 30)
-    // no larger than the rest together, or under an eighth of the target: packed
-    kept(400, 250, 100, 50) shouldBe Seq(50, 100, 250, 400)
-    kept(99, 5, 1) shouldBe Seq(1, 5, 99)
-
-    val t = LakeTable.create(spark, tmpDir("opt-tier").resolve("t").toString,
-      StructType(Seq(StructField("id", LongType), StructField("v", DoubleType))))
-    def appendRows(from: Long, n: Int): Unit =
-      t.append(Seq.tabulate(n)(j => (from + j, j * 0.5)).toDF("id", "v").coalesce(1))
-    (0 until 4).foreach(i => appendRows(i * 2000L, 2000))
-    val target = 256L * 1024
-    t.optimizeCompact(targetFileSize = target)
-    val packed = t.snapshot().files
-    packed.size shouldBe 1
-    packed.head.size should be >= target / 8
-    (0 until 3).foreach(i => appendRows(10000L + i * 10, 10))
-    val checksum = t.read().agg(count(lit(1)), sum("id"), sum("v")).head()
-    t.optimizeCompact(targetFileSize = target)
-    val after = t.snapshot().files
-    // the first compaction's file stays; the three small ones become one
-    after.size shouldBe 2
-    after.map(_.path) should contain(packed.head.path)
-    t.read().agg(count(lit(1)), sum("id"), sum("v")).head() shouldBe checksum
-  }
-
   test("OPTIMIZE ZORDER is incremental: second pass rewrites only new files") {
     val t = LakeTable.create(spark, tmpDir("incz").resolve("t").toString,
       StructType(Seq(StructField("id", LongType), StructField("k", LongType))))
