@@ -166,4 +166,14 @@ class DvQueryCountSpec extends SparkSpec {
     table() shouldBe ((42L, 981L, 84.0, width + 6))
     spark.sharedState.cacheManager.isEmpty shouldBe true
   }
+
+  test("a deletion-vector DELETE without the change feed leaves no persisted frame") {
+    val t = LakeTable.createFrom(spark, tmpDir("dv-nocdf").resolve("t").toString,
+      (0L until 20L).map(i => (i, s"v$i")).toDF("k", "v"),
+      properties = Map("graft.enableDeletionVectors" -> "true"))
+    spark.catalog.clearCache()
+    t.delete($"k" < 5L)
+    t.read().count() shouldBe 15L
+    spark.sharedState.cacheManager.isEmpty shouldBe true
+  }
 }
