@@ -136,6 +136,7 @@ class DvQueryCountSpec extends SparkSpec {
       properties = Map("graft.enableDeletionVectors" -> "true",
         "graft.enableChangeDataFeed" -> "true"))
     t.append(df.coalesce(1))
+    spark.catalog.clearCache()
     Dml.fitsDriver(t.snapshot().files) shouldBe true
     40L * mb should be > Dml.DriverRowsBytes
     def metrics(v: Long): Map[String, String] =
